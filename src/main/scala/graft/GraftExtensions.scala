@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CharBigrams, FloatCosine, FloatDotProduct, LongDotProduct, LshBucket, MinhashPrep, OrderedLongPairs, ShingleHashes, SimhashSig, TermCounts, WordBigrams, WordNgrams}
+import graft.functions.{CharBigrams, FloatCosine, FloatDotProduct, LongDotProduct, LshBucket, MinhashPrep, OrderedLongPairs, ShingleHashes, SimhashSig, Slug, TermCounts, WordBigrams, WordNgrams}
 
 /** SQL-surface registration for the engine's custom expressions
   * (`spark.sql.extensions=graft.GraftExtensions` or
@@ -35,6 +35,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_char_bigrams"),
       new ExpressionInfo(classOf[CharBigrams].getName, "graft_char_bigrams"),
       (children: Seq[Expression]) => CharBigrams(children.head)))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_slug"),
+      new ExpressionInfo(classOf[Slug].getName, "graft_slug"),
+      (children: Seq[Expression]) => Slug(children.head)))
     ext.injectFunction((
       new FunctionIdentifier("graft_term_counts"),
       new ExpressionInfo(classOf[TermCounts].getName, "graft_term_counts"),

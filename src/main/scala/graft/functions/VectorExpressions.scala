@@ -494,6 +494,10 @@ object VectorFunctions {
   def charBigrams(text: Column): Column =
     ColumnBridge.column(CharBigrams(ColumnBridge.expression(text)))
 
+  /** Column API for the one-pass annotation slug (Harmonize stage 2). */
+  def slug(text: Column): Column =
+    ColumnBridge.column(Slug(ColumnBridge.expression(text)))
+
   /** Column API for the row-local multiset count:
     * array<string> -> array<struct<term, tf>>. */
   def termCounts(arr: Column): Column =

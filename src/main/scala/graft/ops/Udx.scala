@@ -21,11 +21,13 @@ import org.apache.spark.sql.types._
 object Udx {
 
   /** String normalization before codebook matching: lowercase,
-    * non-alphanumeric runs → '-', trim dangling dashes. */
+    * non-alphanumeric runs → '-', trim dangling dashes. Lowercasing
+    * is locale-independent (Locale.ROOT): under a tr/az default
+    * locale `I` would lower to a dotless `ı` and become a dash. */
   val slugify: String => String = { s =>
     if (s == null) null
     else {
-      val lowered = s.toLowerCase
+      val lowered = s.toLowerCase(java.util.Locale.ROOT)
       val dashed = lowered.replaceAll("[^a-z0-9]+", "-")
       dashed.replaceAll("^-+|-+$", "")
     }

@@ -14,8 +14,10 @@ import org.apache.spark.sql.types._
   *
   * Every stage is a DataFrame → DataFrame function, so pipelines
   * compose and Catalyst optimizes across stage boundaries (filters
-  * planted after the join still push below it, etc.). All stages are
-  * shuffle-free except the final aggregation; codebooks broadcast.
+  * planted after the join still push below it, etc.). Codebooks
+  * broadcast, so unpivot, normalization, the join, the split and
+  * provenance are shuffle-free; only the two aggregations shuffle:
+  * the unmappable report (stage 4b) and the cube (stage 6).
   */
 object Harmonize {
 
@@ -27,9 +29,19 @@ object Harmonize {
       values.map(c => col(c).cast(DoubleType).as(c)).toArray, "attr", "val")
 
   /** Stage 2: string normalization before codebook matching (the
-    * slugify rule from graft.ops.Udx, applied plan-side). */
-  def normalized(c: Column): Column =
-    regexp_replace(regexp_replace(lower(c), "[^a-z0-9]+", "-"), "^-+|-+$", "")
+    * slugify rule from graft.ops.Udx, applied plan-side): lowercase,
+    * each run outside `[a-z0-9]` to one `-`, edge dashes trimmed.
+    *
+    * One compiled expression, `graft.functions.Slug`, does it in a
+    * single pass over the UTF-8 bytes. It equals
+    * `regexp_replace(regexp_replace(lower(c), '[^a-z0-9]+', '-'),
+    * '^-+|-+$', '')` on every input: all-ASCII strings are lowered by
+    * the ASCII table, as `lower` does; anything else is first lowered
+    * by the function `lower` itself calls, under the same ICU
+    * case-mapping setting, and every byte of a remaining non-ASCII
+    * character (>= 0x80) is a separator, just as the regex counts the
+    * character. SlugUtil's scaladoc has the full argument. */
+  def normalized(c: Column): Column = graft.functions.VectorFunctions.slug(c)
 
   /** Stage 3: rules-as-data codebook lookup. `codebook` maps
     * (attr, raw_norm) → canonical code + rule id; it is data, not

@@ -173,4 +173,16 @@ class OpsPropertySpec extends SparkSpec with SerialSuite {
     assert(slugify(null) == null)
     assert(slugify("ECONOMY cold widget #42") == "economy-cold-widget-42")
   }
+
+  // serial group: the default locale is JVM-wide, so no other suite of
+  // this JVM runs while it is Turkish
+  test("slugify lowercases the same under a Turkish default locale") {
+    import ops.Udx.slugify
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert("TITLE".toLowerCase == "t\u0131tle") // the trap: dotless i
+      assert(slugify("TITLE IN Istanbul") == "title-in-istanbul")
+    } finally java.util.Locale.setDefault(saved)
+  }
 }

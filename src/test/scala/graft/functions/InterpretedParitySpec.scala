@@ -34,8 +34,8 @@ class InterpretedParitySpec extends SparkSpec with graft.SerialSuite {
     "dedup_minhash_lsh", "dedup_simhash", "sim_lsh_bucketed",
     "sim_search_topk", "dedup_near_embedding", "text_fingerprint",
     // LongDotProduct → embed_top_component; OrderedLongPairs →
-    // graph_jaccard_neighbors (r12b)
-    "embed_top_component", "graph_jaccard_neighbors")
+    // graph_jaccard_neighbors (r12b); Slug → harmonize_unmappable
+    "embed_top_component", "graph_jaccard_neighbors", "harmonize_unmappable")
 
   private def rows(s: org.apache.spark.sql.SparkSession, key: String): Seq[String] = {
     val df = SparkEntry.queries(key)(s, sf)

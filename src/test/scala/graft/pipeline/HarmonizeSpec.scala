@@ -33,10 +33,18 @@ class HarmonizeSpec extends SparkSpec {
     assert(cube.select("attr").distinct().collect().map(_.getString(0)).toSet ==
       Set("p_retailprice", "p_size"))
 
-    // unmappable = types not in the codebook (e.g. 'standard'), normalized
-    val um = unmapped.collect()
-    assert(um.forall(r => !Set("economy", "promo", "large")
-      .contains(r.getAs[String]("raw_norm"))))
+    // unmappable = exactly the types not in the codebook, normalized,
+    // once per measure attr, with their source counts and raw example
+    val typeCounts = part.select("p_type").collect().map(_.getString(0))
+      .groupBy(identity).map { case (t, ts) => t -> ts.length.toLong }
+    val expected = for {
+      attr <- Set("p_retailprice", "p_size")
+      raw <- Set("MEDIUM", "SMALL", "STANDARD")
+    } yield (attr, raw.toLowerCase(java.util.Locale.ROOT), typeCounts(raw), raw)
+    val um = unmapped.collect().map(r => (r.getAs[String]("attr"),
+      r.getAs[String]("raw_norm"), r.getAs[Long]("n_occurrences"),
+      r.getAs[String]("example_raw"))).toSet
+    assert(um == expected)
 
     // conservation: every part row yields 2 observations, split exactly
     val total = part.count() * 2
@@ -56,6 +64,34 @@ class HarmonizeSpec extends SparkSpec {
       .head().getDouble(0)
     val viaCube = cube.agg(sum("sum_measure")).head().getDouble(0)
     assert(viaCube == direct)
+  }
+
+  test("noisy variants of one annotation normalize to one raw_norm and map") {
+    import spark.implicits._
+    val variants = Seq("ECONOMY ANODIZED STEEL", "economy anodized steel",
+      "  Economy  Anodized   Steel  ", "Economy-Anodized-Steel", "ECONOMY_ANODIZED.STEEL",
+      "--economy/anodized,steel!!", "\tEconomy\nAnodized\r\nSteel\n")
+    val obs = variants.map(v => ("p_size", v)).toDF("attr", "raw")
+    val cb = Seq(("p_size", "economy-anodized-steel", "ECO-AS", "rule-eco-as"))
+      .toDF("attr", "raw_norm", "code", "rule_id")
+    val out = Harmonize.applyCodebook(obs, cb)
+      .select("raw_norm", "code").collect()
+    assert(out.length == variants.size)
+    assert(out.map(_.getString(0)).toSet == Set("economy-anodized-steel"))
+    assert(out.map(_.getString(1)).toSet == Set("ECO-AS"))
+    assert(Harmonize.unmappable(Harmonize.applyCodebook(obs, cb)).isEmpty)
+  }
+
+  test("normalization plans as the one-pass kernel, with no regexp_replace") {
+    // a range, not a local Seq: over a LocalRelation,
+    // ConvertToLocalRelation would evaluate the projection away
+    val obs = spark.range(3).select(lit("p_size").as("attr"),
+      concat(lit("Promo #"), col("id").cast("string")).as("raw"))
+    val plan = Harmonize.applyCodebook(obs, codebook).queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.exists(_.isInstanceOf[graft.functions.Slug]))
+    assert(!exprs.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace]))
   }
 
   test("partitioned sink writes one directory per code and prunes on read") {
