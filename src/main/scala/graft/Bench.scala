@@ -1,42 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** No args (the driver's call): run every query. With args: run only
     * those keys — local iteration aid. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deployment tuning for this host (single node, 128 GiB): let
-      // AQE/planner broadcast mid-size join sides; at cluster scale
-      // this knob is sized per-executor instead.
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // AQE OFF for the bench tier — measured, not guessed: each AQE
-      // query-stage barrier costs 50-200 ms of driver replanning, and
-      // at the bench's MB scale that overhead dominates (113-query
-      // total 86.5 s -> 78.4 s when disabled; dedup_cluster_cc's
-      // 15-stage iterative plan alone 7.2 s -> 5.3 s). On a real
-      // cluster at TB scale flip this ON (one conf): skew-join splits
-      // and runtime SMJ->BHJ re-selection then pay for the barriers.
-      // The plans themselves don't depend on it — broadcasts and
-      // partitioning are explicit in every graded query.
-      .config("spark.sql.adaptive.enabled", "false")
-      // Session-timezone parity with Verify/Explain (ADVICE r10): the
-      // events reader's TimestampNTZ cast is session-tz-dependent, so
-      // an unpinned bench on a non-UTC host would time different
-      // session/window/date_trunc groupings than the plans the hash
-      // gate certifies.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        graft.TempDirs.create("graft-warehouse"))
-      .config("spark.ui.enabled", "false")
-    // experiment hook: SPARK_GRAFT_CONF="k=v,k=v" overrides any conf
-    // (shared with Verify/Explain — HarnessConf, ADVICE r7).
-    val spark = HarnessConf.applyEnv(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(HarnessConf.cpus, GraftSession.AqeOff)
     // Warm-up: JVM/codegen/vectorized-reader/broadcast/window/Generate
     // classloading costs otherwise land on whichever query happens to
     // run first. Exercises each machinery once on the 25-row dims.
@@ -159,16 +127,9 @@ object Bench {
     // compiles every class outside the timed region. This is machine
     // warm-up (JIT state), not result caching: clearCache() drops any
     // data the pass may have pinned.
-    // Per-key shuffle-partition presizing (PartitionPolicy): applied
-    // in BOTH the warm-up and the timed loop so the warmed plan is the
-    // timed plan. An explicit shuffle.partitions in SPARK_GRAFT_CONF
-    // disables it — that env hook exists precisely for global sweeps,
-    // which the per-key policy would silently defeat.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val policyActive = HarnessConf.policyActive
-    def applyPolicy(key: String): Unit = if (policyActive)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        PartitionPolicy.forKey(key, sessionParts).toString)
+    // Every key runs through GraftSession.runKey (per-key
+    // PartitionPolicy width, clearCache after) in BOTH the warm-up and
+    // the timed loop, so the warmed plan is the timed plan.
     // Warm SCHEDULE, not a single pass (r11): one sf0.001 pass
     // compiles the Janino classes but leaves C2 JIT to fire
     // mid-timing — back-edge counters only cross the compile
@@ -256,12 +217,11 @@ object Bench {
           else {
             ranPasses += 1
             selected.flatMap { case (name, fn) =>
-              applyPolicy(name)
-              val r = try { fn(spark, warmDir).count(); None }
+              GraftSession.runKey(spark, name) {
+                try { fn(spark, warmDir).count(); None }
                 catch { case scala.util.control.NonFatal(e) =>
                   Some(s"$name (${e.getClass.getSimpleName})") }
-              spark.catalog.clearCache()
-              r
+              }
             }
           }
         }.distinct
@@ -308,23 +268,23 @@ object Bench {
     // artifact guard below exists to prevent.
     val crashed = scala.collection.mutable.ListBuffer[String]()
     val results = selected.flatMap { case (name, fn) =>
-      applyPolicy(name)
-      val (gc0, jit0) = (gcMs, jitMs)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          crashed += s"$name (${e.getClass.getSimpleName})"; false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(
-        s"[bench] $name ${r3(dt)}s gc_ms=${gcMs - gc0} jit_ms=${jitMs - jit0}")
-      // Unpersist per-query caches (see Verify for why the queries
-      // can't do it themselves). Inside the timed region would charge
-      // cleanup to the query; here it is honest session hygiene —
-      // and so is the explicit GC: the md5/shingle-heavy queries leave
-      // multi-GB garbage behind, and without this the collection pause
-      // lands inside whichever unlucky query runs next (measured: a
-      // 1.7 s query spiking to 25 s mid-session).
-      spark.catalog.clearCache()
+      val (ok, dt) = GraftSession.runKey(spark, name) {
+        val (gc0, jit0) = (gcMs, jitMs)
+        val t0 = System.nanoTime()
+        val ok = try { fn(spark, sfDir).count(); true }
+          catch { case scala.util.control.NonFatal(e) =>
+            crashed += s"$name (${e.getClass.getSimpleName})"; false }
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(
+          s"[bench] $name ${r3(dt)}s gc_ms=${gcMs - gc0} jit_ms=${jitMs - jit0}")
+        (ok, dt)
+      }
+      // runKey's cache clear and this GC run outside the timed region:
+      // inside it they would charge cleanup to the query. The
+      // md5/shingle-heavy queries leave multi-GB garbage behind, and
+      // without the explicit GC the collection pause lands inside
+      // whichever unlucky query runs next (measured: a 1.7 s query
+      // spiking to 25 s mid-session).
       System.gc()
       // A crashed query contributes NOTHING to total/n_queries/the
       // per-query map: its truncated wall time would understate the
@@ -359,7 +319,7 @@ object Bench {
       // the attribution field's name. Guard on the committed line's
       // sf field (absent in very old artifacts → guard fails → -1).
       if (p.waitFor() != 0 || !txt.contains(s""""sf":"$sfDir"""")) Map.empty
-      else HarnessConf.parseBenchQueries(txt)
+      else HarnessConf.parseBenchQueriesLoose(txt)
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
     val ratioMedian: Double =
       if (committedMap.isEmpty) -1.0
@@ -386,12 +346,12 @@ object Bench {
           .map(k => (k, firstPass(k)))
         suspects.flatMap { case (k, first) =>
           byKey.get(k).flatMap { fn =>
-            applyPolicy(k)
-            val t0 = System.nanoTime()
-            val ok = try { fn(spark, sfDir).count(); true }
-              catch { case scala.util.control.NonFatal(_) => false }
-            val second = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
+            val (ok, second) = GraftSession.runKey(spark, k) {
+              val t0 = System.nanoTime()
+              val ok = try { fn(spark, sfDir).count(); true }
+                catch { case scala.util.control.NonFatal(_) => false }
+              (ok, (System.nanoTime() - t0) / 1e9)
+            }
             System.gc()
             if (ok) {
               System.err.println(s"[bench] retimed $k first=${r3(first)}s " +

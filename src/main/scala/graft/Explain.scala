@@ -3,21 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection main: prints `.explain("formatted")` for selected
-  * queries (all of them if no keys are given). Used to audit
-  * pushdown / broadcast / codegen per SURVEY §4; findings are
-  * recorded in PLANS.md. */
+  * queries (all of them if no keys are given) on Bench's session conf
+  * (AQE off, SPARK_GRAFT_CPUS wide) and per-key policy, so the printed
+  * plans are the ones Bench times. Used to audit pushdown / broadcast /
+  * codegen per SURVEY §4; findings are recorded in PLANS.md. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = HarnessConf.applyEnv(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(HarnessConf.cpus, GraftSession.AqeOff)
     val keys = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet
     run(spark, keys, sfDir)
     spark.stop()
@@ -25,17 +18,11 @@ object Explain {
 
   /** The session-lifecycle-free body, so a spec can smoke the audit
     * loop against the shared test session without main's stop(). */
-  def run(spark: SparkSession, keys: Set[String], sfDir: String): Unit = {
-    // same per-key presizing AND the same sweep-disable condition as
-    // Bench/Verify (HarnessConf, ADVICE r7), so the printed plans are
-    // the ones the timed runs actually execute — under a sweep too
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+  def run(spark: SparkSession, keys: Set[String], sfDir: String): Unit =
     SparkEntry.defs.filter(d => keys.contains(d.key)).foreach { d =>
-      if (HarnessConf.policyActive)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          PartitionPolicy.forKey(d.key, sessionParts).toString)
-      println(s"\n======== ${d.key} ========")
-      d.run(spark, sfDir).explain("formatted")
+      GraftSession.runKey(spark, d.key) {
+        println(s"\n======== ${d.key} ========")
+        d.run(spark, sfDir).explain("formatted")
+      }
     }
-  }
 }

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Shared harness-session configuration for the three driver mains
-  * (Bench / Verify / Explain).
+/** Shared harness-session configuration for the driver mains
+  * (Bench / Verify / Explain, through [[GraftSession]]).
   *
   * The drivers must agree on BOTH halves of the session-conf story,
   * or the hash gate and plan dumps certify different plans than the
@@ -22,11 +20,11 @@ import org.apache.spark.sql.SparkSession
 object HarnessConf {
 
   /** SPARK_GRAFT_CONF parsed into (key, value) entries — ONE parse
-    * shared by applyEnv and policyActive, so the conf a sweep sets
-    * and the conf the policy gate tests are the same string split the
-    * same way (ADVICE r8: the old substring `contains` let a VALUE
-    * mentioning the partitions key, or a longer key with it as a
-    * prefix, disable the policy without pinning anything). */
+    * shared by the session builder and policyActive, so the conf a
+    * sweep sets and the conf the policy gate tests are the same string
+    * split the same way (ADVICE r8: the old substring `contains` let
+    * a VALUE mentioning the partitions key, or a longer key with it as
+    * a prefix, disable the policy without pinning anything). */
   private[graft] def parseEntries(conf: String): Seq[(String, String)] =
     conf.split(',').toSeq.map { kv =>
       kv.split("=", 2) match {
@@ -43,24 +41,21 @@ object HarnessConf {
   private[graft] def expand(conf: String): String =
     if (conf.trim == "cluster") ClusterProfile.conf else conf
 
-  private def envEntries: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.map(expand).flatMap(parseEntries)
+  /** The session overrides a SPARK_GRAFT_CONF value sets, in order. */
+  private[graft] def envEntries(conf: Option[String]): Seq[(String, String)] =
+    conf.toSeq.map(expand).flatMap(parseEntries)
 
-  /** Apply the SPARK_GRAFT_CONF overrides to a session builder. */
-  def applyEnv(builder: SparkSession.Builder): SparkSession.Builder = {
-    envEntries.foreach { case (k, v) => builder.config(k, v) }
-    builder
-  }
+  /** Local width of the harness sessions (SPARK_GRAFT_CPUS). */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** Is the per-key shuffle presizing in force for this process? One
     * definition, so Bench (timing), Verify (hash gate), and Explain
     * (plan dumps) always flip together. Key EQUALITY against the
-    * parsed entries — exactly the keys applyEnv would set. */
+    * parsed entries — exactly the keys the session builder sets. */
   def policyActive: Boolean = policyActiveFor(sys.env.get("SPARK_GRAFT_CONF"))
 
   private[graft] def policyActiveFor(conf: Option[String]): Boolean =
-    !conf.toSeq.map(expand).flatMap(parseEntries)
-      .exists(_._1 == "spark.sql.shuffle.partitions")
+    !envEntries(conf).exists(_._1 == "spark.sql.shuffle.partitions")
 
   /** 1-minute host load average from /proc/loadavg (-1.0 if
     * unreadable). Bench records it as JSON fields, Verify on stderr —
@@ -95,38 +90,19 @@ object HarnessConf {
     if (start._2 < 0 || end._2 < 0 || end._2 <= start._2) -1.0
     else (end._1 - start._1).toDouble / (end._2 - start._2)
 
-  /** Per-query seconds parsed out of a Bench artifact line's
-    * `"queries":{...}` object (r11 — feeds `ratio_median`). The
-    * artifact is machine-written flat JSON (no nesting inside the
-    * object, keys are bare query names), so a scan to the next '}'
-    * plus comma/colon splits is exact, not approximate; anything
-    * unparsable yields an empty map rather than a throw — a missing
-    * or malformed committed artifact must never fail a bench run. */
-  private[graft] def parseBenchQueries(txt: String): Map[String, Double] = {
-    val i = txt.indexOf("\"queries\":{")
-    if (i < 0) Map.empty else {
-      val end = txt.indexOf('}', i)
-      if (end < 0) Map.empty
-      else txt.substring(i + 11, end).split(',')
-        .flatMap { e =>
-          e.split(':') match {
-            case Array(k, v) =>
-              try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-    }
-  }
-
-  /** Driver-artifact variant of [[parseBenchQueries]] (r13, VERDICT
-    * r12 item 4): the driver re-serializes our bench line through
-    * Python's json.dump, which inserts a space after every colon
-    * (`"queries": {`), defeating the exact-scan above. This variant
-    * tolerates whitespace between the key, the colon and the brace;
-    * the escaped `\"queries\"` copies inside the artifact's "tail"
-    * string can never match an UNESCAPED `"queries"` probe, so the
-    * first hit is the parsed per-query object. */
+  /** Per-query seconds parsed out of a Bench artifact's
+    * `"queries":{...}` object (r11 — feeds `ratio_median`), both from
+    * Bench's own line and from the driver's copy (r13, VERDICT r12
+    * item 4), which Python's json.dump re-serializes with a space after
+    * every colon (`"queries": {`). The object is machine-written flat
+    * JSON (no nesting, keys are bare query names), so a scan to the
+    * next '}' plus comma/colon splits is exact; whitespace between the
+    * key, the colon and the brace is tolerated. The escaped
+    * `\"queries\"` copies inside the driver artifact's "tail" string
+    * can never match an UNESCAPED `"queries"` probe, so the first hit
+    * is the parsed per-query object. Anything unparsable yields an
+    * empty map rather than a throw — a missing or malformed artifact
+    * must never fail a bench run. */
   private[graft] def parseBenchQueriesLoose(txt: String): Map[String, Double] = {
     val i = txt.indexOf("\"queries\"")
     if (i < 0) Map.empty else {

@@ -32,10 +32,10 @@ package graft
   * re-derived) per round; the golden exchange-count spec pins the
   * plan shapes independently.
   *
-  * SINGLE-THREADED ASSUMPTION: the harness drivers (Bench / Verify /
-  * tests) scope `spark.sql.shuffle.partitions` around one query at a
-  * time on their session. Concurrent queries on a shared session must
-  * scope via `spark.newSession()` instead.
+  * SINGLE-THREADED ASSUMPTION: the harness drivers scope
+  * `spark.sql.shuffle.partitions` around one query at a time on their
+  * session ([[GraftSession.runKey]]). Concurrent queries on a shared
+  * session must scope via `spark.newSession()` instead.
   */
 object PartitionPolicy {
 

@@ -12,10 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `run` may persist() intermediates and does NOT unpersist them —
   * the returned plan must keep its recompute lineage, and several
   * keys' caches back the returned DataFrame itself. The EMBEDDING
-  * CONTEXT owns cleanup: every harness driver (Bench, Verify, the
-  * shared test passes) calls spark.catalog.clearCache() after each
-  * key's action. A context that runs registry keys without clearing
-  * between them will accumulate cached relations (and may log
+  * CONTEXT owns cleanup: [[GraftSession.runKey]] calls
+  * spark.catalog.clearCache() after each key's action (the shared
+  * test passes clear the same way). A context that runs registry keys
+  * without clearing between them will accumulate cached relations (and may log
   * 'Asked to cache already cached data' when canonically identical
   * subtrees recur across keys) — clear between keys, or accept the
   * session-lifetime cache. */

@@ -36,44 +36,26 @@ object Verify {
     // Optional extra args: restrict the dump to these keys (local
     // iteration only — the driver always calls with exactly two args).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = HarnessConf.applyEnv(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        TempDirs.create("graft-warehouse"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE stays ON here (GraftSession): the only conf difference from
+    // Bench, so every round runs both planning paths over every key.
+    val spark = GraftSession.local(HarnessConf.cpus)
     new java.io.File(outDir).mkdirs()
     // Host load bracketing the hash-gate run, same probe as Bench's
     // load_start/load_end JSON fields (VERDICT r8 item 3): a
     // contended Verify run is attributable too.
     System.err.println(f"[verify] load_start=${HarnessConf.load1}%.3f")
     // The same per-key shuffle presizing the bench applies
-    // (PartitionPolicy): the hash gate must certify the EXACT plans
-    // the bench times, so a policy value that changed results would
-    // fail here, not ship silently. Both the SPARK_GRAFT_CONF
-    // overrides and the policy-disable condition are SHARED with
-    // Bench/Explain (HarnessConf, ADVICE r7) — during a sweep all
-    // three drivers see the swept conf, not a mix.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // (GraftSession.runKey): the hash gate certifies the bench's plans
+    // at the bench's partition widths, AQE aside, so a policy value
+    // that changed results would fail here, not ship silently. The
+    // SPARK_GRAFT_CONF overrides and the policy-disable condition are
+    // SHARED with Bench/Explain (HarnessConf, ADVICE r7) — during a
+    // sweep all three drivers see the swept conf, not a mix.
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      if (HarnessConf.policyActive)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          PartitionPolicy.forKey(name, sessionParts).toString)
-      try dumpQuery(spark, sfDir, outDir, name, fn)
-      // Queries that persist() intermediates (jaccard prep, minhash
-      // shingles, win_distribution pids) cannot unpersist them
-      // themselves — the action runs here, after they return. Dropping
-      // the cache per query keeps a long session's footprint bounded.
-      finally spark.catalog.clearCache()
-    }
+        GraftSession.runKey(spark, name)(dumpQuery(spark, sfDir, outDir, name, fn))
+      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

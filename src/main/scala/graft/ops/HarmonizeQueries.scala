@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import graft.QDef.q
 import graft.Protocol._
 import graft.pipeline.Harmonize
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,6 +44,20 @@ object HarmonizeQueries {
       |    UNION ALL
       |    SELECT p_partkey, p_type, 'p_size' AS attr, CAST(p_size AS DOUBLE) AS val FROM part))""".stripMargin
 
+  /** Spark twin of the `obs` + `codebook` CTEs: part's two measures
+    * unpivoted into observations, normalized and left-joined to the
+    * codebook (unmatched rows keep a NULL code) — the shared lineage
+    * of the three graded outputs below. */
+  private def coded(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val codebook = codebookRows.toDF("attr", "raw_norm", "code", "rule_id")
+    val obs = Harmonize.unpivotObservations(
+      Tables.part(s, d).withColumnRenamed("p_type", "raw"),
+      ids = Seq("p_partkey", "raw"),
+      values = Seq("p_retailprice", "p_size"))
+    Harmonize.applyCodebook(obs, codebook)
+  }
+
   /** The harmonized cube: measures aggregated over (code, attr). */
   val harmonizeCube: QDef = q(
     "harmonize_cube",
@@ -53,14 +68,7 @@ object HarmonizeQueries {
       |FROM obs JOIN codebook USING (attr, raw_norm)
       |GROUP BY code, attr
       |ORDER BY code, attr""") { (s, d) =>
-    import s.implicits._
-    val codebook = codebookRows.toDF("attr", "raw_norm", "code", "rule_id")
-    val obs = Harmonize.unpivotObservations(
-      Tables.part(s, d).withColumnRenamed("p_type", "raw"),
-      ids = Seq("p_partkey", "raw"),
-      values = Seq("p_retailprice", "p_size"))
-    val joined = Harmonize.applyCodebook(obs, codebook)
-    Harmonize.aggregateCube(Harmonize.mapped(joined), Seq("code", "attr"), "val")
+    Harmonize.aggregateCube(Harmonize.mapped(coded(s, d)), Seq("code", "attr"), "val")
       .orderBy(col("code"), col("attr"))
   }
 
@@ -75,13 +83,7 @@ object HarmonizeQueries {
       |WHERE code IS NULL
       |GROUP BY attr, raw_norm
       |ORDER BY attr, raw_norm""") { (s, d) =>
-    import s.implicits._
-    val codebook = codebookRows.toDF("attr", "raw_norm", "code", "rule_id")
-    val obs = Harmonize.unpivotObservations(
-      Tables.part(s, d).withColumnRenamed("p_type", "raw"),
-      ids = Seq("p_partkey", "raw"),
-      values = Seq("p_retailprice", "p_size"))
-    Harmonize.unmappable(Harmonize.applyCodebook(obs, codebook))
+    Harmonize.unmappable(coded(s, d))
       .select(col("attr"), col("raw_norm"), col("n_occurrences"))
       .orderBy(col("attr"), col("raw_norm"))
   }
@@ -101,18 +103,11 @@ object HarmonizeQueries {
       |FROM obs LEFT JOIN codebook USING (attr, raw_norm)
       |GROUP BY prov_rule
       |ORDER BY prov_rule""") { (s, d) =>
-    import s.implicits._
-    val codebook = codebookRows.toDF("attr", "raw_norm", "code", "rule_id")
-    val obs = Harmonize.unpivotObservations(
-      Tables.part(s, d).withColumnRenamed("p_type", "raw"),
-      ids = Seq("p_partkey", "raw"),
-      values = Seq("p_retailprice", "p_size"))
-    Harmonize.withProvenance(Harmonize.applyCodebook(obs, codebook))
+    Harmonize.withProvenance(coded(s, d))
       .groupBy(col("prov_rule"))
       .agg(count(lit(1)).as("n_obs"),
         countDistinct(col("p_partkey")).as("n_parts"),
-        sum(col("val").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-          .cast(org.apache.spark.sql.types.DoubleType).as("sum_measure"))
+        sum(col("val").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_measure"))
       .orderBy(col("prov_rule"))
   }
 

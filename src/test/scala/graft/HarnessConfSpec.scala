@@ -45,18 +45,18 @@ class HarnessConfSpec extends AnyFunSuite {
     assert(b._1 >= a._1 && b._2 >= a._2)
   }
 
-  test("parseBenchQueries reads the artifact's queries object exactly") {
+  test("parseBenchQueriesLoose reads Bench's own artifact line exactly") {
     val line = """{"metric":"total","value":51.473,"unit":"sec","n_queries":3,""" +
       """"queries":{"q_a":1.500,"q_b":0.250,"q_c":3.000},""" +
       """"load_start":1.630,"steal_frac":0.000,"sf":"/x"}"""
-    assert(HarnessConf.parseBenchQueries(line) ==
+    assert(HarnessConf.parseBenchQueriesLoose(line) ==
       Map("q_a" -> 1.5, "q_b" -> 0.25, "q_c" -> 3.0))
     // top-level numeric fields outside the object must NOT leak in
-    assert(!HarnessConf.parseBenchQueries(line).contains("value"))
+    assert(!HarnessConf.parseBenchQueriesLoose(line).contains("value"))
     // malformed / missing input degrades to empty, never throws
-    assert(HarnessConf.parseBenchQueries("") == Map.empty)
-    assert(HarnessConf.parseBenchQueries("""{"queries":{""") == Map.empty)
-    assert(HarnessConf.parseBenchQueries("""{"queries":{"q":oops}}""") == Map.empty)
+    assert(HarnessConf.parseBenchQueriesLoose("") == Map.empty)
+    assert(HarnessConf.parseBenchQueriesLoose("""{"queries":{""") == Map.empty)
+    assert(HarnessConf.parseBenchQueriesLoose("""{"queries":{"q":oops}}""") == Map.empty)
   }
 
   test("parseBenchQueriesLoose tolerates the driver's Python re-serialization") {
@@ -70,11 +70,6 @@ class HarnessConfSpec extends AnyFunSuite {
       """"queries": {"q_a": 1.500, "q_b": 0.250}, "sf": "/x"}}"""
     assert(HarnessConf.parseBenchQueriesLoose(art) ==
       Map("q_a" -> 1.5, "q_b" -> 0.25))
-    // the exact-format artifact still parses identically
-    val tight = """{"queries":{"q_a":1.5,"q_b":0.25},"sf":"/x"}"""
-    assert(HarnessConf.parseBenchQueriesLoose(tight) ==
-      Map("q_a" -> 1.5, "q_b" -> 0.25))
-    assert(HarnessConf.parseBenchQueriesLoose("") == Map.empty)
     assert(HarnessConf.parseBenchQueriesLoose("""{"queries": {""") == Map.empty)
   }
 

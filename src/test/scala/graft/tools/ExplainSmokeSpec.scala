@@ -13,14 +13,10 @@ class ExplainSmokeSpec extends SparkSpec with graft.SerialSuite {
   test("Explain.run prints plans for representative keys without throwing") {
     val keys = Seq("q1_pricing_summary", "join_star_3way", "dedup_simhash",
       "sim_lsh_bucketed", "win_distribution")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
     val out = new java.io.ByteArrayOutputStream()
-    try Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
       graft.Explain.run(spark, keys.toSet, "/root/testdata/sf0.001")
-    } finally
-      // the audit loop presizes shuffle partitions per key; don't
-      // leak the last key's policy value into later suites
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
+    }
     val printed = out.toString("UTF-8")
     for (k <- keys)
       assert(printed.contains(s"======== $k ========"), s"missing section for $k")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only per-key repeat timer (test sourceset — never ships):
   * the r19 optimization loop needed an instrument with less window
   * noise than one-shot targeted Bench runs (their per-key in-region
@@ -20,21 +18,7 @@ object KeyTime {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val keys = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.HarnessConf.applyEnv(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", graft.TempDirs.create("graft-warehouse"))
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def applyPolicy(key: String): Unit = if (graft.HarnessConf.policyActive)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        graft.PartitionPolicy.forKey(key, sessionParts).toString)
+    val spark = graft.GraftSession.local(graft.HarnessConf.cpus, graft.GraftSession.AqeOff)
     def jitMs: Long = {
       val c = java.lang.management.ManagementFactory.getCompilationMXBean
       if (c != null && c.isCompilationTimeMonitoringSupported)
@@ -43,23 +27,22 @@ object KeyTime {
     // small-SF warm passes, same role as Bench's schedule
     for (wd <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.001",
         "/root/testdata/sf0.01");
-        k <- keys) {
-      applyPolicy(k)
-      try graft.SparkEntry.queries(k)(spark, wd).count()
-      catch { case scala.util.control.NonFatal(_) => }
-      spark.catalog.clearCache()
-    }
+        k <- keys)
+      graft.GraftSession.runKey(spark, k) {
+        try graft.SparkEntry.queries(k)(spark, wd).count()
+        catch { case scala.util.control.NonFatal(_) => }
+      }
     System.gc()
     for (k <- keys) {
-      applyPolicy(k)
-      val times = (1 to reps).map { i =>
-        val j0 = jitMs
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(k)(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
+      val times = (1 to reps).map { _ =>
+        val (dt, jit) = graft.GraftSession.runKey(spark, k) {
+          val j0 = jitMs
+          val t0 = System.nanoTime()
+          graft.SparkEntry.queries(k)(spark, sfDir).count()
+          ((System.nanoTime() - t0) / 1e9, jitMs - j0)
+        }
         System.gc()
-        f"$dt%.3f(j${jitMs - j0})"
+        f"$dt%.3f(j$jit)"
       }
       println(s"[keytime] $k ${times.mkString(" ")}")
     }

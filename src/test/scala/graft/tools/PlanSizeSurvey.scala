@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only registry survey (test sourceset — never ships): print
   * every graded key's executed-plan text size and paid-shuffle count
   * at sf0.001 with AQE off. Plan text size is a cheap proxy for
@@ -13,16 +11,8 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanSizeSurvey {
   def main(args: Array[String]): Unit = {
-    val spark = graft.HarnessConf.applyEnv(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", graft.TempDirs.create("graft-warehouse"))
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(8, graft.GraftSession.AqeOff,
+      "spark.sql.shuffle.partitions" -> "4")
     val sf = graft.StaticPlans.sfStatic
     graft.SparkEntry.queries.keySet.toSeq.sorted.foreach { k =>
       try {
