@@ -148,20 +148,8 @@ object Bench {
     // 79.5 -> 50-60 s; the sf0.01 stage targets the remainder. All
     // warm cost is outside the timed region.
     // Env override: SPARK_GRAFT_WARM="dir[:passes],dir[:passes],…".
-    // The pre-r11 single-stage knobs (SPARK_GRAFT_WARM_DIR /
-    // SPARK_GRAFT_WARM_PASSES) stay honored when the schedule env is
-    // absent — a harness still setting them gets exactly the stage it
-    // asked for (no surprise extra sf0.01 stage), not a silently
-    // ignored knob.
     val warmSchedule: Seq[(String, Int)] = sys.env.get("SPARK_GRAFT_WARM")
       .map(HarnessConf.parseWarmSchedule)
-      .orElse {
-        val legacyDir = sys.env.get("SPARK_GRAFT_WARM_DIR")
-        val legacyPasses = sys.env.get("SPARK_GRAFT_WARM_PASSES")
-        if (legacyDir.isEmpty && legacyPasses.isEmpty) None
-        else Some(Seq((legacyDir.getOrElse("/root/testdata/sf0.001"),
-          legacyPasses.getOrElse("3").toInt)))
-      }
       .getOrElse(HarnessConf.parseWarmSchedule(
         // Default trimmed 3→2 sf0.001 passes (r18-opt): at 483 keys
         // the three passes alone took 624 s — past the whole warm

@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §0.2 and §7.
+/** Driver contract — see SURVEY.md §0.2 and §7.
   *
   * `queries` is assembled from the per-family QDef registries under
   * graft.ops; every key there is one line of SURVEY.md §2's inventory.
+  * Operators are organized by family, not by when they were added: a
+  * key goes to the module that already holds most keys with its prefix
+  * (`graph_` in ClusterOps, `stats_` in DriftOps, `privacy_` in
+  * PrivacyOps, …).
   */
 object SparkEntry {
 
-  /** All graded operators, grouped by SURVEY §2 family. */
+  /** All graded operators, one registry per family module. */
   def defs: Seq[QDef] =
     ops.Scans.all ++ ops.ProjectFilter.all ++ ops.Joins.all ++
       ops.Aggregates.all ++ ops.Windows.all ++ ops.SortSetOps.all ++
@@ -18,8 +22,7 @@ object SparkEntry {
       ops.HarmonizeQueries.all ++ ops.EventAnalytics.all ++
       ops.PipelineOps.all ++ ops.ClusterOps.all ++ ops.CorpusOps.all ++
       ops.EvolutionQueries.all ++ ops.DriftOps.all ++ ops.SketchOps.all ++
-      ops.R13Ops.all ++ ops.R14Ops.all ++ ops.R15Ops.all ++ ops.R16Ops.all ++
-      ops.R17Ops.all ++ ops.R18Ops.all ++ ops.R18bOps.all
+      ops.PrivacyOps.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

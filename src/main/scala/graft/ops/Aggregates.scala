@@ -5,6 +5,8 @@ import graft.QDef.q
 import graft.Protocol._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 
 /** SURVEY.md §2.4 — aggregation family.
   *
@@ -2039,6 +2041,705 @@ object Aggregates {
       .orderBy(col("yr"), col("mon"))
   }
 
+  /** Lorenz decile table of customer order revenue (r13b) — the
+    * curve behind `agg_gini_value`, materialized: active customers
+    * ranked ASCENDING by exact revenue, cut into 10 rank deciles,
+    * each with its revenue mass and the cumulative (Lorenz) share in
+    * floor-ppm. Ranks come from the shared distributed-rank primitive
+    * (`DriftOps.exclusivePrefix` over distinct revenue values +
+    * row_number INSIDE the tie group — never an unpartitioned
+    * window); everything after the rank is 10-row algebra. */
+  val reportLorenzDeciles: QDef = q(
+    "report_lorenz_deciles",
+    """WITH u AS (
+      |  SELECT o_custkey,
+      |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM orders GROUP BY 1),
+      |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(cents) AS BIGINT) AS total FROM u),
+      |rk AS (
+      |  SELECT cents,
+      |    CAST(ROW_NUMBER() OVER (ORDER BY cents, o_custkey) AS BIGINT) AS rank
+      |  FROM u),
+      |dec AS (
+      |  SELECT CAST(((rank - 1) * 10) // n AS BIGINT) AS decile, cents
+      |  FROM rk CROSS JOIN n),
+      |g AS (
+      |  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
+      |    CAST(SUM(cents) AS BIGINT) AS cents
+      |  FROM dec GROUP BY 1),
+      |c AS (
+      |  SELECT a.decile, a.n_customers, a.cents,
+      |    CAST(SUM(b.cents) AS BIGINT) AS cum_cents
+      |  FROM g a JOIN g b ON b.decile <= a.decile
+      |  GROUP BY 1, 2, 3)
+      |SELECT c.decile, c.n_customers, c.cents, c.cum_cents,
+      |  CAST(c.cum_cents * 1000000 // n.total AS BIGINT) AS lorenz_ppm
+      |FROM c CROSS JOIN n ORDER BY c.decile""") { (s, d) =>
+    val u = Tables.orders(s, d)
+      .groupBy(col("o_custkey"))
+      .agg(sum(expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)"))
+        .cast(LongType).as("cents"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = u.agg(count(lit(1)).as("n"), sum(col("cents")).as("total"))
+    val xc = u.groupBy(col("cents").as("v")).agg(count(lit(1)).as("cnt"))
+    val pre = DriftOps.exclusivePrefix(xc, expr("v div 10000000"))
+      .select(col("v"), col("pre"))
+    val wTie = Window.partitionBy(col("cents")).orderBy(col("o_custkey"))
+    val rk = u.join(pre, col("v") === col("cents"))
+      .select(col("cents"), (col("pre") + row_number().over(wTie)).as("rank"))
+    val g = rk.crossJoin(broadcast(n))
+      .select(expr("CAST(((rank - 1) * 10) div n AS BIGINT)").as("decile"),
+        col("cents"))
+      .groupBy(col("decile"))
+      .agg(count(lit(1)).as("n_customers"), sum(col("cents")).as("cents"))
+    val c = g.join(broadcast(g.select(col("decile").as("bd"),
+        col("cents").as("bc"))), col("bd") <= col("decile"))
+      .groupBy(col("decile"), col("n_customers"), col("cents"))
+      .agg(sum(col("bc")).as("cum_cents"))
+    c.crossJoin(broadcast(n))
+      .select(col("decile"), col("n_customers"), col("cents"), col("cum_cents"),
+        expr("CAST(cum_cents * 1000000 div total AS BIGINT)").as("lorenz_ppm"))
+      .orderBy(col("decile"))
+  }
+
+  /** Order→ship lag histogram (r13b) — the fulfilment-latency
+    * distribution behind `dq_order_lineitem_dates`' violation audit:
+    * whole-day lag from order date to each line's ship date, bucketed
+    * by week with a 15+ tail, counts and floor-permille. One
+    * fact⋈fact equi-join on the order key (SMJ at scale — exactly the
+    * join the bucketed-layout keys delete) and a 16-cell agg. */
+  val reportShipLagHistogram: QDef = q(
+    "report_ship_lag_histogram",
+    """WITH lag AS (
+      |  SELECT date_diff('day', CAST(o.o_orderdate AS DATE),
+      |      CAST(l.l_shipdate AS DATE)) AS lag_days
+      |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+      |b AS (
+      |  SELECT least(greatest(lag_days, 0) // 7, 15) AS week_bucket
+      |  FROM lag),
+      |c AS (
+      |  SELECT week_bucket, CAST(COUNT(*) AS BIGINT) AS n
+      |  FROM b GROUP BY 1),
+      |t AS (SELECT CAST(SUM(n) AS BIGINT) AS tot FROM c)
+      |SELECT CAST(week_bucket AS BIGINT) AS week_bucket, n,
+      |  (n * 1000) // t.tot AS permille
+      |FROM c CROSS JOIN t ORDER BY week_bucket""") { (s, d) =>
+    val lags = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_shipdate").cast(DateType).as("ship"))
+      .join(Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_orderdate").cast(DateType).as("odate")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(datediff(col("ship"), col("odate")).as("lag_days"))
+    val c = lags
+      .select(least(expr("greatest(lag_days, 0) div 7"), lit(15))
+        .cast(LongType).as("week_bucket"))
+      .groupBy(col("week_bucket")).agg(count(lit(1)).as("n"))
+    val t = c.agg(sum(col("n")).as("tot"))
+    c.crossJoin(broadcast(t))
+      .select(col("week_bucket"), col("n"),
+        expr("(n * 1000) div tot").as("permille"))
+      .orderBy(col("week_bucket"))
+  }
+
+  /** Revenue contribution waterfall (r14h) — the YoY bridge chart's
+    * data: per customer nation, 1997 vs 1998 gross revenue, the
+    * delta, and the running cumulative delta in contribution order
+    * (delta DESC, nation — the waterfall's bar order). Cumulative via
+    * the nation-sized broadcast self-join (the `report_lorenz_deciles`
+    * pattern) — no unpartitioned window even on the 25-row table, so
+    * the shape survives any group cardinality. Exact BIGINT cents. */
+  val reportContributionWaterfall: QDef = q(
+    "report_contribution_waterfall",
+    """WITH r AS (
+      |  SELECT n.n_name AS nation,
+      |    CAST(SUM(CASE WHEN year(CAST(o.o_orderdate AS TIMESTAMP)) = 1997
+      |      THEN CAST(CAST(l.l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+      |      ELSE 0 END) AS BIGINT) AS rev_prev,
+      |    CAST(SUM(CASE WHEN year(CAST(o.o_orderdate AS TIMESTAMP)) = 1998
+      |      THEN CAST(CAST(l.l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+      |      ELSE 0 END) AS BIGINT) AS rev_curr
+      |  FROM lineitem l
+      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN nation n ON c.c_nationkey = n.n_nationkey
+      |  GROUP BY 1),
+      |d AS (SELECT nation, rev_prev, rev_curr,
+      |  rev_curr - rev_prev AS delta FROM r)
+      |SELECT a.nation, a.rev_prev, a.rev_curr, a.delta,
+      |  CAST(SUM(b.delta) AS BIGINT) AS running_delta
+      |FROM d a JOIN d b
+      |  ON b.delta > a.delta OR (b.delta = a.delta AND b.nation <= a.nation)
+      |GROUP BY a.nation, a.rev_prev, a.rev_curr, a.delta
+      |ORDER BY a.delta DESC, a.nation""") { (s, d) =>
+    val cents = expr(
+      "CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
+    val yr = year(col("o_orderdate").cast(TimestampType))
+    val r = Tables.lineitem(s, d)
+      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("n_name").as("nation"))
+      .agg(sum(when(yr === 1997, cents).otherwise(0L)).cast(LongType).as("rev_prev"),
+        sum(when(yr === 1998, cents).otherwise(0L)).cast(LongType).as("rev_curr"))
+      .withColumn("delta", col("rev_curr") - col("rev_prev"))
+    val b = r.select(col("nation").as("b_nation"), col("delta").as("b_delta"))
+    r.join(broadcast(b),
+        col("b_delta") > col("delta") ||
+          (col("b_delta") === col("delta") && col("b_nation") <= col("nation")))
+      .groupBy(col("nation"), col("rev_prev"), col("rev_curr"), col("delta"))
+      .agg(sum(col("b_delta")).as("running_delta"))
+      .orderBy(col("delta").desc, col("nation"))
+  }
+
+  /** Incremental rollup maintenance (r14b) — the partial-aggregate
+    * MERGE shape behind every incrementally-maintained materialized
+    * view: yesterday's per-group state (n, sum, min, max — all
+    * mergeable) combines with today's delta state WITHOUT rescanning
+    * yesterday's raw rows, and the derived mean comes from the merged
+    * state. Orders split by md5-parity of o_orderkey into
+    * prior/delta; the grade is the merged table per o_orderpriority
+    * plus both input widths (so a broken merge can't hide behind a
+    * lucky total). NULL-safe min/max merge spelled with COALESCE
+    * pairs — engine-independent of least/greatest NULL semantics.
+    * Exact BIGINT cents end to end; mean as floor cents. Scale: two
+    * group-sized states and one group-keyed join — at 100 TB the
+    * prior state is a STORED table and the delta scan is the only
+    * data touched, exactly the `dedup_incremental_snapshot` economics
+    * for aggregation. */
+  val aggIncrementalMerge: QDef = q(
+    "agg_incremental_merge",
+    """WITH par AS (
+      |  SELECT o_orderpriority AS grp,
+      |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
+      |    substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) <= '7' AS is_prior
+      |  FROM orders),
+      |prior AS (
+      |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(cents) AS BIGINT) AS s, MIN(cents) AS mn, MAX(cents) AS mx
+      |  FROM par WHERE is_prior GROUP BY grp),
+      |delta AS (
+      |  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(cents) AS BIGINT) AS s, MIN(cents) AS mn, MAX(cents) AS mx
+      |  FROM par WHERE NOT is_prior GROUP BY grp)
+      |SELECT COALESCE(p.grp, d.grp) AS grp,
+      |  COALESCE(p.n, 0) AS n_prior, COALESCE(d.n, 0) AS n_delta,
+      |  COALESCE(p.n, 0) + COALESCE(d.n, 0) AS n_merged,
+      |  COALESCE(p.s, 0) + COALESCE(d.s, 0) AS sum_cents,
+      |  least(COALESCE(p.mn, d.mn), COALESCE(d.mn, p.mn)) AS min_cents,
+      |  greatest(COALESCE(p.mx, d.mx), COALESCE(d.mx, p.mx)) AS max_cents,
+      |  (COALESCE(p.s, 0) + COALESCE(d.s, 0))
+      |    // (COALESCE(p.n, 0) + COALESCE(d.n, 0)) AS avg_cents_floor
+      |FROM prior p FULL OUTER JOIN delta d ON p.grp = d.grp
+      |ORDER BY grp""") { (s, d) =>
+    val par = Tables.orders(s, d)
+      .select(col("o_orderpriority").as("grp"),
+        (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
+          .cast(LongType).as("cents"),
+        (substring(md5(col("o_orderkey").cast(StringType)), 1, 1) <= "7")
+          .as("is_prior"))
+    def state(df: DataFrame, pfx: String): DataFrame =
+      df.groupBy(col("grp").as(s"${pfx}_grp"))
+        .agg(count(lit(1)).as(s"${pfx}_n"), sum(col("cents")).as(s"${pfx}_s"),
+          min(col("cents")).as(s"${pfx}_mn"), max(col("cents")).as(s"${pfx}_mx"))
+    val prior = state(par.filter(col("is_prior")), "p")
+    val delta = state(par.filter(!col("is_prior")), "d")
+    prior.join(delta, col("p_grp") === col("d_grp"), "full")
+      .select(coalesce(col("p_grp"), col("d_grp")).as("grp"),
+        coalesce(col("p_n"), lit(0L)).as("n_prior"),
+        coalesce(col("d_n"), lit(0L)).as("n_delta"),
+        (coalesce(col("p_n"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
+          .as("n_merged"),
+        (coalesce(col("p_s"), lit(0L)) + coalesce(col("d_s"), lit(0L)))
+          .as("sum_cents"),
+        least(coalesce(col("p_mn"), col("d_mn")),
+          coalesce(col("d_mn"), col("p_mn"))).as("min_cents"),
+        greatest(coalesce(col("p_mx"), col("d_mx")),
+          coalesce(col("d_mx"), col("p_mx"))).as("max_cents"),
+        expr("""(coalesce(p_s, 0L) + coalesce(d_s, 0L))
+          | div (coalesce(p_n, 0L) + coalesce(d_n, 0L))""".stripMargin)
+          .as("avg_cents_floor"))
+      .orderBy(col("grp"))
+  }
+
+  /** Discount-cap what-if (r15c) — the pricing-policy simulation a
+    * revenue team runs before changing discount ceilings: gross
+    * revenue under caps of 0%/4%/8% (each line's discount clamped at
+    * the cap) vs actual, from ONE lineitem pass swept by a broadcast
+    * 3-row cap table. All-decimal exact tree (least() of two
+    * DECIMAL(6,2)s, the q8 volume spelling) emitted once as DOUBLE;
+    * recovered = capped − actual is computed on the exact decimals
+    * BEFORE the float cast so the delta is itself exact. */
+  val reportDiscountWhatif: QDef = q(
+    "report_discount_whatif",
+    """WITH caps AS (
+      |  SELECT CAST(cap AS DECIMAL(6,2)) AS cap FROM (
+      |    VALUES (0.00), (0.04), (0.08)) t(cap)),
+      |x AS (
+      |  -- CASE, not least(): DuckDB 1.0.0's least() over two DECIMALs
+      |  -- returns DOUBLE (measured), which would break the exact tree
+      |  SELECT CAST(cap * 100 AS BIGINT) AS cap_centi,
+      |    SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+      |      * (1 - CASE WHEN CAST(l_discount AS DECIMAL(6,2)) < cap
+      |          THEN CAST(l_discount AS DECIMAL(6,2)) ELSE cap END))
+      |      AS rev_capped,
+      |    SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+      |      * (1 - CAST(l_discount AS DECIMAL(6,2)))) AS rev_actual,
+      |    CAST(SUM(CASE WHEN CAST(l_discount AS DECIMAL(6,2)) > cap
+      |      THEN 1 ELSE 0 END) AS BIGINT) AS n_capped
+      |  FROM lineitem CROSS JOIN caps
+      |  GROUP BY cap)
+      |SELECT cap_centi, CAST(rev_capped AS DOUBLE) AS revenue_capped,
+      |  CAST(rev_actual AS DOUBLE) AS revenue_actual,
+      |  CAST(rev_capped - rev_actual AS DOUBLE) AS recovered,
+      |  n_capped
+      |FROM x ORDER BY cap_centi""") { (s, d) =>
+    val caps = Seq("0.00", "0.04", "0.08")
+      .map(v => s.range(1).select(
+        lit(BigDecimal(v)).cast(DecimalType(6, 2)).as("cap")))
+      .reduce(_ unionAll _)
+    Tables.lineitem(s, d)
+      .select(money(col("l_extendedprice")).as("price"),
+        rate(col("l_discount")).as("disc"))
+      .crossJoin(broadcast(caps))
+      .groupBy((col("cap") * 100).cast(LongType).as("cap_centi"))
+      .agg(sum(col("price") * (lit(1) - least(col("disc"), col("cap"))))
+          .as("rev_capped"),
+        sum(col("price") * (lit(1) - col("disc"))).as("rev_actual"),
+        count_if(col("disc") > col("cap")).as("n_capped"))
+      .select(col("cap_centi"),
+        col("rev_capped").cast(DoubleType).as("revenue_capped"),
+        col("rev_actual").cast(DoubleType).as("revenue_actual"),
+        (col("rev_capped") - col("rev_actual")).cast(DoubleType)
+          .as("recovered"),
+        col("n_capped"))
+      .orderBy(col("cap_centi"))
+  }
+
+  /** Monthly seasonality index (r16) — the classic seasonal-index
+    * report: per calendar month (pooled across years), order volume,
+    * revenue mass, and the index revenue_share·12 in floor-ppm
+    * (1000000 = a perfectly uniform month; the DECIMAL(38)/HUGEINT
+    * fold keeps the ×12e6 product safe at any revenue scale). One
+    * 12-group agg + a broadcast 1-row total. */
+  val reportSeasonalityIndex: QDef = q(
+    "report_seasonality_index",
+    """WITH m AS (
+      |  SELECT CAST(month(o_orderdate) AS BIGINT) AS mth,
+      |    CAST(COUNT(*) AS BIGINT) AS n_orders,
+      |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+      |      AS BIGINT)) AS BIGINT) AS sum_cents
+      |  FROM orders GROUP BY 1),
+      |t AS (SELECT CAST(SUM(sum_cents) AS BIGINT) AS tot FROM m)
+      |SELECT mth AS month, n_orders, sum_cents,
+      |  CAST(CAST(sum_cents AS HUGEINT) * 12000000 // tot AS BIGINT)
+      |    AS seasonal_index_ppm
+      |FROM m CROSS JOIN t ORDER BY month""") { (s, d) =>
+    val m = Tables.orders(s, d)
+      .groupBy(month(col("o_orderdate")).cast(LongType).as("mth"))
+      .agg(count(lit(1)).as("n_orders"),
+        sum(expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100"
+          + " AS BIGINT)")).as("sum_cents"))
+    val t = m.agg(sum(col("sum_cents")).as("tot"))
+    m.crossJoin(broadcast(t))
+      .select(col("mth").as("month"), col("n_orders"),
+        col("sum_cents").cast(LongType).as("sum_cents"),
+        expr("CAST(CAST(sum_cents AS DECIMAL(38,0)) * 12000000 div tot"
+          + " AS BIGINT)").as("seasonal_index_ppm"))
+      .orderBy(col("month"))
+  }
+
+  /** Theil T inequality index (r18) — the decomposable concentration
+    * measure next to `agg_gini_value` (rank-based): per nation, over
+    * its customers' order-revenue totals, T = (1/n)Σ(xᵢ/μ)ln(xᵢ/μ).
+    * Revenue is exact integer cents; each customer's term is
+    * quantized to floor-micro THROUGH one identical float tree on
+    * exact integer inputs (r = x·n/S with both products inside
+    * double-exact range, then r·ln(r)·10⁶ floored) and the nation
+    * fold is an exact BIGINT sum — summation order cannot drift a
+    * bit. Two keyed aggs (customer totals, nation fold) + a
+    * broadcast dim join; the nation mean ships as floor-cents. */
+  /** (n_name, x): per-customer order-revenue cents tagged with the
+    * customer's nation — the shared base of the inequality pair
+    * (`agg_theil_index`, `agg_atkinson_index`). */
+  private val custRevCtes: String =
+    """cx AS (
+      |  SELECT o_custkey,
+      |    CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+      |      AS BIGINT) AS x
+      |  FROM orders GROUP BY o_custkey),
+      |cn AS (
+      |  SELECT n.n_name, cx.x
+      |  FROM cx JOIN customer c ON c.c_custkey = cx.o_custkey
+      |  JOIN nation n ON n.n_nationkey = c.c_nationkey)""".stripMargin
+
+  /** Spark twin of `custRevCtes`. */
+  private def custRevByNation(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .groupBy(col("o_custkey"))
+      .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast(LongType))
+        .cast(LongType).as("x"))
+      .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
+      .join(broadcast(Tables.nation(s, d)),
+        col("n_nationkey") === col("c_nationkey"))
+      .select(col("n_name"), col("x"))
+
+  val aggTheilIndex: QDef = q(
+    "agg_theil_index",
+    s"""WITH $custRevCtes,
+      |f AS (
+      |  SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(x) AS BIGINT) AS sx
+      |  FROM cn GROUP BY n_name),
+      |t AS (
+      |  SELECT cn.n_name,
+      |    CAST(floor((CAST(cn.x * f.n AS DOUBLE) / f.sx)
+      |      * ln(CAST(cn.x * f.n AS DOUBLE) / f.sx) * 1000000) AS BIGINT)
+      |      AS term
+      |  FROM cn JOIN f ON f.n_name = cn.n_name)
+      |SELECT f.n_name, f.n AS n_customers,
+      |  CAST(f.sx // f.n AS BIGINT) AS mean_cents,
+      |  CAST(SUM(t.term) // f.n AS BIGINT) AS theil_micro
+      |FROM t JOIN f ON f.n_name = t.n_name
+      |GROUP BY f.n_name, f.n, f.sx
+      |ORDER BY f.n_name""") { (s, d) =>
+    val cn = custRevByNation(s, d)
+    val f = cn.groupBy(col("n_name").as("f_name"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).cast(LongType).as("sx"))
+    val ratio = (col("x") * col("n")).cast(DoubleType) / col("sx")
+    cn.join(broadcast(f), col("f_name") === col("n_name"))
+      .select(col("n_name"), col("n"), col("sx"),
+        floor(ratio * log(ratio) * 1000000).cast(LongType).as("term"))
+      .groupBy(col("n_name"), col("n"), col("sx"))
+      .agg(sum(col("term")).as("st"))
+      .select(col("n_name"), col("n").as("n_customers"),
+        expr("sx div n").as("mean_cents"),
+        expr("st div n").as("theil_micro"))
+      .orderBy(col("n_name"))
+  }
+
+  /** Atkinson inequality index at ε = 1 (r18) — the
+    * welfare-grounded companion to `agg_theil_index` over the SAME
+    * per-nation customer-revenue base (`custRevCtes`, one spelling):
+    * A₁ = 1 − geomean(x)/μ. The geometric mean rides the house
+    * quantize-then-fold discipline: per-customer floor(ln x·10⁶) —
+    * one float op on an exact integer — then an exact BIGINT mean,
+    * and A₁ = 1 − exp(mean)·n/S is one final float tree on three
+    * exact integers, floored to ppm (stated convention: the geomean
+    * of the micro-floored logs; the quantization error is bounded by
+    * e^(1e-6)). Two keyed aggs + a broadcast dim join, same plan
+    * family as the Theil twin. */
+  val aggAtkinsonIndex: QDef = q(
+    "agg_atkinson_index",
+    s"""WITH $custRevCtes,
+      |f AS (
+      |  SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(x) AS BIGINT) AS sx,
+      |    CAST(SUM(CAST(floor(ln(CAST(x AS DOUBLE)) * 1000000) AS BIGINT))
+      |      AS BIGINT) AS sl
+      |  FROM cn GROUP BY n_name)
+      |SELECT n_name, n AS n_customers,
+      |  CAST(sx // n AS BIGINT) AS mean_cents,
+      |  CAST(1000000 - CAST(floor(
+      |    exp(CAST(sl // n AS DOUBLE) / 1000000.0) * n
+      |      / sx * 1000000) AS BIGINT) AS BIGINT) AS atkinson_ppm
+      |FROM f ORDER BY n_name""") { (s, d) =>
+    val f = custRevByNation(s, d)
+      .groupBy(col("n_name"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).cast(LongType).as("sx"),
+        sum(floor(log(col("x").cast(DoubleType)) * 1000000).cast(LongType))
+          .cast(LongType).as("sl"))
+    f.select(col("n_name"), col("n").as("n_customers"),
+        expr("sx div n").as("mean_cents"),
+        (lit(1000000L) - floor(
+          exp(expr("CAST(sl div n AS DOUBLE)") / 1000000.0) * col("n")
+            / col("sx") * 1000000).cast(LongType)).as("atkinson_ppm"))
+      .orderBy(col("n_name"))
+  }
+
+  /** Hoover (Robin Hood) index (r18) — the third member of the
+    * inequality trio on the SAME per-nation revenue base as Theil and
+    * Atkinson (`custRevCtes`, one spelling): H = ½ Σ|xᵢ/S − 1/n| =
+    * Σ|xᵢ·n − S| / (2·n·S) — the share of total revenue that would
+    * have to move to equalize. Unlike its two siblings this one
+    * needs NO transcendental at all: the whole index is ONE exact
+    * rational through DECIMAL(38)/HUGEINT in ppm. Same two-agg +
+    * broadcast-dim plan family. */
+  val aggHooverIndex: QDef = q(
+    "agg_hoover_index",
+    s"""WITH $custRevCtes,
+      |f AS (
+      |  SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(x) AS BIGINT) AS sx
+      |  FROM cn GROUP BY n_name),
+      |t AS (
+      |  SELECT cn.n_name,
+      |    CAST(SUM(abs(CAST(cn.x AS HUGEINT) * f.n - f.sx)) AS HUGEINT)
+      |      AS sd
+      |  FROM cn JOIN f ON f.n_name = cn.n_name
+      |  GROUP BY cn.n_name)
+      |SELECT f.n_name, f.n AS n_customers,
+      |  CAST(f.sx // f.n AS BIGINT) AS mean_cents,
+      |  CAST(t.sd * 1000000 // (2 * CAST(f.n AS HUGEINT) * f.sx)
+      |    AS BIGINT) AS hoover_ppm
+      |FROM f JOIN t ON t.n_name = f.n_name
+      |ORDER BY f.n_name""") { (s, d) =>
+    val dec = DecimalType(38, 0)
+    val cn = custRevByNation(s, d)
+    val f = cn.groupBy(col("n_name").as("f_name"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).cast(LongType).as("sx"))
+    cn.join(broadcast(f), col("f_name") === col("n_name"))
+      .groupBy(col("n_name"), col("n"), col("sx"))
+      .agg(sum(abs(col("x").cast(dec) * col("n") - col("sx"))).cast(dec)
+        .as("sd"))
+      .select(col("n_name"), col("n").as("n_customers"),
+        expr("sx div n").as("mean_cents"),
+        expr("CAST(sd * 1000000 div (2 * CAST(n AS DECIMAL(38,0)) * sx)"
+          + " AS BIGINT)").as("hoover_ppm"))
+      .orderBy(col("n_name"))
+  }
+
+  /** Two-sided 10% trimmed mean (r18b) — the robust-location
+    * companion to `agg_winsorized_mean` (winsorize CLAMPS the
+    * tails; trimming DROPS them): per return flag, drop the k =
+    * ⌊n/10⌋ cheapest and k dearest line items by extended price and
+    * average the middle. Spelled at histogram granularity so no
+    * whole-group sort ever runs: per-(flag, cents) counts, a
+    * BUCKETED prefix pass (window partitioned by (flag, v div 10⁶)
+    * plus a broadcast bucket-offset self-join — the
+    * `exclusivePrefix` discipline with a compound key), then each
+    * histogram row contributes |[pre+1, pre+cnt] ∩ [k+1, n−k]|
+    * copies of its value — exact BIGINT overlap algebra, identical
+    * in both engines. At 100 TB the shuffles carry distinct cents
+    * values only. */
+  val aggTrimmedMean: QDef = q(
+    "agg_trimmed_mean",
+    """WITH c AS (
+      |  SELECT l_returnflag AS flag,
+      |    CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
+      |    CAST(COUNT(*) AS BIGINT) AS cnt
+      |  FROM lineitem GROUP BY 1, 2),
+      |t AS (
+      |  SELECT flag, CAST(SUM(cnt) AS BIGINT) AS n,
+      |    CAST(SUM(CAST(v AS HUGEINT) * cnt) AS HUGEINT) AS sall
+      |  FROM c GROUP BY flag),
+      |cum AS (
+      |  SELECT flag, v, cnt,
+      |    CAST(COALESCE(SUM(cnt) OVER (PARTITION BY flag ORDER BY v
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+      |      AS pre
+      |  FROM c),
+      |k AS (SELECT flag, n, sall, n // 10 AS kk FROM t),
+      |kept AS (
+      |  SELECT cum.flag,
+      |    CAST(SUM(GREATEST(0, LEAST(cum.pre + cum.cnt, k.n - k.kk)
+      |      - GREATEST(cum.pre, k.kk)) * CAST(cum.v AS HUGEINT)) AS HUGEINT)
+      |      AS skept
+      |  FROM cum JOIN k ON k.flag = cum.flag GROUP BY cum.flag)
+      |SELECT k.flag AS l_returnflag, k.n, k.kk AS n_trimmed_each,
+      |  CAST(k.sall // k.n AS BIGINT) AS mean_cents,
+      |  CAST(kept.skept // (k.n - 2 * k.kk) AS BIGINT)
+      |    AS trimmed_mean_cents
+      |FROM k JOIN kept ON kept.flag = k.flag ORDER BY 1""") { (s, d) =>
+    val c = Tables.lineitem(s, d)
+      .select(col("l_returnflag").as("flag"),
+        expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100"
+          + " AS BIGINT)").as("v"))
+      .groupBy(col("flag"), col("v")).agg(count(lit(1)).as("cnt"))
+      .persist()
+    // bucketed exclusive prefix within flag (the exclusivePrefix
+    // discipline, compound (flag, bkt) key): the window partition is
+    // one value-bucket of one flag, never a whole group
+    val cb = c.withColumn("bkt", expr("v div 1000000"))
+    val w = Window.partitionBy(col("flag"), col("bkt")).orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val within = cb.withColumn("run", sum(col("cnt")).over(w))
+    val btot = cb.groupBy(col("flag"), col("bkt"))
+      .agg(sum(col("cnt")).as("bt"),
+        sum(col("v").cast(DriftOps.dec) * col("cnt")).as("bv"))
+    // flag totals fold over the tiny bucket-total frame — the
+    // histogram is scanned once, never re-aggregated per consumer
+    val t = btot.groupBy(col("flag"))
+      .agg(sum(col("bt")).as("n"), sum(col("bv")).as("sall"))
+    val bpre = btot.select(col("flag"), col("bkt"), col("bt")).as("x")
+      .join(broadcast(btot.select(col("flag").as("yflag"),
+          col("bkt").as("ybkt"), col("bt").as("ybt"))),
+        col("yflag") === col("x.flag") && col("ybkt") < col("x.bkt"),
+        "left")
+      .groupBy(col("x.flag").as("flag"), col("x.bkt").as("bkt"))
+      .agg(coalesce(sum(col("ybt")), lit(0L)).as("off"))
+    val cum = within.join(broadcast(bpre), Seq("flag", "bkt"))
+      .withColumn("pre", col("run") - col("cnt") + col("off"))
+    val k = t.select(col("flag").as("kflag"), col("n"), col("sall"),
+      expr("n div 10").as("kk"))
+    val kept = cum.join(broadcast(k), col("kflag") === col("flag"))
+      .select(col("flag"),
+        (greatest(lit(0L), least(col("pre") + col("cnt"),
+          col("n") - col("kk")) - greatest(col("pre"), col("kk")))
+          * col("v").cast(DriftOps.dec)).as("contrib"))
+      .groupBy(col("flag")).agg(sum(col("contrib")).as("skept"))
+    kept.join(broadcast(k), col("kflag") === col("flag"))
+      .select(col("flag").as("l_returnflag"), col("n"),
+        col("kk").as("n_trimmed_each"),
+        expr("CAST(sall div n AS BIGINT)").as("mean_cents"),
+        expr("CAST(skept div (n - 2 * kk) AS BIGINT)")
+          .as("trimmed_mean_cents"))
+      .orderBy(col("l_returnflag"))
+  }
+
+  /** Geometric + harmonic means (r18b) — the AM ≥ GM ≥ HM triple
+    * per return flag over milli-quantized quantities: GM through the
+    * house quantize-then-fold log protocol (Σ floor(ln·10⁶) div n,
+    * one exp at the edge — the `agg_atkinson_index` spelling), HM
+    * via exact floored reciprocals r = 10¹² div q_milli (relative
+    * quantization error < 5·10⁻⁸, identical in both engines) so
+    * HM_milli = n·10¹² div Σr is pure integer algebra. The spec
+    * pins the mean inequality. One grouped fold. */
+  val aggGeometricHarmonic: QDef = q(
+    "agg_geometric_harmonic",
+    """WITH x AS (
+      |  SELECT l_returnflag AS flag,
+      |    CAST(CAST(l_quantity AS DECIMAL(12,4)) * 1000 AS BIGINT)
+      |      AS qm
+      |  FROM lineitem
+      |  WHERE CAST(CAST(l_quantity AS DECIMAL(12,4)) * 1000 AS BIGINT) > 0),
+      |m AS (
+      |  SELECT flag, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(qm) AS BIGINT) AS sq,
+      |    CAST(SUM(CAST(FLOOR(ln(CAST(qm AS DOUBLE)) * 1000000)
+      |      AS BIGINT)) AS BIGINT) AS sl,
+      |    CAST(SUM(1000000000000 // qm) AS BIGINT) AS sr
+      |  FROM x GROUP BY flag)
+      |SELECT flag AS l_returnflag, n,
+      |  CAST(sq // n AS BIGINT) AS arith_milli,
+      |  CAST(FLOOR(exp(CAST(sl // n AS DOUBLE) / 1000000)) AS BIGINT)
+      |    AS geo_milli,
+      |  CAST(n * 1000000000000 // sr AS BIGINT) AS harm_milli
+      |FROM m ORDER BY 1""") { (s, d) =>
+    val x = Tables.lineitem(s, d)
+      .select(col("l_returnflag").as("flag"),
+        expr("CAST(CAST(l_quantity AS DECIMAL(12,4)) * 1000 AS BIGINT)")
+          .as("qm"))
+      .filter(col("qm") > 0)
+    val m = x.groupBy(col("flag"))
+      .agg(count(lit(1)).as("n"), sum(col("qm")).as("sq"),
+        sum(floor(log(col("qm").cast(DoubleType)) * 1000000)
+          .cast(LongType)).as("sl"),
+        sum(expr("1000000000000 div qm")).as("sr"))
+    m.select(col("flag").as("l_returnflag"), col("n"),
+        expr("CAST(sq div n AS BIGINT)").as("arith_milli"),
+        expr("CAST(FLOOR(exp(CAST(sl div n AS DOUBLE) / 1000000))"
+          + " AS BIGINT)").as("geo_milli"),
+        expr("CAST(n * 1000000000000 div sr AS BIGINT)").as("harm_milli"))
+      .orderBy(col("l_returnflag"))
+  }
+
+  /** Theil between/within decomposition by region (r18b) — the
+    * property that makes Theil THE inequality index for hierarchies:
+    * T_total = T_between + Σ_r share_r·T_within_r EXACTLY (Theil
+    * 1967), graded here across the region→nation→customer rollup on
+    * the SAME `custRevCtes` base as the nation-level trio (ONE
+    * spelling, now `private[ops]`). Per region: customer count,
+    * revenue mass, within-region Theil (the house per-row
+    * floor(ratio·ln ratio·10⁶) fold), the between term
+    * (S_r/S)·ln(S_r·N/(S·N_r)), and the share-weighted within
+    * contribution; the corpus-level T_total / ΣB / ΣW ride every
+    * row as broadcast fold columns, and the spec pins additivity to
+    * within quantization. Shuffles: the customer agg + broadcast
+    * dims + one region fold + two 1-row folds. */
+  val reportTheilBetweenWithin: QDef = q(
+    "report_theil_between_within",
+    s"""WITH ${custRevCtes},
+      |rn AS (
+      |  SELECT n.n_name, r.r_name
+      |  FROM nation n JOIN region r ON r.r_regionkey = n.n_regionkey),
+      |cr AS (
+      |  SELECT rn.r_name, cn.x
+      |  FROM cn JOIN rn ON rn.n_name = cn.n_name),
+      |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn,
+      |  CAST(SUM(x) AS BIGINT) AS ss FROM cr),
+      |f AS (
+      |  SELECT r_name, CAST(COUNT(*) AS BIGINT) AS nr,
+      |    CAST(SUM(x) AS BIGINT) AS sr
+      |  FROM cr GROUP BY r_name),
+      |tw AS (
+      |  SELECT cr.r_name,
+      |    CAST(SUM(CAST(floor((CAST(cr.x * f.nr AS DOUBLE) / f.sr)
+      |      * ln(CAST(cr.x * f.nr AS DOUBLE) / f.sr) * 1000000)
+      |      AS BIGINT)) AS BIGINT) AS st
+      |  FROM cr JOIN f ON f.r_name = cr.r_name GROUP BY cr.r_name),
+      |tt AS (
+      |  SELECT CAST(SUM(CAST(floor((CAST(cr.x * g.nn AS DOUBLE) / g.ss)
+      |      * ln(CAST(cr.x * g.nn AS DOUBLE) / g.ss) * 1000000)
+      |      AS BIGINT)) // MAX(g.nn) AS BIGINT) AS t_total
+      |  FROM cr CROSS JOIN g),
+      |per AS (
+      |  SELECT f.r_name, f.nr, f.sr,
+      |    CAST(tw.st // f.nr AS BIGINT) AS theil_within_micro,
+      |    CAST(floor((CAST(f.sr AS DOUBLE) / g.ss)
+      |      * ln(CAST(f.sr AS DOUBLE) * g.nn
+      |        / (CAST(g.ss AS DOUBLE) * f.nr)) * 1000000) AS BIGINT)
+      |      AS between_term_micro,
+      |    CAST(CAST(f.sr AS HUGEINT) * (tw.st // f.nr) // g.ss AS BIGINT)
+      |      AS weighted_within_micro
+      |  FROM f JOIN tw ON tw.r_name = f.r_name CROSS JOIN g),
+      |tot AS (
+      |  SELECT CAST(SUM(between_term_micro) AS BIGINT) AS t_between,
+      |    CAST(SUM(weighted_within_micro) AS BIGINT) AS t_within
+      |  FROM per)
+      |SELECT per.r_name, per.nr AS n_customers, per.sr AS sum_cents,
+      |  per.theil_within_micro, per.between_term_micro,
+      |  per.weighted_within_micro, tt.t_total AS theil_total_micro,
+      |  tot.t_between AS theil_between_micro,
+      |  tot.t_within AS theil_within_total_micro
+      |FROM per CROSS JOIN tt CROSS JOIN tot
+      |ORDER BY per.r_name""") { (s, d) =>
+    val rn = Tables.nation(s, d)
+      .join(broadcast(Tables.region(s, d)),
+        col("r_regionkey") === col("n_regionkey"))
+      .select(col("n_name").as("rn_name"), col("r_name"))
+    val cr = custRevByNation(s, d)
+      .join(broadcast(rn), col("rn_name") === col("n_name"))
+      .select(col("r_name"), col("x"))
+      .persist()
+    val g = cr.agg(count(lit(1)).as("nn"),
+      sum(col("x")).cast(LongType).as("ss"))
+    val f = cr.groupBy(col("r_name").as("f_name"))
+      .agg(count(lit(1)).as("nr"), sum(col("x")).cast(LongType).as("sr"))
+    val ratioR = (col("x") * col("nr")).cast(DoubleType) / col("sr")
+    val tw = cr.join(broadcast(f), col("f_name") === col("r_name"))
+      .select(col("r_name"),
+        floor(ratioR * log(ratioR) * 1000000).cast(LongType).as("term"))
+      .groupBy(col("r_name")).agg(sum(col("term")).as("st"))
+    val ratioG = (col("x") * col("nn")).cast(DoubleType) / col("ss")
+    val tt = cr.crossJoin(broadcast(g))
+      .select(floor(ratioG * log(ratioG) * 1000000).cast(LongType)
+        .as("term"), col("nn"))
+      .agg(expr("CAST(SUM(term) div MAX(nn) AS BIGINT)").as("t_total"))
+    val per = f.join(tw, col("r_name") === col("f_name"))
+      .crossJoin(broadcast(g))
+      .select(col("r_name"), col("nr"), col("sr"),
+        expr("CAST(st div nr AS BIGINT)").as("theil_within_micro"),
+        floor((col("sr").cast(DoubleType) / col("ss"))
+          * log(col("sr").cast(DoubleType) * col("nn")
+            / (col("ss").cast(DoubleType) * col("nr"))) * 1000000)
+          .cast(LongType).as("between_term_micro"),
+        expr("CAST(CAST(sr AS DECIMAL(38,0)) * (st div nr) div ss"
+          + " AS BIGINT)").as("weighted_within_micro"))
+    val tot = per.agg(sum(col("between_term_micro")).cast(LongType)
+      .as("t_between"),
+      sum(col("weighted_within_micro")).cast(LongType).as("t_within"))
+    per.crossJoin(broadcast(tt)).crossJoin(broadcast(tot))
+      .select(col("r_name"), col("nr").as("n_customers"),
+        col("sr").as("sum_cents"), col("theil_within_micro"),
+        col("between_term_micro"), col("weighted_within_micro"),
+        col("t_total").as("theil_total_micro"),
+        col("t_between").as("theil_between_micro"),
+        col("t_within").as("theil_within_total_micro"))
+      .orderBy(col("r_name"))
+  }
+
   val all: Seq[QDef] = Seq(
     q1PricingSummary, aggCountDistinct, aggApproxDistinct, aggRollup,
     aggCube, aggGroupingSets, aggStatsExplicit, aggCollectSorted,
@@ -2052,5 +2753,9 @@ object Aggregates {
     reportXyzVariability, aggMultiDistinct, reportPriceVolumeMix,
     reportHhiByNation, reportAbcXyzMatrix, reportSplitShipment,
     aggBitmaskSignatures, reportPriceIndex, aggWinsorizedMean,
-    aggNullSemantics, reportGrowthMomYoy)
+    aggNullSemantics, reportGrowthMomYoy, reportLorenzDeciles,
+    reportShipLagHistogram, reportContributionWaterfall, aggIncrementalMerge,
+    reportDiscountWhatif, reportSeasonalityIndex, aggTheilIndex,
+    aggAtkinsonIndex, aggHooverIndex, aggTrimmedMean, aggGeometricHarmonic,
+    reportTheilBetweenWithin)
 }

@@ -3,7 +3,7 @@ package graft.ops
 import graft.{QDef, Tables}
 import graft.QDef.q
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType, TimestampType}
 import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster assignment: the step a real dedup pipeline runs
@@ -145,28 +145,6 @@ object ClusterOps {
     val tEdges0 = System.nanoTime()
     val nEdges = edgesDeep.count()
     val tEdges = (System.nanoTime() - tEdges0) / 1e9
-    // Size the LOOP's shuffles from the measured edge count — the
-    // label/edge tables are pairs-sized (at any corpus scale, orders
-    // of magnitude below the corpus), and running their per-round
-    // joins at the session's corpus-sized partition count charges
-    // ~30 task launches per tiny stage (measured: 1.28 s -> 0.49 s
-    // for the converged one-round loop at sf0.1). This is the same
-    // decision AQE's partition coalescer makes from runtime stats on
-    // a cluster (AQE is deliberately off at the bench tier); the
-    // formula returns the session default once edges outgrow ~50k
-    // rows per partition. Scoped: restored before the corpus-scale
-    // final assembly below.
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(1, math.min(sessionParts, (nEdges / 50000L).toInt + 1))
-    // SINGLE-THREADED ASSUMPTION (ADVICE r6): this scopes the
-    // session-global shuffle-partition conf around the loop (restored
-    // in finally), which is safe for the Verify/Bench/test drivers —
-    // all single-query-at-a-time, the same contract the harness's
-    // per-key partition policy (graft.PartitionPolicy) relies on. A
-    // host running concurrent queries on a shared SparkSession must
-    // wrap this query in spark.newSession() so the conf mutation is
-    // session-local to it.
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     System.err.println(f"[dedup_cluster_cc] n_edges=$nEdges pairs_s=$tEdges%.2f")
     // ONE spelling of the propagation (ADVICE r16): the seeded
     // neighbor-min + pointer-jump loop, its RDD-bridged rounds, the
@@ -175,10 +153,12 @@ object ClusterOps {
     // legs of dedup_cluster_incremental. Propagation runs ONLY over
     // nodes that appear in some pair — the singleton majority (at
     // 100 TB: almost the whole corpus) never enters the loop and
-    // joins back in at the end.
-    val finalLabels = try {
+    // joins back in at the end. The loop's shuffles are sized from
+    // the measured edge count (withLoopWidth), and the session width
+    // is restored before the corpus-scale final assembly below.
+    val finalLabels = graft.pipeline.ConnectedComponents.withLoopWidth(s, nEdges) {
       graft.pipeline.ConnectedComponents.minLabel(s, edgesDeep, "dedup_cluster_cc")
-    } finally s.conf.set("spark.sql.shuffle.partitions", sessionParts.toString)
+    }
     // Cluster sizes come from the TINY label table, not a corpus-wide
     // window: every member of a component that has an edge is an edge
     // endpoint by construction, so counting labels counts the whole
@@ -1067,8 +1047,628 @@ object ClusterOps {
       .orderBy(col("kind"), col("score_micro").desc, col("node"))
   }
 
+  /** Modularity of the nation partition on the trade multigraph
+    * (r13b) — is customer↔supplier trade nation-assortative? Each
+    * lineitem is one undirected edge between its order's customer and
+    * its supplier; communities are the endpoints' nations. Newman
+    * modularity per community, Q_c = e_c/m − (d_c/2m)², reported as
+    * the exact integer numerator (4·m·e_c − d_c²) over 4m² in
+    * sign-decomposed trunc-toward-zero ppm (both engines spell the
+    * CASE identically — floor vs trunc never diverges). The products
+    * ride DECIMAL(38,0) (4m²·10⁶ outgrows int64 past ~sf0.3) and end
+    * in an integral division — no decimal→double cast, so the 2^53
+    * gate has nothing to flag. Scale: one fact join + two
+    * nation-sized aggs. */
+  val graphModularityNations: QDef = q(
+    "graph_modularity_nations",
+    """WITH edges AS (
+      |  SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation
+      |  FROM lineitem l
+      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+      |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey),
+      |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
+      |deg AS (
+      |  SELECT nation, CAST(SUM(dn) AS BIGINT) AS d FROM (
+      |    SELECT cust_nation AS nation, CAST(COUNT(*) AS BIGINT) AS dn
+      |    FROM edges GROUP BY 1
+      |    UNION ALL
+      |    SELECT supp_nation, CAST(COUNT(*) AS BIGINT) FROM edges GROUP BY 1)
+      |  GROUP BY nation),
+      |internal AS (
+      |  SELECT cust_nation AS nation, CAST(COUNT(*) AS BIGINT) AS e_in
+      |  FROM edges WHERE cust_nation = supp_nation GROUP BY 1),
+      |q AS (
+      |  SELECT deg.nation, COALESCE(i.e_in, 0) AS e_in, deg.d,
+      |    4 * m.m * COALESCE(i.e_in, 0) - deg.d * deg.d AS num,
+      |    4 * m.m * m.m AS den
+      |  FROM deg LEFT JOIN internal i ON deg.nation = i.nation CROSS JOIN m)
+      |SELECT nation, e_in AS n_internal_edges, d AS degree_sum,
+      |  CAST(CASE WHEN num >= 0
+      |    THEN (CAST(num AS HUGEINT) * 1000000) // den
+      |    ELSE -((CAST(-num AS HUGEINT) * 1000000) // den) END AS BIGINT)
+      |    AS contrib_ppm
+      |FROM q ORDER BY nation""") { (s, d) =>
+    // r19 batch 3 (guide §2.3): the persisted raw (cust_nation,
+    // supp_nation) edge list (|lineitem| rows) was re-scanned three
+    // times (m, the doubled deg union, internal). Persist the
+    // ≤|nations|² COUNT table instead — m/deg/internal are exact
+    // integer functions of it (the cut_conductance treatment), so
+    // the fact pass runs ONCE and the cache shrinks from edge volume
+    // to a constant. (Spreading the single-split probe side was
+    // measured and rejected here like in tradeEb: the partial agg
+    // reduces 600k→625 in the scan task, so the extra exchange only
+    // added cost — steady 1.16 s without vs ~1.4 s with.)
+    val ecnt = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_suppkey"))
+      .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_nationkey").as("c_nk"))),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.supplier(s, d)
+        .select(col("s_suppkey"), col("s_nationkey").as("s_nk"))),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Tables.nation(s, d)
+        .select(col("n_nationkey").as("cnk"), col("n_name").as("cust_nation"))),
+        col("c_nk") === col("cnk"))
+      .join(broadcast(Tables.nation(s, d)
+        .select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation"))),
+        col("s_nk") === col("snk"))
+      .groupBy(col("cust_nation"), col("supp_nation"))
+      .agg(count(lit(1)).as("en"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val m = ecnt.agg(sum(col("en")).cast(LongType).as("m"))
+    val deg = ecnt.select(col("cust_nation").as("nation"), col("en"))
+      .unionAll(ecnt.select(col("supp_nation"), col("en")))
+      .groupBy(col("nation")).agg(sum(col("en")).cast(LongType).as("d"))
+    val internal = ecnt.filter(col("cust_nation") === col("supp_nation"))
+      .groupBy(col("cust_nation").as("i_nation"))
+      .agg(sum(col("en")).cast(LongType).as("e_in"))
+    deg.join(broadcast(internal), col("nation") === col("i_nation"), "left")
+      .crossJoin(broadcast(m))
+      .select(col("nation"),
+        coalesce(col("e_in"), lit(0L)).as("n_internal_edges"),
+        col("d").as("degree_sum"),
+        (lit(4) * col("m") * coalesce(col("e_in"), lit(0L))
+          - col("d") * col("d")).as("num"),
+        (lit(4) * col("m") * col("m")).as("den"))
+      .select(col("nation"), col("n_internal_edges"), col("degree_sum"),
+        expr("""CAST(CASE WHEN num >= 0
+          THEN (CAST(num AS DECIMAL(38,0)) * 1000000) div den
+          ELSE -((CAST(-num AS DECIMAL(38,0)) * 1000000) div den) END AS BIGINT)""")
+          .as("contrib_ppm"))
+      .orderBy(col("nation"))
+  }
+
+  /** Per-node local clustering coefficient (r16) — the node-level
+    * companion to `graph_triangle_count`'s single global number, over
+    * the SAME 1996 part co-purchase graph: per part, its degree,
+    * incident-triangle count (each oriented a<b<c triangle exploded
+    * row-locally to its three corners), and 2·tri/(deg·(deg−1)) in
+    * floor-ppm (NULL for degree-1 nodes — no possible wedge). The
+    * per-node view is what a graph-health monitor actually plots: a
+    * bimodal LCC histogram is the classic clique-flood symptom the
+    * global coefficient averages away. Same oriented 3-way edge join
+    * as the global kernel, one extra corner explode + node agg. */
+  val graphLocalClustering: QDef = q(
+    "graph_local_clustering",
+    """WITH li AS (
+      |  SELECT l_orderkey, l_partkey FROM lineitem
+      |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'),
+      |e AS (
+      |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
+      |  FROM li x JOIN li y
+      |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      |deg AS (
+      |  SELECT node, CAST(count(*) AS BIGINT) AS degree
+      |  FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
+      |  GROUP BY node),
+      |tc AS (
+      |  SELECT e1.a AS ta, e1.b AS tb, e2.b AS tcn
+      |  FROM e e1 JOIN e e2 ON e1.b = e2.a
+      |            JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
+      |nt AS (
+      |  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri
+      |  FROM (SELECT ta AS node FROM tc UNION ALL SELECT tb FROM tc
+      |        UNION ALL SELECT tcn FROM tc)
+      |  GROUP BY node)
+      |SELECT deg.node AS part_key, degree,
+      |  COALESCE(n_tri, 0) AS n_triangles,
+      |  CASE WHEN degree < 2 THEN CAST(NULL AS BIGINT)
+      |    ELSE CAST(COALESCE(n_tri, 0) * 2000000
+      |      // (degree * (degree - 1)) AS BIGINT) END AS lcc_ppm
+      |FROM deg LEFT JOIN nt ON nt.node = deg.node
+      |ORDER BY part_key""") { (s, d) =>
+    val li = Tables.lineitem(s, d)
+      .filter(col("l_shipdate") >=
+          lit("1996-01-01 00:00:00").cast(TimestampType) &&
+        col("l_shipdate") < lit("1997-01-01 00:00:00").cast(TimestampType))
+      .select(col("l_orderkey"), col("l_partkey"))
+    val e = li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = e.select(col("a").as("node"))
+      .unionAll(e.select(col("b").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+    val tc = e.select(col("a").as("a1"), col("b").as("b1"))
+      .join(e.select(col("a").as("a2"), col("b").as("b2")),
+        col("b1") === col("a2"))
+      .join(e.select(col("a").as("a3"), col("b").as("b3")),
+        col("a3") === col("a1") && col("b3") === col("b2"))
+      .select(col("a1").as("ta"), col("b1").as("tb"), col("b2").as("tcn"))
+    val nt = tc.select(explode(array(col("ta"), col("tb"), col("tcn")))
+        .as("tnode"))
+      .groupBy(col("tnode")).agg(count(lit(1)).as("n_tri"))
+    deg.join(nt, col("tnode") === col("node"), "left")
+      .select(col("node").as("part_key"), col("degree"),
+        coalesce(col("n_tri"), lit(0L)).as("n_triangles"),
+        expr("CASE WHEN degree < 2 THEN CAST(NULL AS BIGINT)"
+          + " ELSE CAST(COALESCE(n_tri, 0) * 2000000"
+          + " div (degree * (degree - 1)) AS BIGINT) END").as("lcc_ppm"))
+      .orderBy(col("part_key"))
+  }
+
+  /** Bipartite two-hop path census (r17) — the seventh consumer of
+    * the shared trade-graph primitive (`tradeEb`): how
+    * many customer–customer co-purchase pairs each supplier induces.
+    * The supplier-side projection of a bipartite graph materializes
+    * deg² rows per hub — the classic graph blow-up — but its SIZE is
+    * pure degree combinatorics: paths2(s) = deg·(deg−1)/2. One
+    * degree agg + a 1-row broadcast total; the pairs themselves are
+    * NEVER enumerated (the projection-planning number an engineer
+    * reads before attempting the projection at 100 TB). Top-15 hubs
+    * under (paths2 DESC, suppkey). */
+  val graphBipartiteTwohop: QDef = q(
+    "graph_bipartite_twohop",
+    s"""WITH ${tradeEbCte},
+      |deg AS (SELECT sk, CAST(COUNT(*) AS BIGINT) AS deg
+      |  FROM eb GROUP BY sk),
+      |tot AS (SELECT
+      |  CAST(SUM(deg * (deg - 1) // 2) AS BIGINT) AS total_paths2,
+      |  CAST(COUNT(*) AS BIGINT) AS n_suppliers FROM deg)
+      |SELECT sk AS suppkey, deg,
+      |  CAST(deg * (deg - 1) // 2 AS BIGINT) AS paths2,
+      |  total_paths2, n_suppliers
+      |FROM deg CROSS JOIN tot
+      |ORDER BY paths2 DESC, suppkey
+      |LIMIT 15""") { (s, d) =>
+    val deg = tradeEb(s, d)
+      .groupBy(col("sk")).agg(count(lit(1)).as("deg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tot = deg.agg(
+      sum(expr("deg * (deg - 1) div 2")).cast(LongType).as("total_paths2"),
+      count(lit(1)).as("n_suppliers"))
+    deg.crossJoin(broadcast(tot))
+      .select(col("sk").as("suppkey"), col("deg"),
+        expr("CAST(deg * (deg - 1) div 2 AS BIGINT)").as("paths2"),
+        col("total_paths2"), col("n_suppliers"))
+      .orderBy(col("paths2").desc, col("suppkey"))
+      .limit(15)
+  }
+
+  /** Region-cut conductance (r17) — the community-quality metric over
+    * the shared trade graph (eighth `tradeEb` consumer): for each
+    * region's node set S (customers and suppliers whose nation is in
+    * the region), conductance = cross-cut edges / min(vol(S),
+    * vol(V∖S)) — the number that says whether region-sharded graph
+    * processing would cut few edges. Endpoint-region tagging rides
+    * two broadcast dim joins; everything after is 5-row algebra in
+    * exact integers (conductance in floor-ppm, empty side guarded
+    * NULL, min spelled as CASE per the decimal-least note — these
+    * are BIGINTs but one spelling is one spelling). */
+  val graphCutConductance: QDef = q(
+    "graph_cut_conductance",
+    s"""WITH ${tradeEbCte},
+      |cr AS (
+      |  SELECT c_custkey AS ck, r_name AS rc FROM customer
+      |  JOIN nation ON c_nationkey = n_nationkey
+      |  JOIN region ON n_regionkey = r_regionkey),
+      |sr AS (
+      |  SELECT s_suppkey AS sk, r_name AS rs FROM supplier
+      |  JOIN nation ON s_nationkey = n_nationkey
+      |  JOIN region ON n_regionkey = r_regionkey),
+      |e AS (
+      |  SELECT cr.rc, sr.rs FROM eb
+      |  JOIN cr ON eb.ck = cr.ck JOIN sr ON eb.sk = sr.sk),
+      |tot AS (SELECT CAST(2 * COUNT(*) AS BIGINT) AS vol_all FROM e),
+      |nc AS (SELECT rc AS region, CAST(COUNT(*) AS BIGINT) AS n_c
+      |  FROM e GROUP BY rc),
+      |ns AS (SELECT rs AS region, CAST(COUNT(*) AS BIGINT) AS n_s
+      |  FROM e GROUP BY rs),
+      |nw AS (SELECT rc AS region, CAST(COUNT(*) AS BIGINT) AS n_within
+      |  FROM e WHERE rc = rs GROUP BY rc),
+      |m AS (
+      |  SELECT r_name AS region,
+      |    COALESCE(n_within, 0) AS n_within,
+      |    COALESCE(n_c, 0) + COALESCE(n_s, 0)
+      |      - 2 * COALESCE(n_within, 0) AS n_cross,
+      |    COALESCE(n_c, 0) + COALESCE(n_s, 0) AS vol
+      |  FROM region
+      |  LEFT JOIN nc ON nc.region = r_name
+      |  LEFT JOIN ns ON ns.region = r_name
+      |  LEFT JOIN nw ON nw.region = r_name)
+      |SELECT region, n_within, n_cross, vol,
+      |  CASE WHEN (CASE WHEN vol < vol_all - vol THEN vol
+      |      ELSE vol_all - vol END) = 0 THEN NULL
+      |    ELSE CAST(n_cross * 1000000
+      |      // (CASE WHEN vol < vol_all - vol THEN vol
+      |          ELSE vol_all - vol END) AS BIGINT) END AS conductance_ppm
+      |FROM m CROSS JOIN tot
+      |ORDER BY region""") { (s, d) =>
+    val cr = Tables.customer(s, d)
+      .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
+      .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
+      .select(col("c_custkey").as("e_ck"), col("r_name").as("rc"))
+    val sr = Tables.supplier(s, d)
+      .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
+      .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
+      .select(col("s_suppkey").as("e_sk"), col("r_name").as("rs"))
+    // r19-opt (guide §2.3, aggregate before you persist): the four
+    // downstream legs (vol_all, per-region endpoint counts, within-
+    // region counts) are all exact functions of the (rc, rs) COUNT
+    // table — ≤|regions|² = 25 rows — so persist THAT, not the raw
+    // |edges|-sized (rc, rs) projection the r18 shape cached and then
+    // re-scanned four times. At 100 TB the cache shrinks from
+    // edge-volume to a constant 25 rows and each leg is row-trivial.
+    val e = tradeEb(s, d)
+      .join(broadcast(cr), col("ck") === col("e_ck"))
+      .join(broadcast(sr), col("sk") === col("e_sk"))
+      .groupBy(col("rc"), col("rs")).agg(count(lit(1)).as("n"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tot = e.agg((sum(col("n")) * 2).as("vol_all"))
+    val nc = e.groupBy(col("rc").as("nc_region"))
+      .agg(sum(col("n")).cast(LongType).as("n_c"))
+    val ns = e.groupBy(col("rs").as("ns_region"))
+      .agg(sum(col("n")).cast(LongType).as("n_s"))
+    val nw = e.filter(col("rc") === col("rs"))
+      .groupBy(col("rc").as("nw_region"))
+      .agg(sum(col("n")).cast(LongType).as("n_within"))
+    val m = Tables.region(s, d).select(col("r_name").as("region"))
+      .join(broadcast(nc), col("nc_region") === col("region"), "left")
+      .join(broadcast(ns), col("ns_region") === col("region"), "left")
+      .join(broadcast(nw), col("nw_region") === col("region"), "left")
+      .select(col("region"),
+        coalesce(col("n_within"), lit(0L)).as("n_within"),
+        (coalesce(col("n_c"), lit(0L)) + coalesce(col("n_s"), lit(0L))
+          - lit(2L) * coalesce(col("n_within"), lit(0L))).as("n_cross"),
+        (coalesce(col("n_c"), lit(0L)) + coalesce(col("n_s"), lit(0L)))
+          .as("vol"))
+    m.crossJoin(broadcast(tot))
+      .select(col("region"), col("n_within"), col("n_cross"), col("vol"),
+        expr("CASE WHEN (CASE WHEN vol < vol_all - vol THEN vol"
+          + " ELSE vol_all - vol END) = 0 THEN NULL"
+          + " ELSE CAST(n_cross * 1000000"
+          + " div (CASE WHEN vol < vol_all - vol THEN vol"
+          + " ELSE vol_all - vol END) AS BIGINT) END").as("conductance_ppm"))
+      .orderBy(col("region"))
+  }
+
+  /** Stored-edge-table contract for the graph family (r18, VERDICT
+    * r17 item 2 — the `dedup_signature_store_roundtrip` pattern
+    * applied): eight graph keys rebuild `tradeEb` (the DISTINCT
+    * orders⋈lineitem partnership edge set) from the facts per query,
+    * which is correct under the bench contract but not the 100 TB
+    * posture — there the edge table is PERSISTED and incrementally
+    * maintained, and nothing graded that a stored edge table equals
+    * recomputation. This key (1) builds `tradeEb` (ONE spelling with
+    * every graph consumer), WRITES it through the parquet sink and
+    * re-reads it; (2) pins the roundtrip edge-for-edge — the full
+    * outer join of stored vs recomputed counts presence drift on
+    * either side, and the oracle states the contract as literal 0,
+    * so ANY parquet-boundary perturbation is a loud hash failure;
+    * (3) runs a real consumer off the STORED side ONLY (the degree
+    * census: node counts and max degrees per partition class — the
+    * stats a capacity planner reads). The oracle recomputes
+    * everything from the facts, so the grade certifies
+    * stored == recomputed end to end. Scale: the stored side is
+    * read, never rebuilt; the audit join shuffles edge-sized rows
+    * (full outer cannot broadcast); every count is a 1-row broadcast
+    * fold. Edge keys are BIGINTs — parquet roundtrips them
+    * losslessly by construction, which is exactly the property the
+    * full-outer pin certifies rather than assumes. */
+  val graphEdgeStoreRoundtrip: QDef = q(
+    "graph_edge_store_roundtrip",
+    s"""WITH ${tradeEbCte},
+      |deg_c AS (SELECT ck, COUNT(*) AS dc FROM eb GROUP BY ck),
+      |deg_s AS (SELECT sk, COUNT(*) AS ds FROM eb GROUP BY sk)
+      |SELECT
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM eb) AS n_edges,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM eb) AS n_stored,
+      |  CAST(0 AS BIGINT) AS n_roundtrip_mismatch,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM deg_c) AS n_cust,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM deg_s) AS n_supp,
+      |  (SELECT CAST(MAX(dc) AS BIGINT) FROM deg_c) AS max_cust_deg,
+      |  (SELECT CAST(MAX(ds) AS BIGINT) FROM deg_s) AS max_supp_deg""") {
+    (s, d) =>
+    // persist: edges is consumed TWICE — the write action below AND
+    // the recomputed side of the full-outer audit — so an unpersisted
+    // lineage rebuilt the orders⋈lineitem DISTINCT once per consumer
+    // (r18-opt; the audit's "recomputed" side semantics are
+    // unchanged: the cache holds exactly the recomputation the write
+    // consumed, which is the equality under test).
+    val edges = tradeEb(s, d)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // materialize BEFORE the coalesce(1) write: the sink's single
+    // task would otherwise narrow-collapse the orders⋈lineitem
+    // DISTINCT into itself and compute it single-threaded (r19-opt —
+    // measured as the dominant term of this key)
+    edges.count()
+    // The parquet sink + re-read IS the operator under test; the
+    // write is the query's first action after the cache materializes
+    // (the r17 signature-store convention). coalesce(1) +
+    // in-partition sort replaces the old global sort + coalesce:
+    // identical single sorted file, minus the range-sampling job and
+    // range exchange the global sort planned (r18-opt).
+    val out = graft.TempDirs.create("graft_edgestore")
+    edges.coalesce(1).sortWithinPartitions(col("ck"), col("sk"))
+      .write.mode("overwrite").parquet(out)
+    val stored = s.read.parquet(out).persist(StorageLevel.MEMORY_AND_DISK)
+    // r19-opt (guide §2.3/§3): the full-outer SMJ audit shuffled AND
+    // sorted both edge-sized sides just to count presence drift.
+    // Both sides are duplicate-free sets, so the same count is the
+    // symmetric difference of a TAGGED UNION under one hash agg —
+    // one exchange, no sorts, recomputed-vs-stored semantics
+    // unchanged (both sides still real: the cache on one, the
+    // re-read parquet on the other). coalesce: SUM over zero rows is
+    // NULL but the oracle's contract is literal 0 (the r17 ADVICE
+    // rule, applied from the start).
+    val aMis = edges.select(col("ck"), col("sk"), lit(1L).as("a"), lit(0L).as("b"))
+      .unionAll(stored.select(col("ck"), col("sk"), lit(0L).as("a"), lit(1L).as("b")))
+      .groupBy(col("ck"), col("sk"))
+      .agg(sum(col("a")).as("na"), sum(col("b")).as("nb"))
+      .agg(coalesce(sum(when(col("na") === 0L || col("nb") === 0L, 1L)
+        .otherwise(0L)), lit(0L)).as("n_roundtrip_mismatch"))
+    val aEdges = edges.agg(count(lit(1)).as("n_edges"))
+    // the consumer leg reads the STORED table only; n_stored folds
+    // over the customer-degree table (Σ dc = |stored| exactly)
+    // instead of a third stored scan (r19-opt)
+    val degC = stored.groupBy(col("ck")).agg(count(lit(1)).as("dc"))
+    val degS = stored.groupBy(col("sk")).agg(count(lit(1)).as("ds"))
+    val aC = degC.agg(count(lit(1)).as("n_cust"),
+      max(col("dc")).as("max_cust_deg"),
+      coalesce(sum(col("dc")), lit(0L)).as("n_stored"))
+    val aS = degS.agg(count(lit(1)).as("n_supp"),
+      max(col("ds")).as("max_supp_deg"))
+    aEdges.crossJoin(broadcast(aMis))
+      .crossJoin(broadcast(aC)).crossJoin(broadcast(aS))
+      .select(col("n_edges"), col("n_stored"), col("n_roundtrip_mismatch"),
+        col("n_cust"), col("n_supp"), col("max_cust_deg"),
+        col("max_supp_deg"))
+  }
+
+  /** Adamic–Adar link prediction (r18) — the hub-discounted
+    * common-neighbor score next to `graph_jaccard_neighbors` (raw
+    * overlap): AA(a,b) = Σ_{p ∈ N(a)∩N(b)} 1/ln(deg p) over the
+    * supplier→part supply graph, the standard "which link forms
+    * next" ranking where a part supplied by everyone contributes
+    * almost nothing and a rare co-supplied part a lot. Per-part
+    * weight is floor-micro-quantized BEFORE summing
+    * (floor(10⁶/ln(deg)) — ONE float op per part on identical
+    * integer input, then exact BIGINT sums, so the cross-engine sum
+    * order cannot drift a bit). Same wedge machinery as the Jaccard
+    * twin: one shuffle to per-part sorted adjacency, codegen'd
+    * `graft_ordered_pairs` enumerates each part's C(d,2) pairs
+    * row-locally — cost follows wedge count, never supplier². Same
+    * 100 TB hub guard applies (cap/salt parts above a degree
+    * ceiling). Top-50 by score is TakeOrdered. */
+  val graphAdamicAdar: QDef = q(
+    "graph_adamic_adar",
+    """WITH sp AS (
+      |  SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk FROM lineitem),
+      |pdeg AS (SELECT pk, COUNT(*) AS pd FROM sp GROUP BY pk),
+      |w AS (
+      |  SELECT pk,
+      |    CAST(floor(1000000.0 / ln(CAST(pd AS DOUBLE))) AS BIGINT) AS w
+      |  FROM pdeg WHERE pd >= 2)
+      |SELECT a.sk AS supp_a, b.sk AS supp_b,
+      |  CAST(COUNT(*) AS BIGINT) AS common,
+      |  CAST(SUM(w.w) AS BIGINT) AS aa_micro
+      |FROM sp a JOIN sp b ON a.pk = b.pk AND a.sk < b.sk
+      |JOIN w ON w.pk = a.pk
+      |GROUP BY a.sk, b.sk
+      |ORDER BY aa_micro DESC, supp_a, supp_b
+      |LIMIT 50""") { (s, d) =>
+    import graft.functions.VectorFunctions.orderedPairs
+    // repartition(pk) BEFORE the set agg (r19-opt, guide §2.5 input
+    // parallelism): the fixture fact is one parquet split, so the
+    // partial collect_set built every adjacency set inside the
+    // single scan task; pk-hash first spreads set-building across
+    // the session width and the agg plans exchange-free on top
+    val adj = Tables.lineitem(s, d)
+      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
+      .repartition(col("pk"))
+      .groupBy(col("pk"))
+      .agg(sort_array(collect_set(col("sk"))).as("sks"))
+      .filter(size(col("sks")) >= 2)
+      .select(col("sks"),
+        floor(lit(1000000.0) / log(size(col("sks")).cast(DoubleType)))
+          .cast(LongType).as("w"))
+    adj.select(explode(orderedPairs(col("sks"))).as("p"), col("w"))
+      .groupBy(col("p.a").as("supp_a"), col("p.b").as("supp_b"))
+      .agg(count(lit(1)).as("common"), sum(col("w")).as("aa_micro"))
+      .orderBy(col("aa_micro").desc, col("supp_a"), col("supp_b"))
+      .limit(50)
+  }
+
+  /** Incremental edge-store maintenance (r18) — the daily-run
+    * companion to `graph_edge_store_roundtrip` (which certifies the
+    * store equals recomputation): the PRIOR half of orders
+    * (md5-parity on o_orderkey, the house snapshot convention)
+    * builds the stored edge table through the parquet sink; the
+    * increment half's edges classify against the STORED side only
+    * (anti-join = genuinely new partnerships, semi-join = already
+    * known), and the merged store is pinned against a full rebuild
+    * from ALL orders — the oracle states merged_minus_full as
+    * literal 0, so the incremental-maintenance identity
+    * stored ∪ increment ≡ rebuild is a hash-graded contract, not an
+    * assumption. At 100 TB the daily cost follows the increment and
+    * the store is read, never rebuilt; the rebuild leg here is the
+    * eval tier that certifies the identity. */
+  val graphEdgeStoreIncremental: QDef = q(
+    "graph_edge_store_incremental",
+    """WITH po AS (
+      |  SELECT o_orderkey, o_custkey FROM orders
+      |  WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) <= '7'),
+      |io AS (
+      |  SELECT o_orderkey, o_custkey FROM orders
+      |  WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) > '7'),
+      |ebp AS (
+      |  SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
+      |  FROM po JOIN lineitem ON o_orderkey = l_orderkey),
+      |ebi AS (
+      |  SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
+      |  FROM io JOIN lineitem ON o_orderkey = l_orderkey),
+      |ebf AS (
+      |  SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
+      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+      |nw AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS n_new FROM ebi
+      |  WHERE NOT EXISTS (SELECT 1 FROM ebp
+      |    WHERE ebp.ck = ebi.ck AND ebp.sk = ebi.sk))
+      |SELECT
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM ebp) AS n_stored,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM ebi) AS n_increment,
+      |  (SELECT n_new FROM nw) AS n_new,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM ebi) - (SELECT n_new FROM nw)
+      |    AS n_dup,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM ebp) + (SELECT n_new FROM nw)
+      |    AS n_merged,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM ebf) AS n_full_rebuild,
+      |  CAST(0 AS BIGINT) AS merged_minus_full""") { (s, d) =>
+    val isPriorO =
+      substring(md5(col("o_orderkey").cast(StringType)), 1, 1) <= "7"
+    val li = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_suppkey"))
+    val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+    // r19-opt (guide §1.2/§2.3): the r18 spelling ran the
+    // orders⋈lineitem join + a DISTINCT agg THREE times (prior,
+    // increment, full-rebuild legs — measured 2.7-3.3 s steady-state
+    // at sf0.1). The md5-parity halves PARTITION orders, so ONE
+    // tagged pass computes all three sets exactly: group the single
+    // join by (ck, sk) with per-pair hasPrior/hasIncr flags —
+    // ebp = σ(hasPrior), ebi = σ(hasIncr), and the full rebuild is
+    // the whole pair table (distinct over a union of a partition =
+    // the same set). The STORE semantics are unchanged: prior edges
+    // still go THROUGH the parquet sink and the increment still
+    // classifies by anti-join against the RE-READ stored side only.
+    val g = orders
+      .join(li, col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"),
+        when(isPriorO, 1L).otherwise(0L).as("p"))
+      .groupBy(col("ck"), col("sk"))
+      .agg(max(col("p")).as("has_p"), max(lit(1L) - col("p")).as("has_i"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // materialize the pair table BEFORE the coalesce(1) write: the
+    // sink's single task would otherwise narrow-collapse the whole
+    // join+agg lineage into itself and compute it single-threaded
+    // (r19-opt — measured as the dominant term of this key)
+    g.count()
+    val out = graft.TempDirs.create("graft_edgestore_inc")
+    // coalesce(1) + in-partition sort: identical single sorted file,
+    // minus the global sort's range-sampling job + exchange (r18-opt,
+    // the roundtrip twin's spelling).
+    g.filter(col("has_p") === 1L).select(col("ck"), col("sk"))
+      .coalesce(1).sortWithinPartitions(col("ck"), col("sk"))
+      .write.mode("overwrite").parquet(out)
+    val stored = s.read.parquet(out).persist(StorageLevel.MEMORY_AND_DISK)
+    val ebi = g.filter(col("has_i") === 1L).select(col("ck"), col("sk"))
+    val st = stored.select(col("ck").as("s_ck"), col("sk").as("s_sk"))
+    val aNew = ebi.join(st,
+        col("ck") === col("s_ck") && col("sk") === col("s_sk"), "left_anti")
+      .agg(count(lit(1)).as("n_new"))
+    val aStored = stored.agg(count(lit(1)).as("n_stored"))
+    // increment and full-rebuild counts fold over the ONE pair table
+    val aRest = g.agg(coalesce(sum(col("has_i")), lit(0L)).as("n_increment"),
+      count(lit(1)).as("n_full_rebuild"))
+    aStored.crossJoin(broadcast(aRest)).crossJoin(broadcast(aNew))
+      .select(col("n_stored"), col("n_increment"), col("n_new"),
+        (col("n_increment") - col("n_new")).as("n_dup"),
+        (col("n_stored") + col("n_new")).as("n_merged"),
+        col("n_full_rebuild"),
+        (col("n_stored") + col("n_new") - col("n_full_rebuild"))
+          .as("merged_minus_full"))
+  }
+
+  /** Rich-club density (r18b) — do the highest-degree customers and
+    * suppliers trade disproportionately with EACH OTHER? Over the
+    * shared `tradeEb` bipartite edge set (ONE spelling with the
+    * eight graph-family consumers): top-20 customers and top-20
+    * suppliers by distinct-partner degree (deterministic (deg DESC,
+    * key) order), the edge density among them vs the overall
+    * bipartite density, and the rich-club ratio in milli. The top
+    * sets are TakeOrdered(20) global sort-limits; the rich-edge
+    * count is one broadcast double-semijoin over eb — never an
+    * all-pairs anything. */
+  val graphRichClub: QDef = q(
+    "graph_rich_club",
+    s"""WITH ${tradeEbCte},
+      |cd AS (SELECT ck, CAST(COUNT(*) AS BIGINT) AS deg FROM eb
+      |  GROUP BY ck),
+      |sd AS (SELECT sk, CAST(COUNT(*) AS BIGINT) AS deg FROM eb
+      |  GROUP BY sk),
+      |topc AS (SELECT ck FROM cd ORDER BY deg DESC, ck LIMIT 20),
+      |tops AS (SELECT sk FROM sd ORDER BY deg DESC, sk LIMIT 20),
+      |tot AS (
+      |  SELECT CAST(COUNT(DISTINCT ck) AS BIGINT) AS n_cust,
+      |    CAST(COUNT(DISTINCT sk) AS BIGINT) AS n_supp,
+      |    CAST(COUNT(*) AS BIGINT) AS n_edges
+      |  FROM eb),
+      |rich AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS rich_edges
+      |  FROM eb JOIN topc ON topc.ck = eb.ck
+      |    JOIN tops ON tops.sk = eb.sk)
+      |SELECT tot.n_cust, tot.n_supp, tot.n_edges, rich.rich_edges,
+      |  CAST(400 AS BIGINT) AS rich_possible,
+      |  CAST(rich.rich_edges * 1000000 // 400 AS BIGINT)
+      |    AS rich_density_ppm,
+      |  CAST(tot.n_edges * 1000000 // (tot.n_cust * tot.n_supp)
+      |    AS BIGINT) AS overall_density_ppm,
+      |  CAST((rich.rich_edges * 1000000 // 400) * 1000
+      |    // (tot.n_edges * 1000000 // (tot.n_cust * tot.n_supp))
+      |    AS BIGINT) AS rich_club_ratio_milli
+      |FROM tot CROSS JOIN rich""") { (s, d) =>
+    // r19 batch 3 (guide §2.3): tot's two-distinct aggregate planned
+    // an Expand over the ~587k-row eb cache (3× the rows through a
+    // partial agg). The degree tables needed for the top-20 cuts
+    // already determine every total exactly: n_cust = |cd|, n_supp =
+    // |sd|, n_edges = Σ cd.deg (eb is duplicate-free) — so persist
+    // the two node-sized degree tables and fold them instead.
+    val eb = tradeEb(s, d).persist()
+    val cd = eb.groupBy(col("ck")).agg(count(lit(1)).as("deg")).persist()
+    val sd = eb.groupBy(col("sk")).agg(count(lit(1)).as("deg")).persist()
+    val topc = cd.orderBy(col("deg").desc, col("ck")).limit(20).select(col("ck"))
+    val tops = sd.orderBy(col("deg").desc, col("sk")).limit(20).select(col("sk"))
+    val tot = cd.agg(count(lit(1)).as("n_cust"), sum(col("deg")).cast(LongType).as("n_edges"))
+      .crossJoin(broadcast(sd.agg(count(lit(1)).as("n_supp"))))
+      .select(col("n_cust"), col("n_supp"), col("n_edges"))
+    val rich = eb.join(broadcast(topc.select(col("ck").as("t_ck"))),
+        col("t_ck") === col("ck"))
+      .join(broadcast(tops.select(col("sk").as("t_sk"))),
+        col("t_sk") === col("sk"))
+      .agg(count(lit(1)).as("rich_edges"))
+    tot.crossJoin(broadcast(rich))
+      .select(col("n_cust"), col("n_supp"), col("n_edges"),
+        col("rich_edges"), lit(400L).as("rich_possible"),
+        expr("rich_edges * 1000000 div 400").as("rich_density_ppm"),
+        expr("n_edges * 1000000 div (n_cust * n_supp)")
+          .as("overall_density_ppm"),
+        expr("(rich_edges * 1000000 div 400) * 1000"
+          + " div (n_edges * 1000000 div (n_cust * n_supp))")
+          .as("rich_club_ratio_milli"))
+  }
+
   val all: Seq[QDef] = Seq(dedupClusterCc, graphDegreeStats, graphPagerank,
     graphTriangleCount, basketAssocRules, dedupClusterStar,
     graphJaccardNeighbors, graphBfsLevels, graphLabelPropagation,
-    graphKCore, graphDegreeAssortativity, graphHitsScores)
+    graphKCore, graphDegreeAssortativity, graphHitsScores,
+    graphModularityNations, graphLocalClustering, graphBipartiteTwohop,
+    graphCutConductance, graphEdgeStoreRoundtrip, graphAdamicAdar,
+    graphEdgeStoreIncremental, graphRichClub)
 }

@@ -3,10 +3,11 @@ package graft.ops
 import graft.{QDef, Tables}
 import graft.QDef.q
 import graft.Protocol._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Event-analytics operators over the stream table: ordered funnels
   * and retention cohorts — the aggregation shapes product analytics
@@ -1924,7 +1925,7 @@ object EventAnalytics {
   /** Shared classical-decomposition core (r16 extraction — the
     * kmvSample pattern): the m/cum/tr/se CTE chain of
     * `ts_decompose_additive`, also consumed by
-    * `R16Ops.ts_seasonal_strength` so the two keys cannot drift. One
+    * `ts_seasonal_strength` so the two keys cannot drift. One
     * text, one Spark builder ([[decomposeMonthly]]). */
   private[ops] val decomposeCtes: String =
     """m AS (
@@ -2025,6 +2026,1394 @@ object EventAnalytics {
       .orderBy(col("yr"), col("mo"))
   }
 
+  /** Daily bounce rate (r13) — sessions (30-minute gap islands, the
+    * `stream_custom_sessions` definition) that contain exactly ONE
+    * event, per session-start day: the engagement-quality monitor a
+    * funnel dashboard pairs with DAU. User-partitioned windows only
+    * (per-user event cardinality bounds the state); days join back
+    * over a tiny per-day table. Ties inside a user's stream order by
+    * (ts, event_id) in both engines. */
+  val eventsBounceRate: QDef = q(
+    "events_bounce_rate",
+    """WITH e AS (
+      |  SELECT user_id, event_id,
+      |    date_trunc('second', CAST(ts AS TIMESTAMP)) AS ts_sec
+      |  FROM events),
+      |flagged AS (
+      |  SELECT user_id, event_id, ts_sec,
+      |    CASE WHEN lag(ts_sec) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id)
+      |              IS NULL THEN 1
+      |         WHEN date_diff('second',
+      |              lag(ts_sec) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id),
+      |              ts_sec) >= 1800 THEN 1
+      |         ELSE 0 END AS new_session
+      |  FROM e),
+      |ids AS (
+      |  SELECT user_id, ts_sec,
+      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+      |  FROM flagged),
+      |sess AS (
+      |  SELECT user_id, sid, MIN(ts_sec) AS session_start,
+      |    CAST(COUNT(*) AS BIGINT) AS n_events
+      |  FROM ids GROUP BY user_id, sid)
+      |SELECT CAST(date_trunc('day', session_start) AS DATE) AS day,
+      |  CAST(COUNT(*) AS BIGINT) AS n_sessions,
+      |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounce,
+      |  (CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
+      |    // CAST(COUNT(*) AS BIGINT) AS bounce_ppm
+      |FROM sess GROUP BY 1 ORDER BY 1""") { (s, d) =>
+    val wOrd = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts_sec"), col("event_id"))
+    val flagged = Tables.events(s, d)
+      .select(col("user_id"), col("event_id"),
+        date_trunc("second", col("ts")).as("ts_sec"))
+      .withColumn("new_session",
+        when(lag(col("ts_sec"), 1).over(wOrd).isNull, 1L)
+          .when(unix_timestamp(col("ts_sec"))
+            - unix_timestamp(lag(col("ts_sec"), 1).over(wOrd)) >= 1800, 1L)
+          .otherwise(0L))
+    val sess = flagged
+      .withColumn("sid", sum(col("new_session"))
+        .over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy(col("user_id"), col("sid"))
+      .agg(min(col("ts_sec")).as("session_start"), count(lit(1)).as("n_events"))
+    sess.groupBy(date_trunc("day", col("session_start")).cast(DateType).as("day"))
+      .agg(count(lit(1)).as("n_sessions"),
+        count_if(col("n_events") === 1).as("n_bounce"))
+      .select(col("day"), col("n_sessions"), col("n_bounce"),
+        expr("(n_bounce * 1000000) div n_sessions").as("bounce_ppm"))
+      .orderBy(col("day"))
+  }
+
+  /** Weekly retention triangle (r13) — the cohort × age activity
+    * matrix growth teams read: users grouped by first-active EPOCH
+    * WEEK (floor(epoch_days/7) — a pure integer both engines compute
+    * identically, dodging week-of-year calendar seams), with each
+    * later week's active share of the cohort in floor-ppm. Two
+    * user-keyed aggs and one user-keyed join — the standard retention
+    * shape; nothing scales past user cardinality. */
+  val cohortRetentionTriangle: QDef = q(
+    "cohort_retention_triangle",
+    """WITH e AS (
+      |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 // 7 AS wk
+      |  FROM events),
+      |first AS (
+      |  SELECT user_id, MIN(wk) AS cohort_wk FROM e GROUP BY user_id),
+      |sizes AS (
+      |  SELECT cohort_wk, CAST(COUNT(*) AS BIGINT) AS cohort_users
+      |  FROM first GROUP BY cohort_wk),
+      |active AS (
+      |  SELECT f.cohort_wk, e.wk - f.cohort_wk AS age_weeks,
+      |    CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_active
+      |  FROM e JOIN first f ON e.user_id = f.user_id
+      |  GROUP BY f.cohort_wk, e.wk - f.cohort_wk)
+      |SELECT a.cohort_wk, a.age_weeks, s.cohort_users, a.n_active,
+      |  (a.n_active * 1000000) // s.cohort_users AS retention_ppm
+      |FROM active a JOIN sizes s ON a.cohort_wk = s.cohort_wk
+      |ORDER BY a.cohort_wk, a.age_weeks""") { (s, d) =>
+    val e = Tables.events(s, d)
+      .select(col("user_id"),
+        expr("unix_micros(ts) div 86400000000L div 7").as("wk"))
+    val first = e.groupBy(col("user_id")).agg(min(col("wk")).as("cohort_wk"))
+    val sizes = first.groupBy(col("cohort_wk").as("s_wk"))
+      .agg(count(lit(1)).as("cohort_users"))
+    val active = e.join(first, Seq("user_id"))
+      .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("age_weeks"))
+      .agg(countDistinct(col("user_id")).as("n_active"))
+    active.join(broadcast(sizes), col("cohort_wk") === col("s_wk"))
+      .select(col("cohort_wk"), col("age_weeks"), col("cohort_users"),
+        col("n_active"),
+        expr("(n_active * 1000000) div cohort_users").as("retention_ppm"))
+      .orderBy(col("cohort_wk"), col("age_weeks"))
+  }
+
+  /** Alert-storm suppression report (r14g) — the monitoring dedup
+    * every pager pipeline runs: high-value events (value > 150 ≈ the
+    * fixture's top ~5%) collapse per event type into STORMS via
+    * 10-minute gap islands in exact µs (the `sessionize_events`
+    * gaps-and-islands shape on the alert sub-stream), and the report
+    * says how many pages suppression saves: alerts, storms, worst
+    * storm length, suppression rate in floor-ppm. Type-partitioned
+    * windows only (5 types — at higher alert cardinality the
+    * partition key stays the type+day composite, the standard
+    * storm-window shard). */
+  val eventsAlertStormSuppression: QDef = q(
+    "events_alert_storm_suppression",
+    """WITH a AS (
+      |  SELECT event_type, event_id,
+      |    epoch_us(CAST(ts AS TIMESTAMP)) AS t
+      |  FROM events WHERE value > 150),
+      |g AS (
+      |  SELECT event_type, t, event_id,
+      |    CASE WHEN t - lag(t) OVER (PARTITION BY event_type
+      |      ORDER BY t, event_id) > 600000000 OR
+      |      lag(t) OVER (PARTITION BY event_type
+      |      ORDER BY t, event_id) IS NULL THEN 1 ELSE 0 END AS new_storm
+      |  FROM a),
+      |st AS (
+      |  SELECT event_type,
+      |    SUM(new_storm) OVER (PARTITION BY event_type ORDER BY t, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS storm_id
+      |  FROM g),
+      |sz AS (
+      |  SELECT event_type, storm_id, CAST(COUNT(*) AS BIGINT) AS len
+      |  FROM st GROUP BY event_type, storm_id)
+      |SELECT event_type, CAST(SUM(len) AS BIGINT) AS n_alerts,
+      |  CAST(COUNT(*) AS BIGINT) AS n_storms,
+      |  CAST(MAX(len) AS BIGINT) AS max_storm_len,
+      |  CAST(((SUM(len) - COUNT(*)) * 1000000) // SUM(len) AS BIGINT)
+      |    AS suppression_ppm
+      |FROM sz GROUP BY event_type
+      |ORDER BY event_type""") { (s, d) =>
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("event_type")).orderBy(col("t"), col("event_id"))
+    // tie-deterministic running sum: ORDER BY (t, event_id) in BOTH
+    // engines — with t-only ordering, same-µs alerts could land in
+    // different storms per physical row order
+    val wRun = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("event_type")).orderBy(col("t"), col("event_id"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)
+    val a = Tables.events(s, d)
+      .filter(col("value") > 150)
+      .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("t"))
+    val g = a.select(col("event_type"), col("t"), col("event_id"),
+      when(lag(col("t"), 1).over(w).isNull ||
+        col("t") - lag(col("t"), 1).over(w) > 600000000L, 1L)
+        .otherwise(0L).as("new_storm"))
+    val sz = g.select(col("event_type"),
+        sum(col("new_storm")).over(wRun).as("storm_id"))
+      .groupBy(col("event_type"), col("storm_id"))
+      .agg(count(lit(1)).as("len"))
+    sz.groupBy(col("event_type"))
+      .agg(sum(col("len")).as("n_alerts"), count(lit(1)).as("n_storms"),
+        max(col("len")).as("max_storm_len"))
+      .select(col("event_type"), col("n_alerts"), col("n_storms"),
+        col("max_storm_len"),
+        expr("((n_alerts - n_storms) * 1000000) div n_alerts")
+          .as("suppression_ppm"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Sample-ratio-mismatch check (r15) — the first audit any A/B
+    * readout runs: did the 50/50 randomization actually deliver
+    * 50/50 units? Units are distinct event users; the variant is the
+    * house md5-parity split (first hex digit ≤ '7' → A — exactly
+    * 8/16 of hash space). χ² for the two-cell 50/50 test reduces to
+    * (2a−n)²/n — graded in exact floor-micro units with the standard
+    * 3.841459 (df=1, α=.05) threshold flag. n²·10⁶ stays far inside
+    * int64 at any realistic unit count (10⁶ units → 10¹⁸); beyond
+    * that the spelling swaps to the DECIMAL(38) fold like the stats
+    * family. One distinct + one two-row agg. */
+  val abSrmCheck: QDef = q(
+    "ab_srm_check",
+    """WITH u AS (
+      |  SELECT DISTINCT user_id,
+      |    CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) <= '7'
+      |      THEN 'A' ELSE 'B' END AS variant
+      |  FROM events),
+      |c AS (
+      |  SELECT
+      |    CAST(SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS a,
+      |    CAST(COUNT(*) AS BIGINT) AS n
+      |  FROM u)
+      |SELECT v.variant,
+      |  CASE WHEN v.variant = 'A' THEN a ELSE n - a END AS n_units,
+      |  n AS n_total,
+      |  CAST((2 * a - n) * (2 * a - n) * 1000000 // n AS BIGINT)
+      |    AS chi2_micro,
+      |  (2 * a - n) * (2 * a - n) * 1000000 // n > 3841459 AS srm_flag
+      |FROM c CROSS JOIN (SELECT 'A' AS variant UNION ALL SELECT 'B') v
+      |ORDER BY v.variant""") { (s, d) =>
+    val u = Tables.events(s, d)
+      .select(col("user_id")).distinct()
+      .select(when(substring(md5(col("user_id").cast(StringType)), 1, 1) <= "7",
+        "A").otherwise("B").as("variant"))
+    val c = u.agg(
+      count_if(col("variant") === "A").as("a"),
+      count(lit(1)).as("n"))
+    val vs = s.range(1).select(lit("A").as("variant"))
+      .unionAll(s.range(1).select(lit("B").as("variant")))
+    c.crossJoin(broadcast(vs))
+      .select(col("variant"),
+        when(col("variant") === "A", col("a"))
+          .otherwise(col("n") - col("a")).as("n_units"),
+        col("n").as("n_total"),
+        expr("CAST((2*a - n) * (2*a - n) * 1000000 div n AS BIGINT)")
+          .as("chi2_micro"),
+        (expr("(2*a - n) * (2*a - n) * 1000000 div n") > 3841459L)
+          .as("srm_flag"))
+      .orderBy(col("variant"))
+  }
+
+  /** Session-gap sensitivity sweep (r15) — the tuning table behind
+    * `sessionize_events`' fixed 30-minute gap: session counts at gap
+    * = 10/30/60 minutes from ONE user-partitioned lag+lead pass (a
+    * session STARTS where the backward gap exceeds g; it is
+    * single-event where the forward gap does too), swept via a
+    * broadcast 3-row threshold table — the `corpus_dedup_impact_
+    * curve` shape applied to sessionization. Events-per-session in
+    * floor-milli. One window exchange total; the sweep multiplies
+    * rows only inside the final group-sized agg. */
+  val eventsSessionGapSweep: QDef = q(
+    "events_session_gap_sweep",
+    """WITH e AS (
+      |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t
+      |  FROM events),
+      |g AS (
+      |  SELECT user_id,
+      |    t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
+      |      AS dtp,
+      |    lead(t) OVER (PARTITION BY user_id ORDER BY t, event_id) - t
+      |      AS dtn
+      |  FROM e),
+      |gaps AS (SELECT * FROM (VALUES (600), (1800), (3600)) AS t(gap_s))
+      |SELECT CAST(gap_s AS BIGINT) AS gap_s,
+      |  CAST(COUNT(*) AS BIGINT) AS n_events,
+      |  CAST(SUM(CASE WHEN dtp IS NULL OR dtp > CAST(gap_s AS BIGINT) * 1000000
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
+      |  CAST(SUM(CASE WHEN (dtp IS NULL OR dtp > CAST(gap_s AS BIGINT) * 1000000)
+      |    AND (dtn IS NULL OR dtn > CAST(gap_s AS BIGINT) * 1000000)
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_single_event,
+      |  CAST(COUNT(*) * 1000 // SUM(CASE WHEN dtp IS NULL
+      |    OR dtp > CAST(gap_s AS BIGINT) * 1000000 THEN 1 ELSE 0 END) AS BIGINT)
+      |    AS events_per_session_milli
+      |FROM g CROSS JOIN gaps
+      |GROUP BY gap_s ORDER BY gap_s""") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
+    val g = Tables.events(s, d)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("t"))
+      .select(col("user_id"),
+        (col("t") - lag(col("t"), 1).over(w)).as("dtp"),
+        (lead(col("t"), 1).over(w) - col("t")).as("dtn"))
+    g.crossJoin(broadcast(PrivacyOps.intTable(s, "gap_s", Seq(600, 1800, 3600))))
+      .groupBy(col("gap_s"))
+      .agg(count(lit(1)).as("n_events"),
+        count_if(col("dtp").isNull || col("dtp") > col("gap_s") * 1000000L)
+          .as("n_sessions"),
+        count_if((col("dtp").isNull || col("dtp") > col("gap_s") * 1000000L)
+            && (col("dtn").isNull || col("dtn") > col("gap_s") * 1000000L))
+          .as("n_single_event"))
+      .select(col("gap_s").cast(LongType).as("gap_s"), col("n_events"),
+        col("n_sessions"), col("n_single_event"),
+        expr("CAST(n_events * 1000 div n_sessions AS BIGINT)")
+          .as("events_per_session_milli"))
+      .orderBy(col("gap_s"))
+  }
+
+  /** Experiment power analysis (r16) — the design-time companion to
+    * `stats_welch_t`/`ab_test_metrics`: per event type, the per-arm
+    * sample size a 50/50 A/B test needs to detect a 5% lift of the
+    * observed mean at alpha = 0.05 (two-sided) and power = 0.80. The
+    * classic n = 2·(z_a + z_b)²·sigma²/delta² with (z_a + z_b)² as the
+    * integer micro constant 7848879 ((1.959964 + 0.841621)²·1e6 — a
+    * DOCUMENTED literal, the same convention as ab_srm_check's
+    * 3.841459), variance from exact sums (per-row square in
+    * DECIMAL(38)/HUGEINT), delta in floor-micro cents, and the
+    * ceiling spelled (a + b − 1) // b on nonnegative operands. One
+    * group agg, row-local math. */
+  val abPowerSampleSize: QDef = q(
+    "ab_power_sample_size",
+    """WITH e AS (
+      |  SELECT event_type,
+      |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
+      |  FROM events),
+      |g AS (
+      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(x) AS BIGINT) AS s,
+      |    SUM(CAST(x AS HUGEINT) * x) AS q
+      |  FROM e GROUP BY event_type),
+      |m AS (
+      |  SELECT event_type, n,
+      |    CAST(s * 1000000 // n AS BIGINT) AS mean_micro,
+      |    CASE WHEN n <= 1 THEN NULL ELSE
+      |      CAST((CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT) * s) * 1000000
+      |      // (CAST(n AS HUGEINT) * (n - 1)) AS BIGINT) END AS var_micro
+      |  FROM g),
+      |d AS (SELECT *, CAST(mean_micro // 20 AS BIGINT) AS delta_micro FROM m)
+      |SELECT event_type, n, mean_micro, var_micro, delta_micro,
+      |  CASE WHEN delta_micro = 0 THEN NULL ELSE
+      |    CAST((2 * 7848879 * CAST(var_micro AS HUGEINT)
+      |      + CAST(delta_micro AS HUGEINT) * delta_micro - 1)
+      |    // (CAST(delta_micro AS HUGEINT) * delta_micro) AS BIGINT) END
+      |    AS n_required
+      |FROM d ORDER BY event_type""") { (s, d) =>
+    val g = Tables.events(s, d)
+      .select(col("event_type"),
+        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("x"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
+        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("q"))
+    g.select(col("event_type"), col("n"),
+        expr("CAST(s * 1000000 div n AS BIGINT)").as("mean_micro"),
+        expr("CASE WHEN n <= 1 THEN NULL ELSE"
+          + " CAST((CAST(n AS DECIMAL(38,0)) * q - CAST(s AS DECIMAL(38,0))"
+          + " * s) * 1000000 div (CAST(n AS DECIMAL(38,0)) * (n - 1))"
+          + " AS BIGINT) END").as("var_micro"))
+      .withColumn("delta_micro", expr("CAST(mean_micro div 20 AS BIGINT)"))
+      .select(col("event_type"), col("n"), col("mean_micro"),
+        col("var_micro"), col("delta_micro"),
+        expr("CASE WHEN delta_micro = 0 THEN NULL ELSE"
+          + " CAST((2 * 7848879 * CAST(var_micro AS DECIMAL(38,0))"
+          + " + CAST(delta_micro AS DECIMAL(38,0)) * delta_micro - 1)"
+          + " div (CAST(delta_micro AS DECIMAL(38,0)) * delta_micro)"
+          + " AS BIGINT) END").as("n_required"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Markov stationary distribution (r16) — the chain-level readout
+    * over `event_transition_matrix`'s row-stochastic floor-ppm matrix:
+    * three unrolled integer power-iteration rounds from the uniform
+    * start (1e6 // k ppm), each round one broadcast join of the
+    * ≤k²-row matrix against the k-row vector (the `graph_pagerank`
+    * fixed-iteration discipline — no driver-side convergence probe,
+    * no float accumulation). Output shows the convergence path
+    * (pi0..pi3) per event type; flooring leaks ≤1 ppm per cell per
+    * round, deterministically in both engines. The matrix build is
+    * the one user-partitioned lead window; everything after is
+    * k-sized. */
+  val eventsMarkovStationary: QDef = q(
+    "events_markov_stationary",
+    """WITH s AS (
+      |  SELECT event_type AS from_type,
+      |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+      |      AS to_type
+      |  FROM events),
+      |c AS (
+      |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
+      |  FROM s WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+      |m AS (
+      |  SELECT from_type, CAST(SUM(n) AS BIGINT) AS tot
+      |  FROM c GROUP BY from_type),
+      |p AS MATERIALIZED (
+      |  SELECT c.from_type, c.to_type, (c.n * 1000000) // m.tot AS p_ppm
+      |  FROM c JOIN m ON c.from_type = m.from_type),
+      |t0 AS (SELECT DISTINCT event_type AS ty FROM events),
+      |k AS (SELECT CAST(COUNT(*) AS BIGINT) AS nk FROM t0),
+      |pi0 AS (SELECT ty, CAST(1000000 // nk AS BIGINT) AS pi
+      |  FROM t0 CROSS JOIN k),
+      |pi1 AS MATERIALIZED (
+      |  SELECT p.to_type AS ty, CAST(SUM(pi * p_ppm) // 1000000 AS BIGINT)
+      |    AS pi
+      |  FROM p JOIN pi0 ON pi0.ty = p.from_type GROUP BY p.to_type),
+      |pi2 AS MATERIALIZED (
+      |  SELECT p.to_type AS ty, CAST(SUM(pi * p_ppm) // 1000000 AS BIGINT)
+      |    AS pi
+      |  FROM p JOIN pi1 ON pi1.ty = p.from_type GROUP BY p.to_type),
+      |pi3 AS (
+      |  SELECT p.to_type AS ty, CAST(SUM(pi * p_ppm) // 1000000 AS BIGINT)
+      |    AS pi
+      |  FROM p JOIN pi2 ON pi2.ty = p.from_type GROUP BY p.to_type)
+      |SELECT t0.ty AS event_type, pi0.pi AS pi0_ppm,
+      |  COALESCE(pi1.pi, 0) AS pi1_ppm, COALESCE(pi2.pi, 0) AS pi2_ppm,
+      |  COALESCE(pi3.pi, 0) AS pi3_ppm
+      |FROM t0 JOIN pi0 ON pi0.ty = t0.ty
+      |LEFT JOIN pi1 ON pi1.ty = t0.ty
+      |LEFT JOIN pi2 ON pi2.ty = t0.ty
+      |LEFT JOIN pi3 ON pi3.ty = t0.ty
+      |ORDER BY event_type""") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    val c = Tables.events(s, d)
+      .select(col("event_type").as("from_type"),
+        lead(col("event_type"), 1).over(w).as("to_type"))
+      .filter(col("to_type").isNotNull)
+      .groupBy(col("from_type"), col("to_type"))
+      .agg(count(lit(1)).as("n"))
+    val m = c.groupBy(col("from_type").as("m_from"))
+      .agg(sum(col("n")).as("tot"))
+    val p = c.join(broadcast(m), col("from_type") === col("m_from"))
+      .select(col("from_type"), col("to_type"),
+        expr("(n * 1000000) div tot").as("p_ppm"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val t0 = Tables.events(s, d).select(col("event_type").as("ty"))
+      .distinct()
+    val k = t0.agg(count(lit(1)).as("nk"))
+    val pi0 = t0.crossJoin(broadcast(k))
+      .select(col("ty"), expr("CAST(1000000 div nk AS BIGINT)").as("pi"))
+    def step(pi: DataFrame): DataFrame =
+      p.join(broadcast(pi.select(col("ty").as("fty"), col("pi"))),
+          col("fty") === col("from_type"))
+        .groupBy(col("to_type").as("ty"))
+        .agg(expr("CAST(SUM(pi * p_ppm) div 1000000 AS BIGINT)").as("pi"))
+    val pi1 = step(pi0); val pi2 = step(pi1); val pi3 = step(pi2)
+    t0.join(broadcast(pi0.select(col("ty").as("t0k"), col("pi").as("p0"))),
+        col("t0k") === col("ty"))
+      .join(broadcast(pi1.select(col("ty").as("t1k"), col("pi").as("p1"))),
+        col("t1k") === col("ty"), "left")
+      .join(broadcast(pi2.select(col("ty").as("t2k"), col("pi").as("p2"))),
+        col("t2k") === col("ty"), "left")
+      .join(broadcast(pi3.select(col("ty").as("t3k"), col("pi").as("p3"))),
+        col("t3k") === col("ty"), "left")
+      .select(col("ty").as("event_type"), col("p0").as("pi0_ppm"),
+        coalesce(col("p1"), lit(0L)).as("pi1_ppm"),
+        coalesce(col("p2"), lit(0L)).as("pi2_ppm"),
+        coalesce(col("p3"), lit(0L)).as("pi3_ppm"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Multi-lag autocorrelation table (r16) — `ts_autocorr_daily`
+    * generalized from lag 1 to the full weekly ACF (lags 1..7), the
+    * table a seasonality analyst actually reads (a lag-7 spike = the
+    * weekly cycle `ts_seasonal_naive_error` exploits). Daily totals
+    * are aggregated ONCE (day-cardinality table), then one broadcast
+    * self-join per the 7-row lag table pairs (x_d, x_{d+lag});
+    * integer sums per (type, lag), the final Pearson ratio spelled as
+    * the one-float-op-per-operand chain the lag-1 key already grades
+    * (exact integer inputs → identical doubles in both engines). */
+  val tsAcfLags: QDef = q(
+    "ts_acf_lags",
+    """WITH dtot AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM events GROUP BY event_type, day),
+      |lg AS (SELECT * FROM (VALUES (1), (2), (3), (4), (5), (6), (7))
+      |  t(lag)),
+      |p AS (
+      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
+      |  FROM dtot a CROSS JOIN lg
+      |  JOIN dtot b ON b.event_type = a.event_type
+      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
+      |s AS (
+      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS n,
+      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
+      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
+      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
+      |  FROM p GROUP BY event_type, lag),
+      |t AS (
+      |  SELECT event_type, lag, n, CAST(sx AS DOUBLE) AS dx,
+      |    CAST(sy AS DOUBLE) AS dy, CAST(sxx AS DOUBLE) AS dxx,
+      |    CAST(syy AS DOUBLE) AS dyy, CAST(sxy AS DOUBLE) AS dxy
+      |  FROM s)
+      |SELECT event_type, CAST(lag AS BIGINT) AS lag, n,
+      |  (n * dxy - dx * dy)
+      |    / (sqrt(n * dxx - dx * dx) * sqrt(n * dyy - dy * dy)) AS acf
+      |FROM t ORDER BY event_type, lag""") { (s, d) =>
+    import s.implicits._
+    val dtot = Tables.events(s, d)
+      .select(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"),
+        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val lg = (1 to 7).toDF("lag")
+    val p = dtot.as("a").crossJoin(broadcast(lg))
+      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
+          col("cents").as("y")),
+        col("bt") === col("a.event_type") &&
+          col("bd") === expr("date_add(a.day, lag)"))
+      .select(col("a.event_type").as("event_type"), col("lag"),
+        col("a.cents").as("x"), col("y"))
+    val st = p.groupBy(col("event_type"), col("lag"))
+      .agg(count(lit(1)).as("n"),
+        sum(expr("CAST(x AS DECIMAL(38,0))")).as("sx"),
+        sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"),
+        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
+        sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"),
+        sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"))
+    st.select(col("event_type"), col("lag").cast(LongType).as("lag"),
+        col("n"),
+        expr("(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)"
+          + " * CAST(sy AS DOUBLE))"
+          + " / (sqrt(n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)"
+          + " * CAST(sx AS DOUBLE)) * sqrt(n * CAST(syy AS DOUBLE)"
+          + " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))").as("acf"))
+      .orderBy(col("event_type"), col("lag"))
+  }
+
+  /** Seasonality / trend strength (r16) — Hyndman's STL strength
+    * measures over the SHARED decomposition core
+    * (`decomposeCtes`/`decomposeMonthly` — the
+    * kmvSample extraction pattern, so this key and
+    * `ts_decompose_additive` cannot drift): F_trend = 1 −
+    * Var(resid)/Var(deseasonalized), F_seasonal = 1 −
+    * Var(resid)/Var(detrended), both clamped at 0 and reported in
+    * floor-ppm from exact DECIMAL(38)/HUGEINT sum-of-squares over the
+    * interior (trend-complete) months. THE one-number answer to "is
+    * this series worth a seasonal model" that the decomposition table
+    * itself doesn't state. ≤84-row algebra after the one fact agg. */
+  val tsSeasonalStrength: QDef = q(
+    "ts_seasonal_strength",
+    s"""WITH ${decomposeCtes},
+      |x AS (
+      |  SELECT tr.rev - tr.trend - se.seasonal AS r,
+      |    tr.rev - tr.trend AS dt, tr.rev - se.seasonal AS ds
+      |  FROM tr JOIN se ON se.mo = tr.mo
+      |  WHERE tr.trend IS NOT NULL),
+      |f AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+      |    SUM(CAST(r AS HUGEINT)) AS sr, SUM(CAST(r AS HUGEINT) * r) AS qr,
+      |    SUM(CAST(dt AS HUGEINT)) AS sdt,
+      |    SUM(CAST(dt AS HUGEINT) * dt) AS qdt,
+      |    SUM(CAST(ds AS HUGEINT)) AS sds,
+      |    SUM(CAST(ds AS HUGEINT) * ds) AS qds
+      |  FROM x)
+      |SELECT n,
+      |  CASE WHEN n * qds - sds * sds = 0 THEN CAST(NULL AS BIGINT)
+      |    ELSE GREATEST(CAST(1000000 - (n * qr - sr * sr) * 1000000
+      |      // (n * qds - sds * sds) AS BIGINT), 0) END
+      |    AS strength_trend_ppm,
+      |  CASE WHEN n * qdt - sdt * sdt = 0 THEN CAST(NULL AS BIGINT)
+      |    ELSE GREATEST(CAST(1000000 - (n * qr - sr * sr) * 1000000
+      |      // (n * qdt - sdt * sdt) AS BIGINT), 0) END
+      |    AS strength_seasonal_ppm
+      |FROM f""") { (s, d) =>
+    val x = decomposeMonthly(s, d)
+      .filter(col("trend").isNotNull)
+      .select((col("rev") - col("trend") - col("seasonal")).as("r"),
+        (col("rev") - col("trend")).as("dt"),
+        (col("rev") - col("seasonal")).as("ds"))
+    val f = x.agg(count(lit(1)).as("n"),
+      sum(expr("CAST(r AS DECIMAL(38,0))")).as("sr"),
+      sum(expr("CAST(r AS DECIMAL(38,0)) * r")).as("qr"),
+      sum(expr("CAST(dt AS DECIMAL(38,0))")).as("sdt"),
+      sum(expr("CAST(dt AS DECIMAL(38,0)) * dt")).as("qdt"),
+      sum(expr("CAST(ds AS DECIMAL(38,0))")).as("sds"),
+      sum(expr("CAST(ds AS DECIMAL(38,0)) * ds")).as("qds"))
+    f.select(col("n"),
+      expr("CASE WHEN n * qds - sds * sds = 0 THEN CAST(NULL AS BIGINT)"
+        + " ELSE GREATEST(CAST(1000000 - (n * qr - sr * sr) * 1000000"
+        + " div (n * qds - sds * sds) AS BIGINT), 0) END")
+        .as("strength_trend_ppm"),
+      expr("CASE WHEN n * qdt - sdt * sdt = 0 THEN CAST(NULL AS BIGINT)"
+        + " ELSE GREATEST(CAST(1000000 - (n * qr - sr * sr) * 1000000"
+        + " div (n * qdt - sdt * sdt) AS BIGINT), 0) END")
+        .as("strength_seasonal_ppm"))
+  }
+
+  /** Difference-in-differences (r17) — the quasi-experimental
+    * estimator next to `ab_test_metrics` (randomized) and
+    * `ab_cuped_adjustment` (variance reduction): treatment = the
+    * md5-parity user split, pre/post = the month's midpoint
+    * (2024-01-16, the `split_time_based` cut convention). Per event
+    * type and cell (treated × post): n and exact cents mass; cell
+    * means in floor-micro with each n = 0 guarded NULL; DiD = (T_post
+    * − T_pre) − (C_post − C_pre), NULL-propagating through any empty
+    * cell in BOTH engines. One (type, cell) agg + a type-level fold +
+    * sort. */
+  val abDiffInDiff: QDef = q(
+    "ab_diff_in_diff",
+    """WITH e AS (
+      |  SELECT event_type,
+      |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) <= '7' AS treated,
+      |    ts >= TIMESTAMP '2024-01-16 00:00:00' AS post,
+      |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
+      |  FROM events),
+      |c AS (
+      |  SELECT event_type, treated, post,
+      |    CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS s
+      |  FROM e GROUP BY event_type, treated, post),
+      |w AS (
+      |  SELECT event_type,
+      |    MAX(CASE WHEN NOT treated AND NOT post THEN n END) AS n_cc,
+      |    MAX(CASE WHEN NOT treated AND post THEN n END) AS n_cp,
+      |    MAX(CASE WHEN treated AND NOT post THEN n END) AS n_tc,
+      |    MAX(CASE WHEN treated AND post THEN n END) AS n_tp,
+      |    MAX(CASE WHEN NOT treated AND NOT post THEN s END) AS s_cc,
+      |    MAX(CASE WHEN NOT treated AND post THEN s END) AS s_cp,
+      |    MAX(CASE WHEN treated AND NOT post THEN s END) AS s_tc,
+      |    MAX(CASE WHEN treated AND post THEN s END) AS s_tp
+      |  FROM c GROUP BY event_type),
+      |m AS (
+      |  SELECT event_type, n_cc, n_cp, n_tc, n_tp,
+      |    CASE WHEN n_cc = 0 THEN NULL
+      |      ELSE CAST(s_cc * 1000000 // n_cc AS BIGINT) END AS mean_cc_micro,
+      |    CASE WHEN n_cp = 0 THEN NULL
+      |      ELSE CAST(s_cp * 1000000 // n_cp AS BIGINT) END AS mean_cp_micro,
+      |    CASE WHEN n_tc = 0 THEN NULL
+      |      ELSE CAST(s_tc * 1000000 // n_tc AS BIGINT) END AS mean_tc_micro,
+      |    CASE WHEN n_tp = 0 THEN NULL
+      |      ELSE CAST(s_tp * 1000000 // n_tp AS BIGINT) END AS mean_tp_micro
+      |  FROM w)
+      |SELECT *,
+      |  (mean_tp_micro - mean_tc_micro) - (mean_cp_micro - mean_cc_micro)
+      |    AS did_micro
+      |FROM m ORDER BY event_type""") { (s, d) =>
+    val e = Tables.events(s, d)
+      .select(col("event_type"),
+        (substring(md5(col("user_id").cast(StringType)), 1, 1) <= "7")
+          .as("treated"),
+        (col("ts") >= lit("2024-01-16 00:00:00").cast(TimestampType))
+          .as("post"),
+        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
+          .as("cents"))
+    val c = e.groupBy(col("event_type"), col("treated"), col("post"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
+    def cell(t: Boolean, p: Boolean, v: String) =
+      max(when(col("treated") === t && col("post") === p, col(v)))
+    val w = c.groupBy(col("event_type"))
+      .agg(cell(false, false, "n").as("n_cc"), cell(false, true, "n").as("n_cp"),
+        cell(true, false, "n").as("n_tc"), cell(true, true, "n").as("n_tp"),
+        cell(false, false, "s").as("s_cc"), cell(false, true, "s").as("s_cp"),
+        cell(true, false, "s").as("s_tc"), cell(true, true, "s").as("s_tp"))
+    def mean(nc: String, sc: String) =
+      expr(s"CASE WHEN $nc = 0 THEN NULL"
+        + s" ELSE CAST($sc * 1000000 div $nc AS BIGINT) END")
+    val m = w.select(col("event_type"),
+      col("n_cc"), col("n_cp"), col("n_tc"), col("n_tp"),
+      mean("n_cc", "s_cc").as("mean_cc_micro"),
+      mean("n_cp", "s_cp").as("mean_cp_micro"),
+      mean("n_tc", "s_tc").as("mean_tc_micro"),
+      mean("n_tp", "s_tp").as("mean_tp_micro"))
+    m.withColumn("did_micro",
+        (col("mean_tp_micro") - col("mean_tc_micro"))
+          - (col("mean_cp_micro") - col("mean_cc_micro")))
+      .orderBy(col("event_type"))
+  }
+
+  /** Binary-segmentation changepoint (r17) — the one-split complement
+    * to `ts_cusum_alarm` (sequential drift) and
+    * `ts_decompose_additive` (seasonal): per event type, the day
+    * boundary maximizing the between-segment sum of squares BSS(k) =
+    * (S_k·n − S·k)² / (k·(n−k)) over the daily DOLLAR series — the
+    * classic offline level-shift detector. Everything is exact
+    * integers: prefix sums over a type-partitioned window, the
+    * squared numerator ridden through DECIMAL(38)/HUGEINT (daily
+    * dollars keep it well inside — documented bound ~10^15 at fixture
+    * scale), floor-divided once to a BIGINT score, argmax = the
+    * type-partitioned (score DESC, k ASC) rank-1 row. Output carries
+    * the split day and both segment means in floor-micro dollars.
+    * Scale: one (type, day) agg, then day-cardinality windows. */
+  val tsChangepointSplit: QDef = q(
+    "ts_changepoint_split",
+    """WITH dly AS (
+      |  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
+      |      // 100 AS BIGINT) AS dollars
+      |  FROM events GROUP BY 1, 2),
+      |p AS (
+      |  SELECT event_type, day, dollars,
+      |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
+      |      AS BIGINT) AS k,
+      |    CAST(SUM(dollars) OVER (PARTITION BY event_type ORDER BY day
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      |      AS sk,
+      |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
+      |    CAST(SUM(dollars) OVER (PARTITION BY event_type) AS BIGINT) AS s
+      |  FROM dly),
+      |sc AS (
+      |  SELECT event_type, day, k, sk, n, s,
+      |    CAST(CAST(sk * n - s * k AS HUGEINT) * (sk * n - s * k)
+      |      // (k * (n - k)) AS BIGINT) AS score
+      |  FROM p WHERE k < n),
+      |r AS (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
+      |    ORDER BY score DESC, k) AS rn
+      |  FROM sc)
+      |SELECT event_type, day AS split_day, k AS split_k, n AS n_days,
+      |  score AS bss_score,
+      |  CAST(sk * 1000000 // k AS BIGINT) AS mean_left_micro,
+      |  CAST((s - sk) * 1000000 // (n - k) AS BIGINT) AS mean_right_micro
+      |FROM r WHERE rn = 1
+      |ORDER BY event_type""") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val dly = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"))
+      .agg(expr("CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100"
+        + " AS BIGINT)) div 100 AS BIGINT)").as("dollars"))
+    val wDay = Window.partitionBy(col("event_type")).orderBy(col("day"))
+    val wAll = Window.partitionBy(col("event_type"))
+    val p = dly.select(col("event_type"), col("day"), col("dollars"),
+      row_number().over(wDay).cast(LongType).as("k"),
+      sum(col("dollars"))
+        .over(wDay.rowsBetween(Window.unboundedPreceding, 0)).as("sk"),
+      count(lit(1)).over(wAll).as("n"),
+      sum(col("dollars")).over(wAll).as("s"))
+    val sc = p.filter(col("k") < col("n"))
+      .withColumn("score",
+        expr("CAST(CAST(sk * n - s * k AS DECIMAL(38,0)) * (sk * n - s * k)"
+          + " div (k * (n - k)) AS BIGINT)"))
+    val r = sc.withColumn("rn", row_number().over(
+      Window.partitionBy(col("event_type"))
+        .orderBy(col("score").desc, col("k"))))
+    r.filter(col("rn") === 1)
+      .select(col("event_type"), col("day").as("split_day"),
+        col("k").as("split_k"), col("n").as("n_days"),
+        col("score").as("bss_score"),
+        expr("CAST(sk * 1000000 div k AS BIGINT)").as("mean_left_micro"),
+        expr("CAST((s - sk) * 1000000 div (n - k) AS BIGINT)")
+          .as("mean_right_micro"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Position-based (U-shaped) attribution (r17) — the third
+    * estimator of the attribution family (`attribution_linear` =
+    * equal split, `attribution_time_decay` = recency-weighted): 40%
+    * first touch, 40% last touch, 20% split across middles, the
+    * standard U-shape. Same journey convention as the siblings
+    * (clicks ≤ 7 days before the purchase); touch order is the total
+    * (ct, click_id) order; credits in exact ppm with the remainder
+    * carried explicitly (n = 1 → 10⁶, n = 2 → 5·10⁵ each, n ≥ 3 →
+    * 4·10⁵/4·10⁵/2·10⁵ div (n−2) per middle). First/last ids via two
+    * row_numbers over ONE purchase-partitioned exchange (the
+    * `ts_ohlc_daily` trick). */
+  val attributionPositionBased: QDef = q(
+    "attribution_position_based",
+    """WITH p AS (
+      |  SELECT event_id AS purchase_id, user_id, ts AS pt
+      |  FROM events WHERE event_type = 'purchase'),
+      |c AS (
+      |  SELECT event_id AS click_id, user_id, ts AS ct
+      |  FROM events WHERE event_type = 'click'),
+      |m AS (
+      |  SELECT p.purchase_id, c.click_id, c.ct
+      |  FROM p JOIN c ON p.user_id = c.user_id
+      |  WHERE c.ct <= p.pt
+      |    AND epoch_us(p.pt) - epoch_us(c.ct) <= 604800000000),
+      |r AS (
+      |  SELECT purchase_id, click_id,
+      |    ROW_NUMBER() OVER (PARTITION BY purchase_id
+      |      ORDER BY ct, click_id) AS rn_a,
+      |    ROW_NUMBER() OVER (PARTITION BY purchase_id
+      |      ORDER BY ct DESC, click_id DESC) AS rn_d,
+      |    CAST(COUNT(*) OVER (PARTITION BY purchase_id) AS BIGINT) AS n_touch
+      |  FROM m),
+      |f AS (
+      |  SELECT purchase_id, n_touch,
+      |    MAX(CASE WHEN rn_a = 1 THEN click_id END) AS first_click_id,
+      |    MAX(CASE WHEN rn_d = 1 THEN click_id END) AS last_click_id
+      |  FROM r GROUP BY purchase_id, n_touch)
+      |SELECT purchase_id, n_touch, first_click_id, last_click_id,
+      |  CASE WHEN n_touch = 1 THEN 1000000
+      |    WHEN n_touch = 2 THEN 500000 ELSE 400000 END AS first_ppm,
+      |  CASE WHEN n_touch = 1 THEN 0
+      |    WHEN n_touch = 2 THEN 500000 ELSE 400000 END AS last_ppm,
+      |  CASE WHEN n_touch <= 2 THEN 0
+      |    ELSE CAST(200000 // (n_touch - 2) AS BIGINT) END AS mid_each_ppm,
+      |  CASE WHEN n_touch <= 2 THEN 0
+      |    ELSE 200000 - CAST(200000 // (n_touch - 2) AS BIGINT)
+      |      * (n_touch - 2) END AS remainder_ppm
+      |FROM f ORDER BY purchase_id""") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val e = Tables.events(s, d)
+    val p = e.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("ts").as("pt"))
+    val c = e.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("ct"))
+    val m = p.join(c, Seq("user_id"))
+      .filter(col("ct") <= col("pt") &&
+        unix_micros(col("pt")) - unix_micros(col("ct")) <= 604800000000L)
+      .select(col("purchase_id"), col("click_id"), col("ct"))
+    val wP = Window.partitionBy(col("purchase_id"))
+    val r = m.select(col("purchase_id"), col("click_id"),
+      row_number().over(wP.orderBy(col("ct"), col("click_id"))).as("rn_a"),
+      row_number().over(wP.orderBy(col("ct").desc, col("click_id").desc))
+        .as("rn_d"),
+      count(lit(1)).over(wP).as("n_touch"))
+    val f = r.groupBy(col("purchase_id"), col("n_touch"))
+      .agg(max(when(col("rn_a") === 1, col("click_id"))).as("first_click_id"),
+        max(when(col("rn_d") === 1, col("click_id"))).as("last_click_id"))
+    f.select(col("purchase_id"), col("n_touch"), col("first_click_id"),
+        col("last_click_id"),
+        when(col("n_touch") === 1, 1000000).when(col("n_touch") === 2, 500000)
+          .otherwise(400000).as("first_ppm"),
+        when(col("n_touch") === 1, 0).when(col("n_touch") === 2, 500000)
+          .otherwise(400000).as("last_ppm"),
+        when(col("n_touch") <= 2, lit(0L))
+          .otherwise(expr("CAST(200000 div (n_touch - 2) AS BIGINT)"))
+          .as("mid_each_ppm"),
+        when(col("n_touch") <= 2, lit(0L))
+          .otherwise(expr("200000 - CAST(200000 div (n_touch - 2) AS BIGINT)"
+            + " * (n_touch - 2)")).as("remainder_ppm"))
+      .orderBy(col("purchase_id"))
+  }
+
+  /** Partial autocorrelation at lag 2 (r18) — the AR-order probe
+    * that complements `ts_acf_lags` (raw ACF): via Durbin–Levinson,
+    * φ₂₂ = (ρ₂ − ρ₁²)/(1 − ρ₁²) — the lag-2 correlation AFTER
+    * removing what lag 1 already explains, THE number that separates
+    * an AR(1) daily series (φ₂₂ ≈ 0) from one needing a second-order
+    * model. ρ₁/ρ₂ are the ts_acf_lags lag-Pearson spellings verbatim
+    * (exact DECIMAL(38) sums into one identical float tree);
+    * φ₂₂ is one more float op on those identical doubles, degenerate
+    * 1−ρ₁² = 0 guarded NULL. Day-pair joins on the calendar-day
+    * grid, everything after day-sized. */
+  val tsPacfLag2: QDef = q(
+    "ts_pacf_lag2",
+    """WITH dtot AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM events GROUP BY event_type, day),
+      |lg AS (SELECT * FROM (VALUES (1), (2)) t(lag)),
+      |p AS (
+      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
+      |  FROM dtot a CROSS JOIN lg
+      |  JOIN dtot b ON b.event_type = a.event_type
+      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
+      |s AS (
+      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS n,
+      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
+      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
+      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
+      |  FROM p GROUP BY event_type, lag),
+      |r AS (
+      |  SELECT event_type, lag, n,
+      |    (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+      |      / (sqrt(n * CAST(sxx AS DOUBLE)
+      |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+      |        * sqrt(n * CAST(syy AS DOUBLE)
+      |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS acf
+      |  FROM s)
+      |SELECT a1.event_type, a1.n AS n1, a2.n AS n2,
+      |  a1.acf AS acf1, a2.acf AS acf2,
+      |  CASE WHEN 1 - a1.acf * a1.acf = 0 THEN NULL
+      |    ELSE (a2.acf - a1.acf * a1.acf) / (1 - a1.acf * a1.acf)
+      |    END AS pacf2
+      |FROM r a1 JOIN r a2
+      |  ON a2.event_type = a1.event_type AND a1.lag = 1 AND a2.lag = 2
+      |ORDER BY a1.event_type""") { (s, d) =>
+    import s.implicits._
+    val dtot = Tables.events(s, d)
+      .select(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"),
+        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val lg = Seq(1, 2).toDF("lag")
+    val p = dtot.as("a").crossJoin(broadcast(lg))
+      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
+          col("cents").as("y")),
+        col("bt") === col("a.event_type") &&
+          col("bd") === date_add(col("a.day"), col("lag")))
+      .select(col("a.event_type").as("event_type"), col("lag"),
+        col("a.cents").as("x"), col("y"))
+    val dec = DecimalType(38, 0)
+    val st = p.groupBy(col("event_type"), col("lag"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
+        sum(col("x").cast(dec) * col("x")).as("sxx"),
+        sum(col("y").cast(dec) * col("y")).as("syy"),
+        sum(col("x").cast(dec) * col("y")).as("sxy"))
+    val r = st.select(col("event_type"), col("lag"), col("n"),
+      ((col("n") * col("sxy").cast(DoubleType)
+        - col("sx").cast(DoubleType) * col("sy").cast(DoubleType))
+        / (sqrt(col("n") * col("sxx").cast(DoubleType)
+            - col("sx").cast(DoubleType) * col("sx").cast(DoubleType))
+          * sqrt(col("n") * col("syy").cast(DoubleType)
+            - col("sy").cast(DoubleType) * col("sy").cast(DoubleType))))
+        .as("acf"))
+    val a1 = r.filter(col("lag") === 1)
+      .select(col("event_type"), col("n").as("n1"), col("acf").as("acf1"))
+    val a2 = r.filter(col("lag") === 2)
+      .select(col("event_type").as("t2"), col("n").as("n2"),
+        col("acf").as("acf2"))
+    a1.join(broadcast(a2), col("t2") === col("event_type"))
+      .select(col("event_type"), col("n1"), col("n2"), col("acf1"),
+        col("acf2"),
+        when(lit(1.0) - col("acf1") * col("acf1") === 0.0,
+          lit(null).cast(DoubleType))
+          .otherwise((col("acf2") - col("acf1") * col("acf1"))
+            / (lit(1.0) - col("acf1") * col("acf1"))).as("pacf2"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Western Electric SPC rules (r18) — the classic
+    * statistical-process-control alarm ladder over the daily revenue
+    * series per event type (the ops complement to `anomaly_mad` /
+    * `events_burst_detection`): z-scores against the type's own
+    * mean/σ (ONE float tree on exact DECIMAL sums, z = (n·x − S)/
+    * √(n·Sxx − S²), floored to milli), then the four rules as exact
+    * integer window counts — R1 |z|>3σ, R2 two of three consecutive
+    * beyond 2σ same side, R3 four of five beyond 1σ same side, R4
+    * eight consecutive same side of center. All windows partitioned
+    * by type over the day grid (day-sized frames); the rule flags
+    * are comparisons on identical quantized integers, so
+    * cross-engine agreement is exact. */
+  val eventsSpcWesternElectric: QDef = q(
+    "events_spc_western_electric",
+    """WITH dtot AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM events GROUP BY event_type, day),
+      |st AS (
+      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+      |    SUM(CAST(cents AS DECIMAL(38,0))) AS sx,
+      |    SUM(CAST(cents AS DECIMAL(38,0)) * cents) AS sxx
+      |  FROM dtot GROUP BY event_type),
+      |z AS (
+      |  SELECT d.event_type, d.day, d.cents,
+      |    CAST(floor((d.n_x_s / sqrt(st.n * CAST(st.sxx AS DOUBLE)
+      |      - CAST(st.sx AS DOUBLE) * CAST(st.sx AS DOUBLE))) * 1000)
+      |      AS BIGINT) AS z_milli
+      |  FROM (SELECT dt.event_type, dt.day, dt.cents,
+      |      st2.n * CAST(dt.cents AS DOUBLE) - CAST(st2.sx AS DOUBLE)
+      |        AS n_x_s
+      |    FROM dtot dt JOIN st st2 ON st2.event_type = dt.event_type) d
+      |  JOIN st ON st.event_type = d.event_type),
+      |r AS (
+      |  SELECT event_type, day, cents, z_milli,
+      |    CASE WHEN abs(z_milli) > 3000 THEN true ELSE false END AS rule1,
+      |    SUM(CASE WHEN z_milli > 2000 THEN 1 ELSE 0 END)
+      |      OVER w3 >= 2 OR
+      |    SUM(CASE WHEN z_milli < -2000 THEN 1 ELSE 0 END)
+      |      OVER w3 >= 2 AS rule2,
+      |    SUM(CASE WHEN z_milli > 1000 THEN 1 ELSE 0 END)
+      |      OVER w5 >= 4 OR
+      |    SUM(CASE WHEN z_milli < -1000 THEN 1 ELSE 0 END)
+      |      OVER w5 >= 4 AS rule3,
+      |    SUM(CASE WHEN z_milli > 0 THEN 1 ELSE 0 END)
+      |      OVER w8 = 8 OR
+      |    SUM(CASE WHEN z_milli < 0 THEN 1 ELSE 0 END)
+      |      OVER w8 = 8 AS rule4,
+      |    COUNT(*) OVER w8 AS n_in_w8
+      |  FROM z
+      |  WINDOW
+      |    w3 AS (PARTITION BY event_type ORDER BY day
+      |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),
+      |    w5 AS (PARTITION BY event_type ORDER BY day
+      |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
+      |    w8 AS (PARTITION BY event_type ORDER BY day
+      |      ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
+      |SELECT event_type, day, cents, z_milli, rule1, rule2, rule3,
+      |  CASE WHEN n_in_w8 = 8 THEN rule4 ELSE false END AS rule4
+      |FROM r ORDER BY event_type, day""") { (s, d) =>
+    val dec = DecimalType(38, 0)
+    val dtot = Tables.events(s, d)
+      .select(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"),
+        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val st = dtot.groupBy(col("event_type").as("s_type"))
+      .agg(count(lit(1)).as("n"), sum(col("cents").cast(dec)).as("sx"),
+        sum(col("cents").cast(dec) * col("cents")).as("sxx"))
+    val z = dtot.join(broadcast(st), col("s_type") === col("event_type"))
+      .select(col("event_type"), col("day"), col("cents"),
+        floor(((col("n") * col("cents").cast(DoubleType)
+            - col("sx").cast(DoubleType))
+          / sqrt(col("n") * col("sxx").cast(DoubleType)
+            - col("sx").cast(DoubleType) * col("sx").cast(DoubleType)))
+          * 1000).cast(LongType).as("z_milli"))
+    val w3 = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      .rowsBetween(-2, 0)
+    val w5 = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      .rowsBetween(-4, 0)
+    val w8 = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      .rowsBetween(-7, 0)
+    def cnt(c: Column, w: org.apache.spark.sql.expressions.WindowSpec) =
+      sum(when(c, 1L).otherwise(0L)).over(w)
+    z.select(col("event_type"), col("day"), col("cents"), col("z_milli"),
+        (abs(col("z_milli")) > 3000L).as("rule1"),
+        (cnt(col("z_milli") > 2000L, w3) >= 2L ||
+          cnt(col("z_milli") < -2000L, w3) >= 2L).as("rule2"),
+        (cnt(col("z_milli") > 1000L, w5) >= 4L ||
+          cnt(col("z_milli") < -1000L, w5) >= 4L).as("rule3"),
+        when(count(lit(1)).over(w8) === 8L,
+          cnt(col("z_milli") > 0L, w8) === 8L ||
+            cnt(col("z_milli") < 0L, w8) === 8L)
+          .otherwise(lit(false)).as("rule4"))
+      .orderBy(col("event_type"), col("day"))
+  }
+
+  /** Ljung–Box portmanteau test (r18) — "is there ANY autocorrelation
+    * left?", the whiteness check run after a model fit and the
+    * summary statistic over the `ts_acf_lags` family: Q = n(n+2)
+    * Σ_{k≤3} ρ̂ₖ²/(n−k) over the per-type daily cents series, with
+    * ρ̂ₖ the lag-k Pearson (the acf-lags spelling verbatim — exact
+    * DECIMAL(38) sums into one identical float tree), Q floored to
+    * micro and tested at the χ²₃ 95% bound 7.814728. Day-sized
+    * frames only. */
+  val tsLjungBox: QDef = q(
+    "ts_ljung_box",
+    """WITH dtot AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM events GROUP BY event_type, day),
+      |nd AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM dtot
+      |  GROUP BY event_type),
+      |lg AS (SELECT * FROM (VALUES (1), (2), (3)) t(lag)),
+      |p AS (
+      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
+      |  FROM dtot a CROSS JOIN lg
+      |  JOIN dtot b ON b.event_type = a.event_type
+      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
+      |s AS (
+      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS np,
+      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
+      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
+      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
+      |  FROM p GROUP BY event_type, lag),
+      |r AS (
+      |  SELECT event_type, lag,
+      |    (np * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+      |      / (sqrt(np * CAST(sxx AS DOUBLE)
+      |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+      |        * sqrt(np * CAST(syy AS DOUBLE)
+      |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS acf
+      |  FROM s),
+      |w AS (
+      |  SELECT event_type,
+      |    MAX(CASE WHEN lag = 1 THEN acf END) AS a1,
+      |    MAX(CASE WHEN lag = 2 THEN acf END) AS a2,
+      |    MAX(CASE WHEN lag = 3 THEN acf END) AS a3
+      |  FROM r GROUP BY event_type),
+      |qf AS (
+      |  SELECT w.event_type, nd.n,
+      |    CAST(floor(nd.n * (nd.n + 2)
+      |      * (a1 * a1 / (nd.n - 1) + a2 * a2 / (nd.n - 2)
+      |        + a3 * a3 / (nd.n - 3)) * 1000000) AS BIGINT) AS q_micro
+      |  FROM w JOIN nd ON nd.event_type = w.event_type)
+      |SELECT event_type, n AS n_days, q_micro,
+      |  q_micro > 7814728 AS significant
+      |FROM qf ORDER BY event_type""") { (s, d) =>
+    import s.implicits._
+    val dec = DecimalType(38, 0)
+    val dtot = Tables.events(s, d)
+      .select(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"),
+        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val nd = dtot.groupBy(col("event_type").as("n_type"))
+      .agg(count(lit(1)).as("n"))
+    val lg = Seq(1, 2, 3).toDF("lag")
+    val p = dtot.as("a").crossJoin(broadcast(lg))
+      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
+          col("cents").as("y")),
+        col("bt") === col("a.event_type") &&
+          col("bd") === date_add(col("a.day"), col("lag")))
+      .select(col("a.event_type").as("event_type"), col("lag"),
+        col("a.cents").as("x"), col("y"))
+    val st = p.groupBy(col("event_type"), col("lag"))
+      .agg(count(lit(1)).as("np"),
+        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
+        sum(col("x").cast(dec) * col("x")).as("sxx"),
+        sum(col("y").cast(dec) * col("y")).as("syy"),
+        sum(col("x").cast(dec) * col("y")).as("sxy"))
+    val r = st.select(col("event_type"), col("lag"),
+      ((col("np") * col("sxy").cast(DoubleType)
+        - col("sx").cast(DoubleType) * col("sy").cast(DoubleType))
+        / (sqrt(col("np") * col("sxx").cast(DoubleType)
+            - col("sx").cast(DoubleType) * col("sx").cast(DoubleType))
+          * sqrt(col("np") * col("syy").cast(DoubleType)
+            - col("sy").cast(DoubleType) * col("sy").cast(DoubleType))))
+        .as("acf"))
+    // the three lag terms fold in a FIXED order (a SUM over the 3
+    // doubles would be summation-order-dependent across engines)
+    val w = r.groupBy(col("event_type"))
+      .agg(max(when(col("lag") === 1, col("acf"))).as("a1"),
+        max(when(col("lag") === 2, col("acf"))).as("a2"),
+        max(when(col("lag") === 3, col("acf"))).as("a3"))
+    w.join(broadcast(nd), col("n_type") === col("event_type"))
+      .select(col("event_type"), col("n").as("n_days"),
+        floor(col("n") * (col("n") + 2)
+          * (col("a1") * col("a1") / (col("n") - 1)
+            + col("a2") * col("a2") / (col("n") - 2)
+            + col("a3") * col("a3") / (col("n") - 3))
+          * 1000000).cast(LongType).as("q_micro"))
+      .select(col("event_type"), col("n_days"), col("q_micro"),
+        (col("q_micro") > 7814728L).as("significant"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Dyadic EWMA crossover signals (r18b) — the fast/slow
+    * moving-average crossing count over daily revenue per type, on
+    * the SAME truncated dyadic-geometric EWMA convention as
+    * `win_ewma_dyadic` (weights 2^k, denominators 15 and 255 — all
+    * integer, no float recursion): fast = 4-term (half-life 1 day),
+    * slow = 8-term; a golden/death cross is a strict sign flip of
+    * (fast − slow) between consecutive evaluated days (zero-diff
+    * days break streaks, documented). Graded per type: evaluated
+    * days, up/down cross counts, first cross date. One day agg +
+    * ONE type-partitioned ordering (lags + the derived-sign lag) +
+    * one fold. */
+  val tsEwmaCrossover: QDef = q(
+    "ts_ewma_crossover",
+    """WITH dtot AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM events GROUP BY 1, 2),
+      |l AS (
+      |  SELECT event_type, day, cents,
+      |    lag(cents, 1) OVER w AS c1, lag(cents, 2) OVER w AS c2,
+      |    lag(cents, 3) OVER w AS c3, lag(cents, 4) OVER w AS c4,
+      |    lag(cents, 5) OVER w AS c5, lag(cents, 6) OVER w AS c6,
+      |    lag(cents, 7) OVER w AS c7
+      |  FROM dtot WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+      |e AS (
+      |  SELECT event_type, day,
+      |    (cents * 8 + c1 * 4 + c2 * 2 + c3) // 15 AS fast,
+      |    (cents * 128 + c1 * 64 + c2 * 32 + c3 * 16 + c4 * 8 + c5 * 4
+      |      + c6 * 2 + c7) // 255 AS slow
+      |  FROM l WHERE c7 IS NOT NULL),
+      |sg AS (
+      |  SELECT event_type, day,
+      |    CASE WHEN fast > slow THEN 1 WHEN fast < slow THEN -1 ELSE 0
+      |      END AS s
+      |  FROM e),
+      |x AS (
+      |  SELECT event_type, day, s,
+      |    lag(s) OVER (PARTITION BY event_type ORDER BY day) AS ps
+      |  FROM sg)
+      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
+      |  CAST(SUM(CASE WHEN s = 1 AND ps = -1 THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_cross_up,
+      |  CAST(SUM(CASE WHEN s = -1 AND ps = 1 THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_cross_down,
+      |  MIN(CASE WHEN (s = 1 AND ps = -1) OR (s = -1 AND ps = 1)
+      |    THEN day END) AS first_cross_day
+      |FROM x GROUP BY event_type ORDER BY event_type""") { (s, d) =>
+    val dtot = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"))
+      .agg(sum(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
+        .cast(LongType).as("cents"))
+    val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+    val l = dtot.select(Seq(col("event_type"), col("day"), col("cents")) ++
+      (1 to 7).map(k => lag(col("cents"), k).over(w).as(s"c$k")): _*)
+    val e = l.filter(col("c7").isNotNull)
+      .select(col("event_type"), col("day"),
+        expr("(cents * 8 + c1 * 4 + c2 * 2 + c3) div 15").as("fast"),
+        expr("(cents * 128 + c1 * 64 + c2 * 32 + c3 * 16 + c4 * 8"
+          + " + c5 * 4 + c6 * 2 + c7) div 255").as("slow"))
+    val sg = e.select(col("event_type"), col("day"),
+      when(col("fast") > col("slow"), 1L)
+        .when(col("fast") < col("slow"), -1L).otherwise(0L).as("s"))
+    val x = sg.withColumn("ps", lag(col("s"), 1).over(w))
+    x.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_days"),
+        sum(when(col("s") === 1L && col("ps") === -1L, 1L).otherwise(0L))
+          .as("n_cross_up"),
+        sum(when(col("s") === -1L && col("ps") === 1L, 1L).otherwise(0L))
+          .as("n_cross_down"),
+        min(when((col("s") === 1L && col("ps") === -1L) ||
+          (col("s") === -1L && col("ps") === 1L), col("day")))
+          .as("first_cross_day"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Poisson dispersion index (r18b) — are daily event counts
+    * Poisson (D ≈ 1), clumped (D > 1), or over-regular (D < 1)?
+    * Per type over the COMPLETE day matrix (absent days are true
+    * zeros — the `stats_friedman_test` convention):
+    * D = s²/x̄ = (nΣc² − (Σc)²)/((n−1)·Σc) — ONE exact rational,
+    * and the χ² form (n−1)·D is exact too. Flags use the classic
+    * field bounds D > 1.5 / D < 0.5 (df-free, documented heuristic
+    * rather than a quantile that would need an inverse-χ² float).
+    * One day agg + complete-matrix join + type fold. */
+  val tsPoissonDispersion: QDef = q(
+    "ts_poisson_dispersion",
+    """WITH dt AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(COUNT(*) AS BIGINT) AS cnt
+      |  FROM events GROUP BY 1, 2),
+      |days AS (SELECT DISTINCT day FROM dt),
+      |types AS (SELECT DISTINCT event_type FROM dt),
+      |cm AS (
+      |  SELECT t.event_type, COALESCE(dt.cnt, 0) AS cnt
+      |  FROM days d CROSS JOIN types t
+      |  LEFT JOIN dt ON dt.day = d.day AND dt.event_type = t.event_type),
+      |f AS (
+      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(cnt) AS BIGINT) AS sc,
+      |    CAST(SUM(CAST(cnt AS HUGEINT) * cnt) AS HUGEINT) AS scc
+      |  FROM cm GROUP BY event_type)
+      |SELECT event_type, n AS n_days,
+      |  CAST(sc * 1000 // n AS BIGINT) AS mean_milli,
+      |  CASE WHEN sc = 0 OR n < 2 THEN NULL
+      |    ELSE CAST((n * scc - CAST(sc AS HUGEINT) * sc) * 1000
+      |      // ((n - 1) * CAST(sc AS HUGEINT)) AS BIGINT) END
+      |    AS dispersion_milli,
+      |  CASE WHEN sc = 0 THEN NULL
+      |    ELSE CAST((n * scc - CAST(sc AS HUGEINT) * sc) * 1000000
+      |      // CAST(sc AS HUGEINT) AS BIGINT) END AS chi2_micro,
+      |  CASE WHEN sc = 0 OR n < 2 THEN NULL
+      |    ELSE (n * scc - CAST(sc AS HUGEINT) * sc) * 1000
+      |      // ((n - 1) * CAST(sc AS HUGEINT)) > 1500 END
+      |    AS overdispersed,
+      |  CASE WHEN sc = 0 OR n < 2 THEN NULL
+      |    ELSE (n * scc - CAST(sc AS HUGEINT) * sc) * 1000
+      |      // ((n - 1) * CAST(sc AS HUGEINT)) < 500 END
+      |    AS underdispersed
+      |FROM f ORDER BY event_type""") { (s, d) =>
+    val dt = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val days = dt.select(col("day")).distinct()
+    val types = dt.select(col("event_type")).distinct()
+    val cm = days.crossJoin(broadcast(types))
+      .join(dt.select(col("day").as("j_day"),
+          col("event_type").as("j_type"), col("cnt")),
+        col("j_day") === col("day") && col("j_type") === col("event_type"),
+        "left")
+      .select(col("event_type"), coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val f = cm.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("cnt")).as("sc"),
+        sum(col("cnt").cast(DriftOps.dec) * col("cnt")).as("scc"))
+    val disp = "(n * scc - CAST(sc AS DECIMAL(38,0)) * sc) * 1000" +
+      " div ((n - 1) * CAST(sc AS DECIMAL(38,0)))"
+    f.select(col("event_type"), col("n").as("n_days"),
+        expr("CAST(sc * 1000 div n AS BIGINT)").as("mean_milli"),
+        when(col("sc") === 0 || col("n") < 2, lit(null).cast(LongType))
+          .otherwise(expr(s"CAST($disp AS BIGINT)"))
+          .as("dispersion_milli"),
+        when(col("sc") === 0, lit(null).cast(LongType))
+          .otherwise(expr("CAST((n * scc - CAST(sc AS DECIMAL(38,0))"
+            + " * sc) * 1000000 div CAST(sc AS DECIMAL(38,0))"
+            + " AS BIGINT)")).as("chi2_micro"),
+        when(col("sc") === 0 || col("n") < 2, lit(null).cast(BooleanType))
+          .otherwise(expr(s"$disp > 1500")).as("overdispersed"),
+        when(col("sc") === 0 || col("n") < 2, lit(null).cast(BooleanType))
+          .otherwise(expr(s"$disp < 500")).as("underdispersed"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Parkinson high–low volatility (r18b) — the range-based daily
+    * volatility estimator (Parkinson 1980), 5× more efficient than
+    * close-to-close on the same data: per type,
+    * σ²_P = (1/(4·ln 2))·mean(ln(H/L)²) over daily value ranges.
+    * Per-day term = floor(ln(H/L)²·10⁶) (floor-protected double
+    * tree, H/L from exact cents), the mean is an exact integer
+    * fold, and the 1/(4 ln 2) factor is the INTEGER constant
+    * 2772588 (= floor(4·ln 2·10⁶)) so the final step is one more
+    * exact division. Zero/degenerate lows guard out. One day agg +
+    * one type fold. */
+  val tsParkinsonVolatility: QDef = q(
+    "ts_parkinson_volatility",
+    """WITH d AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(MAX(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS h,
+      |    CAST(MIN(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS l
+      |  FROM events GROUP BY 1, 2),
+      |t AS (
+      |  SELECT event_type,
+      |    CAST(floor(ln(CAST(h AS DOUBLE) / l)
+      |      * ln(CAST(h AS DOUBLE) / l) * 1000000) AS BIGINT) AS term
+      |  FROM d WHERE l > 0 AND h > l),
+      |f AS (
+      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
+      |    CAST(SUM(term) AS BIGINT) AS st
+      |  FROM t GROUP BY event_type)
+      |SELECT event_type, n_days,
+      |  CAST(st // n_days AS BIGINT) AS mean_sq_logrange_micro,
+      |  CAST(st * 1000000 // n_days // 2772588 AS BIGINT)
+      |    AS parkinson_var_micro
+      |FROM f ORDER BY event_type""") { (s, d) =>
+    val dd = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"))
+      .agg(max(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
+        .as("h"),
+        min(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
+        .as("l"))
+    val t = dd.filter(col("l") > 0 && col("h") > col("l"))
+      .select(col("event_type"),
+        floor(log(col("h").cast(DoubleType) / col("l"))
+          * log(col("h").cast(DoubleType) / col("l")) * 1000000)
+          .cast(LongType).as("term"))
+    t.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_days"), sum(col("term")).as("st"))
+      .select(col("event_type"), col("n_days"),
+        expr("CAST(st div n_days AS BIGINT)")
+          .as("mean_sq_logrange_micro"),
+        expr("CAST(st * 1000000 div n_days div 2772588 AS BIGINT)")
+          .as("parkinson_var_micro"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Hill tail-index estimator (r18b) — is per-user activity
+    * heavy-tailed, and how heavy? Over the k = 50 most active
+    * users (deterministic (count DESC, user) order),
+    * 1/α̂ = mean_{i<k} ln(x_(i)) − ln(x_(k)) (Hill 1975) with every
+    * log floor-quantized to micro BEFORE the fold (integer
+    * algebra after), and α̂ in milli as one exact division. The
+    * top-k set is a TakeOrdered(50); ranks inside it come from a
+    * broadcast 50×50 self-join (no unpartitioned window). The
+    * statistic that decides whether user-level quotas or sampling
+    * caps are needed at 100 TB. */
+  val eventsHillTailIndex: QDef = q(
+    "events_hill_tail_index",
+    """WITH u AS (
+      |  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
+      |  FROM events GROUP BY user_id),
+      |nu AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_users FROM u),
+      |top AS (SELECT user_id, c FROM u ORDER BY c DESC, user_id
+      |  LIMIT 50),
+      |rk AS (
+      |  SELECT a.user_id, a.c,
+      |    CAST(1 + COUNT(b.user_id) AS BIGINT) AS r
+      |  FROM top a LEFT JOIN top b ON b.c > a.c
+      |    OR (b.c = a.c AND b.user_id < a.user_id)
+      |  GROUP BY a.user_id, a.c),
+      |kk AS (SELECT CAST(MAX(r) AS BIGINT) AS k FROM rk),
+      |xk AS (SELECT CAST(MAX(c) AS BIGINT) AS xkc FROM rk, kk
+      |  WHERE r = kk.k),
+      |hl AS (
+      |  SELECT CAST(SUM(CAST(floor(ln(CAST(c AS DOUBLE)) * 1000000)
+      |      AS BIGINT)) AS BIGINT) AS sl,
+      |    CAST(COUNT(*) AS BIGINT) AS km1
+      |  FROM rk, kk WHERE r < kk.k)
+      |SELECT nu.n_users, kk.k, xk.xkc AS xk_count,
+      |  CAST(hl.sl // hl.km1
+      |    - floor(ln(CAST(xk.xkc AS DOUBLE)) * 1000000) AS BIGINT)
+      |    AS inv_alpha_micro,
+      |  CASE WHEN hl.sl // hl.km1
+      |      - floor(ln(CAST(xk.xkc AS DOUBLE)) * 1000000) <= 0 THEN NULL
+      |    ELSE CAST(1000000000 // (hl.sl // hl.km1
+      |      - CAST(floor(ln(CAST(xk.xkc AS DOUBLE)) * 1000000)
+      |        AS BIGINT)) AS BIGINT) END AS alpha_milli
+      |FROM nu CROSS JOIN kk CROSS JOIN xk CROSS JOIN hl""") { (s, d) =>
+    val u = Tables.events(s, d).groupBy(col("user_id"))
+      .agg(count(lit(1)).as("c"))
+    val nu = u.agg(count(lit(1)).as("n_users"))
+    val top = u.orderBy(col("c").desc, col("user_id")).limit(50)
+      .persist()
+    val rk = top.as("a")
+      .join(broadcast(top.select(col("c").as("b_c"),
+          col("user_id").as("b_u"))),
+        col("b_c") > col("a.c") ||
+          (col("b_c") === col("a.c") && col("b_u") < col("a.user_id")),
+        "left")
+      .groupBy(col("a.user_id").as("user_id"), col("a.c").as("c"))
+      .agg((lit(1L) + count(col("b_u"))).as("r"))
+      .persist()
+    val kk = rk.agg(max(col("r")).as("k"))
+    val xk = rk.crossJoin(broadcast(kk)).filter(col("r") === col("k"))
+      .agg(max(col("c")).as("xkc"))
+    val hl = rk.crossJoin(broadcast(kk)).filter(col("r") < col("k"))
+      .agg(sum(floor(log(col("c").cast(DoubleType)) * 1000000)
+        .cast(LongType)).cast(LongType).as("sl"),
+        count(lit(1)).as("km1"))
+    nu.crossJoin(broadcast(kk)).crossJoin(broadcast(xk))
+      .crossJoin(broadcast(hl))
+      .select(col("n_users"), col("k"), col("xkc").as("xk_count"),
+        expr("CAST(sl div km1"
+          + " - floor(ln(CAST(xkc AS DOUBLE)) * 1000000) AS BIGINT)")
+          .as("inv_alpha_micro"),
+        expr("CASE WHEN sl div km1"
+          + " - floor(ln(CAST(xkc AS DOUBLE)) * 1000000) <= 0 THEN NULL"
+          + " ELSE CAST(1000000000 div (sl div km1"
+          + " - CAST(floor(ln(CAST(xkc AS DOUBLE)) * 1000000)"
+          + " AS BIGINT)) AS BIGINT) END").as("alpha_milli"))
+  }
+
   val all: Seq[QDef] = Seq(funnelSteps, retentionCohorts, timeseriesGapfill,
     sessionizeEvents, anomalyMad, rolling7dValue, winSessionRunning,
     patternConsecutive, attributionLinear, tsOhlcDaily, pathTrigramTop,
@@ -2036,5 +3425,10 @@ object EventAnalytics {
     tsOrderGapSurvival, tsHampelOutliers, tsTheilSen, tsTradingDayIndex,
     eventsBotRateFlags, eventsPeakConcurrency, funnelKmHazard,
     eventsSloBurnRate, featuresPointInTime, abCupedAdjustment,
-    tsDecomposeAdditive)
+    tsDecomposeAdditive, eventsBounceRate, cohortRetentionTriangle,
+    eventsAlertStormSuppression, abSrmCheck, eventsSessionGapSweep,
+    abPowerSampleSize, eventsMarkovStationary, tsAcfLags, tsSeasonalStrength,
+    abDiffInDiff, tsChangepointSplit, attributionPositionBased, tsPacfLag2,
+    eventsSpcWesternElectric, tsLjungBox, tsEwmaCrossover, tsPoissonDispersion,
+    tsParkinsonVolatility, eventsHillTailIndex)
 }

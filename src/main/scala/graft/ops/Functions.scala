@@ -421,8 +421,145 @@ object Functions {
       .orderBy(col("o_orderkey"))
   }
 
+  /** XML ingestion surface (r15f) — the `fn_map_json` twin for XML:
+    * per-order XML fragments (built from base columns — the fixture
+    * has no XML source, so the op grades the PARSE path round-trip)
+    * parsed back with Spark's native from_xml, fields extracted and
+    * re-aggregated. The oracle computes the identical aggregate from
+    * the base columns directly (DuckDB 1.0.0 has no XML reader) —
+    * any from_xml extraction drift (type coercion, whitespace,
+    * escaping) breaks the hash. The string field is XML-escaped when
+    * the fragment is built (&amp; &lt; &gt;, in that order) and
+    * from_xml unescapes it on the way back, so the round trip holds
+    * for ARBITRARY fixture strings — not just the current
+    * '1-URGENT'..'5-LOW' values (ADVICE r15: a plain concat would
+    * have made any '&'/'<' silently parse to NULL and diverge from
+    * the base-column oracle). */
+  val fnXmlParse: QDef = q(
+    "fn_xml_parse",
+    """SELECT o_orderpriority AS priority,
+      |  CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_keys,
+      |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+      |    AS BIGINT) AS sum_cents
+      |FROM orders GROUP BY 1 ORDER BY 1""") { (s, d) =>
+    val xml = Tables.orders(s, d)
+      .select(concat(lit("<o><k>"), col("o_orderkey"),
+        lit("</k><p>"),
+        expr("replace(replace(replace(o_orderpriority," +
+          " '&', '&amp;'), '<', '&lt;'), '>', '&gt;')"),
+        lit("</p><c>"),
+        (col("o_totalprice").cast(DecimalType(12, 2)) * 100).cast(LongType),
+        lit("</c></o>")).as("x"))
+    val parsed = xml.select(from_xml(col("x"),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k", LongType),
+        org.apache.spark.sql.types.StructField("p", StringType),
+        org.apache.spark.sql.types.StructField("c", LongType)))).as("v"))
+    parsed.groupBy(col("v.p").as("priority"))
+      .agg(count(lit(1)).as("n"), sum(col("v.k")).as("sum_keys"),
+        sum(col("v.c")).as("sum_cents"))
+      .orderBy(col("priority"))
+  }
+
+  /** VARIANT ingestion surface (r15f) — Spark 4's semi-structured
+    * type, graded end-to-end: events.props JSON parsed to VARIANT
+    * with parse_json, the 'k' field extracted back with variant_get
+    * (typed path), aggregated per event type. `fn_map_json` grades
+    * the from_json/schema path; this grades the schemaless VARIANT
+    * path a lakehouse ingest actually uses for evolving payloads. The
+    * oracle reads the same field with DuckDB's json_extract. Output
+    * is flat scalars only (VARIANT itself never reaches the
+    * output). */
+  val fnVariantJson: QDef = q(
+    "fn_variant_json",
+    """SELECT event_type,
+      |  CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+      |    AS sum_k,
+      |  CAST(MIN(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+      |    AS min_k,
+      |  CAST(MAX(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+      |    AS max_k
+      |FROM events GROUP BY event_type ORDER BY event_type""") { (s, d) =>
+    Tables.events(s, d)
+      .select(col("event_type"),
+        expr("variant_get(parse_json(props), '$.k', 'bigint')").as("k"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
+        min(col("k")).as("min_k"), max(col("k")).as("max_k"))
+      .orderBy(col("event_type"))
+  }
+
+  /** Cryptographic digest surface (r16) — the hash functions a
+    * pipeline keys provenance, sharding and dedup on, graded
+    * end-to-end across engines: md5 and SHA-256 hex digests of a
+    * canonical '|'-joined rendering (the `dq_table_checksum` row
+    * spelling), plus first-hex-digit bucket counts per digest — the
+    * uniformity a hash-partitioner relies on. Row-local; one 16-group
+    * agg per digest. Spark `sha2(x, 256)` ≡ DuckDB `sha256(x)`
+    * (lowercase hex both). xxhash64 has no DuckDB twin — it stays
+    * covered by ShingleExpressionsSpec, not an oracle. */
+  val fnHashDigests: QDef = q(
+    "fn_hash_digests",
+    """WITH h AS (
+      |  SELECT c_custkey,
+      |    md5(c_name || '|' || CAST(c_custkey AS VARCHAR)) AS d_md5,
+      |    sha256(c_name || '|' || CAST(c_custkey AS VARCHAR)) AS d_sha
+      |  FROM customer)
+      |SELECT substr(d_md5, 1, 1) AS md5_bucket,
+      |  CAST(COUNT(*) AS BIGINT) AS n_md5,
+      |  CAST(SUM(CASE WHEN substr(d_sha, 1, 1) = substr(d_md5, 1, 1)
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_sha_same_bucket,
+      |  MIN(d_md5) AS min_md5, MIN(d_sha) AS min_sha
+      |FROM h GROUP BY md5_bucket
+      |ORDER BY md5_bucket""") { (s, d) =>
+    val h = Tables.customer(s, d)
+      .select(col("c_custkey"),
+        md5(concat_ws("|", col("c_name"),
+          col("c_custkey").cast(StringType))).as("d_md5"),
+        sha2(concat_ws("|", col("c_name"),
+          col("c_custkey").cast(StringType)), 256).as("d_sha"))
+    h.groupBy(substring(col("d_md5"), 1, 1).as("md5_bucket"))
+      .agg(count(lit(1)).as("n_md5"),
+        sum(when(substring(col("d_sha"), 1, 1) ===
+          substring(col("d_md5"), 1, 1), 1L).otherwise(0L))
+          .as("n_sha_same_bucket"),
+        min(col("d_md5")).as("min_md5"), min(col("d_sha")).as("min_sha"))
+      .orderBy(col("md5_bucket"))
+  }
+
+  /** Binary codec functions (r17) — the base64/hex encode-decode leg
+    * of the functions family (`fn_hash_digests` covers digests): doc
+    * text prefixes through encode → base64 → from_base64 → decode
+    * roundtrip with the ok-flag graded, plus lowercase hex and byte
+    * length. CROSS-ENGINE CASE NOTE: Spark's hex() emits UPPERCASE,
+    * DuckDB's lowercase — both sides spell lower(hex(…)) so the one
+    * spelling is the graded one. Row-local, one scan + sort. */
+  val fnBinaryCodecs: QDef = q(
+    "fn_binary_codecs",
+    """SELECT doc_id,
+      |  base64(encode(substr(text, 1, 16))) AS b64,
+      |  lower(hex(encode(substr(text, 1, 8)))) AS hx,
+      |  CAST(octet_length(encode(substr(text, 1, 16))) AS BIGINT) AS blen,
+      |  CAST(decode(from_base64(base64(encode(substr(text, 1, 16)))))
+      |    = substr(text, 1, 16) AS INT) AS rt_ok
+      |FROM documents ORDER BY doc_id""") { (s, d) =>
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        base64(encode(substring(col("text"), 1, 16), "UTF-8")).as("b64"),
+        lower(hex(encode(substring(col("text"), 1, 8), "UTF-8"))).as("hx"),
+        octet_length(encode(substring(col("text"), 1, 16), "UTF-8"))
+          .cast(LongType).as("blen"),
+        (decode(unbase64(base64(encode(substring(col("text"), 1, 16),
+          "UTF-8"))), "UTF-8") === substring(col("text"), 1, 16))
+          .cast(IntegerType).as("rt_ok"))
+      .orderBy(col("doc_id"))
+  }
+
   val all: Seq[QDef] = Seq(
     fnString, fnStringDistance, fnDate, fnMath, fnArray,
     fnMapJson, fnConditional, fnHigherOrder, fnBitwise, fnStruct,
-    fnTrySafe, fnUrlParse, fnDateAdvanced)
+    fnTrySafe, fnUrlParse, fnDateAdvanced, fnXmlParse, fnVariantJson,
+    fnHashDigests, fnBinaryCodecs)
 }

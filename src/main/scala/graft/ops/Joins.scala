@@ -1490,6 +1490,216 @@ object Joins {
       .orderBy(col("rev_cents").desc, col("s_suppkey"))
   }
 
+  /** Adapted TPC-H Q9 "product type profit" (r15) — the classic
+    * 5-table deep-join report over the fixture's tables: profit per
+    * (supplier nation, order year). The fixture has no partsupp, so
+    * supply cost is proxied as half the part's retail price per unit
+    * quantity (an exact DECIMAL(1,1) factor — no rounding anywhere):
+    * amount = extprice·(1−disc) − retail·qty·0.5, every operand at
+    * its natural scale, summed as exact decimals and emitted once as
+    * DOUBLE. Plan shape: lineitem keeps the only fact-sized shuffle
+    * (join to orders on orderkey); part, supplier+nation are
+    * broadcast dims. */
+  val q9ProductProfit: QDef = q(
+    "q9_product_profit",
+    """SELECT n_name AS nation,
+      |  CAST(year(o_orderdate) AS INTEGER) AS o_year,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+      |      * (1 - CAST(l_discount AS DECIMAL(6,2)))
+      |    - CAST(p_retailprice AS DECIMAL(12,2))
+      |      * CAST(l_quantity AS DECIMAL(12,4)) * 0.5) AS DOUBLE)
+      |    AS profit,
+      |  CAST(COUNT(*) AS BIGINT) AS n_items
+      |FROM lineitem
+      |JOIN orders ON o_orderkey = l_orderkey
+      |JOIN part ON p_partkey = l_partkey
+      |JOIN supplier ON s_suppkey = l_suppkey
+      |JOIN nation ON n_nationkey = s_nationkey
+      |GROUP BY 1, 2
+      |ORDER BY nation, o_year""") { (s, d) =>
+    val supp = Tables.supplier(s, d)
+      .join(broadcast(Tables.nation(s, d)
+          .select(col("n_nationkey"), col("n_name"))),
+        col("s_nationkey") === col("n_nationkey"))
+      .select(col("s_suppkey"), col("n_name"))
+    val parts = Tables.part(s, d)
+      .select(col("p_partkey"), money(col("p_retailprice")).as("retail"))
+    val ord = Tables.orders(s, d)
+      .select(col("o_orderkey"), year(col("o_orderdate")).cast("int").as("o_year"))
+    Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+        (money(col("l_extendedprice")) * (lit(1) - rate(col("l_discount"))))
+          .as("gross"),
+        qty(col("l_quantity")).as("q"))
+      .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
+      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+      .join(ord, col("l_orderkey") === col("o_orderkey"))
+      .select(col("n_name"), col("o_year"),
+        (col("gross") - col("retail") * col("q") * lit(BigDecimal("0.5"))
+          .cast(DecimalType(1, 1))).as("amount"))
+      .groupBy(col("n_name"), col("o_year"))
+      .agg(sum(col("amount")).cast(DoubleType).as("profit"),
+        count(lit(1)).as("n_items"))
+      .select(col("n_name").as("nation"), col("o_year"), col("profit"),
+        col("n_items"))
+      .orderBy(col("nation"), col("o_year"))
+  }
+
+  /** Adapted TPC-H Q21 "suppliers who kept orders waiting" (r15) —
+    * the classic EXISTS/NOT-EXISTS double correlation, spelled as
+    * semi + anti joins: for finished orders, count each supplier's
+    * LATE lineitems (ship > 90 days after order date) on
+    * multi-supplier orders where it was the ONLY late supplier. The
+    * fixture has no commit/receipt dates, so lateness is
+    * ship-vs-order lag — same join topology as the original. Spark
+    * plan: one fact self-semi and one fact self-anti on orderkey
+    * (both carry only (orderkey, suppkey) pairs), supplier+nation
+    * broadcast at the end. */
+  val q21WaitingSuppliers: QDef = q(
+    "q21_waiting_suppliers",
+    """WITH lo AS (
+      |  SELECT l_orderkey, l_suppkey,
+      |    date_diff('day', CAST(o_orderdate AS DATE),
+      |      CAST(l_shipdate AS DATE)) > 90 AS late
+      |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+      |  WHERE o_orderstatus = 'F'),
+      |l1 AS (SELECT l_orderkey, l_suppkey FROM lo WHERE late)
+      |SELECT s_name, n_name, CAST(COUNT(*) AS BIGINT) AS numwait
+      |FROM l1
+      |JOIN supplier ON s_suppkey = l1.l_suppkey
+      |JOIN nation ON n_nationkey = s_nationkey
+      |WHERE EXISTS (
+      |    SELECT 1 FROM lo l2
+      |    WHERE l2.l_orderkey = l1.l_orderkey
+      |      AND l2.l_suppkey <> l1.l_suppkey)
+      |  AND NOT EXISTS (
+      |    SELECT 1 FROM lo l3
+      |    WHERE l3.l_orderkey = l1.l_orderkey
+      |      AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
+      |GROUP BY s_name, n_name
+      |ORDER BY numwait DESC, s_name""") { (s, d) =>
+    val lo = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
+      .join(Tables.orders(s, d)
+          .filter(col("o_orderstatus") === "F")
+          .select(col("o_orderkey"), col("o_orderdate")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("l_orderkey"), col("l_suppkey"),
+        (datediff(col("l_shipdate").cast(DateType),
+          col("o_orderdate").cast(DateType)) > 90).as("late"))
+    // ONE width-explicit orderkey exchange feeds every leg (§2.4):
+    // ReuseExchange shares it between l1 and the counting aggs, both
+    // aggs plan exchange-free over it (o ⊆ each grouping key), and
+    // the 550k-entry dedup hash builds run session-wide instead of
+    // inside the single-split scan task.
+    val lo2 = lo.repartition(s.sparkContext.defaultParallelism,
+      col("l_orderkey"))
+    val l1 = lo2.filter(col("late"))
+      .select(col("l_orderkey"), col("l_suppkey"))
+    // r19 batch 3 (guide §2.3/§3): the EXISTS/NOT-EXISTS pair planned
+    // two SMJs whose probe AND build sides each re-derived the
+    // unpersisted lo join — three lineitem⋈orders passes plus two
+    // 600k-row sort-merge legs. The classic Q21 counting form replaces
+    // both: per order, d = distinct suppliers and dl = distinct LATE
+    // suppliers; an l1 row (o, s) waits alone iff d ≥ 2 (some other
+    // supplier exists) and dl = 1 (s itself is late, so the single
+    // late supplier IS s — no other late one). Exact set identities,
+    // duplicate l1 rows keep their per-line contribution to numwait.
+    // ord is bounded by |F-orders|; the broadcast holds to ~SF 1k at
+    // ~16 B/row — beyond that drop the hint for the shuffle semi (the
+    // q17/xyz broadcast-ceiling convention).
+    val g = lo2.groupBy(col("l_orderkey").as("go"), col("l_suppkey"))
+      .agg(max(col("late")).as("any_late"))
+    val ord = g.groupBy(col("go"))
+      .agg(count(lit(1)).as("d"),
+        sum(col("any_late").cast(LongType)).as("dl"))
+      .filter(col("d") >= 2 && col("dl") === 1)
+      .select(col("go"))
+    val waited = l1.join(broadcast(ord),
+      col("l_orderkey") === col("go"), "left_semi")
+    val supp = Tables.supplier(s, d)
+      .join(broadcast(Tables.nation(s, d)
+          .select(col("n_nationkey"), col("n_name"))),
+        col("s_nationkey") === col("n_nationkey"))
+      .select(col("s_suppkey"), col("s_name"), col("n_name"))
+    waited.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+      .groupBy(col("s_name"), col("n_name"))
+      .agg(count(lit(1)).as("numwait"))
+      .orderBy(col("numwait").desc, col("s_name"))
+  }
+
+  /** Grid-blocked spatial radius join (r16) — the geospatial blocking
+    * pattern the registry lacked: points on a 1000×1000 grid
+    * (deterministic synthetic coordinates from customer key and
+    * balance — the fixture has no lat/lon; the OPERATOR is the
+    * graded thing), radius-25 neighbor search via cell size = radius:
+    * each point joins only its 3×3 neighboring cells (a 9-row
+    * broadcast offset table — never a cartesian), then the exact
+    * integer distance² filter. Graded output is the per-point
+    * neighbor-count histogram plus the total pair count — the density
+    * profile a spatial index designer reads. At scale this is exactly
+    * the geohash/S2 bucketed join: candidate cost follows cell
+    * occupancy, not n². */
+  val joinSpatialGrid: QDef = q(
+    "join_spatial_grid",
+    """WITH pt AS (
+      |  SELECT c_custkey AS k,
+      |    (c_custkey * 37) % 1000 AS x,
+      |    ((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) % 1000)
+      |      + 1000) % 1000 AS y
+      |  FROM customer),
+      |pc AS (SELECT k, x, y, x // 25 AS cx, y // 25 AS cy FROM pt),
+      |os AS (SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx)
+      |  CROSS JOIN (VALUES (-1), (0), (1)) b(dy)),
+      |cand AS (
+      |  SELECT a.k AS ka, b.k AS kb,
+      |    (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2
+      |  FROM pc a CROSS JOIN os
+      |  JOIN pc b ON b.cx = a.cx + os.dx AND b.cy = a.cy + os.dy
+      |    AND a.k < b.k),
+      |pairs AS (SELECT ka, kb FROM cand WHERE d2 <= 625),
+      |ends AS (SELECT ka AS k FROM pairs UNION ALL SELECT kb FROM pairs),
+      |nb AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n_neighbors
+      |  FROM ends GROUP BY k),
+      |pn AS (
+      |  SELECT pt.k, COALESCE(nb.n_neighbors, 0) AS n_neighbors
+      |  FROM pt LEFT JOIN nb ON nb.k = pt.k),
+      |np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs FROM pairs)
+      |SELECT n_neighbors, CAST(COUNT(*) AS BIGINT) AS n_points, np.n_pairs
+      |FROM pn CROSS JOIN np
+      |GROUP BY n_neighbors, np.n_pairs
+      |ORDER BY n_neighbors""") { (s, d) =>
+    import s.implicits._
+    val pt = Tables.customer(s, d)
+      .select(col("c_custkey").as("k"),
+        expr("(c_custkey * 37) % 1000").as("x"),
+        expr("((CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT)"
+          + " % 1000) + 1000) % 1000").as("y"))
+    val pc = pt.select(col("k"), col("x"), col("y"),
+      expr("x div 25").as("cx"), expr("y div 25").as("cy"))
+    val os = (for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy))
+      .toDF("dx", "dy")
+    val pairs = pc.as("a").crossJoin(broadcast(os))
+      .join(pc.select(col("k").as("kb"), col("x").as("xb"),
+          col("y").as("yb"), col("cx").as("cxb"), col("cy").as("cyb")),
+        col("cxb") === col("a.cx") + col("dx") &&
+          col("cyb") === col("a.cy") + col("dy") &&
+          col("a.k") < col("kb"))
+      .filter(expr("(a.x - xb) * (a.x - xb) + (a.y - yb) * (a.y - yb)"
+        + " <= 625"))
+      .select(col("a.k").as("ka"), col("kb"))
+    val nb = pairs.select(explode(array(col("ka"), col("kb"))).as("ek"))
+      .groupBy(col("ek")).agg(count(lit(1)).as("n_neighbors"))
+    val np = pairs.agg(count(lit(1)).as("n_pairs"))
+    pt.join(nb, col("ek") === col("k"), "left")
+      .select(coalesce(col("n_neighbors"), lit(0L)).as("n_neighbors"))
+      .crossJoin(broadcast(np))
+      .groupBy(col("n_neighbors"), col("n_pairs"))
+      .agg(count(lit(1)).as("n_points"))
+      .select(col("n_neighbors"), col("n_points"), col("n_pairs"))
+      .orderBy(col("n_neighbors"))
+  }
+
   val all: Seq[QDef] = Seq(
     joinInnerEqui, joinBroadcastDim, joinLeftOuter, joinFullOuter,
     joinSemi, joinAnti, joinThetaRange, joinCrossSmall,
@@ -1502,5 +1712,6 @@ object Joins {
     q6RevenueDelta, q13CustomerDistribution, q15TopSupplier,
     q19DiscountedRevenue, joinCardinalityProbe, joinTimeBandBucketed,
     joinNullAwareIn, q17SmallQtyRevenue, q7VolumeShipping, q8MarketShare,
-    q11ImportantSuppliers)
+    q11ImportantSuppliers, q9ProductProfit, q21WaitingSuppliers,
+    joinSpatialGrid)
 }

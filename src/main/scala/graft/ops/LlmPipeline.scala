@@ -5,6 +5,7 @@ import graft.QDef.q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.expressions.Window
 
 /** SURVEY.md §2.10 — LLM-training-data pipeline operators.
   *
@@ -602,9 +603,268 @@ object LlmPipeline {
       .orderBy(col("doc_id"), col("tile_y"), col("tile_x"))
   }
 
+  /** Per-source keyframe budget allocation (r13) — the multimodal
+    * twin of `sample_neyman_allocation`: each SOURCE gets a 1000-
+    * keyframe extraction budget, split across its documents by
+    * largest-remainder apportionment proportional to synthesized
+    * duration (n_chars·25 ms — the `multimodal_chunk_audio` metadata
+    * convention), so every downstream decode job knows its exact
+    * frame count BEFORE touching bytes. Pure BIGINT: floor share +
+    * the (budget − Σfloor) biggest remainders, ties by doc_id. The
+    * remainder rank is a SOURCE-partitioned window (never global);
+    * at extreme docs-per-source the same answer comes from the
+    * shared bucketed prefix machinery the global-rank keys use. */
+  val multimodalKeyframeBudget: QDef = q(
+    "multimodal_keyframe_budget",
+    """WITH m AS (
+      |  SELECT doc_id, source, n_chars * 25 AS duration_ms FROM documents),
+      |w AS (
+      |  SELECT source, CAST(SUM(duration_ms) AS BIGINT) AS wtot
+      |  FROM m GROUP BY source),
+      |b0 AS (
+      |  SELECT m.doc_id, m.source, m.duration_ms,
+      |    CAST((1000 * m.duration_ms) // w.wtot AS BIGINT) AS base,
+      |    CAST((1000 * m.duration_ms) % w.wtot AS BIGINT) AS rem
+      |  FROM m JOIN w ON m.source = w.source),
+      |t AS (
+      |  SELECT source, CAST(SUM(base) AS BIGINT) AS base_sum
+      |  FROM b0 GROUP BY source),
+      |b AS (
+      |  SELECT b0.doc_id, b0.source, b0.duration_ms, b0.base, b0.rem,
+      |    CAST(1000 - t.base_sum AS BIGINT) AS extra
+      |  FROM b0 JOIN t ON b0.source = t.source),
+      |r AS (
+      |  SELECT doc_id,
+      |    CAST(row_number() OVER (PARTITION BY source
+      |      ORDER BY rem DESC, doc_id) AS BIGINT) AS rnk
+      |  FROM b)
+      |SELECT b.doc_id, b.source, b.duration_ms, b.base,
+      |  CAST(b.base + CASE WHEN r.rnk <= b.extra THEN 1 ELSE 0 END AS BIGINT)
+      |    AS n_frames
+      |FROM b JOIN r ON b.doc_id = r.doc_id
+      |ORDER BY b.doc_id""") { (s, d) =>
+    val m = Tables.documents(s, d)
+      .select(col("doc_id"), col("source"), (col("n_chars") * 25).as("duration_ms"))
+    val t = m.groupBy(col("source").as("t_source"))
+      .agg(sum(col("duration_ms")).as("wtot"))
+    val withBase = m.join(broadcast(t), col("source") === col("t_source"))
+      .select(col("doc_id"), col("source"), col("duration_ms"), col("wtot"),
+        expr("CAST((1000 * duration_ms) div wtot AS BIGINT)").as("base"),
+        expr("CAST((1000 * duration_ms) % wtot AS BIGINT)").as("rem"))
+    val baseSum = withBase.groupBy(col("source").as("b_source"))
+      .agg(sum(col("base")).as("base_sum"))
+    val b = withBase.join(broadcast(baseSum), col("source") === col("b_source"))
+      .withColumn("extra", lit(1000L) - col("base_sum"))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("rem").desc, col("doc_id"))
+    b.withColumn("rnk", row_number().over(w).cast(LongType))
+      .select(col("doc_id"), col("source"), col("duration_ms"), col("base"),
+        (col("base") + when(col("rnk") <= col("extra"), 1L).otherwise(0L))
+          .as("n_frames"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** Audio↔video alignment index (r14b) — the multimodal join the
+    * frame/audio index passes exist to feed: every 4-second-stride
+    * caption segment is aligned to the latest SAMPLED keyframe at or
+    * before its start (the as-of-backward join of AV pipelines),
+    * with the sync gap in ms. Both sides derive from the SAME
+    * synthesized per-doc video metadata (`multimodal_frame_sample`'s
+    * duration/fps formulas), so the alignment is exact integer
+    * arithmetic known before any codec runs. Spark shape: the ≤8
+    * keyframes fold into a sorted per-doc array (one doc-keyed agg),
+    * segments explode row-locally, and the as-of resolves as a
+    * row-local array_max(filter(...)) — ONE join, no window, no
+    * re-aggregation; at 100 TB this parallelizes with the media
+    * files (keyframe arrays are bounded at k=8 by construction).
+    * Keyframe 0 sits at ts 0, so every segment aligns (inner
+    * semantics safe). */
+  val multimodalAvAlign: QDef = q(
+    "multimodal_av_align",
+    """WITH meta AS (
+      |  SELECT doc_id, n_chars * 40 AS duration_ms,
+      |    24 + (doc_id % 3) * 6 AS fps
+      |  FROM documents),
+      |m2 AS (SELECT doc_id, fps, duration_ms,
+      |  duration_ms * fps // 1000 AS n_frames FROM meta),
+      |m3 AS (SELECT doc_id, fps, duration_ms, n_frames,
+      |  least(8, n_frames) AS n_samples FROM m2 WHERE n_frames > 0),
+      |frames AS (
+      |  SELECT doc_id, duration_ms,
+      |    (CASE WHEN n_samples > 1 THEN i * (n_frames - 1) // (n_samples - 1)
+      |          ELSE 0 END) * 1000 // fps AS kf_ts_ms
+      |  FROM m3 CROSS JOIN range(0, 8) r(i) WHERE i < n_samples),
+      |segs AS (
+      |  SELECT doc_id, unnest(range(0, (duration_ms + 3999) // 4000)) AS seg_no
+      |  FROM m3),
+      |s2 AS (SELECT doc_id, seg_no, seg_no * 4000 AS seg_start_ms FROM segs)
+      |SELECT s.doc_id, s.seg_no, s.seg_start_ms,
+      |  MAX(f.kf_ts_ms) AS kf_ts_ms,
+      |  s.seg_start_ms - MAX(f.kf_ts_ms) AS sync_gap_ms
+      |FROM s2 s JOIN frames f
+      |  ON f.doc_id = s.doc_id AND f.kf_ts_ms <= s.seg_start_ms
+      |GROUP BY s.doc_id, s.seg_no, s.seg_start_ms
+      |ORDER BY s.doc_id, s.seg_no""") { (s, d) =>
+    val m3 = Tables.documents(s, d)
+      .select(col("doc_id"), (col("n_chars") * 40).as("duration_ms"),
+        (lit(24) + (col("doc_id") % 3) * 6).as("fps"))
+      .withColumn("n_frames", expr("duration_ms * fps div 1000"))
+      .filter(col("n_frames") > 0)
+      .withColumn("n_samples", least(lit(8L), col("n_frames")))
+    val frames = m3
+      .select(col("doc_id"), col("duration_ms"), col("fps"),
+        col("n_frames"), col("n_samples"),
+        explode(expr("sequence(0L, n_samples - 1)")).as("i"))
+      .select(col("doc_id"), col("duration_ms"),
+        (when(col("n_samples") > 1,
+          expr("i * (n_frames - 1) div (n_samples - 1)")).otherwise(lit(0L))
+          * 1000).as("t0"), col("fps"))
+      .select(col("doc_id"), col("duration_ms"),
+        expr("t0 div fps").as("kf_ts_ms"))
+    val fArr = frames.groupBy(col("doc_id"), col("duration_ms"))
+      .agg(sort_array(collect_list(col("kf_ts_ms"))).as("fa"))
+    fArr
+      .select(col("doc_id"), col("fa"),
+        explode(expr("sequence(0L, (duration_ms + 3999) div 4000 - 1)"))
+          .as("seg_no"))
+      .select(col("doc_id"), col("seg_no"),
+        (col("seg_no") * 4000).as("seg_start_ms"), col("fa"))
+      .select(col("doc_id"), col("seg_no"), col("seg_start_ms"),
+        expr("array_max(filter(fa, f -> f <= seg_start_ms))").as("kf_ts_ms"))
+      .withColumn("sync_gap_ms", col("seg_start_ms") - col("kf_ts_ms"))
+      .orderBy(col("doc_id"), col("seg_no"))
+  }
+
+  /** Multimodal pyramid plan (r15c) — the pre-decode resolution
+    * ladder an image-ingest pipeline materializes BEFORE touching
+    * pixels: for each image's (w, h) metadata (the
+    * `multimodal_image_tiles` synthetic meta), how many ceil-halvings
+    * until max(w, h) ≤ 64, and every level's exact dimensions and
+    * pixel count. The level count is EXACT dyadic arithmetic, no
+    * transcendentals: ceil-halving composes (ceil(ceil(a/2)/2) =
+    * ceil(a/4)), so n_levels = len(bin((max-1) div 64)) and level-l
+    * dims are ceil(w / 2^l) via shift-left — spellable identically in
+    * both engines. Row-local throughout: one explode of ≤6 levels per
+    * image, no shuffle until the presentation sort. */
+  val multimodalPyramidPlan: QDef = q(
+    "multimodal_pyramid_plan",
+    """WITH meta AS (
+      |  SELECT doc_id,
+      |    CAST(640 + (doc_id % 5) * 160 AS BIGINT) AS w,
+      |    CAST(480 + (doc_id % 7) * 120 AS BIGINT) AS h
+      |  FROM documents),
+      |m2 AS (
+      |  SELECT doc_id, w, h,
+      |    CASE WHEN greatest(w, h) <= 64 THEN 0
+      |      ELSE length(bin((greatest(w, h) - 1) // 64)) END AS n_levels
+      |  FROM meta),
+      |lv AS (
+      |  SELECT doc_id, w, h, n_levels, t.l AS level
+      |  FROM m2, UNNEST(range(0, n_levels + 1)) AS t(l))
+      |SELECT doc_id, CAST(level AS BIGINT) AS level,
+      |  CAST(n_levels AS BIGINT) AS n_levels,
+      |  (w + (1 << level) - 1) // (1 << level) AS lw,
+      |  (h + (1 << level) - 1) // (1 << level) AS lh,
+      |  ((w + (1 << level) - 1) // (1 << level))
+      |    * ((h + (1 << level) - 1) // (1 << level)) AS px
+      |FROM lv ORDER BY doc_id, level""") { (s, d) =>
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        (lit(640L) + (col("doc_id") % 5) * 160).as("w"),
+        (lit(480L) + (col("doc_id") % 7) * 120).as("h"))
+      .withColumn("n_levels",
+        expr("CASE WHEN greatest(w, h) <= 64 THEN 0L" +
+          " ELSE CAST(length(bin((greatest(w, h) - 1) div 64)) AS BIGINT)" +
+          " END"))
+      .select(col("doc_id"), col("w"), col("h"), col("n_levels"),
+        explode(expr("sequence(0L, n_levels)")).as("level"))
+      .select(col("doc_id"), col("level"), col("n_levels"),
+        expr("(w + shiftleft(CAST(1 AS BIGINT), CAST(level AS INT)) - 1)" +
+          " div shiftleft(CAST(1 AS BIGINT), CAST(level AS INT))").as("lw"),
+        expr("(h + shiftleft(CAST(1 AS BIGINT), CAST(level AS INT)) - 1)" +
+          " div shiftleft(CAST(1 AS BIGINT), CAST(level AS INT))").as("lh"))
+      .withColumn("px", col("lw") * col("lh"))
+      .select(col("doc_id"), col("level"), col("n_levels"), col("lw"),
+        col("lh"), col("px"))
+      .orderBy(col("doc_id"), col("level"))
+  }
+
+  /** Aspect-ratio bucketing plan (r18b) — the image-training prep
+    * step every multimodal loader runs (group images into a fixed
+    * set of aspect buckets so batches share a shape): deterministic
+    * md5-synthetic dimensions (w, h = 128·(1 + md5%12), the
+    * pre-decode-metadata convention of the multimodal family), five
+    * canonical buckets {1:1, 4:3, 3:4, 16:9, 9:16}, and EXACT
+    * nearest-ratio assignment — |w/h − n/d| comparisons cleared of
+    * BOTH denominators (h cancels across candidates; ×(144/d)
+    * clears d), argmin by (score, idx) via a doc-partitioned 5-row
+    * rank window. Graded per bucket: image count, pixel mass, and
+    * mean residual aspect error in floor-micro. At 100 TB the
+    * explode side is a broadcast 5-row table and the argmin is a
+    * doc-keyed window over 5-row partitions. */
+  val multimodalAspectBuckets: QDef = q(
+    "multimodal_aspect_buckets",
+    """WITH img AS (
+      |  SELECT doc_id,
+      |    128 * (1 + ('0x' || substr(md5('w:' || CAST(doc_id AS VARCHAR)),
+      |      1, 2))::BIGINT % 12) AS w,
+      |    128 * (1 + ('0x' || substr(md5('h:' || CAST(doc_id AS VARCHAR)),
+      |      1, 2))::BIGINT % 12) AS h
+      |  FROM documents),
+      |bk AS (SELECT * FROM (VALUES (0, '1:1', 1, 1), (1, '4:3', 4, 3),
+      |  (2, '3:4', 3, 4), (3, '16:9', 16, 9), (4, '9:16', 9, 16))
+      |  AS t(idx, nm, bn, bd)),
+      |sc AS (
+      |  SELECT img.doc_id, img.w, img.h, bk.idx, bk.nm,
+      |    abs(img.w * bk.bd - img.h * bk.bn) * (144 // bk.bd) AS score,
+      |    abs(img.w * bk.bd - img.h * bk.bn) * 1000000
+      |      // (img.h * bk.bd) AS err_micro
+      |  FROM img CROSS JOIN bk),
+      |pick AS (
+      |  SELECT doc_id, w, h, idx, nm, err_micro,
+      |    row_number() OVER (PARTITION BY doc_id ORDER BY score, idx)
+      |      AS rn
+      |  FROM sc)
+      |SELECT CAST(idx AS BIGINT) AS bucket_idx, nm AS bucket,
+      |  CAST(COUNT(*) AS BIGINT) AS n_images,
+      |  CAST(SUM(w * h) AS BIGINT) AS total_pixels,
+      |  CAST(SUM(err_micro) // COUNT(*) AS BIGINT) AS mean_err_micro
+      |FROM pick WHERE rn = 1 GROUP BY idx, nm
+      |ORDER BY bucket_idx""") { (s, d) =>
+    import s.implicits._
+    val img = Tables.documents(s, d).select(col("doc_id"),
+      (lit(128L) * (lit(1L) + conv(substring(md5(concat(lit("w:"),
+        col("doc_id").cast(StringType))), 1, 2), 16, 10)
+        .cast(LongType) % 12)).as("w"),
+      (lit(128L) * (lit(1L) + conv(substring(md5(concat(lit("h:"),
+        col("doc_id").cast(StringType))), 1, 2), 16, 10)
+        .cast(LongType) % 12)).as("h"))
+    val bk = Seq((0L, "1:1", 1L, 1L), (1L, "4:3", 4L, 3L),
+      (2L, "3:4", 3L, 4L), (3L, "16:9", 16L, 9L), (4L, "9:16", 9L, 16L))
+      .toDF("idx", "nm", "bn", "bd")
+    val sc = img.crossJoin(broadcast(bk))
+      .select(col("doc_id"), col("w"), col("h"), col("idx"), col("nm"),
+        (abs(col("w") * col("bd") - col("h") * col("bn"))
+          * expr("144 div bd")).as("score"),
+        expr("abs(w * bd - h * bn) * 1000000 div (h * bd)")
+          .as("err_micro"))
+    val wPick = Window.partitionBy(col("doc_id"))
+      .orderBy(col("score"), col("idx"))
+    sc.withColumn("rn", row_number().over(wPick))
+      .filter(col("rn") === 1)
+      .groupBy(col("idx").as("bucket_idx"), col("nm").as("bucket"))
+      .agg(count(lit(1)).as("n_images"),
+        sum(col("w") * col("h")).as("total_pixels"),
+        expr("CAST(SUM(err_micro) div COUNT(*) AS BIGINT)")
+          .as("mean_err_micro"))
+      .orderBy(col("bucket_idx"))
+  }
+
   val all: Seq[QDef] = Seq(
     dedupExactDocs, dedupNearJaccard, simSearchTopk, knnPerLabel,
     textTokenTf, textTfidfTopterms, textLangProfile, multimodalEnrich,
     multimodalBinaryMeta, multimodalFrameSample, dedupContainment,
-    multimodalChunkAudio, simHardNegatives, multimodalImageTiles)
+    multimodalChunkAudio, simHardNegatives, multimodalImageTiles,
+    multimodalKeyframeBudget, multimodalAvAlign, multimodalPyramidPlan,
+    multimodalAspectBuckets)
 }

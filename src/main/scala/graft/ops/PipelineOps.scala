@@ -701,10 +701,465 @@ object PipelineOps {
       .orderBy(col("thr"))
   }
 
+  /** Curation rule-overlap matrix (r13c) — which quality rules
+    * actually fire TOGETHER: for the four standard filters (too-short,
+    * low-diversity, exact-duplicate, oversize), the doc counts failing
+    * every (rule, rule) pair — diagonals are per-rule totals, and a
+    * near-diagonal off-cell means one rule subsumes another (drop it
+    * and save its pass over the corpus). Rules: ntok < 30 (short),
+    * 10·nuniq < 4·ntok (the integer form of diversity < 0.4),
+    * non-min-doc exact-text duplicate (`dedup_exact_docs`
+    * survivorship), n_chars > 450 (oversize) — thresholds sit inside
+    * the fixture's operating range (ntok 10–100, diversity ≥ 0.27,
+    * n_chars 44–577) so the matrix is non-trivial; a production
+    * corpus dials its own. Per-doc flags fold row-locally into a
+    * failed-rules array (conditional array concat — no lambda, so the
+    * explode stays a plain Generate), the pair explode is ≤ 16
+    * rows/doc, and the shuffle carries 16 combined cells. */
+  val curationRuleOverlap: QDef = q(
+    "curation_rule_overlap",
+    """WITH t AS (
+      |  SELECT doc_id, md5(text) AS h, n_chars,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
+      |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS nuniq
+      |  FROM documents),
+      |m AS (SELECT h AS mh, MIN(doc_id) AS keeper FROM t GROUP BY h),
+      |f AS (
+      |  SELECT doc_id,
+      |    (CASE WHEN ntok < 30 THEN ['short'] ELSE [] END)
+      |      || (CASE WHEN 10 * nuniq < 4 * ntok THEN ['low_diversity'] ELSE [] END)
+      |      || (CASE WHEN doc_id <> keeper THEN ['duplicate'] ELSE [] END)
+      |      || (CASE WHEN n_chars > 450 THEN ['oversize'] ELSE [] END) AS failed
+      |  FROM t JOIN m ON t.h = m.mh)
+      |SELECT u1.ra AS rule_a, u2.rb AS rule_b,
+      |  CAST(COUNT(*) AS BIGINT) AS n_docs
+      |FROM f, UNNEST(failed) u1(ra), UNNEST(failed) u2(rb)
+      |GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
+    val t = Tables.documents(s, d)
+      .select(col("doc_id"), md5(col("text")).as("h"), col("n_chars"),
+        size(split(col("text"), " ")).cast(LongType).as("ntok"),
+        size(array_distinct(split(col("text"), " "))).cast(LongType).as("nuniq"))
+    val m = t.groupBy(col("h").as("mh")).agg(min(col("doc_id")).as("keeper"))
+    t.join(m, col("h") === col("mh"))
+      .select(col("doc_id"), expr(
+        """concat(
+          |  CASE WHEN ntok < 30 THEN array('short') ELSE CAST(array() AS ARRAY<STRING>) END,
+          |  CASE WHEN 10 * nuniq < 4 * ntok THEN array('low_diversity') ELSE CAST(array() AS ARRAY<STRING>) END,
+          |  CASE WHEN doc_id <> keeper THEN array('duplicate') ELSE CAST(array() AS ARRAY<STRING>) END,
+          |  CASE WHEN n_chars > 450 THEN array('oversize') ELSE CAST(array() AS ARRAY<STRING>) END)"""
+          .stripMargin).as("failed"))
+      .select(col("failed"), explode(col("failed")).as("rule_a"))
+      .select(col("rule_a"), explode(col("failed")).as("rule_b"))
+      .groupBy(col("rule_a"), col("rule_b"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(col("rule_a"), col("rule_b"))
+  }
+
+  /** Dedup-adjusted mixture weights (r13c) — the sampling-weight
+    * table a mixer reads AFTER exact dedup instead of before: per
+    * source, raw docs, surviving docs (global min-doc-per-text
+    * survivorship — a cross-source duplicate credits only the
+    * keeper's source, the `dedup_exact_docs` semantics), the
+    * duplication rate, and the re-normalized sampling weight over
+    * surviving docs in floor-ppm. Digest-keyed shuffle (16-byte md5,
+    * never text bodies); source-level algebra after. */
+  val mixDedupAdjusted: QDef = q(
+    "mix_dedup_adjusted",
+    """WITH t AS (SELECT doc_id, source, md5(text) AS h FROM documents),
+      |m AS (SELECT h AS mh, MIN(doc_id) AS keeper FROM t GROUP BY h),
+      |f AS (
+      |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw,
+      |    CAST(SUM(CASE WHEN doc_id = keeper THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS n_kept
+      |  FROM t JOIN m ON t.h = m.mh GROUP BY source),
+      |tot AS (SELECT CAST(SUM(n_kept) AS BIGINT) AS total_kept FROM f)
+      |SELECT source, n_raw, n_kept,
+      |  ((n_raw - n_kept) * 1000000) // n_raw AS dup_ppm,
+      |  (n_kept * 1000000) // tot.total_kept AS weight_ppm
+      |FROM f CROSS JOIN tot ORDER BY source""") { (s, d) =>
+    val t = Tables.documents(s, d)
+      .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
+    val m = t.groupBy(col("h").as("mh")).agg(min(col("doc_id")).as("keeper"))
+    val f = t.join(m, col("h") === col("mh"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_raw"),
+        count_if(col("doc_id") === col("keeper")).as("n_kept"))
+    val tot = f.agg(sum(col("n_kept")).as("total_kept"))
+    f.crossJoin(broadcast(tot))
+      .select(col("source"), col("n_raw"), col("n_kept"),
+        expr("((n_raw - n_kept) * 1000000) div n_raw").as("dup_ppm"),
+        expr("(n_kept * 1000000) div total_kept").as("weight_ppm"))
+      .orderBy(col("source"))
+  }
+
+  /** Two-phase anneal mixture (r14g) — the midtraining curriculum
+    * every modern LLM run schedules: phase 1 trains on the whole
+    * corpus, phase 2 (the anneal) restricts to documents passing the
+    * quality bar and re-normalizes source weights over the surviving
+    * token mass. The bar reuses the EXACT `curation_rule_overlap`
+    * rule spellings (NOT short: ntok ≥ 30; NOT low-diversity:
+    * 10·nuniq ≥ 4·ntok) so the anneal's admission set is consistent
+    * with the graded curation funnel. Pure integers, floor-ppm
+    * weights, one row-local flag pass + two group-sized folds. */
+  val mixAnnealTwoPhase: QDef = q(
+    "mix_anneal_two_phase",
+    """WITH t AS (
+      |  SELECT source,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
+      |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS nuniq
+      |  FROM documents),
+      |u AS (
+      |  SELECT CAST(1 AS BIGINT) AS phase, source, ntok FROM t
+      |  UNION ALL
+      |  SELECT CAST(2 AS BIGINT), source, ntok FROM t
+      |  WHERE ntok >= 30 AND 10 * nuniq >= 4 * ntok),
+      |f AS (
+      |  SELECT phase, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |    CAST(SUM(ntok) AS BIGINT) AS n_tokens
+      |  FROM u GROUP BY phase, source),
+      |tot AS (SELECT phase, CAST(SUM(n_tokens) AS BIGINT) AS t
+      |  FROM f GROUP BY phase)
+      |SELECT f.phase, f.source, f.n_docs, f.n_tokens,
+      |  (f.n_tokens * 1000000) // tot.t AS weight_ppm
+      |FROM f JOIN tot ON f.phase = tot.phase
+      |ORDER BY f.phase, f.source""") { (s, d) =>
+    val t = Tables.documents(s, d)
+      .select(col("source"),
+        size(split(col("text"), " ")).cast(LongType).as("ntok"),
+        size(array_distinct(split(col("text"), " "))).cast(LongType).as("nuniq"))
+    val u = t.select(lit(1L).as("phase"), col("source"), col("ntok"))
+      .unionAll(t.filter(col("ntok") >= 30 && col("nuniq") * 10 >= col("ntok") * 4)
+        .select(lit(2L).as("phase"), col("source"), col("ntok")))
+    val f = u.groupBy(col("phase"), col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"))
+    val tot = f.groupBy(col("phase").as("t_phase"))
+      .agg(sum(col("n_tokens")).as("t"))
+    f.join(broadcast(tot), col("phase") === col("t_phase"))
+      .select(col("phase"), col("source"), col("n_docs"), col("n_tokens"),
+        expr("(n_tokens * 1000000) div t").as("weight_ppm"))
+      .orderBy(col("phase"), col("source"))
+  }
+
+  /** Chinchilla compute-allocation plan (r17) — the training-run
+    * sizing question a data pipeline answers before curation targets
+    * are set: for each compute budget C (petaFLOP units in a literal
+    * table), the compute-optimal parameter count N = sqrt(C/120)
+    * (from C ≈ 6·N·D with the D = 20·N optimum) and token demand
+    * D = 20·N, against the corpus's ACTUAL token supply — coverage
+    * in floor-ppm and the epoch count (ceil) the corpus would need.
+    * One corpus token-count agg + a 3-row broadcast budget table;
+    * the sqrt chain runs on identical doubles in both engines, then
+    * everything is exact integers. */
+  val mixChinchillaPlan: QDef = q(
+    "mix_chinchilla_plan",
+    """WITH t AS (
+      |  SELECT CAST(SUM(len(string_split(text, ' '))) AS BIGINT)
+      |    AS corpus_tokens
+      |  FROM documents),
+      |b AS (SELECT CAST(pf AS BIGINT) AS budget_pflops
+      |  FROM (VALUES (1000), (1000000), (1000000000)) v(pf)),
+      |p AS (
+      |  SELECT budget_pflops, corpus_tokens,
+      |    CAST(floor(sqrt(CAST(budget_pflops AS DOUBLE) * 1e15 / 120.0))
+      |      AS BIGINT) AS n_opt_params
+      |  FROM b CROSS JOIN t)
+      |SELECT budget_pflops, n_opt_params,
+      |  20 * n_opt_params AS d_opt_tokens, corpus_tokens,
+      |  CAST((20 * n_opt_params + corpus_tokens - 1) // corpus_tokens
+      |    AS BIGINT) AS epochs_needed,
+      |  CASE WHEN corpus_tokens >= 20 * n_opt_params THEN 1000000
+      |    ELSE CAST(corpus_tokens * 1000000 // (20 * n_opt_params)
+      |      AS BIGINT) END AS coverage_ppm
+      |FROM p ORDER BY budget_pflops""") { (s, d) =>
+    val t = Tables.documents(s, d)
+      .agg(sum(size(split(col("text"), " "))).cast(LongType)
+        .as("corpus_tokens"))
+    val b = {
+      import s.implicits._
+      Seq(1000L, 1000000L, 1000000000L).toDF("budget_pflops")
+    }
+    val p = b.crossJoin(broadcast(t))
+      .withColumn("n_opt_params",
+        floor(sqrt(col("budget_pflops").cast(DoubleType) * lit(1e15)
+          / lit(120.0))).cast(LongType))
+    p.select(col("budget_pflops"), col("n_opt_params"),
+        (lit(20L) * col("n_opt_params")).as("d_opt_tokens"),
+        col("corpus_tokens"),
+        expr("CAST((20 * n_opt_params + corpus_tokens - 1)"
+          + " div corpus_tokens AS BIGINT)").as("epochs_needed"),
+        expr("CASE WHEN corpus_tokens >= 20 * n_opt_params THEN 1000000"
+          + " ELSE CAST(corpus_tokens * 1000000 div (20 * n_opt_params)"
+          + " AS BIGINT) END").as("coverage_ppm"))
+      .orderBy(col("budget_pflops"))
+  }
+
+  /** Filter-cascade cost audit (r18) — the stage-ordering decision a
+    * curation pipeline makes once and pays forever: the SAME four
+    * stages (length gate cost 1/doc, lang allowlist cost 2/doc,
+    * TTR+length quality gate cost 10/doc — the `curation_funnel`
+    * spellings — and exact-dedup cost 5/doc) run cheap-first vs
+    * quality-first. Pure per-doc filters commute, so both plans end
+    * at the same survivor set — what differs is COMPUTE: each
+    * stage's cost is (docs entering) × (unit cost), and running the
+    * expensive classifier first pays it on the whole corpus. Graded
+    * as the full 2×4 funnel with cumulative cost — the table that
+    * justifies cascade ordering at 100 TB. One scan, one flag-sum
+    * fold, one dedup count; the funnel arithmetic is row-local over
+    * 1-row broadcasts. */
+  val curationCascadeCost: QDef = q(
+    "curation_cascade_cost",
+    """WITH t AS (
+      |  SELECT doc_id, text, lang, n_chars,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
+      |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
+      |      AS nuniq
+      |  FROM documents),
+      |f AS (
+      |  SELECT doc_id, text,
+      |    CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS p_len,
+      |    CASE WHEN lang IN ('en', 'es', 'de', 'fr') THEN 1 ELSE 0 END
+      |      AS p_lang,
+      |    CASE WHEN ntok >= 10 AND CAST(nuniq AS DOUBLE) / ntok >= 0.3
+      |      THEN 1 ELSE 0 END AS p_qual
+      |  FROM t),
+      |agg AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS n0,
+      |    CAST(SUM(p_len) AS BIGINT) AS nl,
+      |    CAST(SUM(p_len * p_lang) AS BIGINT) AS nll,
+      |    CAST(SUM(p_qual) AS BIGINT) AS nq,
+      |    CAST(SUM(p_qual * p_lang) AS BIGINT) AS nql,
+      |    CAST(SUM(p_len * p_lang * p_qual) AS BIGINT) AS nall
+      |  FROM f),
+      |sv AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS nsurv FROM (
+      |    SELECT MIN(doc_id) FROM f
+      |    WHERE p_len = 1 AND p_lang = 1 AND p_qual = 1 GROUP BY text)),
+      |m AS (
+      |  SELECT 'cheap_first' AS plan, 1 AS stage_idx, 'len' AS stage,
+      |    n0 AS n_in, nl AS n_out, n0 * 1 AS stage_cost, n0 * 1 AS cum_cost
+      |  FROM agg, sv
+      |  UNION ALL SELECT 'cheap_first', 2, 'lang', nl, nll, nl * 2,
+      |    n0 * 1 + nl * 2 FROM agg, sv
+      |  UNION ALL SELECT 'cheap_first', 3, 'quality', nll, nall, nll * 10,
+      |    n0 * 1 + nl * 2 + nll * 10 FROM agg, sv
+      |  UNION ALL SELECT 'cheap_first', 4, 'dedup', nall, nsurv, nall * 5,
+      |    n0 * 1 + nl * 2 + nll * 10 + nall * 5 FROM agg, sv
+      |  UNION ALL SELECT 'quality_first', 1, 'quality', n0, nq, n0 * 10,
+      |    n0 * 10 FROM agg, sv
+      |  UNION ALL SELECT 'quality_first', 2, 'lang', nq, nql, nq * 2,
+      |    n0 * 10 + nq * 2 FROM agg, sv
+      |  UNION ALL SELECT 'quality_first', 3, 'len', nql, nall, nql * 1,
+      |    n0 * 10 + nq * 2 + nql * 1 FROM agg, sv
+      |  UNION ALL SELECT 'quality_first', 4, 'dedup', nall, nsurv, nall * 5,
+      |    n0 * 10 + nq * 2 + nql * 1 + nall * 5 FROM agg, sv)
+      |SELECT plan, CAST(stage_idx AS BIGINT) AS stage_idx, stage, n_in,
+      |  n_out, CAST(stage_cost AS BIGINT) AS stage_cost,
+      |  CAST(cum_cost AS BIGINT) AS cum_cost
+      |FROM m ORDER BY plan, stage_idx""") { (s, d) =>
+    val toks = split(col("text"), " ")
+    val f = Tables.documents(s, d)
+      .select(col("doc_id"), col("text"),
+        when(col("n_chars") >= 100, 1L).otherwise(0L).as("p_len"),
+        when(col("lang").isin("en", "es", "de", "fr"), 1L).otherwise(0L)
+          .as("p_lang"),
+        when(size(toks) >= 10 &&
+            size(array_distinct(toks)).cast(DoubleType) /
+              size(toks).cast(DoubleType) >= 0.3, 1L)
+          .otherwise(0L).as("p_qual"))
+    val agg0 = f.agg(count(lit(1)).as("n0"),
+      sum(col("p_len")).as("nl"),
+      sum(col("p_len") * col("p_lang")).as("nll"),
+      sum(col("p_qual")).as("nq"),
+      sum(col("p_qual") * col("p_lang")).as("nql"),
+      sum(col("p_len") * col("p_lang") * col("p_qual")).as("nall"))
+    val sv = f.filter(col("p_len") === 1L && col("p_lang") === 1L &&
+        col("p_qual") === 1L)
+      .groupBy(col("text")).agg(min(col("doc_id")))
+      .agg(count(lit(1)).as("nsurv"))
+    agg0.crossJoin(broadcast(sv))
+      .select(expr(
+        """stack(8,
+          |  'cheap_first', 1L, 'len', n0, nl, n0 * 1L, n0 * 1L,
+          |  'cheap_first', 2L, 'lang', nl, nll, nl * 2L, n0 * 1L + nl * 2L,
+          |  'cheap_first', 3L, 'quality', nll, nall, nll * 10L,
+          |    n0 * 1L + nl * 2L + nll * 10L,
+          |  'cheap_first', 4L, 'dedup', nall, nsurv, nall * 5L,
+          |    n0 * 1L + nl * 2L + nll * 10L + nall * 5L,
+          |  'quality_first', 1L, 'quality', n0, nq, n0 * 10L, n0 * 10L,
+          |  'quality_first', 2L, 'lang', nq, nql, nq * 2L,
+          |    n0 * 10L + nq * 2L,
+          |  'quality_first', 3L, 'len', nql, nall, nql * 1L,
+          |    n0 * 10L + nq * 2L + nql * 1L,
+          |  'quality_first', 4L, 'dedup', nall, nsurv, nall * 5L,
+          |    n0 * 10L + nq * 2L + nql * 1L + nall * 5L)
+          |  AS (plan, stage_idx, stage, n_in, n_out, stage_cost, cum_cost)
+          |""".stripMargin))
+      .orderBy(col("plan"), col("stage_idx"))
+  }
+
+  /** Curriculum schedule plan (r18) — the length-ordered training
+    * curriculum (short/simple documents first) computed WITHOUT a
+    * global sort: the corpus's token-count HISTOGRAM (bounded by
+    * distinct lengths, not corpus size) is cumulated by a broadcast
+    * value self-join — the `ann_hnsw_layer_assign` cumulative
+    * pattern, no unpartitioned window anywhere — and each length
+    * block is assigned phase ⌊cum_before·4/N⌋ (capped at 3): every
+    * doc of one length lands in one phase, the convention a
+    * histogram-driven scheduler ships. Graded per phase: doc census,
+    * length bounds, token mass and its corpus share in ppm — the
+    * table a curriculum sampler consumes. At 100 TB the histogram is
+    * a few thousand rows regardless of corpus size. */
+  val mixCurriculumSchedule: QDef = q(
+    "mix_curriculum_schedule",
+    """WITH t AS (
+      |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
+      |  FROM documents),
+      |h AS (
+      |  SELECT ntok, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |    CAST(SUM(ntok) AS BIGINT) AS toks
+      |  FROM t GROUP BY ntok),
+      |tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n,
+      |  CAST(SUM(toks) AS BIGINT) AS tok_all FROM h),
+      |cum AS (
+      |  SELECT a.ntok, a.n_docs, a.toks,
+      |    CAST(COALESCE(SUM(b.n_docs), 0) AS BIGINT) AS cum_before
+      |  FROM h a LEFT JOIN h b ON b.ntok < a.ntok
+      |  GROUP BY a.ntok, a.n_docs, a.toks),
+      |ph AS (
+      |  SELECT LEAST(3, cum_before * 4 // n) AS phase, c.*
+      |  FROM cum c, tot)
+      |SELECT CAST(phase AS BIGINT) AS phase,
+      |  CAST(SUM(n_docs) AS BIGINT) AS n_docs,
+      |  MIN(ntok) AS min_ntok, MAX(ntok) AS max_ntok,
+      |  CAST(SUM(toks) AS BIGINT) AS sum_tokens,
+      |  CAST(SUM(toks) * 1000000 // MAX(t2.tok_all) AS BIGINT)
+      |    AS token_share_ppm
+      |FROM ph, tot t2 GROUP BY phase ORDER BY phase""") { (s, d) =>
+    val h = Tables.documents(s, d)
+      .select(size(split(col("text"), " ")).cast(LongType).as("ntok"))
+      .groupBy(col("ntok"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("toks"))
+    val tot = h.agg(sum(col("n_docs")).as("n"), sum(col("toks")).as("tok_all"))
+    val cum = h.as("a")
+      .join(broadcast(h.select(col("ntok").as("b_ntok"),
+          col("n_docs").as("b_n"))),
+        col("b_ntok") < col("a.ntok"), "left")
+      .groupBy(col("a.ntok").as("ntok"), col("a.n_docs").as("n_docs"),
+        col("a.toks").as("toks"))
+      .agg(coalesce(sum(col("b_n")), lit(0L)).as("cum_before"))
+    cum.crossJoin(broadcast(tot))
+      .select(least(lit(3L), expr("cum_before * 4 div n")).as("phase"),
+        col("n_docs"), col("ntok"), col("toks"), col("tok_all"))
+      .groupBy(col("phase"))
+      .agg(sum(col("n_docs")).as("n_docs"), min(col("ntok")).as("min_ntok"),
+        max(col("ntok")).as("max_ntok"), sum(col("toks")).as("sum_tokens"),
+        expr("sum(toks) * 1000000 div max(tok_all)").as("token_share_ppm"))
+      .orderBy(col("phase"))
+  }
+
+  /** Sequence-packing padding-waste sweep (r18b) — the capacity
+    * question asked before every pretraining run: at context length
+    * L, how many tokens does naive per-document chunk-and-pad burn?
+    * For L ∈ {64, 128, 256}: chunks = ⌈ntok/L⌉, padded = chunks·L,
+    * waste = padded − ntok; graded per L as doc/chunk/token totals
+    * and floor-ppm waste share — the number that justifies a packed
+    * loader (`pack_sequences`) over naive padding. Entirely
+    * row-local until one 3-group fold; the L sweep is a broadcast
+    * 3-row cross join, so at 100 TB this is a single map-side pass.
+    * Token count = whitespace split length (FIXTURES.md: the corpus
+    * tokenizes cleanly on single spaces). */
+  val packPaddingWasteSweep: QDef = q(
+    "pack_padding_waste_sweep",
+    """WITH t AS (
+      |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
+      |  FROM documents),
+      |l AS (SELECT CAST(unnest([64, 128, 256]) AS BIGINT) AS max_len),
+      |w AS (
+      |  SELECT l.max_len, t.ntok,
+      |    (t.ntok + l.max_len - 1) // l.max_len AS chunks
+      |  FROM t CROSS JOIN l)
+      |SELECT max_len, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |  CAST(SUM(ntok) AS BIGINT) AS total_tokens,
+      |  CAST(SUM(chunks) AS BIGINT) AS total_chunks,
+      |  CAST(SUM(chunks * max_len) AS BIGINT) AS total_padded,
+      |  CAST(SUM(chunks * max_len - ntok) * 1000000
+      |    // SUM(chunks * max_len) AS BIGINT) AS waste_ppm
+      |FROM w GROUP BY max_len ORDER BY max_len""") { (s, d) =>
+    import s.implicits._
+    val t = Tables.documents(s, d)
+      .select(size(split(col("text"), " ")).cast(LongType).as("ntok"))
+    val l = Seq(64L, 128L, 256L).toDF("max_len")
+    t.crossJoin(broadcast(l))
+      .withColumn("chunks", expr("(ntok + max_len - 1) div max_len"))
+      .groupBy(col("max_len"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("total_tokens"),
+        sum(col("chunks")).as("total_chunks"),
+        sum(col("chunks") * col("max_len")).as("total_padded"),
+        sum(col("chunks") * col("max_len") - col("ntok")).as("waste"))
+      .select(col("max_len"), col("n_docs"), col("total_tokens"),
+        col("total_chunks"), col("total_padded"),
+        expr("waste * 1000000 div total_padded").as("waste_ppm"))
+      .orderBy(col("max_len"))
+  }
+
+  /** Mixture entropy / effective domain count (r18b) — the
+    * one-number diversity summary a data-mixing deck leads with:
+    * Shannon entropy of the source mixture H = ln N − (Σ c·ln c)/N
+    * through the quantize-then-fold log protocol (each term
+    * c·floor(ln c·10⁶) exact), the EFFECTIVE number of domains
+    * exp(H) (Hill number of order 1 — "this 20-source corpus mixes
+    * like X equal sources"), and H normalized by ln(m) in ppm.
+    * Complements the share table (`mix_domain_weighted`) and the
+    * inequality trio with the information-theoretic view. One
+    * source fold + a 1-row edge. */
+  val mixEntropyEffectiveDomains: QDef = q(
+    "mix_entropy_effective_domains",
+    """WITH c AS (
+      |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n
+      |  FROM documents GROUP BY source),
+      |f AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS m, CAST(SUM(n) AS BIGINT)
+      |      AS nd,
+      |    CAST(SUM(n * CAST(FLOOR(ln(CAST(n AS DOUBLE)) * 1000000)
+      |      AS BIGINT)) AS BIGINT) AS snl
+      |  FROM c),
+      |h AS (
+      |  SELECT m, nd,
+      |    CAST(FLOOR(ln(CAST(nd AS DOUBLE)) * 1000000) AS BIGINT)
+      |      - snl // nd AS h_micro
+      |  FROM f)
+      |SELECT nd AS n_docs, m AS n_domains, h_micro,
+      |  CAST(FLOOR(exp(CAST(h_micro AS DOUBLE) / 1000000) * 1000)
+      |    AS BIGINT) AS eff_domains_milli,
+      |  CASE WHEN m = 1 THEN NULL
+      |    ELSE CAST(h_micro * 1000000
+      |      // CAST(FLOOR(ln(CAST(m AS DOUBLE)) * 1000000) AS BIGINT)
+      |      AS BIGINT) END AS h_norm_ppm
+      |FROM h""") { (s, d) =>
+    val c = Tables.documents(s, d)
+      .groupBy(col("source")).agg(count(lit(1)).as("n"))
+    val f = c.agg(count(lit(1)).as("m"), sum(col("n")).as("nd"),
+      sum(col("n") * floor(log(col("n").cast(DoubleType)) * 1000000)
+        .cast(LongType)).as("snl"))
+    val h = f.select(col("m"), col("nd"),
+      (floor(log(col("nd").cast(DoubleType)) * 1000000).cast(LongType)
+        - expr("snl div nd")).as("h_micro"))
+    h.select(col("nd").as("n_docs"), col("m").as("n_domains"),
+      col("h_micro"),
+      expr("CAST(FLOOR(exp(CAST(h_micro AS DOUBLE) / 1000000) * 1000)"
+        + " AS BIGINT)").as("eff_domains_milli"),
+      when(col("m") === 1, lit(null).cast(LongType))
+        .otherwise(expr("CAST(h_micro * 1000000"
+          + " div CAST(FLOOR(ln(CAST(m AS DOUBLE)) * 1000000) AS BIGINT)"
+          + " AS BIGINT)")).as("h_norm_ppm"))
+  }
+
   val all: Seq[QDef] = Seq(
     contaminationNgram, packSequences, mixDomainWeighted, textRepetition,
     textPiiScrub, embedQuantizeInt8, curationFunnel, dedupPrefixCluster,
     mixTemperatureResample, mixUpsampleEpochs, embedNormAudit,
     dedupSourcePriority, hashFeatureCollisions, dedupUrlCanonical,
-    curationThresholdSweep)
+    curationThresholdSweep, curationRuleOverlap, mixDedupAdjusted,
+    mixAnnealTwoPhase, mixChinchillaPlan, curationCascadeCost,
+    mixCurriculumSchedule, packPaddingWasteSweep, mixEntropyEffectiveDomains)
 }

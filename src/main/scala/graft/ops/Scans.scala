@@ -5,6 +5,7 @@ import graft.QDef.q
 import graft.Protocol._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** SURVEY.md §2.1 — scans, sources, sinks.
   *
@@ -629,10 +630,150 @@ object Scans {
       .orderBy(col("lang"))
   }
 
+  /** Clustering-depth layout audit (r16) — the metric a table-layout
+    * optimizer (Delta OPTIMIZE / ZORDER) reports: how many zone-stat
+    * intervals OVERLAP under a given row order. 64-row zones of
+    * `orders` under (a) natural key order and (b) value-sorted order;
+    * per zone the [min,max] of order cents, then the overlapping
+    * zone-PAIR count — value-sorted zones only overlap where a tie
+    * straddles a boundary, natural order overlaps almost everywhere,
+    * and the ppm gap is exactly the row-group-skipping benefit a sort
+    * would buy (`layout_zorder_skipping` grades the scan BILL; this
+    * grades the STAT-OVERLAP structure that causes it). Zones are
+    * metadata-scale (n/64 rows), so the pair check is a broadcast
+    * zone×zone join — at 100 TB zone stats ARE the parquet footer
+    * stats, still metadata. */
+  val layoutClusteringDepth: QDef = q(
+    "layout_clustering_depth",
+    """WITH v AS (
+      |  SELECT o_orderkey AS k,
+      |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+      |      AS cents
+      |  FROM orders),
+      |zr AS (
+      |  SELECT 'natural' AS layout,
+      |    (row_number() OVER (ORDER BY k) - 1) // 64 AS zone, cents
+      |  FROM v
+      |  UNION ALL
+      |  SELECT 'sorted' AS layout,
+      |    (row_number() OVER (ORDER BY cents, k) - 1) // 64 AS zone, cents
+      |  FROM v),
+      |zs AS (
+      |  SELECT layout, zone, MIN(cents) AS mn, MAX(cents) AS mx
+      |  FROM zr GROUP BY layout, zone),
+      |ov AS (
+      |  SELECT a.layout, CAST(COUNT(*) AS BIGINT) AS n_overlap_pairs
+      |  FROM zs a JOIN zs b
+      |    ON a.layout = b.layout AND a.zone < b.zone
+      |    AND a.mx >= b.mn AND b.mx >= a.mn
+      |  GROUP BY a.layout),
+      |nz AS (
+      |  SELECT layout, CAST(COUNT(*) AS BIGINT) AS n_zones
+      |  FROM zs GROUP BY layout)
+      |SELECT nz.layout, nz.n_zones,
+      |  COALESCE(ov.n_overlap_pairs, 0) AS n_overlap_pairs,
+      |  CAST(COALESCE(ov.n_overlap_pairs, 0) * 1000000
+      |    // (nz.n_zones * (nz.n_zones - 1) // 2) AS BIGINT)
+      |    AS overlap_ppm
+      |FROM nz LEFT JOIN ov ON ov.layout = nz.layout
+      |ORDER BY nz.layout""") { (s, d) =>
+    // Spark side never runs an unpartitioned window: both global
+    // ranks ride the shared bucketed two-pass exclusive-prefix
+    // (DriftOps.exclusivePrefix — the shard_range_boundaries
+    // machinery). The oracle's plain row_number() produces the
+    // IDENTICAL ranks on DuckDB's side.
+    val v = Tables.orders(s, d)
+      .select(col("o_orderkey").as("k"),
+        expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
+          .as("cents"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val kc = v.select(col("k").as("v")).groupBy(col("v"))
+      .agg(count(lit(1)).as("cnt"))
+    val kpre = DriftOps.exclusivePrefix(kc, expr("v div 10000"))
+      .select(col("v").as("nk"), col("pre").as("npre"))
+    val nat = v.join(kpre, col("nk") === col("k"))
+      .select(lit("natural").as("layout"),
+        expr("npre div 64").as("zone"), col("cents"))
+    val cc = v.groupBy(col("cents").as("v")).agg(count(lit(1)).as("cnt"))
+    val cpre = DriftOps.exclusivePrefix(cc, expr("v div 10000000"))
+      .select(col("v").as("sv"), col("pre").as("spre"))
+    val wTie = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("cents")).orderBy(col("k"))
+    val srt = v.join(cpre, col("sv") === col("cents"))
+      .select(lit("sorted").as("layout"),
+        ((col("spre") + row_number().over(wTie) - 1)).as("r"), col("cents"))
+      .select(col("layout"), expr("r div 64").as("zone"), col("cents"))
+    val zs = nat.unionAll(srt)
+      .groupBy(col("layout"), col("zone"))
+      .agg(min(col("cents")).as("mn"), max(col("cents")).as("mx"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ov = zs.as("a")
+      .join(broadcast(zs.select(col("layout").as("bl"), col("zone").as("bz"),
+          col("mn").as("bmn"), col("mx").as("bmx"))),
+        col("bl") === col("a.layout") && col("a.zone") < col("bz") &&
+          col("a.mx") >= col("bmn") && col("bmx") >= col("a.mn"))
+      .groupBy(col("a.layout").as("ol")).agg(count(lit(1))
+        .as("n_overlap_pairs"))
+    val nz = zs.groupBy(col("layout")).agg(count(lit(1)).as("n_zones"))
+    nz.join(broadcast(ov), col("ol") === col("layout"), "left")
+      .select(col("layout"), col("n_zones"),
+        coalesce(col("n_overlap_pairs"), lit(0L)).as("n_overlap_pairs"),
+        expr("CAST(COALESCE(n_overlap_pairs, 0) * 1000000"
+          + " div (n_zones * (n_zones - 1) div 2) AS BIGINT)")
+          .as("overlap_ppm"))
+      .orderBy(col("layout"))
+  }
+
+  /** Parquet bloom-filter source (r16) — the point-lookup layout
+    * option the source matrix lacked: events re-written with a
+    * parquet BLOOM FILTER on user_id (and stat-sorted rows so
+    * min/max can't do the work instead), then a point predicate read
+    * back and aggregated. The graded values prove the
+    * bloom-decorated file round-trips losslessly (the oracle
+    * aggregates the ORIGINAL fixture); SourcesSpec asserts the
+    * footer actually carries the bloom offset — at scale the bloom
+    * is what skips row groups for high-cardinality point predicates
+    * where min/max zones are useless. */
+  val sourceParquetBloom: QDef = q(
+    "source_parquet_bloom",
+    """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
+      |    AS BIGINT) AS sum_cents,
+      |  CAST(MIN(event_id) AS BIGINT) AS min_event_id
+      |FROM events
+      |WHERE user_id = 7
+      |GROUP BY event_type ORDER BY event_type""") { (s, d) =>
+    val out = graft.TempDirs.create("graft_bloomsrc")
+    Tables.events(s, d)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"))
+      .sort(col("event_type"))
+      .coalesce(1)
+      .write.mode("overwrite")
+      .option("parquet.bloom.filter.enabled#user_id", "true")
+      .option("parquet.bloom.filter.expected.ndv#user_id", "1000")
+      // dictionary OFF for the bloom column: parquet-mr skips the
+      // bloom when every page is dictionary-encoded (the dictionary
+      // already is an exact membership filter), so a low-cardinality
+      // fixture would silently ship no bloom at all — disabling the
+      // dictionary is the production pairing for a bloom column
+      .option("parquet.enable.dictionary#user_id", "false")
+      .parquet(out)
+    s.read.parquet(out)
+      .filter(col("user_id") === 7)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"))
+          .cast(LongType).as("sum_cents"),
+        min(col("event_id")).as("min_event_id"))
+      .orderBy(col("event_type"))
+  }
+
   val all: Seq[QDef] = Seq(scanParquetProject, sourceJsonProps,
     sourceCsvRoundtrip, sourcePartitionedPrune, joinBucketedColo,
     sourceSortedRanges, sourceSchemaMerge, sourceOrcRoundtrip,
     sourceJsonRoundtrip, joinDppPartitioned, sourceCsvQuoted,
     sourceTextLines, sourceBinaryFiles, layoutZorderSkipping,
-    sourceParquetNested, sourceJsonCorruptAudit)
+    sourceParquetNested, sourceJsonCorruptAudit, layoutClusteringDepth,
+    sourceParquetBloom)
 }

@@ -4,6 +4,8 @@ import graft.{QDef, Tables}
 import graft.QDef.q
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 
 /** Probabilistic-structure audits (r12c) — Count-Min and Bloom built
   * HERE as exact, deterministic dataflow (md5-derived hash positions,
@@ -547,7 +549,371 @@ object SketchOps {
           .as("err_ppm"))
   }
 
+  /** Shared KMV-sample primitive (VERDICT r15 item 1) — the ONE
+    * spelling of the sharded bottom-64 KMV uniform sample over
+    * `orders` that `sketch_quantile_merge` (sketch-state mergeability
+    * audit) and `shard_plan_from_sketch` (sketch-planned layout) both
+    * build on; extracted so the two graded keys cannot drift. CTEs:
+    * u = (key, cents, md5-prefix hash, mod-8 shard), n = row count,
+    * ps = per-shard bottom-64 states (shard-partitioned window), mg =
+    * the merged bottom-64-of-union (== the one-pass global bottom-64;
+    * bottom-k is associative/commutative/idempotent under union), sr
+    * = the merged sample ranked by VALUE via a 64×64 broadcast
+    * self-join. The Spark builder below is the plan-identical twin of
+    * this text. */
+  private[ops] val kmvSampleCtes: String =
+    """u AS (
+      |  SELECT o_orderkey AS k,
+      |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
+      |    ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS h,
+      |    o_orderkey % 8 AS shard
+      |  FROM orders),
+      |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM u),
+      |ps AS (
+      |  SELECT k, cents, h FROM (
+      |    SELECT k, cents, h,
+      |      row_number() OVER (PARTITION BY shard ORDER BY h, k) AS rn
+      |    FROM u) WHERE rn <= 64),
+      |mg AS (
+      |  SELECT k, cents FROM (
+      |    SELECT k, cents, row_number() OVER (ORDER BY h, k) AS rn FROM ps)
+      |  WHERE rn <= 64),
+      |sr AS (
+      |  SELECT a.cents, a.k, CAST(COUNT(*) AS BIGINT) AS r
+      |  FROM mg a JOIN mg b
+      |    ON b.cents < a.cents OR (b.cents = a.cents AND b.k <= a.k)
+      |  GROUP BY a.cents, a.k)"""
+
+  /** The sharded KMV sample's Spark side: u (the scan-shaped
+    * projection), n (1-row count), sr (the merged ≤64-row sample with
+    * value ranks). `persistU` is the only caller-visible choice — the
+    * quantile audit's exact ground-truth side re-scans u, the layout
+    * planner reads it once. */
+  private[ops] final case class KmvSample(
+      u: DataFrame, n: DataFrame, sr: DataFrame)
+
+  private[ops] def kmvSample(s: SparkSession, d: String,
+      persistU: Boolean): KmvSample = {
+    import org.apache.spark.sql.expressions.Window
+    var u = Tables.orders(s, d)
+      .select(col("o_orderkey").as("k"),
+        (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
+          .cast(LongType).as("cents"),
+        conv(substring(md5(col("o_orderkey").cast(StringType)), 1, 8), 16, 10)
+          .cast(LongType).as("h"),
+        expr("o_orderkey % 8").as("shard"))
+    if (persistU)
+      u = u.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = u.agg(count(lit(1)).as("n"))
+    // per-shard bottom-64 states (shard-partitioned window), merged by
+    // taking the bottom-64 of the ≤512-row union (TakeOrdered — the
+    // merge a rollup runs over stored per-shard sketch tables)
+    val wShard = Window.partitionBy(col("shard")).orderBy(col("h"), col("k"))
+    val ps = u.select(col("k"), col("cents"), col("h"),
+        row_number().over(wShard).as("rn"))
+      .filter(col("rn") <= 64).select(col("k"), col("cents"), col("h"))
+    val mg = ps.orderBy(col("h"), col("k")).limit(64)
+      .select(col("k"), col("cents"))
+    // sample ranks by VALUE: 64×64 broadcast rank self-join
+    val sr = mg.as("a")
+      .join(broadcast(mg.select(col("k").as("bk"), col("cents").as("bc"))),
+        col("bc") < col("a.cents") ||
+          (col("bc") === col("a.cents") && col("bk") <= col("a.k")))
+      .groupBy(col("a.cents").as("cents"), col("a.k").as("k"))
+      .agg(count(lit(1)).as("r"))
+    KmvSample(u, n, sr)
+  }
+
+  /** Mergeable quantile sketch audit (r15, VERDICT r14 item 2) — the
+    * sharded-percentile property a 100 TB rollup actually relies on:
+    * percentile STATES built independently per shard must merge into
+    * the same state one pass over the whole table would build.
+    *
+    * The sketch is a KMV (bottom-k by hash order) uniform sample —
+    * the exact-dyadic formulation the verdict asked for: each of 8
+    * shards (o_orderkey mod 8 — stand-in for 8 executors' partials)
+    * keeps its 64 rows of smallest md5-prefix hash; the MERGE is
+    * "bottom-64 of the union", which equals the one-pass global
+    * bottom-64 because bottom-k is associative/commutative/idempotent
+    * under union (the spec pins that equality row-for-row). Quantile
+    * estimate at p = the sample's value at rank ⌊(k−1)·p/100⌋+1 (the
+    * `agg_quantiles_exact` rank convention), graded against the EXACT
+    * percentile from full-table ranks via the shared bucketed
+    * two-pass exclusive-prefix (never an unpartitioned window on the
+    * big side; the ≤512-row merged state ranks through broadcast
+    * self-joins). err_ppm uses the sign-split floor spelling so
+    * Spark `div` and DuckDB `//` agree on every sign. Scale: the
+    * per-shard state is 64 rows regardless of input; only the exact
+    * ground-truth side (the audit's honest cost) touches full-table
+    * ranks. The sample itself (u/ps/mg/sr) is the shared
+    * [[kmvSampleCtes]]/[[kmvSample]] primitive, also consumed by
+    * `shard_plan_from_sketch`. */
+  val sketchQuantileMerge: QDef = q(
+    "sketch_quantile_merge",
+    s"""WITH $kmvSampleCtes,
+      |pct AS (SELECT * FROM (VALUES (25), (50), (75), (90), (99)) AS t(p)),
+      |est AS (
+      |  SELECT p, MAX(CASE WHEN r = (64 - 1) * p // 100 + 1 THEN cents END)
+      |    AS est_cents
+      |  FROM sr CROSS JOIN pct GROUP BY p),
+      |rk AS (
+      |  SELECT cents,
+      |    CAST(row_number() OVER (ORDER BY cents, k) AS BIGINT) AS rank
+      |  FROM u),
+      |ex AS (
+      |  SELECT p, MAX(CASE WHEN rank = (n - 1) * p // 100 + 1 THEN cents END)
+      |    AS exact_cents
+      |  FROM rk CROSS JOIN n CROSS JOIN pct GROUP BY p)
+      |SELECT CAST(p AS BIGINT) AS pct, n.n AS n_rows,
+      |  CAST(64 AS BIGINT) AS sample_k, est_cents, exact_cents,
+      |  est_cents - exact_cents AS err_cents,
+      |  CASE WHEN est_cents >= exact_cents
+      |    THEN CAST((est_cents - exact_cents) * 1000000 // exact_cents
+      |      AS BIGINT)
+      |    ELSE -CAST((exact_cents - est_cents) * 1000000 // exact_cents
+      |      AS BIGINT) END AS err_ppm
+      |FROM est JOIN ex USING (p) CROSS JOIN n
+      |ORDER BY pct""") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val ks = kmvSample(s, d, persistU = true)
+    val u = ks.u; val n = ks.n; val sr = ks.sr
+    import s.implicits._
+    val pcts = Seq(25, 50, 75, 90, 99).toDF("p")
+    val est = sr.crossJoin(broadcast(pcts))
+      .groupBy(col("p"))
+      .agg(max(when(col("r") === expr("(64 - 1) * p div 100 + 1"),
+        col("cents"))).as("est_cents"))
+    // exact side: full-table ranks via the shared bucketed two-pass
+    // exclusive-prefix (shard_range_boundaries' machinery)
+    val xc = u.groupBy(col("cents").as("v")).agg(count(lit(1)).as("cnt"))
+    val pre = DriftOps.exclusivePrefix(xc, expr("v div 10000000"))
+      .select(col("v"), col("pre"))
+    val wTie = Window.partitionBy(col("cents")).orderBy(col("k"))
+    val rk = u.join(pre, col("v") === col("cents"))
+      .select(col("cents"), (col("pre") + row_number().over(wTie)).as("rank"))
+    val ex = rk.crossJoin(broadcast(n)).crossJoin(broadcast(pcts))
+      .groupBy(col("p").as("ep"))
+      .agg(max(when(col("rank") === expr("(n - 1) * p div 100 + 1"),
+        col("cents"))).as("exact_cents"))
+    est.join(broadcast(ex), col("p") === col("ep"))
+      .crossJoin(broadcast(n))
+      .select(col("p").cast(LongType).as("pct"), col("n").as("n_rows"),
+        lit(64L).as("sample_k"), col("est_cents"), col("exact_cents"),
+        (col("est_cents") - col("exact_cents")).as("err_cents"),
+        when(col("est_cents") >= col("exact_cents"),
+          expr("CAST((est_cents - exact_cents) * 1000000 div exact_cents" +
+            " AS BIGINT)"))
+          .otherwise(-expr("CAST((exact_cents - est_cents) * 1000000" +
+            " div exact_cents AS BIGINT)")).as("err_ppm"))
+      .orderBy(col("pct"))
+  }
+
+  /** Mergeable heavy-hitters audit (r15) — the frequent-items leg of
+    * the sketch-merge family: per-shard top-8 token candidate lists
+    * (the Misra-Gries/SpaceSaving summary's exact-spellable core)
+    * merged by candidate-set union, then audited against the exact
+    * global top-8. The pigeonhole guarantee this grades: any token
+    * with global count > N_shard_max·8 must enter at least one
+    * shard's top-8, so a merged candidate set can only miss tail
+    * items — `found_by_merge` is the per-rank witness and
+    * `n_candidates` the merged state's size (≤64 rows regardless of
+    * corpus size; the exact global count side is the audit's honest
+    * cost, not the production path). Ties break by token text in both
+    * engines. */
+  val sketchHeavyHittersMerge: QDef = q(
+    "sketch_heavy_hitters_merge",
+    """WITH tok AS (
+      |  SELECT doc_id % 8 AS shard, tok FROM (
+      |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+      |    FROM documents)),
+      |sc AS (
+      |  SELECT shard, tok, CAST(COUNT(*) AS BIGINT) AS cnt
+      |  FROM tok GROUP BY shard, tok),
+      |cand AS (
+      |  SELECT DISTINCT tok FROM (
+      |    SELECT tok,
+      |      row_number() OVER (PARTITION BY shard ORDER BY cnt DESC, tok)
+      |        AS rn
+      |    FROM sc) WHERE rn <= 8),
+      |nc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
+      |gc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
+      |  FROM tok GROUP BY tok),
+      |top8 AS (SELECT tok, cnt FROM gc ORDER BY cnt DESC, tok LIMIT 8),
+      |rt AS (
+      |  SELECT a.tok, a.cnt, CAST(COUNT(*) AS BIGINT) AS rank
+      |  FROM top8 a JOIN top8 b
+      |    ON b.cnt > a.cnt OR (b.cnt = a.cnt AND b.tok <= a.tok)
+      |  GROUP BY a.tok, a.cnt)
+      |SELECT rt.rank, rt.tok, rt.cnt,
+      |  cand.tok IS NOT NULL AS found_by_merge, nc.n_candidates
+      |FROM rt LEFT JOIN cand ON cand.tok = rt.tok CROSS JOIN nc
+      |ORDER BY rt.rank""") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val tok = Tables.documents(s, d)
+      .select(expr("doc_id % 8").as("shard"),
+        explode(split(col("text"), " ")).as("tok"))
+    val sc = tok.groupBy(col("shard"), col("tok"))
+      .agg(count(lit(1)).as("cnt"))
+    val wShard = Window.partitionBy(col("shard"))
+      .orderBy(col("cnt").desc, col("tok"))
+    val cand = sc.select(col("tok"), row_number().over(wShard).as("rn"))
+      .filter(col("rn") <= 8).select(col("tok")).distinct()
+    val nc = cand.agg(count(lit(1)).as("n_candidates"))
+    val gc = tok.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+    val top8 = gc.orderBy(col("cnt").desc, col("tok")).limit(8)
+    val rt = top8.as("a")
+      .join(broadcast(top8.select(col("tok").as("bt"), col("cnt").as("bc"))),
+        col("bc") > col("a.cnt") ||
+          (col("bc") === col("a.cnt") && col("bt") <= col("a.tok")))
+      .groupBy(col("a.tok").as("tok"), col("a.cnt").as("cnt"))
+      .agg(count(lit(1)).as("rank"))
+    rt.join(broadcast(cand.select(col("tok").as("ct"))),
+        col("tok") === col("ct"), "left")
+      .crossJoin(broadcast(nc))
+      .select(col("rank"), col("tok"), col("cnt"),
+        col("ct").isNotNull.as("found_by_merge"), col("n_candidates"))
+      .orderBy(col("rank"))
+  }
+
+  /** Mergeable Bloom-filter states (r16) — the third sketch-merge leg
+    * after quantiles and heavy hitters: `sketch_bloom_fpr` grades the
+    * filter's FPR as a sparse bit-position set; THIS key grades the
+    * PACKED-WORD register representation a 100 TB rollup ships — 1024
+    * BIGINT words × 63 bits (the sign bit never set), 3 md5-derived
+    * hashes per key, per-shard filter = BIT_OR of element words,
+    * merged filter = BIT_OR over the 8 shard states. The graded
+    * witness: every word's shard-merged value EQUALS the one-pass
+    * value (BIT_OR associativity/commutativity/idempotence — the
+    * exact-spellable merge property), plus per-word popcounts and the
+    * number of shard states contributing. Fixed-width state (≤1024
+    * rows per shard) regardless of corpus size. */
+  val sketchBloomMerge: QDef = q(
+    "sketch_bloom_merge",
+    """WITH el AS (SELECT DISTINCT o_custkey AS k FROM orders),
+      |js AS (SELECT unnest([0, 1, 2]) AS j),
+      |hs AS (
+      |  SELECT k, k % 8 AS shard,
+      |    CAST(('0x' || substr(md5(CAST(k AS VARCHAR) || '#'
+      |      || CAST(j AS VARCHAR)), 1, 8))::BIGINT % 64512 AS BIGINT) AS h
+      |  FROM el CROSS JOIN js),
+      |sf AS (
+      |  SELECT shard, h // 63 AS w,
+      |    bit_or(CAST(1 AS BIGINT) << CAST(h % 63 AS INT)) AS bits
+      |  FROM hs GROUP BY shard, h // 63),
+      |mg AS (
+      |  SELECT w, bit_or(bits) AS merged,
+      |    CAST(COUNT(*) AS BIGINT) AS n_shard_states
+      |  FROM sf GROUP BY w),
+      |op AS (
+      |  SELECT h // 63 AS w,
+      |    bit_or(CAST(1 AS BIGINT) << CAST(h % 63 AS INT)) AS onepass
+      |  FROM hs GROUP BY h // 63)
+      |SELECT mg.w AS word_idx, merged,
+      |  CAST(bit_count(merged) AS BIGINT) AS bits_set,
+      |  n_shard_states, merged = onepass AS merge_equals_onepass
+      |FROM mg JOIN op ON op.w = mg.w
+      |ORDER BY word_idx""") { (s, d) =>
+    val el = Tables.orders(s, d).select(col("o_custkey").as("k")).distinct()
+    val js = s.range(3).select(col("id").cast(IntegerType).as("j"))
+    val hs = el.crossJoin(broadcast(js))
+      .select(col("k"), expr("k % 8").as("shard"),
+        expr("CAST(conv(substring(md5(CAST(k AS STRING) || '#'"
+          + " || CAST(j AS STRING)), 1, 8), 16, 10) % 64512 AS BIGINT)")
+          .as("h"))
+    val sf = hs.groupBy(col("shard"), expr("h div 63").as("w"))
+      .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), CAST(h % 63 AS INT))"))
+        .as("bits"))
+    val mg = sf.groupBy(col("w"))
+      .agg(bit_or(col("bits")).as("merged"),
+        count(lit(1)).as("n_shard_states"))
+    val op = hs.groupBy(expr("h div 63").as("ow"))
+      .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), CAST(h % 63 AS INT))"))
+        .as("onepass"))
+    mg.join(op, col("ow") === col("w"))
+      .select(col("w").as("word_idx"), col("merged"),
+        bit_count(col("merged")).cast(LongType).as("bits_set"),
+        col("n_shard_states"),
+        (col("merged") === col("onepass")).as("merge_equals_onepass"))
+      .orderBy(col("word_idx"))
+  }
+
+  /** AMS F₂ sketch audit (r18b) — the Alon–Matias–Szegedy second
+    * moment (= self-join size on l_partkey) estimated with 16
+    * deterministic md5 ±1 hash functions next to the exact
+    * Σ freq²: Z_j = Σ_v s_j(v)·freq_v folds in ONE pass (16× via a
+    * broadcast j cross join), estimates are Z_j², and the graded
+    * summary is the textbook median-of-means (4 groups of 4, the
+    * 4-row median via a broadcast rank self-join — no unpartitioned
+    * window) with its signed error vs truth. EVERYTHING integer:
+    * signs from one md5 hex parity, Z bounded by row count. The
+    * sketch a join-size planner merges across shards at 100 TB —
+    * constant state per hash function. */
+  val sketchAmsF2: QDef = q(
+    "sketch_ams_f2",
+    """WITH f AS (
+      |  SELECT l_partkey AS v, CAST(COUNT(*) AS BIGINT) AS c
+      |  FROM lineitem GROUP BY 1),
+      |ex AS (SELECT CAST(SUM(CAST(c AS HUGEINT) * c) AS BIGINT) AS f2
+      |  FROM f),
+      |js AS (SELECT CAST(unnest(range(0, 16)) AS BIGINT) AS j),
+      |z AS (
+      |  SELECT js.j,
+      |    CAST(SUM(CASE WHEN ('0x' || substr(md5(CAST(js.j AS VARCHAR)
+      |      || ':' || CAST(f.v AS VARCHAR)), 1, 1))::INT % 2 = 0
+      |      THEN f.c ELSE -f.c END) AS BIGINT) AS zj
+      |  FROM f CROSS JOIN js GROUP BY 1),
+      |e AS (SELECT j, CAST(zj AS HUGEINT) * zj AS est, j // 4 AS grp
+      |  FROM z),
+      |gm AS (SELECT grp, CAST(SUM(est) // 4 AS BIGINT) AS mean_est
+      |  FROM e GROUP BY grp),
+      |rk AS (
+      |  SELECT a.grp, a.mean_est,
+      |    CAST(1 + COUNT(b.grp) AS BIGINT) AS rn
+      |  FROM gm a LEFT JOIN gm b ON b.mean_est < a.mean_est
+      |    OR (b.mean_est = a.mean_est AND b.grp < a.grp)
+      |  GROUP BY a.grp, a.mean_est),
+      |med AS (SELECT CAST(SUM(CASE WHEN rn IN (2, 3) THEN mean_est
+      |  ELSE 0 END) // 2 AS BIGINT) AS mom FROM rk),
+      |mn AS (SELECT CAST(SUM(est) // 16 AS BIGINT) AS mean16 FROM e)
+      |SELECT ex.f2 AS exact_f2, mn.mean16 AS mean_est,
+      |  med.mom AS median_of_means,
+      |  CAST((med.mom - ex.f2) * 1000000 // ex.f2 AS BIGINT) AS err_ppm
+      |FROM ex CROSS JOIN med CROSS JOIN mn""") { (s, d) =>
+    import s.implicits._
+    val f = Tables.lineitem(s, d)
+      .groupBy(col("l_partkey").as("v")).agg(count(lit(1)).as("c"))
+    val ex = f.agg(sum(col("c").cast(DriftOps.dec) * col("c")).cast(LongType)
+      .as("f2"))
+    val js = (0L until 16L).toDF("j")
+    val z = f.crossJoin(broadcast(js))
+      .groupBy(col("j"))
+      .agg(sum(when(conv(substring(md5(concat(col("j").cast(StringType),
+          lit(":"), col("v").cast(StringType))), 1, 1), 16, 10)
+          .cast(IntegerType) % 2 === 0, col("c"))
+        .otherwise(-col("c"))).as("zj"))
+    val e = z.select(col("j"), (col("zj").cast(DriftOps.dec) * col("zj")).as("est"),
+      expr("j div 4").as("grp")).persist()
+    val gm = e.groupBy(col("grp"))
+      .agg(expr("CAST(SUM(est) div 4 AS BIGINT)").as("mean_est"))
+    val rk = gm.as("a")
+      .join(broadcast(gm.select(col("grp").as("b_grp"),
+          col("mean_est").as("b_me"))),
+        col("b_me") < col("a.mean_est") ||
+          (col("b_me") === col("a.mean_est") &&
+            col("b_grp") < col("a.grp")), "left")
+      .groupBy(col("a.grp").as("grp"), col("a.mean_est").as("mean_est"))
+      .agg((lit(1L) + count(col("b_grp"))).as("rn"))
+    val med = rk.agg(expr("CAST(SUM(CASE WHEN rn IN (2, 3) THEN mean_est"
+      + " ELSE 0 END) div 2 AS BIGINT)").as("mom"))
+    val mn = e.agg(expr("CAST(SUM(est) div 16 AS BIGINT)").as("mean16"))
+    ex.crossJoin(broadcast(med)).crossJoin(broadcast(mn))
+      .select(col("f2").as("exact_f2"), col("mean16").as("mean_est"),
+        col("mom").as("median_of_means"),
+        expr("(mom - f2) * 1000000 div f2").as("err_ppm"))
+  }
+
   val all: Seq[QDef] = Seq(sketchCountminFreq, sketchBloomFpr,
     sketchHllLinear, sketchCmsJoinForecast, sketchHllRegisters,
-    sketchKmvDistinct, sketchHllMerge, sketchKmvIntersection)
+    sketchKmvDistinct, sketchHllMerge, sketchKmvIntersection,
+    sketchQuantileMerge, sketchHeavyHittersMerge, sketchBloomMerge, sketchAmsF2)
 }

@@ -425,9 +425,50 @@ object Streaming {
       .orderBy(col("win_start"))
   }
 
+  /** Stream-static enrichment, graded batch twin (r14e) — the
+    * codebook-lookup join of streaming pipelines: the events fact
+    * LEFT-broadcast-joins the customer→nation dimension (orphan
+    * user_ids — the fixture's real cross-domain gap — map to
+    * 'unknown' instead of dropping), then hourly tumbling windows per
+    * nation. The streaming execution is
+    * `graft.streaming.StreamOps.enrichWithDim` (dim re-read and
+    * re-broadcast per micro-batch — Spark's stream-static join
+    * contract), MemoryStream-covered in StreamOpsSpec; this batch
+    * twin is what the oracle grades, per the §2.9 convention. Scale:
+    * dim is nation-wide-per-customer (broadcast at graded scale, SMJ
+    * beyond); the window agg carries (hour × nation) combined
+    * partials. */
+  val streamStaticEnrich: QDef = q(
+    "stream_static_enrich",
+    """WITH dim AS (
+      |  SELECT c_custkey AS user_id, n_name
+      |  FROM customer JOIN nation ON c_nationkey = n_nationkey),
+      |e AS (
+      |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start,
+      |    COALESCE(d.n_name, 'unknown') AS nation, value
+      |  FROM events ev LEFT JOIN dim d ON ev.user_id = d.user_id)
+      |SELECT w_start, nation, CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
+      |FROM e GROUP BY 1, 2
+      |ORDER BY w_start, nation""") { (s, d) =>
+    val dim = Tables.customer(s, d)
+      .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
+      .select(col("c_custkey").as("dim_user"), col("n_name"))
+    graft.streaming.StreamOps
+      .enrichWithDim(Tables.events(s, d)
+          .withColumnRenamed("user_id", "dim_user"), dim, "dim_user")
+      .groupBy(window(col("ts"), "1 hour"),
+        coalesce(col("n_name"), lit("unknown")).as("nation"))
+      .agg(count(lit(1)).as("n"), graft.Protocol.sumMoney(col("value")).as("sum_value"))
+      .select(col("window.start").as("w_start"), col("nation"), col("n"),
+        col("sum_value"))
+      .orderBy(col("w_start"), col("nation"))
+  }
+
   val all: Seq[QDef] = Seq(
     streamTumblingCounts, streamSlidingWindows,
     streamSessionWindows, streamDedupKeyed, streamIntervalJoin,
     streamTopkWindowed, streamRateAlert, streamCustomSessions,
-    streamLateDropAudit, streamTumblingDistinct, streamWindowedMedian)
+    streamLateDropAudit, streamTumblingDistinct, streamWindowedMedian,
+    streamStaticEnrich)
 }

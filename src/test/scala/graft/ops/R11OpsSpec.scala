@@ -19,24 +19,8 @@ class R11OpsSpec extends SparkSpec {
     "multimodal_frame_sample")
 
   test("every r11 key is partition-count invariant (the 100 TB correctness property)") {
-    // The oracle certifies one partitioning; this certifies ALL of
-    // them — a key whose answer moved with spark.sql.shuffle.partitions
-    // would be wrong on a cluster even while hash-matching locally.
-    // session-LOCAL width override via newSession (r13): no shared-conf
-    // mutation, so suites can run in parallel without racing it.
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      r11Keys.map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    r11Keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, r11Keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("fn_bitwise: every op recomputes in plain JVM long arithmetic") {

@@ -17,21 +17,8 @@ class R12eOpsSpec extends SparkSpec {
     Seq("stats_ks_test", "vocab_coverage_curve", "dq_benford_digits")
 
   test("every r12e key is partition-count invariant (the 100 TB correctness property)") {
-    // session-LOCAL width override via newSession (r13): no shared-conf
-    // mutation, so suites can run in parallel without racing it.
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      keys.map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("stats_ks_test: D recomputes from a driver-side exact ECDF walk") {

@@ -16,21 +16,8 @@ class R12mOpsSpec extends SparkSpec {
     Seq("sim_pq_codes", "source_parquet_nested", "vocab_char_coverage")
 
   test("every r12m key is partition-count invariant (the 100 TB correctness property)") {
-    // session-LOCAL width override via newSession (r13): no shared-conf
-    // mutation, so suites can run in parallel without racing it.
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      keys.map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("sim_pq_codes: assignments recompute from a driver-side codebook walk") {

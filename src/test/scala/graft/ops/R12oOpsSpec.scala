@@ -16,21 +16,8 @@ class R12oOpsSpec extends SparkSpec {
     "source_json_corrupt_audit")
 
   test("every r12o key is partition-count invariant (the 100 TB correctness property)") {
-    // session-LOCAL width override via newSession (r13): no shared-conf
-    // mutation, so suites can run in parallel without racing it.
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      keys.map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("report_split_shipment: rate recomputes from a driver-side order walk") {

@@ -22,25 +22,12 @@ class R13OpsSpec extends SparkSpec {
     "curation_rule_overlap", "mix_dedup_adjusted")
 
   test("every r13 key is partition-count invariant (the 100 TB correctness property)") {
-    // session-LOCAL width override via newSession (r13): no shared-conf
-    // mutation, so suites can run in parallel without racing it.
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      keys.map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("dq_referential_orphans: orphan counts recompute from key sets") {
-    val rows = R13Ops.dqReferentialOrphans.run(spark, sf).collect()
+    val rows = Sampling.dqReferentialOrphans.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     def keysOf(df: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
       df.select(col(c).cast("long")).collect().map(r =>
@@ -65,7 +52,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("text_hapax_ratio: tail counts recompute from a token multiset") {
-    val rows = R13Ops.textHapaxRatio.run(spark, sf).collect()
+    val rows = CorpusOps.textHapaxRatio.run(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     val docs = Tables.documents(spark, sf)
@@ -84,7 +71,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("vocab_token_len_histogram: buckets recompute and permilles sum sanely") {
-    val rows = R13Ops.vocabTokenLenHistogram.run(spark, sf).collect()
+    val rows = CorpusOps.vocabTokenLenHistogram.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
     val docs = Tables.documents(spark, sf)
       .select(col("lang"), col("text")).collect()
@@ -108,7 +95,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("multimodal_keyframe_budget: each source hands out exactly 1000 frames") {
-    val rows = R13Ops.multimodalKeyframeBudget.run(spark, sf).collect()
+    val rows = LlmPipeline.multimodalKeyframeBudget.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val bySource = rows.groupBy(_._2)
     bySource.foreach { case (src, ds) =>
@@ -132,7 +119,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("events_bounce_rate: bounce sessions recompute from a driver-side sessionizer") {
-    val rows = R13Ops.eventsBounceRate.run(spark, sf).collect()
+    val rows = EventAnalytics.eventsBounceRate.run(spark, sf).collect()
       .map(r => r.getDate(0).toString -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val events = Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"),
@@ -166,7 +153,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("cohort_retention_triangle: age-0 is always full retention and shares recompute") {
-    val rows = R13Ops.cohortRetentionTriangle.run(spark, sf).collect()
+    val rows = EventAnalytics.cohortRetentionTriangle.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     val weeks = Tables.events(spark, sf)
@@ -188,7 +175,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("report_lorenz_deciles: the curve is a valid ascending Lorenz curve") {
-    val rows = R13Ops.reportLorenzDeciles.run(spark, sf).collect()
+    val rows = Aggregates.reportLorenzDeciles.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1)
     val nCust = Tables.orders(spark, sf).select("o_custkey").distinct().count()
@@ -206,7 +193,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("graph_modularity_nations: degree and edge conservation hold") {
-    val rows = R13Ops.graphModularityNations.run(spark, sf).collect()
+    val rows = ClusterOps.graphModularityNations.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val m = Tables.lineitem(spark, sf).count()
     assert(rows.map(_._3).sum == 2 * m, "sum of degrees is twice the edge count")
@@ -217,7 +204,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("sim_centroid_classifier: the confusion matrix recomputes exactly") {
-    val rows = R13Ops.simCentroidClassifier.run(spark, sf).collect()
+    val rows = LlmExtras.simCentroidClassifier.run(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     val vecs = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
@@ -242,7 +229,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("corpus_vocab_growth: the curve is monotone and ends at the full corpus") {
-    val rows = R13Ops.corpusVocabGrowth.run(spark, sf).collect()
+    val rows = CorpusOps.corpusVocabGrowth.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(rows.map(_._1).toSeq == (1L to 10L).toSeq)
     rows.sliding(2).foreach { pr =>
@@ -257,7 +244,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("drift_value_psi: terms recompute and the index is nonnegative-summing") {
-    val rows = R13Ops.driftValuePsi.run(spark, sf).collect()
+    val rows = DriftOps.driftValuePsi.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
     val nOrders = Tables.orders(spark, sf).count()
@@ -278,7 +265,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("curation_rule_overlap: the matrix is symmetric with consistent diagonals") {
-    val rows = R13Ops.curationRuleOverlap.run(spark, sf).collect()
+    val rows = PipelineOps.curationRuleOverlap.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     rows.foreach { case ((a, b), n) =>
       assert(rows((b, a)) == n, s"($a,$b) symmetric")
@@ -297,7 +284,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("mix_dedup_adjusted: weights renormalize over global survivors") {
-    val rows = R13Ops.mixDedupAdjusted.run(spark, sf).collect()
+    val rows = PipelineOps.mixDedupAdjusted.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("source"), col("text")).collect()
@@ -316,7 +303,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("report_ship_lag_histogram: buckets cover every line item exactly once") {
-    val rows = R13Ops.reportShipLagHistogram.run(spark, sf).collect()
+    val rows = Aggregates.reportShipLagHistogram.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val nLi = Tables.lineitem(spark, sf).count()
     assert(rows.map(_._2).sum == nLi)

@@ -18,20 +18,20 @@ class R14OpsSpec extends SparkSpec {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  private val keys = Seq(
+    "dedup_incremental_snapshot", "tokenizer_bpe_merges",
+    "agg_incremental_merge", "multimodal_av_align",
+    "text_perplexity_heldout", "profile_split_drift",
+    "shard_range_boundaries", "dq_functional_dependency",
+    "eval_retrieval_mrr", "stream_static_enrich",
+    "corpus_dedup_impact_curve", "win_time_weighted_avg",
+    "embed_chunk_mean_pool", "mix_anneal_two_phase",
+    "events_alert_storm_suppression", "dq_value_set_conformance",
+    "vocab_subword_fertility", "report_contribution_waterfall")
+
   test("r14 keys are partition-count invariant (the 100 TB correctness property)") {
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      R14Ops.all.map(_.key).map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    a.keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("dedup_incremental_snapshot matches a full driver-side recomputation") {
@@ -86,7 +86,7 @@ class R14OpsSpec extends SparkSpec {
         cls.count(c => !c.ep && !c.ia && c.nd).toLong,
         cls.count(c => !c.ep && !c.ia && !c.nd).toLong)
     }
-    val got = R14Ops.dedupIncrementalSnapshot.run(spark, sf).collect()
+    val got = LlmExtras.dedupIncrementalSnapshot.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(got.keySet == expect.keySet, "source row sets differ")
@@ -115,7 +115,7 @@ class R14OpsSpec extends SparkSpec {
     }
     def top(st: Map[(String, String), (Long, Long)]): ((String, String), (Long, Long)) =
       st.toSeq.sortBy { case ((l, r), (n, _)) => (-n, l, r) }.head
-    val got = R14Ops.tokenizerBpeMerges.run(spark, sf).collect()
+    val got = CorpusOps.tokenizerBpeMerges.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4)))
     assert(got.map(_._1).toSeq == Seq(1L, 2L, 3L), "one row per round, ordered")
@@ -142,7 +142,7 @@ class R14OpsSpec extends SparkSpec {
           .cast(org.apache.spark.sql.types.LongType).as("cents"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     def isPrior(k: Long): Boolean = md5hex(k.toString).head <= '7'
-    val got = R14Ops.aggIncrementalMerge.run(spark, sf).collect()
+    val got = Aggregates.aggIncrementalMerge.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
     val byGrp = orders.groupBy(_._2)
@@ -181,7 +181,7 @@ class R14OpsSpec extends SparkSpec {
         }
       }
     }.sortBy(t => (t._1, t._2))
-    val got = R14Ops.multimodalAvAlign.run(spark, sf).collect()
+    val got = LlmPipeline.multimodalAvAlign.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == expect.toSeq, s"first diff: ${
@@ -216,7 +216,7 @@ class R14OpsSpec extends SparkSpec {
           (xent * 1000000).toLongExact,
           Math.floorDiv((xent * 1000000).toLongExact, nTok))
       }
-    val got = R14Ops.textPerplexityHeldout.run(spark, sf).collect()
+    val got = CorpusOps.textPerplexityHeldout.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got.keySet == expect.keySet)
@@ -237,7 +237,7 @@ class R14OpsSpec extends SparkSpec {
       .groupBy { case (_, i) => i.toLong * 16 / n }
       .map { case (sh, xs) =>
         sh -> (xs.length.toLong, xs.map(_._1._1).min, xs.map(_._1._1).max) }
-    val got = R14Ops.shardRangeBoundaries.run(spark, sf).collect()
+    val got = Sampling.shardRangeBoundaries.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.keySet == expect.keySet)
     expect.foreach { case (k, e) => assert(got(k) == e, s"shard $k: ${got(k)} vs $e") }
@@ -252,7 +252,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("dq_functional_dependency: PKs hold, known violations are counted exactly") {
-    val got = R14Ops.dqFunctionalDependency.run(spark, sf).collect()
+    val got = Sampling.dqFunctionalDependency.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.size == 5)
     // the two true keys must audit clean
@@ -295,7 +295,7 @@ class R14OpsSpec extends SparkSpec {
       lab.toLong -> (xs.length.toLong, xs.map(_._2).sum,
         Math.floorDiv(xs.map(_._2).sum, xs.length.toLong))
     }
-    val got = R14Ops.evalRetrievalMrr.run(spark, sf).collect()
+    val got = LlmExtras.evalRetrievalMrr.run(spark, sf).collect()
       .map(r => r.getInt(0).toLong -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expect.keySet)
@@ -305,7 +305,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("stream_static_enrich: totals conserve events, orphans land in 'unknown'") {
-    val rows = R14Ops.streamStaticEnrich.run(spark, sf).collect()
+    val rows = Streaming.streamStaticEnrich.run(spark, sf).collect()
     val nEvents = Tables.events(spark, sf).count()
     assert(rows.map(_.getLong(2)).sum == nEvents, "every event lands in one cell")
     val known = Tables.customer(spark, sf).select(col("c_custkey")).collect()
@@ -317,7 +317,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("corpus_dedup_impact_curve: monotone in the threshold, consistent with the graded LSH pairs") {
-    val rows = R14Ops.corpusDedupImpactCurve.run(spark, sf).collect()
+    val rows = CorpusOps.corpusDedupImpactCurve.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rows.keySet == Set(50L, 70L, 90L))
     assert(rows(50L)._1 >= rows(70L)._1 && rows(70L)._1 >= rows(90L)._1)
@@ -348,7 +348,7 @@ class R14OpsSpec extends SparkSpec {
         Some(u -> (ivs.length.toLong, span, Math.floorDiv(wsum, span)))
       }
     }
-    val got = R14Ops.winTimeWeightedAvg.run(spark, sf).collect()
+    val got = Windows.winTimeWeightedAvg.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.keySet == expect.keySet)
     expect.foreach { case (u, e) => assert(got(u) == e, s"user $u: ${got(u)} vs $e") }
@@ -371,7 +371,7 @@ class R14OpsSpec extends SparkSpec {
       val cos = dot.toDouble / (math.sqrt(norm2.toDouble) * math.sqrt(ff.toDouble))
       doc -> (n, norm2, cos)
     }
-    val got = R14Ops.embedChunkMeanPool.run(spark, sf).collect()
+    val got = DriftOps.embedChunkMeanPool.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(got.keySet == expect.keySet)
     expect.foreach { case (doc, e) =>
@@ -386,7 +386,7 @@ class R14OpsSpec extends SparkSpec {
     def ntok(t: String): Long = t.split(" ", -1).length.toLong
     def nuniq(t: String): Long = t.split(" ", -1).distinct.length.toLong
     val p2 = docs.filter { case (_, t) => ntok(t) >= 30 && 10 * nuniq(t) >= 4 * ntok(t) }
-    val got = R14Ops.mixAnnealTwoPhase.run(spark, sf).collect()
+    val got = PipelineOps.mixAnnealTwoPhase.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     def expectPhase(ds: Array[(String, String)], phase: Long): Unit = {
@@ -425,7 +425,7 @@ class R14OpsSpec extends SparkSpec {
       tp -> (ts.length.toLong, lens.length.toLong, lens.max,
         (ts.length.toLong - lens.length) * 1000000L / ts.length)
     }
-    val got = R14Ops.eventsAlertStormSuppression.run(spark, sf).collect()
+    val got = EventAnalytics.eventsAlertStormSuppression.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got.keySet == expect.keySet)
@@ -433,7 +433,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("dq_value_set_conformance: clean contracts audit zero, the narrow lang contract counts zh") {
-    val got = R14Ops.dqValueSetConformance.run(spark, sf).collect()
+    val got = Sampling.dqValueSetConformance.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.size == 4)
     assert(got("orders.o_orderpriority")._3 == 0L)
@@ -467,13 +467,13 @@ class R14OpsSpec extends SparkSpec {
       .map { case (seq, wc) => (math.min(seq.trim.split(" ").length.toLong, 15L), wc) }
       .groupBy(_._1).map { case (k, xs) =>
         k -> (xs.length.toLong, xs.map(_._2).sum) }
-    val got = R14Ops.vocabSubwordFertility.run(spark, sf).collect()
+    val got = CorpusOps.vocabSubwordFertility.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expect, s"got $got\nexpected $expect")
   }
 
   test("report_contribution_waterfall: running deltas telescope in bar order") {
-    val rows = R14Ops.reportContributionWaterfall.run(spark, sf).collect()
+    val rows = Aggregates.reportContributionWaterfall.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(rows.length == 25, "one bar per nation")
     // output order IS contribution order, and running is its prefix sum
@@ -506,7 +506,7 @@ class R14OpsSpec extends SparkSpec {
       k -> (vs.length.toLong, 0L, vs.sum, vs.min, vs.max,
         Math.floorDiv(vs.sum * 1000, vs.length.toLong))
     }
-    val got = R14Ops.profileSplitDrift.run(spark, sf).collect()
+    val got = Sampling.profileSplitDrift.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
     assert(got.keySet == expect.keySet)

@@ -28,20 +28,20 @@ class R15OpsSpec extends SparkSpec {
     Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice"))
       .collect().map(r => (r.getLong(0), cents(r.getDouble(1))))
 
+  private val keys = Seq(
+    "sketch_quantile_merge", "sketch_heavy_hitters_merge",
+    "q9_product_profit", "q21_waiting_suppliers", "privacy_k_anonymity",
+    "privacy_l_diversity", "ab_srm_check", "stats_anova_f",
+    "eval_calibration_bins", "win_cumulative_reset",
+    "events_session_gap_sweep", "privacy_generalization_ladder",
+    "multimodal_pyramid_plan", "report_discount_whatif",
+    "eval_dedup_pr_curve", "ops_capacity_backlog", "stats_levene_bf",
+    "shard_plan_from_sketch", "dq_table_checksum", "fn_xml_parse",
+    "fn_variant_json")
+
   test("r15 keys are partition-count invariant (the 100 TB correctness property)") {
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      R15Ops.all.map(_.key).map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    a.keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("sketch_quantile_merge: merged state EQUALS the one-pass state, " +
@@ -62,7 +62,7 @@ class R15OpsSpec extends SparkSpec {
     val exactSorted = ordersRows.map { case (k, c) => (c, k) }
       .sortBy(identity).map(_._1)
     val n = exactSorted.length
-    val got = R15Ops.sketchQuantileMerge.run(spark, sf).collect()
+    val got = SketchOps.sketchQuantileMerge.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3), r.getLong(4)))
       .toMap
     assert(got.keySet == Set(25L, 50L, 75L, 90L, 99L))
@@ -87,7 +87,7 @@ class R15OpsSpec extends SparkSpec {
       sh.groupBy(_._2).map { case (t, xs) => t -> xs.length.toLong }
         .toSeq.sortBy { case (t, c) => (-c, t) }.take(8).map(_._1)
     }.toSet
-    val got = R15Ops.sketchHeavyHittersMerge.run(spark, sf).collect()
+    val got = SketchOps.sketchHeavyHittersMerge.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getBoolean(3),
         r.getLong(4)))
     assert(got.length == 8)
@@ -130,7 +130,7 @@ class R15OpsSpec extends SparkSpec {
       }.sum
       k -> (profit.toDouble, rs.length.toLong)
     }
-    val got = R15Ops.q9ProductProfit.run(spark, sf).collect()
+    val got = Joins.q9ProductProfit.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expect.keySet)
@@ -162,7 +162,7 @@ class R15OpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val expect = counted.groupBy(_._2)
       .map { case (sk, rs) => sName(sk) -> rs.length.toLong }
-    val got = R15Ops.q21WaitingSuppliers.run(spark, sf).collect()
+    val got = Joins.q21WaitingSuppliers.run(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(got == expect)
   }
@@ -173,7 +173,7 @@ class R15OpsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getInt(0), r.getString(1), cents(r.getDouble(2)) / 100000))
     val sizes = rows.groupBy(identity).values.map(_.length.toLong).toSeq
-    val got = R15Ops.privacyKAnonymity.run(spark, sf).collect()
+    val got = PrivacyOps.privacyKAnonymity.run(spark, sf).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
@@ -201,7 +201,7 @@ class R15OpsSpec extends SparkSpec {
       .map(g => (g.map(_._2).distinct.length.toLong, g.length.toLong))
       .groupBy(_._1)
       .map { case (l, gs) => l -> (gs.size.toLong, gs.map(_._2).sum) }
-    val got = R15Ops.privacyLDiversity.run(spark, sf).collect()
+    val got = PrivacyOps.privacyLDiversity.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expect)
   }
@@ -212,7 +212,7 @@ class R15OpsSpec extends SparkSpec {
     val a = users.count(u => md5hex(u.toString).head <= '7').toLong
     val n = users.length.toLong
     val chi2 = (2 * a - n) * (2 * a - n) * 1000000L / n
-    val got = R15Ops.abSrmCheck.run(spark, sf).collect()
+    val got = EventAnalytics.abSrmCheck.run(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
     assert(got("A") == (a, n, chi2, chi2 > 3841459L))
@@ -240,7 +240,7 @@ class R15OpsSpec extends SparkSpec {
     val ssb = (sb - fdiv(t * t * 1000, BigInt(n))).max(BigInt(0))
     val fPpm = ssb * BigInt(n - k) * 1000000 / (ssw * BigInt(k - 1))
     val eta2 = ssb * 1000000 / (ssb + ssw)
-    val r = R15Ops.statsAnovaF.run(spark, sf).collect().head
+    val r = DriftOps.statsAnovaF.run(spark, sf).collect().head
     assert((r.getLong(0), r.getLong(1)) == (k.toLong, n.toLong))
     assert(r.getLong(2) == ssw.toLong && r.getLong(3) == ssb.toLong)
     assert(r.getLong(4) == fPpm.toLong && r.getLong(5) == eta2.toLong)
@@ -265,7 +265,7 @@ class R15OpsSpec extends SparkSpec {
       bin -> (nb, sp / nb, sy * 1000000L / nb,
         sp / nb - sy * 1000000L / nb, brier / nb)
     }
-    val got = R15Ops.evalCalibrationBins.run(spark, sf).collect()
+    val got = LlmExtras.evalCalibrationBins.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
@@ -291,7 +291,7 @@ class R15OpsSpec extends SparkSpec {
         out
       }
     }.map(t => t._1 -> (t._2, t._3, t._4)).toMap
-    val got = R15Ops.winCumulativeReset.run(spark, sf).collect()
+    val got = Windows.winCumulativeReset.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expect)
@@ -313,7 +313,7 @@ class R15OpsSpec extends SparkSpec {
     val expect = levels.groupBy(identity).map { case (l, v) =>
       l -> (v.length.toLong, v.length.toLong * 1000000L / rows.length)
     }
-    val got = R15Ops.privacyGeneralizationLadder.run(spark, sf).collect()
+    val got = PrivacyOps.privacyGeneralizationLadder.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expect)
     assert(got.values.map(_._1).sum == rows.length.toLong)
@@ -321,7 +321,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("multimodal_pyramid_plan matches a ceil-halving simulation for " +
       "every image") {
-    val got = R15Ops.multimodalPyramidPlan.run(spark, sf).collect()
+    val got = LlmPipeline.multimodalPyramidPlan.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     val docs = Tables.documents(spark, sf).select(col("doc_id")).collect()
@@ -355,7 +355,7 @@ class R15OpsSpec extends SparkSpec {
     val li = Tables.lineitem(spark, sf)
       .select(col("l_extendedprice"), col("l_discount")).collect()
       .map(r => (d2(r.getDouble(0)), d2(r.getDouble(1))))
-    val got = R15Ops.reportDiscountWhatif.run(spark, sf).collect()
+    val got = Aggregates.reportDiscountWhatif.run(spark, sf).collect()
       .map(r => r.getLong(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
     val actual = li.map { case (p, dd) => p * (BigDecimal(1) - dd) }.sum
@@ -407,7 +407,7 @@ class R15OpsSpec extends SparkSpec {
       (sa.intersect(sb).size.toDouble / sa.union(sb).size,
         pfxOf(a) == pfxOf(b))
     }
-    val got = R15Ops.evalDedupPrCurve.run(spark, sf).collect()
+    val got = LlmExtras.evalDedupPrCurve.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toMap
     got.keys.foreach { t =>
@@ -428,7 +428,7 @@ class R15OpsSpec extends SparkSpec {
       .select(year(col("o_orderdate")).cast("int"),
         col("o_orderdate").cast("date")).collect()
       .map(r => (r.getInt(0), r.getDate(1).toLocalDate))
-    val got = R15Ops.opsCapacityBacklog.run(spark, sf).collect()
+    val got = DriftOps.opsCapacityBacklog.run(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val byYear = arr.groupBy(_._1)
@@ -480,7 +480,7 @@ class R15OpsSpec extends SparkSpec {
     }.sum
     val ssb = (sb - t * t * 1000 / BigInt(n)).max(BigInt(0))
     val fPpm = ssb * BigInt(n - k) * 1000000 / (ssw * BigInt(k - 1))
-    val r = R15Ops.statsLeveneBf.run(spark, sf).collect().head
+    val r = DriftOps.statsLeveneBf.run(spark, sf).collect().head
     assert((r.getLong(0), r.getLong(1)) == (k.toLong, n.toLong))
     assert(r.getLong(2) == ssw.toLong && r.getLong(3) == ssb.toLong)
     assert(r.getLong(4) == fPpm.toLong)
@@ -503,7 +503,7 @@ class R15OpsSpec extends SparkSpec {
         sh.toLong -> (rs.length.toLong, rs.map(_._2).min, rs.map(_._2).max)
       }
     val n = ordersRows.length.toLong
-    val got = R15Ops.shardPlanFromSketch.run(spark, sf).collect()
+    val got = Sampling.shardPlanFromSketch.run(spark, sf).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
@@ -538,7 +538,7 @@ class R15OpsSpec extends SparkSpec {
       .map(r => h15(s"${r.getLong(0)}|${r.getString(1)}|${r.getInt(2)}"))
     def sumMod(hs: Array[Long]): Long =
       (hs.map(BigInt(_)).sum mod P).toLong
-    val got = R15Ops.dqTableChecksum.run(spark, sf).collect()
+    val got = Sampling.dqTableChecksum.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got("orders") == (orders.length.toLong, sumMod(orders)))
     assert(got("customer") == (cust.length.toLong, sumMod(cust)))
@@ -558,7 +558,7 @@ class R15OpsSpec extends SparkSpec {
       .map { case (p, rs) =>
         p -> (rs.length.toLong, rs.map(_._2).sum, rs.map(_._3).sum)
       }
-    val got = R15Ops.fnXmlParse.run(spark, sf).collect()
+    val got = Functions.fnXmlParse.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expect)
@@ -581,7 +581,7 @@ class R15OpsSpec extends SparkSpec {
         t -> (rs.length.toLong, rs.map(_._2).sum, rs.map(_._2).min,
           rs.map(_._2).max)
       }
-    val got = R15Ops.fnVariantJson.run(spark, sf).collect()
+    val got = Functions.fnVariantJson.run(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expect)
@@ -606,7 +606,7 @@ class R15OpsSpec extends SparkSpec {
       }
       (sessions, singles)
     }
-    val got = R15Ops.eventsSessionGapSweep.run(spark, sf).collect()
+    val got = EventAnalytics.eventsSessionGapSweep.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     val n = evs.length.toLong

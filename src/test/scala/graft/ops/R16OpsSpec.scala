@@ -47,20 +47,20 @@ class R16OpsSpec extends SparkSpec {
     Tables.documents(spark, sf).select(col("doc_id"))
       .collect().map(_.getLong(0)).toSeq
 
+  private val keys = Seq(
+    "dedup_cluster_incremental", "stats_welch_t", "ab_power_sample_size",
+    "win_rolling_corr", "sketch_bloom_merge", "privacy_contribution_capping",
+    "split_time_based", "eval_ndcg_at10", "dq_iqr_outliers",
+    "graph_local_clustering", "report_seasonality_index",
+    "events_markov_stationary", "sim_mips_topk", "join_spatial_grid",
+    "stats_prop_ztest", "ts_acf_lags", "fn_hash_digests",
+    "layout_clustering_depth", "source_parquet_bloom",
+    "embed_matryoshka_truncation", "eval_cohens_kappa",
+    "dq_embedding_coverage", "ts_seasonal_strength", "profile_column_matrix")
+
   test("r16 keys are partition-count invariant (the 100 TB correctness property)") {
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      R16Ops.all.map(_.key).map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    a.keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("dedup_cluster_incremental: union-find replay of BOTH maps " +

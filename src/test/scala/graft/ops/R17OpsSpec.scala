@@ -68,20 +68,19 @@ class R17OpsSpec extends SparkSpec {
   private def bandsOf(sig: Array[String]): Seq[(Int, String)] =
     (0 until 4).map(b => b -> s"${sig(2 * b)}|${sig(2 * b + 1)}")
 
+  private val keys = Seq(
+    "dedup_signature_store_roundtrip", "eval_rrf_fusion", "eval_auc_roc",
+    "eval_map_at_k", "stats_wilson_ci", "ab_diff_in_diff",
+    "win_bollinger_bands", "ts_changepoint_split", "graph_bipartite_twohop",
+    "graph_cut_conductance", "dedup_minhash_bbit", "text_kneser_ney_bigram",
+    "fn_binary_codecs", "shard_salt_plan", "privacy_t_closeness",
+    "stats_bootstrap_ci", "sim_filtered_topk", "attribution_position_based",
+    "ann_hnsw_layer_assign", "stats_paired_t", "sample_halton_vdc",
+    "stats_cohens_d", "mix_chinchilla_plan", "sim_centroid_distance_matrix")
+
   test("r17 keys are partition-count invariant (the 100 TB correctness property)") {
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      R17Ops.all.map(_.key).map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    a.keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("dedup_signature_store_roundtrip: plain-Scala minhash replay of " +

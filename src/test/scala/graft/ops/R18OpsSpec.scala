@@ -94,20 +94,21 @@ class R18OpsSpec extends SparkSpec {
   private def eventDay(ts: java.sql.Timestamp): java.time.LocalDate =
     ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
 
+  private val keys = Seq(
+    "dedup_semantic_prune", "ann_ivf_probe_sweep", "ann_hnsw_greedy_route",
+    "sim_rerank_two_stage", "graph_edge_store_roundtrip",
+    "graph_adamic_adar", "dq_schema_drift", "curation_cascade_cost",
+    "stats_mcnemar_paired", "stats_fleiss_kappa", "mix_curriculum_schedule",
+    "sample_ess_importance", "ts_pacf_lag2", "agg_theil_index",
+    "sim_mmr_diversify", "eval_ece_brier_decomp",
+    "privacy_epsilon_composition", "graph_edge_store_incremental",
+    "dq_psi_price_drift", "events_spc_western_electric",
+    "agg_atkinson_index", "agg_hoover_index", "privacy_randomized_response",
+    "ts_ljung_box")
+
   test("r18 keys are partition-count invariant (the 100 TB correctness property)") {
-    def results(parts: Int): Map[String, Seq[String]] = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      R18Ops.all.map(_.key).map { k =>
-        k -> graft.SparkEntry.queries(k)(s2, sf).collect()
-          .map(_.toString).toSeq.sorted
-      }.toMap
-    }
-    val a = results(3); val b = results(17)
-    a.keys.foreach { k =>
-      assert(a(k) == b(k), s"$k: result depends on the shuffle partition count")
-      assert(a(k).nonEmpty, s"$k: empty result cannot certify anything")
-    }
+    val bad = graft.WidthInvarianceSpec.failures(spark, keys)
+    assert(bad.isEmpty, s"width-invariance failures:\n${bad.mkString("\n")}")
   }
 
   test("dedup_semantic_prune: centroid cosine, representative, and " +
