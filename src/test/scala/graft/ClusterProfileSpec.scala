@@ -18,8 +18,6 @@ package graft
   */
 class ClusterProfileSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   private def profiled = {
     val s2 = spark.newSession()
     ClusterProfile.entries.foreach { case (k, v) => s2.conf.set(k, v) }
@@ -49,7 +47,7 @@ class ClusterProfileSpec extends SparkSpec {
       // base side from the shared StaticResults execution pass (r15):
       // QueryRegistrySpec's smoke needs the same 360 executions
       val base = StaticResults.rows(spark, name)
-      val prof = fn(s2, sf).collect().map(_.toString).sorted
+      val prof = fn(s2, StaticPlans.sfStatic).collect().map(_.toString).sorted
       if (base.sameElements(prof)) None
       else Some(s"$name (${base.length} vs ${prof.length} rows, first diff: " +
         base.zip(prof).find { case (a, b) => a != b }

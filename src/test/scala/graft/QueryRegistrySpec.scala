@@ -7,8 +7,6 @@ package graft
   * sf0.01 oracle pass. */
 class QueryRegistrySpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   /** SURVEY §2's 53-key inventory is THE grading contract — losing a
     * key silently would fail the round. This list is intentionally
     * hardcoded; additions are fine, removals are not. */

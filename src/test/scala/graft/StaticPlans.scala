@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Shared per-JVM caches of every graded query's plans/results at the
-  * static fixture tier — all four registry-wide sweeps scale linearly
-  * with the registry, and each independently re-planning (or
-  * re-executing) all ~360 keys is the dominant suite-wall-time term
-  * (VERDICT r14 item 1). One pass per JVM per representation instead:
+  * static fixture tier — the registry-wide sweeps scale linearly with
+  * the registry, and each independently re-planning (or re-executing)
+  * all 483 keys is the dominant suite-wall-time term (VERDICT r14
+  * item 1). One pass per JVM per representation instead:
   *
   *  - `analyzed` (parallel JVM): the expression gates
   *    (DecimalCastBoundsSpec, TranscendentalProtocolSpec) plus the
@@ -25,10 +25,11 @@ import org.apache.spark.sql.execution.QueryExecution
   *    sorted order. Callers are all SerialSuite, so the pass runs
   *    under the suite lock; the builder's own synchronized guards the
   *    first-toucher race regardless.
-  *  - `StaticResults` (parallel JVM): ClusterProfileSpec's base side
-  *    and QueryRegistrySpec's runs-at-sf0.001 smoke both need every
-  *    key EXECUTED once at the static tier on the base session —
-  *    collect once, share the sorted row strings.
+  *  - `StaticResults` (parallel JVM): ClusterProfileSpec's base side,
+  *    QueryRegistrySpec's runs-at-sf0.001 smoke, WidthInvarianceSpec's
+  *    width-4 side and the op specs' replays all need keys
+  *    EXECUTED at the static tier on the base session — collect each
+  *    key once and share its rows.
   */
 object StaticPlans {
   val sfStatic = "/root/testdata/sf0.001"
@@ -98,12 +99,12 @@ object StaticPlans {
 }
 
 /** Shared per-JVM cache of every graded query's EXECUTED result at
-  * the static tier on the base session (see [[StaticPlans]] scaladoc;
-  * sorted row strings are the comparison currency both consumers
-  * already used). */
+  * the static tier on the base session (see [[StaticPlans]] scaladoc).
+  * One cache of collected rows; `rows` derives the sorted strings the
+  * registry-wide sweeps compare. */
 object StaticResults {
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Row]]()
   @volatile private var boundSession: SparkSession = null
 
   /** Results are always computed on the FIRST session any caller
@@ -112,14 +113,20 @@ object StaticResults {
     * conf-profiled newSession) would silently read base-session rows,
     * so that is a loud failure instead (ADVICE r15): profiled runs
     * must execute their own side directly, as ClusterProfileSpec
-    * does. */
-  def rows(spark: SparkSession, key: String): Array[String] = {
+    * does. Rows come in the order `collect()` returned them, so
+    * order-sensitive assertions (a key's presentation sort) still
+    * hold; each caller gets its own copy of the array. */
+  def collected(spark: SparkSession, key: String): Array[Row] = {
     synchronized { if (boundSession == null) boundSession = spark }
     require(spark eq boundSession,
-      "StaticResults.rows is bound to the first (base) session; " +
+      "StaticResults is bound to the first (base) session; " +
         "execute profiled-session queries directly instead")
     cache.computeIfAbsent(key,
-      _ => SparkEntry.queries(key)(boundSession, StaticPlans.sfStatic)
-        .collect().map(_.toString).sorted)
+      _ => SparkEntry.queries(key)(boundSession, StaticPlans.sfStatic).collect())
+      .clone()
   }
+
+  /** The key's rows as sorted strings. */
+  def rows(spark: SparkSession, key: String): Array[String] =
+    collected(spark, key).map(_.toString).sorted
 }

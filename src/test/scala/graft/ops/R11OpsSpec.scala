@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-11 additions, checked by
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * formulation (the R5OpsSpec discipline).
   */
 class R11OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val r11Keys = Seq(
     "fn_bitwise", "agg_argminmax", "agg_bitmap_distinct", "win_fill_locf",
@@ -24,8 +24,8 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("fn_bitwise: every op recomputes in plain JVM long arithmetic") {
-    val rows = Functions.fnBitwise.run(spark, sf).collect()
-    assert(rows.length == Tables.events(spark, sf).count())
+    val rows = StaticResults.collected(spark, "fn_bitwise")
+    assert(rows.length == Tables.events(spark, sfStatic).count())
     rows.foreach { r =>
       val id = r.getLong(0); val bxor = r.getLong(3)
       assert(r.getLong(1) == (id & 255L))
@@ -42,8 +42,8 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("agg_argminmax: arg rows really carry the group's price extrema") {
-    val rows = Aggregates.aggArgminmax.run(spark, sf).collect()
-    val orders = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "agg_argminmax")
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderpriority"), col("o_orderkey"),
         col("o_totalprice").cast("decimal(18,2)").as("tp"))
       .collect()
@@ -71,7 +71,7 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("win_fill_locf: fill equals raw on observed days and never invents values") {
-    val rows = Windows.winFillLocf.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_fill_locf")
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
       val seq = rs.sortBy(_.getDate(1).toLocalDate.toEpochDay)
@@ -94,9 +94,9 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("join_interval_overlap: exact match vs a naive all-pairs recomputation") {
-    val rows = Joins.joinIntervalOverlap.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "join_interval_overlap")
       .map(r => r.getDate(0).toString -> (r.getLong(1), r.getLong(2))).toMap
-    val purchases = Tables.events(spark, sf)
+    val purchases = Tables.events(spark, sfStatic)
       .filter(col("event_type") === "purchase")
       .select(to_date(col("ts")).as("day"), col("user_id"), unix_micros(col("ts")).as("us"))
       .collect()
@@ -115,8 +115,8 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("cooccur_pmi: pair counts match a set-based recomputation; pmi bounded") {
-    val rows = CorpusOps.cooccurPmi.run(spark, sf).collect()
-    val docs = Tables.documents(spark, sf).select(col("text")).collect()
+    val rows = StaticResults.collected(spark, "cooccur_pmi")
+    val docs = Tables.documents(spark, sfStatic).select(col("text")).collect()
       .map(_.getString(0).split(" ").distinct.sorted)
     val nd = docs.length.toLong
     val ca = docs.flatten.groupBy(identity).map { case (t, xs) => t -> xs.length.toLong }
@@ -136,9 +136,9 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("agg_bitmap_distinct: popcount equals the COUNT DISTINCT self-check") {
-    val rows = Aggregates.aggBitmapDistinct.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "agg_bitmap_distinct")
     assert(rows.nonEmpty)
-    val expected = Tables.events(spark, sf)
+    val expected = Tables.events(spark, sfStatic)
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct().collect()
       .groupBy(_.getLong(0))
       .map { case (u, ds) => u -> ds.map(_.getDate(1).toLocalDate.toEpochDay).toSet }
@@ -155,7 +155,7 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("win_interpolate_linear: anchors exact, interior points on the line") {
-    val rows = Windows.winInterpolateLinear.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_interpolate_linear")
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
       val seq = rs.sortBy(_.getDate(1).toLocalDate.toEpochDay)
       val obs = seq.zipWithIndex.filter(!_._1.isNullAt(2))
@@ -177,9 +177,9 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("text_ngram_novelty: equals a string-shingle first-seen recomputation") {
-    val rows = CorpusOps.textNgramNovelty.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "text_ngram_novelty")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" "))
       .filter(_._2.length >= 3)
@@ -197,10 +197,10 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("profile_documents: one row, fields recompute from the table") {
-    val r = Sampling.profileDocuments.run(spark, sf).collect() match {
+    val r = StaticResults.collected(spark, "profile_documents") match {
       case Array(only) => only
     }
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       .collect()
     val nDocs = docs.length.toLong
@@ -218,13 +218,13 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("join_asof_tolerance: agrees with the base as-of join, gated at 600 s") {
-    val base = Joins.joinAsofEvent.run(spark, sf).collect()
+    val base = StaticResults.collected(spark, "join_asof_event")
       .map { r =>
         val click = if (r.isNullAt(3)) None
           else Some(r.getTimestamp(3).getTime / 1000)
         r.getLong(0) -> (r.getTimestamp(2).getTime / 1000, click)
       }.toMap
-    val rows = Joins.joinAsofTolerance.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "join_asof_tolerance")
     assert(rows.length == base.size, "same purchase set as the base as-of key")
     rows.foreach { r =>
       val (pSec, baseClick) = base(r.getLong(0))
@@ -240,8 +240,8 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("multimodal_frame_sample: uniform grid covers [0, n_frames) endpoint-inclusive") {
-    val rows = LlmPipeline.multimodalFrameSample.run(spark, sf).collect()
-    val meta = Tables.documents(spark, sf)
+    val rows = StaticResults.collected(spark, "multimodal_frame_sample")
+    val meta = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("n_chars")).collect()
       .map { r =>
         val id = r.getLong(0); val fps = 24 + (id % 3) * 6

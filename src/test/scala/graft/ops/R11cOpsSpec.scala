@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-11 third-session additions,
   * checked by driver-side recomputation at sf0.001 — independent of
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * wrong formulation (the R5OpsSpec discipline).
   */
 class R11cOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val r11cKeys = Seq(
     "fn_struct", "sample_class_balance", "text_readability",
@@ -31,8 +31,8 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("fn_struct: comparisons recompute in plain JVM arithmetic") {
-    val rows = Functions.fnStruct.run(spark, sf).collect()
-    val orders = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "fn_struct")
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     assert(rows.length == orders.size)
@@ -49,9 +49,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("sample_class_balance: exact equal quotas, a subset, and re-runnable") {
-    val rows = Sampling.sampleClassBalance.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sample_class_balance")
       .map(r => (r.getString(0), r.getLong(1)))
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("lang"), col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     val nLangs = docs.map(_._1).size
@@ -61,15 +61,15 @@ class R11cOpsSpec extends SparkSpec {
       s"every language must contribute exactly $quota docs: $perLang")
     assert(rows.forall(docs), "sample must be a subset of the corpus")
     // determinism: the same call selects the same rows
-    val again = Sampling.sampleClassBalance.run(spark, sf).collect()
+    val again = Sampling.sampleClassBalance.run(spark, sfStatic).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     assert(rows.toSeq == again.toSeq)
   }
 
   test("text_readability: counts recompute against JVM regexes") {
-    val out = CorpusOps.textReadability.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "text_readability")
       .map(r => r.getLong(0) -> r).toMap
-    val texts = Tables.documents(spark, sf)
+    val texts = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1))
     val wordRe = "[a-z]+".r; val syllRe = "[aeiouy]+".r; val sentRe = "[.!?]+".r
@@ -94,10 +94,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("win_running_distinct: monotone per user, final value = exact distinct count") {
-    val rows = Windows.winRunningDistinct.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_running_distinct")
       .map(r => (r.getLong(0), r.getLong(1), r.getString(3), r.getLong(4)))
     val byUser = rows.groupBy(_._1)
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_type")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val truth = events.groupBy(_._1).view.mapValues(_.map(_._2).distinct.size).toMap
@@ -116,9 +116,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("win_rolling_median: full JVM recomputation per customer") {
-    val rows = Windows.winRollingMedian.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_rolling_median")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4)))
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
         col("o_totalprice").cast("decimal(12,2)").as("p"))
       .collect()
@@ -144,9 +144,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("pattern_consecutive: JVM scan of each user's ordered stream agrees") {
-    val out = EventAnalytics.patternConsecutive.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "pattern_consecutive")
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .collect()
       .map { r =>
@@ -165,9 +165,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("attribution_linear: credit allocation reconciles to the purchase total") {
-    val rows = EventAnalytics.attributionLinear.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "attribution_linear")
     assert(rows.nonEmpty)
-    val cents = Tables.events(spark, sf)
+    val cents = Tables.events(spark, sfStatic)
       .filter(col("event_type") === "purchase")
       .select(col("event_id"),
         (col("value").cast("decimal(12,4)") * 100).cast("long").as("c"))
@@ -182,10 +182,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("graph_pagerank: full 3-iteration JVM recomputation at sf0.001") {
-    val out = ClusterOps.graphPagerank.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "graph_pagerank")
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val eb = Tables.orders(spark, sf)
-      .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
+    val eb = Tables.orders(spark, sfStatic)
+      .join(Tables.lineitem(spark, sfStatic), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_suppkey")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val edges = eb.flatMap { case (ck, sk) =>
@@ -206,10 +206,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("join_asof_nearest: nearest click recomputes from a JVM scan per user") {
-    val out = Joins.joinAsofNearest.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "join_asof_nearest")
       .map(r => r.getLong(0) -> (Option(r.get(3)).map(_.asInstanceOf[Long]),
         r.getString(4))).toMap
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
       .collect()
@@ -238,9 +238,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("agg_weighted_median: half the weight sits at or below the answer") {
-    val out = Aggregates.aggWeightedMedian.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "agg_weighted_median")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_returnflag"),
         (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long").as("p"),
         (col("l_quantity").cast("decimal(12,4)") * 10000).cast("long").as("w"))
@@ -256,10 +256,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("pivot_multi_agg: both aggregate planes recompute per user") {
-    val out = Aggregates.pivotMultiAgg.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "pivot_multi_agg")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toMap
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_type"),
         (col("value").cast("decimal(12,4)") * 100).cast("long").as("c"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -272,7 +272,7 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("win_ratio_to_report: shares are exact floor-ppm and nearly sum to 1M") {
-    val rows = Windows.winRatioToReport.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_ratio_to_report")
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4)))
     rows.groupBy(_._1).foreach { case (ck, os) =>
       val tot = os.head._3
@@ -288,9 +288,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("dedup_prefix_cluster: clusters really share a 64-char prefix") {
-    val out = PipelineOps.dedupPrefixCluster.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "dedup_prefix_cluster")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1).take(64)))
     val byPrefix = docs.groupBy(_._2).filter(_._2.length > 1)
@@ -305,9 +305,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("mix_temperature_resample: rates follow 1/sqrt(n) and rarest keeps all") {
-    val rows = PipelineOps.mixTemperatureResample.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "mix_temperature_resample")
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val counts = Tables.documents(spark, sf).groupBy(col("lang")).count()
+    val counts = Tables.documents(spark, sfStatic).groupBy(col("lang")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val nMin = counts.values.min
     rows.groupBy(_._2).foreach { case (lang, rs) =>
@@ -325,10 +325,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("join_scd2_pointintime: interval scan in the JVM finds the same state") {
-    val out = EvolutionQueries.joinScd2Pointintime.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "join_scd2_pointintime")
       .map(r => r.getLong(0) -> (Option(r.getString(2)),
         Option(r.get(3)).map(_.asInstanceOf[Long]))).toMap
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), col("event_type")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     events.groupBy(_._1).foreach { case (_, es) =>
@@ -347,10 +347,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("agg_skew_kurtosis: moments recompute from exact BigInt sums") {
-    val out = Aggregates.aggSkewKurtosis.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "agg_skew_kurtosis")
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5))).toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_returnflag"),
         expr("cast(cast(l_extendedprice as decimal(12,2)) * 100 as bigint) div 100000"))
       .collect().map(r => (r.getString(0), BigInt(r.getLong(1))))
@@ -375,9 +375,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("eval_langid_confusion: cells sum to the per-doc prediction table") {
-    val cells = LlmExtras.evalLangidConfusion.run(spark, sf).collect()
+    val cells = StaticResults.collected(spark, "eval_langid_confusion")
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val perDoc = LlmExtras.textLangid.run(spark, sf).collect()
+    val perDoc = StaticResults.collected(spark, "text_langid")
       .map(r => (r.getString(1), r.getString(2), r.getBoolean(3)))
     assert(cells.map(_._3).sum == perDoc.length.toLong, "total docs conserved")
     cells.foreach { case (actual, pred, n, nCorrect) =>
@@ -390,11 +390,11 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("ts_ohlc_daily: bars recompute from a JVM scan per (user, day)") {
-    val out = EventAnalytics.tsOhlcDaily.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "ts_ohlc_daily")
       .map(r => (r.getLong(0), r.getDate(1).toString) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getLong(7))).toMap
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), col("ts"),
         (col("value").cast("decimal(12,4)") * 100).cast("long").as("c"))
       .collect()
@@ -415,10 +415,10 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("dq_rule_check: every rule recomputes and the firing rules really fire") {
-    val rules = Sampling.dqRuleCheck.run(spark, sf).collect()
+    val rules = StaticResults.collected(spark, "dq_rule_check")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rules.size == 8)
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_totalprice"), col("o_orderstatus")).collect()
       .map(r => (r.getDouble(0), r.getString(1)))
     assert(rules("orders_null_key") == ((0L, orders.length.toLong)))
@@ -427,7 +427,7 @@ class R11cOpsSpec extends SparkSpec {
       orders.count(o => !Set("F", "O", "P")(o._2)).toLong)
     assert(rules("orders_total_gt_400k")._1 ==
       orders.count(_._1 > 400000).toLong)
-    val disc = Tables.lineitem(spark, sf).select(col("l_discount")).collect()
+    val disc = Tables.lineitem(spark, sfStatic).select(col("l_discount")).collect()
       .map(_.getDouble(0))
     assert(rules("lineitem_discount_gt_8pct") ==
       ((disc.count(_ > 0.08).toLong, disc.length.toLong)))
@@ -440,11 +440,11 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("drift_value_histogram: bins conserve mass and shares floor-divide exactly") {
-    val rows = DriftOps.driftValueHistogram.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "drift_value_histogram")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(rows.map(_._1).toSeq == (0L until 10L), "all 10 bins present")
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select((col("value").cast("decimal(12,4)") * 100).cast("long").as("c"),
         dayofmonth(col("ts")).as("dom"))
       .collect().map(r => (r.getLong(0), r.getInt(1)))
@@ -461,9 +461,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("drift_embedding_centroid: cosine recomputes from exact milli sums") {
-    val out = DriftOps.driftEmbeddingCentroid.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "drift_embedding_centroid")
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
     vecs.groupBy(_._2).foreach { case (label, vs) =>
@@ -486,9 +486,9 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("agg_gini_impurity: integer Gini recomputes and bounds hold") {
-    val out = CorpusOps.aggGiniImpurity.run(spark, sf).collect()
+    val out = StaticResults.collected(spark, "agg_gini_impurity")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("source"), col("lang")).collect()
       .map(r => (r.getString(0), r.getString(1)))
     docs.groupBy(_._1).foreach { case (src, ds) =>
@@ -503,13 +503,13 @@ class R11cOpsSpec extends SparkSpec {
   }
 
   test("join_snowflake_5way: the chain reconciles against independent per-level counts") {
-    val rows = Joins.joinSnowflake5way.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "join_snowflake_5way")
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
     // total item count across all (region, nation) cells must equal
     // the full lineitem⋈orders⋈customer chain cardinality (every
     // order has a customer, every customer a nation, every nation a
     // region — FK integrity certified by dq_rule_check)
-    val nItems = Tables.lineitem(spark, sf).count()
+    val nItems = Tables.lineitem(spark, sfStatic).count()
     assert(rows.map(_._2._1).sum == nItems, "every line item lands in one cell")
     assert(rows.map(_._1).distinct.length == rows.length, "cells are unique")
     rows.foreach { case (cell, (n, rev)) =>

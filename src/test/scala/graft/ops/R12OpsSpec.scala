@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 additions, checked by
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * formulation (the R5OpsSpec discipline).
   */
 class R12OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val r12Keys = Seq(
     "agg_bool_countif", "q3_shipping_priority", "q18_large_volume",
@@ -34,9 +34,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("agg_bool_countif: flags and conditional counts recompute in plain JVM logic") {
-    val rows = Aggregates.aggBoolCountif.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "agg_bool_countif")
       .map(r => r.getString(0) -> r).toMap
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderpriority"), col("o_totalprice"), col("o_orderstatus"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getString(2)))
     val byPrio = orders.groupBy(_._1)
@@ -53,8 +53,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("q18_large_volume: every emitted order's recomputed quantity sum exceeds the cut") {
-    val rows = Joins.q18LargeVolume.run(spark, sf).collect()
-    val sums = Tables.lineitem(spark, sf)
+    val rows = StaticResults.collected(spark, "q18_large_volume")
+    val sums = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_quantity")).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getDouble(1)).sum).toMap
     assert(rows.nonEmpty)
@@ -69,12 +69,12 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("join_exists_flag: per-nation splits reconcile and match a recomputed mark join") {
-    val rows = Joins.joinExistsFlag.run(spark, sf).collect()
-    val custByNation = Tables.customer(spark, sf)
-      .join(Tables.nation(spark, sf), col("n_nationkey") === col("c_nationkey"))
+    val rows = StaticResults.collected(spark, "join_exists_flag")
+    val custByNation = Tables.customer(spark, sfStatic)
+      .join(Tables.nation(spark, sfStatic), col("n_nationkey") === col("c_nationkey"))
       .select(col("n_name"), col("c_custkey")).collect()
       .groupBy(_.getString(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val ordersByCust = Tables.orders(spark, sf)
+    val ordersByCust = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_totalprice")).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getDouble(1))).toMap
     rows.foreach { r =>
@@ -90,8 +90,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("win_ewma_dyadic: smoother recomputes from each customer's raw order history") {
-    val rows = Windows.winEwmaDyadic.run(spark, sf).collect()
-    val hist = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "win_ewma_dyadic")
+    val hist = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
         expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)").as("cents"))
       .collect()
@@ -118,9 +118,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("path_trigram_top: counts recompute from per-user sorted event streams") {
-    val rows = EventAnalytics.pathTrigramTop.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "path_trigram_top")
       .map(r => r.getString(0) -> r.getLong(1))
-    val streams = Tables.events(spark, sf)
+    val streams = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime, r.getString(3)))
@@ -135,9 +135,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("mix_upsample_epochs: repeat factors derive from counts and epochs are uniform") {
-    val rows = PipelineOps.mixUpsampleEpochs.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "mix_upsample_epochs")
       .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf).select(col("lang"), col("n_chars"))
+    val docs = Tables.documents(spark, sfStatic).select(col("lang"), col("n_chars"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val counts = docs.groupBy(_._1).view.mapValues(_.length.toLong).toMap
     val mx = counts.values.max
@@ -153,9 +153,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("vocab_oov_rate: OOV mass recomputes against the top-8 vocabulary") {
-    val rows = CorpusOps.vocabOovRate.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "vocab_oov_rate")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val docs = Tables.documents(spark, sfStatic).select(col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getString(1).split(" ").toSeq)
     val corpus = docs.flatMap(_._2).groupBy(identity).view.mapValues(_.size.toLong)
     val vocab = corpus.toSeq.sortBy { case (t, c) => (-c, t) }.take(8).map(_._1).toSet
@@ -167,9 +167,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("sample_systematic: membership is exactly every 20th rank of the md5 order") {
-    val rows = Sampling.sampleSystematic.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sample_systematic")
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
-    val ranked = Tables.documents(spark, sf)
+    val ranked = Tables.documents(spark, sfStatic)
       .select(col("source"), col("doc_id"),
         md5(col("doc_id").cast("string")).as("h"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
@@ -182,16 +182,16 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("harmonize_crosswalk: two-hop fallthrough labels partition all customers") {
-    val rows = HarmonizeQueries.harmonizeCrosswalk.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "harmonize_crosswalk")
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nCust = Tables.customer(spark, sf).count()
+    val nCust = Tables.customer(spark, sfStatic).count()
     assert(rows.values.sum == nCust, "crosswalk drops or duplicates customers")
     assert(rows.keySet == Set("CORE", "GROWTH", "Z4-UNMAPPED", "UNMAPPED"))
   }
 
   test("agg_corr_explicit: corr matches a direct double-precision recomputation") {
-    val rows = Aggregates.aggCorrExplicit.run(spark, sf).collect()
-    val li = Tables.lineitem(spark, sf)
+    val rows = StaticResults.collected(spark, "agg_corr_explicit")
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
     rows.foreach { r =>
@@ -212,7 +212,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("event_transition_matrix: rows normalize to ≤1e6 ppm per from-state") {
-    val rows = EventAnalytics.eventTransitionMatrix.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "event_transition_matrix")
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val byFrom = rows.groupBy(_._1)
     byFrom.foreach { case (from, rs) =>
@@ -227,7 +227,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("fn_url_parse: parsed components reassemble into the original url") {
-    val rows = Functions.fnUrlParse.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "fn_url_parse")
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (url, host, path, query, kParam, frag) =
@@ -240,9 +240,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("knn_holdout_eval: confusion matrix covers every holdout vector exactly once") {
-    val rows = LlmExtras.knnHoldoutEval.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "knn_holdout_eval")
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    val holdout = Tables.embeddings(spark, sf)
+    val holdout = Tables.embeddings(spark, sfStatic)
       .filter(col("vec_id") % 50 === 0).select(col("label")).collect()
       .map(_.getInt(0))
     assert(rows.map(_._3).sum == holdout.length,
@@ -254,9 +254,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("embed_norm_audit: norm² recomputes from raw components per label") {
-    val rows = PipelineOps.embedNormAudit.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "embed_norm_audit")
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("label"), col("embedding")).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1)))
     val norm2 = vecs.map { case (l, e) =>
@@ -272,7 +272,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("stream_rate_alert: alerts recompute from per-type window series") {
-    val rows = Streaming.streamRateAlert.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "stream_rate_alert")
       .map(r => (r.getString(1), r.getTimestamp(0).getTime, r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3), r.getBoolean(4)))
     rows.groupBy(_._1).foreach { case (_, rs) =>
@@ -288,8 +288,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("graph_triangle_count: kernel recomputes from a JVM adjacency walk") {
-    val r = ClusterOps.graphTriangleCount.run(spark, sf).collect().head
-    val li = Tables.lineitem(spark, sf)
+    val r = StaticResults.collected(spark, "graph_triangle_count").head
+    val li = Tables.lineitem(spark, sfStatic)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_partkey")).collect()
@@ -316,7 +316,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("agg_grouping_id: levels reconcile — each rollup level re-aggregates the base") {
-    val rows = Aggregates.aggGroupingId.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "agg_grouping_id")
     val base = rows.filter(_.getLong(2) == 0)
     val langLevel = rows.filter(_.getLong(2) == 1)
     val total = rows.filter(_.getLong(2) == 3)
@@ -331,10 +331,10 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("multimodal_chunk_audio: segments tile each doc's duration with 5s overlap") {
-    val rows = LlmPipeline.multimodalChunkAudio.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "multimodal_chunk_audio")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .groupBy(_._1)
-    val durs = Tables.documents(spark, sf).select(col("doc_id"), col("n_chars"))
+    val durs = Tables.documents(spark, sfStatic).select(col("doc_id"), col("n_chars"))
       .collect().map(r => r.getLong(0) -> r.getLong(1) * 25).toMap
     assert(rows.keySet == durs.keySet.filter(durs(_) > 0))
     rows.foreach { case (id, segs) =>
@@ -351,8 +351,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("source_csv_quoted: hostile fields survive the sink+source cycle byte-for-byte") {
-    val rows = Scans.sourceCsvQuoted.run(spark, sf).collect()
-    val docs = Tables.documents(spark, sf)
+    val rows = StaticResults.collected(spark, "source_csv_quoted")
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("source"), col("lang")).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
     assert(rows.length == docs.size)
@@ -365,9 +365,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("dedup_segment_level: duplicate-segment fractions recompute from raw text") {
-    val rows = CorpusOps.dedupSegmentLevel.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dedup_segment_level")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val docs = Tables.documents(spark, sfStatic).select(col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getString(1).split(" ").toSeq)
     val segs = docs.flatMap { case (id, ts) =>
       ts.grouped(8).map(g => (id, g.mkString(" ")))
@@ -382,8 +382,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("ab_test_metrics: arm splits and lift recompute from raw events") {
-    val rows = EventAnalytics.abTestMetrics.run(spark, sf).collect()
-    val ev = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "ab_test_metrics")
+    val ev = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("user_id"),
         expr("cast(cast(value as decimal(12,4)) * 100 as bigint)").as("cents"))
       .collect().map(r => (r.getString(0), r.getLong(1) % 2, r.getLong(2)))
@@ -403,9 +403,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("order_rfm_segments: quartile cuts are exact ntile(4) over unique orders") {
-    val rows = Windows.orderRfmSegments.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "order_rfm_segments")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val custs = Tables.orders(spark, sf)
+    val custs = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_orderdate"), col("o_totalprice")).collect()
       .map(r => (r.getLong(0), r.getAs[java.time.LocalDateTime](1),
         math.round(r.getDouble(2) * 100)))
@@ -432,9 +432,9 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("dedup_source_priority: survivors are the (priority, id)-argmin of each cluster") {
-    val rows = PipelineOps.dedupSourcePriority.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dedup_source_priority")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("source"), substring(col("text"), 1, 64).as("p"))
       .collect().map(r => (r.getLong(0), r.getString(1).drop(3).toLong, r.getString(2)))
     val clusters = docs.groupBy(_._3).filter(_._2.length >= 2)
@@ -449,8 +449,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("evolution_delete_cascade: splits reconcile and deletion is total per user") {
-    val rows = EvolutionQueries.evolutionDeleteCascade.run(spark, sf).collect()
-    val ev = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "evolution_delete_cascade")
+    val ev = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("user_id")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     rows.foreach { r =>
@@ -466,13 +466,13 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("source_text_lines and source_binary_files: byte-exact against direct recomputation") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("lang"), md5(col("text")).as("h")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val lines = Scans.sourceTextLines.run(spark, sf).collect()
+    val lines = StaticResults.collected(spark, "source_text_lines")
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     assert(lines.toSeq == docs.sortBy(_._1).toSeq)
-    val bins = Scans.sourceBinaryFiles.run(spark, sf).collect()
+    val bins = StaticResults.collected(spark, "source_binary_files")
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
     val expected = docs.groupBy(_._2).view.mapValues { ds =>
       val body = ds.sortBy(_._1).map(_._3).mkString + "\n"
@@ -487,8 +487,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("agg_string_concat: joined strings decompose back to the distinct sets") {
-    val rows = Aggregates.aggStringConcat.run(spark, sf).collect()
-    val orders = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "agg_string_concat")
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderpriority"), col("o_orderstatus"),
         year(col("o_orderdate")).cast("string").as("yr")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -501,10 +501,10 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("session_conversion: flags recompute from a JVM sessionization") {
-    val rows = EventAnalytics.sessionConversion.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "session_conversion")
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getBoolean(3), r.getBoolean(5), r.getBoolean(6))).toMap
-    val ev = Tables.events(spark, sf)
+    val ev = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), col("event_type"),
         graft.Protocol.tsSec(col("ts")).cast("long").as("sec")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
@@ -527,8 +527,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("basket_assoc_rules: metrics recompute from raw 1996 baskets") {
-    val rows = ClusterOps.basketAssocRules.run(spark, sf).collect()
-    val li = Tables.lineitem(spark, sf)
+    val rows = StaticResults.collected(spark, "basket_assoc_rules")
+    val li = Tables.lineitem(spark, sfStatic)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_partkey")).distinct().collect()
@@ -550,8 +550,8 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("agg_zscore_outliers: every emitted row exceeds the cut; none are missed") {
-    val rows = Aggregates.aggZscoreOutliers.run(spark, sf).collect()
-    val o = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "agg_zscore_outliers")
+    val o = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_orderpriority"),
         expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint) div 100")
           .as("dol")).collect()
@@ -574,13 +574,13 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("q4_order_priority: counts recompute from an existence scan") {
-    val rows = Joins.q4OrderPriority.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "q4_order_priority")
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_shipdate")).collect()
       .map(r => (r.getLong(0), r.getAs[java.time.LocalDateTime](1)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val o = Tables.orders(spark, sf)
+    val o = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .collect()
       .map(r => (r.getLong(0), r.getAs[java.time.LocalDateTime](1), r.getString(2)))
@@ -593,11 +593,11 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("join_bloom_prefilter: result is identical to the plain join (the safety identity)") {
-    val bloomed = Joins.joinBloomPrefilter.run(spark, sf).collect()
+    val bloomed = StaticResults.collected(spark, "join_bloom_prefilter")
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    val build = Tables.orders(spark, sf).filter(col("o_totalprice") > 480000)
+    val build = Tables.orders(spark, sfStatic).filter(col("o_totalprice") > 480000)
       .select(col("o_orderkey"), col("o_orderpriority"))
-    val plain = Tables.lineitem(spark, sf)
+    val plain = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey").as("o_orderkey"), col("l_extendedprice"))
       .join(build, "o_orderkey")
       .groupBy(col("o_orderpriority"))
@@ -609,21 +609,21 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("dedup_cluster_star: star-loop clusters agree with the graded min-label clusters") {
-    val star = ClusterOps.dedupClusterStar.run(spark, sf).collect()
+    val star = StaticResults.collected(spark, "dedup_cluster_star")
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     // the min-label key covers ALL docs (singletons included); the
     // star key covers edge-endpoint nodes — restrict to multi-member
     // clusters and the two independent algorithms must agree exactly
-    val minLabel = ClusterOps.dedupClusterCc.run(spark, sf).collect()
+    val minLabel = StaticResults.collected(spark, "dedup_cluster_cc")
       .map(r => (r.getLong(1), r.getLong(0))).groupBy(_._1)
       .collect { case (cid, ms) if ms.length >= 2 => cid -> ms.length.toLong }
     assert(star == minLabel.toMap && star.nonEmpty)
   }
 
   test("dedup_containment: containment pairs recompute from raw token sets") {
-    val rows = LlmPipeline.dedupContainment.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dedup_containment")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("lang"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2).split(" ").toSet))
     val pairs = for {

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 second-batch additions,
   * checked by driver-side recomputation at sf0.001 — independent of
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * wrong formulation (the R5OpsSpec discipline).
   */
 class R12bOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq(
     "q5_local_supplier", "q10_returned_items", "graph_jaccard_neighbors",
@@ -27,7 +27,7 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("sample_weighted_pps: multiplicities sum to exactly n=5 per source") {
-    val rows = Sampling.sampleWeightedPps.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sample_weighted_pps")
     val bySource = rows.groupBy(_.getString(0))
     bySource.foreach { case (src, rs) =>
       val total = rs.map(_.getLong(3)).sum
@@ -35,17 +35,17 @@ class R12bOpsSpec extends SparkSpec {
       assert(rs.forall(_.getLong(3) >= 1L), s"$src: selected doc with multiplicity < 1")
     }
     // every source present in the fixture is sampled
-    val allSources = Tables.documents(spark, sf)
+    val allSources = Tables.documents(spark, sfStatic)
       .select(col("source")).distinct().collect().map(_.getString(0)).toSet
     assert(bySource.keySet == allSources)
   }
 
   test("sample_weighted_pps: docs heavier than W/n are always selected") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("source"), col("doc_id"), col("n_chars")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val w = docs.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    val selected = Sampling.sampleWeightedPps.run(spark, sf).collect()
+    val selected = StaticResults.collected(spark, "sample_weighted_pps")
       .map(r => (r.getString(0), r.getLong(1))).toSet
     docs.filter { case (s0, _, nc) => nc * 5 > w(s0) }.foreach { case (s0, id, _) =>
       assert(selected.contains((s0, id)),
@@ -54,8 +54,8 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("shard_token_balanced: shard stats partition each language exactly") {
-    val rows = Sampling.shardTokenBalanced.run(spark, sf).collect()
-    val docs = Tables.documents(spark, sf)
+    val rows = StaticResults.collected(spark, "shard_token_balanced")
+    val docs = Tables.documents(spark, sfStatic)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -70,11 +70,11 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("graph_jaccard_neighbors: top pairs recompute from JVM part sets") {
-    val sp = Tables.lineitem(spark, sf)
+    val sp = Tables.lineitem(spark, sfStatic)
       .select(col("l_suppkey"), col("l_partkey")).distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val parts = sp.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val rows = ClusterOps.graphJaccardNeighbors.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "graph_jaccard_neighbors")
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (a, b) = (r.getLong(0), r.getLong(1))
@@ -92,7 +92,7 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("tokenizer_bpe_pairs: pair counts recompute from raw text in JVM") {
-    val texts = Tables.documents(spark, sf).select(col("text")).collect()
+    val texts = Tables.documents(spark, sfStatic).select(col("text")).collect()
       .map(_.getString(0))
     val wc = scala.collection.mutable.Map.empty[String, Long]
     texts.foreach(_.split(" ", -1).filter(_.length >= 2)
@@ -107,13 +107,13 @@ class R12bOpsSpec extends SparkSpec {
     }
     val expected = occ.toSeq.map { case (p, c) => (p, c, words(p).size.toLong) }
       .sortBy { case (p, c, _) => (-c, p) }.take(40)
-    val got = CorpusOps.tokenizerBpePairs.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "tokenizer_bpe_pairs")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == expected)
   }
 
   test("stats_chi_square: per-lang contributions recompute in JVM doubles") {
-    val obs = Tables.documents(spark, sf)
+    val obs = Tables.documents(spark, sfStatic)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("c"))
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     val langs = obs.keys.map(_._1).toSeq.distinct
@@ -121,7 +121,7 @@ class R12bOpsSpec extends SparkSpec {
     val rt = langs.map(l => l -> obs.collect { case ((l2, _), c) if l2 == l => c }.sum).toMap
     val ct = sources.map(s0 => s0 -> obs.collect { case ((_, s2), c) if s2 == s0 => c }.sum).toMap
     val n = obs.values.sum
-    val rows = DriftOps.statsChiSquare.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "stats_chi_square")
     assert(rows.map(_.getString(0)).toSeq == langs.sorted)
     rows.foreach { r =>
       val l = r.getString(0)
@@ -137,9 +137,9 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("ts_autocorr_daily: coefficients bounded and match a JVM Pearson") {
-    val rows = EventAnalytics.tsAutocorrDaily.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "ts_autocorr_daily")
     assert(rows.nonEmpty)
-    val daily = Tables.events(spark, sf)
+    val daily = Tables.events(spark, sfStatic)
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         (col("value").cast("decimal(12,4)") * 100).cast("long").as("c"))
       .groupBy(col("event_type"), col("day")).agg(sum(col("c")).as("cents"))
@@ -163,11 +163,11 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("win_streaks_daily: streak decomposition recomputes in JVM") {
-    val active = Tables.events(spark, sf)
+    val active = Tables.events(spark, sfStatic)
       .select(col("user_id"), date_trunc("day", col("ts")).cast("date").as("day"))
       .distinct().collect()
       .map(r => (r.getLong(0), r.getDate(1).toLocalDate))
-    val rows = EventAnalytics.winStreaksDaily.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_streaks_daily")
     val byUser = active.groupBy(_._1)
     assert(rows.map(_.getLong(0)).toSet == byUser.keySet)
     rows.foreach { r =>
@@ -191,15 +191,15 @@ class R12bOpsSpec extends SparkSpec {
 
   test("q14_promo_revenue: ratio recomputes from JVM BigDecimal sums") {
     import java.math.{BigDecimal => JBD}
-    val parts = Tables.part(spark, sf)
+    val parts = Tables.part(spark, sfStatic)
       .select(col("p_partkey"), col("p_type")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_partkey"), col("l_shipdate"), col("l_extendedprice"),
         col("l_discount")).collect()
       .filter(r => { val d = r.get(1).toString; d >= "1997-01-01" && d < "1998-01-01" })
     val byMonth = li.groupBy(_.get(1).toString.substring(0, 7))
-    val rows = Joins.q14PromoRevenue.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "q14_promo_revenue")
       .map(r => r.getDate(0).toString.substring(0, 7) -> r).toMap
     assert(rows.keySet == byMonth.keySet)
     byMonth.foreach { case (m, rs) =>
@@ -219,19 +219,19 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("q16_supplier_variety: distinct counts exclude flagged suppliers") {
-    val excluded = Tables.supplier(spark, sf)
+    val excluded = Tables.supplier(spark, sfStatic)
       .filter(col("s_acctbal") < 0).collect().map(_.getLong(0)).toSet
-    val parts = Tables.part(spark, sf)
+    val parts = Tables.part(spark, sfStatic)
       .select(col("p_partkey"), col("p_brand"), col("p_size"), col("p_type"))
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getInt(2), r.getString(3))).toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_partkey"), col("l_suppkey")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val byGroup = li
       .filter { case (pk, sk) => parts(pk)._3 != "PROMO" && !excluded.contains(sk) }
       .groupBy { case (pk, _) => (parts(pk)._1, parts(pk)._2) }
       .view.mapValues(_.map(_._2).distinct.size.toLong).toMap
-    val rows = Joins.q16SupplierVariety.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "q16_supplier_variety")
     assert(rows.nonEmpty && rows.length <= 30)
     rows.foreach { r =>
       val k = (r.getString(0), r.getInt(1))
@@ -244,7 +244,7 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("embed_top_component: the fixed-point power iteration replays in JVM BigInt") {
-    val embs = Tables.embeddings(spark, sf)
+    val embs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("embedding")).collect()
       .map(_.getSeq[Float](1).toArray)
     val m = embs.map(_.map(x => math.floor(x.toDouble * 1000 + 0.5).toLong))
@@ -262,7 +262,7 @@ class R12bOpsSpec extends SparkSpec {
       u.map(x => if (x < 0) -((-x * 1000L) / mx) else (x * 1000L) / mx)
     }
     val expected = iterate(iterate(Array.fill(dims)(1000L)))
-    val rows = DriftOps.embedTopComponent.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "embed_top_component")
     assert(rows.length == dims)
     rows.foreach(r => assert(r.getLong(1) == expected(r.getLong(0).toInt - 1),
       s"dim ${r.getLong(0)}"))
@@ -272,28 +272,28 @@ class R12bOpsSpec extends SparkSpec {
 
   test("q22_no_order_customers: threshold and exclusion recompute in JVM") {
     import java.math.{BigDecimal => JBD}
-    val custs = Tables.customer(spark, sf)
+    val custs = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
     val pos = custs.filter(_._3 > 0.0)
     val threshold = pos.map(c => new JBD(c._3).setScale(2, java.math.RoundingMode.HALF_UP))
       .foldLeft(JBD.ZERO)(_ add _).doubleValue / pos.length
-    val recent = Tables.orders(spark, sf)
+    val recent = Tables.orders(spark, sfStatic)
       .filter(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
       .select(col("o_custkey")).collect().map(_.getLong(0)).toSet
-    val nations = Tables.nation(spark, sf).collect()
+    val nations = Tables.nation(spark, sfStatic).collect()
       .map(r => r.getInt(0) -> r.getString(1)).toMap
     val expected = custs
       .filter(c => c._3 > threshold && !recent.contains(c._1))
       .groupBy(c => nations(c._2))
       .view.mapValues(_.length.toLong).toMap
-    val rows = Joins.q22NoOrderCustomers.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "q22_no_order_customers")
     assert(rows.map(r => r.getString(0) -> r.getLong(1)).toMap == expected)
     assert(rows.nonEmpty)
   }
 
   test("stream_custom_sessions: batch twin emits all but each user's last session") {
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("ts")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000 * 1000))
     val byUser = events.groupBy(_._1)
@@ -307,14 +307,14 @@ class R12bOpsSpec extends SparkSpec {
       }.map(_.reverse).reverse
       sessions.dropRight(1).map(sess => (u, sess.head, sess.length.toLong))
     }.toSet
-    val got = Streaming.streamCustomSessions.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "stream_custom_sessions")
       .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2))).toSet
     assert(got == expected)
   }
 
   test("graph_bfs_levels: frontier census recomputes from a JVM BFS") {
-    val eb = Tables.orders(spark, sf)
-      .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
+    val eb = Tables.orders(spark, sfStatic)
+      .join(Tables.lineitem(spark, sfStatic), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_suppkey")).distinct().collect()
       .map(r => (r.getLong(0) * 2, r.getLong(1) * 2 + 1))
     val adj = scala.collection.mutable.Map.empty[Long, Set[Long]]
@@ -331,7 +331,7 @@ class R12bOpsSpec extends SparkSpec {
       visited ++= frontier
       if (frontier.nonEmpty) levels += ((lvl.toLong, frontier))
     }
-    val rows = ClusterOps.graphBfsLevels.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "graph_bfs_levels")
     val got = rows.map(r => r.getLong(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val want = levels.map { case (l, s0) =>
@@ -342,7 +342,7 @@ class R12bOpsSpec extends SparkSpec {
   test("q6/q13/q15/q19: the second TPC-H batch recomputes in JVM") {
     import java.math.{BigDecimal => JBD}
     def dec2(x: Double) = new JBD(x).setScale(2, java.math.RoundingMode.HALF_UP)
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_partkey"), col("l_suppkey"), col("l_shipdate"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.get(2).toString, r.getDouble(3),
@@ -350,18 +350,18 @@ class R12bOpsSpec extends SparkSpec {
     // q6: filter + conditional sum
     val q6rows = li.filter(l => l._3 >= "1997-01-01" && l._3 < "1998-01-01" &&
       l._6.doubleValue >= 0.05 && l._6.doubleValue <= 0.07 && l._4 < 24)
-    val q6 = Joins.q6RevenueDelta.run(spark, sf).collect().head
+    val q6 = StaticResults.collected(spark, "q6_revenue_delta").head
     assert(q6.getLong(1) == q6rows.length.toLong)
     val q6rev = q6rows.map(l => l._5.multiply(l._6)).foldLeft(JBD.ZERO)(_ add _)
     assert(math.abs(q6.getDouble(0) - q6rev.doubleValue) < 1e-9)
     // q13: histogram of per-customer order counts, with a 0 bucket
-    val custs = Tables.customer(spark, sf).select(col("c_custkey"))
+    val custs = Tables.customer(spark, sfStatic).select(col("c_custkey"))
       .collect().map(_.getLong(0))
-    val ordCount = Tables.orders(spark, sf).select(col("o_custkey")).collect()
+    val ordCount = Tables.orders(spark, sfStatic).select(col("o_custkey")).collect()
       .map(_.getLong(0)).groupBy(identity).view.mapValues(_.length.toLong).toMap
     val hist = custs.map(c => ordCount.getOrElse(c, 0L))
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val q13 = Joins.q13CustomerDistribution.run(spark, sf).collect()
+    val q13 = StaticResults.collected(spark, "q13_customer_distribution")
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(q13 == hist)
     // q15: all suppliers achieving the max quarterly revenue (ties kept)
@@ -371,11 +371,11 @@ class R12bOpsSpec extends SparkSpec {
         .foldLeft(JBD.ZERO)(_ add _)).toMap
     val mx = bySupp.values.max
     val winners = bySupp.filter(_._2.compareTo(mx) == 0).keySet
-    val q15 = Joins.q15TopSupplier.run(spark, sf).collect()
+    val q15 = StaticResults.collected(spark, "q15_top_supplier")
     assert(q15.map(_.getLong(0)).toSet == winners)
     q15.foreach(r => assert(math.abs(r.getDouble(2) - mx.doubleValue) < 1e-9))
     // q19: disjunctive arms neither drop nor duplicate
-    val parts = Tables.part(spark, sf)
+    val parts = Tables.part(spark, sfStatic)
       .select(col("p_partkey"), col("p_brand"), col("p_size")).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getInt(2))).toMap
     val arms = li.filter { l =>
@@ -384,7 +384,7 @@ class R12bOpsSpec extends SparkSpec {
       (b == "Brand#2" && sz >= 1 && sz <= 25 && l._4 >= 5 && l._4 <= 30) ||
       (b == "Brand#3" && sz >= 1 && sz <= 35 && l._4 >= 10 && l._4 <= 40)
     }
-    val q19 = Joins.q19DiscountedRevenue.run(spark, sf).collect().head
+    val q19 = StaticResults.collected(spark, "q19_discounted_revenue").head
     assert(q19.getLong(1) == arms.length.toLong)
     val q19rev = arms.map(l => l._5.multiply(JBD.ONE.subtract(l._6)))
       .foldLeft(JBD.ZERO)(_ add _)
@@ -392,7 +392,7 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("dedup_band_tuning: schemes nest (b2r4 ⊆ b4r2 ⊆ b8r1) and b4r2 matches production") {
-    val rows = LlmExtras.dedupBandTuning.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dedup_band_tuning")
       .map(r => r.getString(0) ->
         (r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(rows.keySet == Set("b2r4", "b4r2", "b8r1"))
@@ -404,7 +404,7 @@ class R12bOpsSpec extends SparkSpec {
     assert(rows("b4r2")._2 <= rows("b8r1")._2)
     // the 4×2 scheme IS the production banding — its verified count
     // equals the graded dedup_minhash_lsh pair list
-    val production = LlmExtras.dedupMinhashLsh.run(spark, sf).count()
+    val production = StaticResults.collected(spark, "dedup_minhash_lsh").length.toLong
     assert(rows("b4r2")._2 == production)
     // ppm consistency
     rows.values.foreach { case (c, v, ppm) =>
@@ -414,10 +414,10 @@ class R12bOpsSpec extends SparkSpec {
   }
 
   test("embed_cosine_histogram: per-label masses sum to C(n,2), buckets bounded") {
-    val perLabel = Tables.embeddings(spark, sf)
+    val perLabel = Tables.embeddings(spark, sfStatic)
       .groupBy(col("label")).agg(count(lit(1)).as("n")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val rows = DriftOps.embedCosineHistogram.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "embed_cosine_histogram")
     rows.foreach { r =>
       assert(r.getLong(1) >= -10L && r.getLong(1) <= 10L, "bucket out of range")
     }
@@ -429,18 +429,18 @@ class R12bOpsSpec extends SparkSpec {
 
   test("q5/q10: revenue recomputes from a JVM join at sf0.001") {
     import java.math.{BigDecimal => JBD}
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"),
         col("l_discount"), col("l_returnflag")).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         new JBD(r.getDouble(2)).setScale(2, java.math.RoundingMode.HALF_UP),
         new JBD(r.getDouble(3)).setScale(2, java.math.RoundingMode.HALF_UP),
         r.getString(4)))
-    val ord = Tables.orders(spark, sf)
+    val ord = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.get(2).toString))
     // Q10 check: top row's revenue recomputes exactly
-    val q10 = Joins.q10ReturnedItems.run(spark, sf).collect()
+    val q10 = StaticResults.collected(spark, "q10_returned_items")
     assert(q10.nonEmpty && q10.length <= 20)
     val custOf = ord.map(o => o._1 -> o._2).toMap
     val inQ = ord.filter(o => o._3 >= "1997-01-01" && o._3 < "1997-07-01")
@@ -455,10 +455,10 @@ class R12bOpsSpec extends SparkSpec {
     val revs = q10.map(_.getDouble(3))
     assert(revs.zip(revs.tail).forall { case (a, b) => a >= b })
     // Q5 check: every row's nation is in ASIA and revenue positive
-    val q5 = Joins.q5LocalSupplier.run(spark, sf).collect()
+    val q5 = StaticResults.collected(spark, "q5_local_supplier")
     assert(q5.nonEmpty)
-    val asia = Tables.nation(spark, sf)
-      .join(Tables.region(spark, sf).filter(col("r_name") === "ASIA"),
+    val asia = Tables.nation(spark, sfStatic)
+      .join(Tables.region(spark, sfStatic).filter(col("r_name") === "ASIA"),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_name")).collect().map(_.getString(0)).toSet
     q5.foreach { r =>

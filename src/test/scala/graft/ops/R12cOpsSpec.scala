@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 third-batch additions, checked
   * by driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * formulation (the R5OpsSpec discipline).
   */
 class R12cOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq(
     "profile_key_skew", "join_cardinality_probe", "pareto_frontier_parts",
@@ -40,16 +40,16 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("join_cardinality_probe: est_rows equals the materialized join's count") {
-    val probe = Joins.joinCardinalityProbe.run(spark, sf).collect().head
-    val actual = Tables.events(spark, sf).select(col("user_id"))
-      .join(Tables.orders(spark, sf).select(col("o_custkey")),
+    val probe = StaticResults.collected(spark, "join_cardinality_probe").head
+    val actual = Tables.events(spark, sfStatic).select(col("user_id"))
+      .join(Tables.orders(spark, sfStatic).select(col("o_custkey")),
         col("user_id") === col("o_custkey"))
       .count()
     assert(probe.getLong(3) == actual,
       s"forecast ${probe.getLong(3)} != materialized $actual")
     // side cardinalities recompute
-    val ndL = Tables.events(spark, sf).select(col("user_id")).distinct().count()
-    val ndR = Tables.orders(spark, sf).select(col("o_custkey")).distinct().count()
+    val ndL = Tables.events(spark, sfStatic).select(col("user_id")).distinct().count()
+    val ndR = Tables.orders(spark, sfStatic).select(col("o_custkey")).distinct().count()
     assert(probe.getLong(0) == ndL && probe.getLong(1) == ndR)
     assert(probe.getLong(2) <= math.min(ndL, ndR))
     // the worst key's fanout bounds the mean fanout
@@ -57,7 +57,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("pareto_frontier_parts: matches the brute-force dominance check") {
-    val parts = Tables.part(spark, sf)
+    val parts = Tables.part(spark, sfStatic)
       .select(col("p_brand"), col("p_partkey"), col("p_size"),
         col("p_retailprice")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
@@ -66,13 +66,13 @@ class R12cOpsSpec extends SparkSpec {
         b2 == b && pr2 <= pr && sz2 >= sz && (pr2 < pr || sz2 > sz)
       }
     }.map(t => (t._1, t._2)).toSet
-    val got = SortSetOps.paretoFrontierParts.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "pareto_frontier_parts")
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == expected)
   }
 
   test("pareto_frontier_parts: frontier is an antichain with one point per size") {
-    val rows = SortSetOps.paretoFrontierParts.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "pareto_frontier_parts")
       .map(r => (r.getString(0), r.getInt(2), r.getDouble(3)))
     rows.groupBy(_._1).foreach { case (brand, rs) =>
       // within a brand, strictly increasing size must pair with
@@ -90,8 +90,8 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("graph_label_propagation: matches a JVM-recomputed 3-round sync LPA") {
-    val eb = Tables.orders(spark, sf)
-      .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
+    val eb = Tables.orders(spark, sfStatic)
+      .join(Tables.lineitem(spark, sfStatic), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_suppkey")).distinct().collect()
       .map(r => (r.getLong(0) * 2, r.getLong(1) * 2 + 1))
     val edges = eb.flatMap { case (c, s0) => Seq((c, s0), (s0, c)) }
@@ -107,14 +107,14 @@ class R12cOpsSpec extends SparkSpec {
     }
     val expected = labels.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
-    val got = ClusterOps.graphLabelPropagation.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "graph_label_propagation")
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
     assert(got.values.sum == nbrs.size.toLong, "histogram must cover every node")
   }
 
   test("index_inverted_postings: df/cf/postings recompute from raw tokens") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val perTerm = docs.flatMap { case (id, text) =>
@@ -122,7 +122,7 @@ class R12cOpsSpec extends SparkSpec {
         (t, id, occ.length.toLong)
       }
     }.groupBy(_._1)
-    val rows = CorpusOps.indexInvertedPostings.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "index_inverted_postings")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(rows.map(_._1).toSet == perTerm.keySet)
     rows.foreach { case (term, df, cf, postings) =>
@@ -135,7 +135,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("ts_seasonal_naive_error: recomputes from daily cent totals") {
-    val daily = Tables.events(spark, sf)
+    val daily = Tables.events(spark, sfStatic)
       .select(col("event_type"), date_trunc("day", col("ts")).cast("date").as("day"),
         (col("value").cast("decimal(12,4)") * 100).cast("long").as("c"))
       .groupBy(col("event_type"), col("day")).agg(sum(col("c")).as("cents"))
@@ -149,15 +149,15 @@ class R12cOpsSpec extends SparkSpec {
       val absErr = ps.map(p => math.abs(p._2 - p._3)).sum
       (ps.size.toLong, absErr, absErr / ps.size, ps.map(p => p._2 - p._3).sum)
     }.toMap
-    val got = EventAnalytics.tsSeasonalNaiveError.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "ts_seasonal_naive_error")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expected)
   }
 
   test("graph_k_core: matches JVM-recomputed iterated degree pruning") {
-    val eb = Tables.orders(spark, sf)
-      .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
+    val eb = Tables.orders(spark, sfStatic)
+      .join(Tables.lineitem(spark, sfStatic), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_suppkey")).distinct().collect()
       .map(r => (r.getLong(0) * 2, r.getLong(1) * 2 + 1))
     var edges = eb.flatMap { case (c, s0) => Seq((c, s0), (s0, c)) }.toSeq
@@ -169,7 +169,7 @@ class R12cOpsSpec extends SparkSpec {
       expected += ((i.toLong, edges.map(_._1).distinct.size.toLong,
         edges.size.toLong))
     }
-    val got = ClusterOps.graphKCore.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "graph_k_core")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == expected.toSeq)
     // the decay curve is monotone
@@ -180,10 +180,10 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("hash_feature_collisions: bucket masses partition the term universe") {
-    val rows = PipelineOps.hashFeatureCollisions.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "hash_feature_collisions")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.map(_._1).toSeq == (0L until 16L))
-    val docs = Tables.documents(spark, sf).select(col("text")).collect()
+    val docs = Tables.documents(spark, sfStatic).select(col("text")).collect()
       .map(_.getString(0))
     val terms = docs.flatMap(_.split(" ", -1))
     assert(rows.map(_._2).sum == terms.distinct.length.toLong,
@@ -194,10 +194,10 @@ class R12cOpsSpec extends SparkSpec {
 
   test("report_topn_other: shares and the OTHER fold recompute") {
     def dec(d: Double) = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_partkey"), col("l_extendedprice"), col("l_discount"))
       .collect().map(r => (r.getLong(0), dec(r.getDouble(1)), dec(r.getDouble(2))))
-    val brandOf = Tables.part(spark, sf)
+    val brandOf = Tables.part(spark, sfStatic)
       .select(col("p_partkey"), col("p_brand")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val byBrand = li.groupBy(t => brandOf(t._1)).view.mapValues(
@@ -208,7 +208,7 @@ class R12cOpsSpec extends SparkSpec {
       .map { case (b, r) => (if (top5(b)) b else "OTHER") -> r }
       .groupBy(_._1).view
       .mapValues(rs => (rs.map(_._2).sum, rs.size.toLong)).toMap
-    val got = Aggregates.reportTopnOther.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_topn_other")
       .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expected.keySet)
@@ -223,7 +223,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("audience_overlap_jaccard: recomputes from distinct user sets") {
-    val tu = Tables.events(spark, sf)
+    val tu = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("user_id")).distinct().collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val sets = tu.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -236,18 +236,18 @@ class R12cOpsSpec extends SparkSpec {
       (a, b) -> (inter, sets(a).size.toLong, sets(b).size.toLong,
         inter * 1000000L / union)
     }).toMap
-    val got = EventAnalytics.audienceOverlapJaccard.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "audience_overlap_jaccard")
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expected)
   }
 
   test("dq_freshness_sla: lag and trailing-window counts recompute") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("ts")).collect()
       .map(r => (r.getString(0), r.getTimestamp(1).getTime))
     val gm = evs.map(_._2).max
-    val got = Sampling.dqFreshnessSla.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dq_freshness_sla")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getTimestamp(2), r.getLong(3), r.getLong(4))).toMap
     val byType = evs.groupBy(_._1)
@@ -265,8 +265,8 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("agg_corr_matrix: corr(x,y) matches agg_corr_explicit's machinery on doubles") {
-    val r = Aggregates.aggCorrMatrix.run(spark, sf).collect().head
-    val rows = Tables.lineitem(spark, sf)
+    val r = StaticResults.collected(spark, "agg_corr_matrix").head
+    val rows = Tables.lineitem(spark, sfStatic)
       .select(col("l_quantity"), col("l_extendedprice"), col("l_discount"))
       .collect().map(x => (
         math.round(x.getDouble(0) * 10).toDouble,
@@ -292,7 +292,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sample_poisson_bootstrap: multiplicities recompute from md5 and mass ~ Poisson(1)") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1).split(" ", -1).length.toLong))
     def mult(docId: Long, rep: Int): Long = {
@@ -308,7 +308,7 @@ class R12cOpsSpec extends SparkSpec {
       rep.toLong -> (ms.count(_._1 >= 1).toLong, ms.map(_._1).sum,
         ms.map { case (m, t) => m * t }.sum)
     }.toMap
-    val got = Sampling.samplePoissonBootstrap.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "sample_poisson_bootstrap")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expected)
@@ -322,8 +322,8 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("report_aging_buckets: buckets partition the order book") {
-    val rows = Aggregates.reportAgingBuckets.run(spark, sf).collect()
-    val nOrders = Tables.orders(spark, sf).count()
+    val rows = StaticResults.collected(spark, "report_aging_buckets")
+    val nOrders = Tables.orders(spark, sfStatic).count()
     assert(rows.map(_.getLong(2)).sum == nOrders)
     val buckets = Set("00-30", "31-90", "91-365", "366+")
     rows.foreach(r => assert(buckets(r.getString(1))))
@@ -334,10 +334,10 @@ class R12cOpsSpec extends SparkSpec {
 
   test("report_concentration: whale share recomputes from sorted order values") {
     def dec(d: Double) = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderstatus"), col("o_totalprice"), col("o_orderkey"))
       .collect().map(r => (r.getString(0), dec(r.getDouble(1)), r.getLong(2)))
-    val got = Aggregates.reportConcentration.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_concentration")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
     orders.groupBy(_._1).foreach { case (status, rs) =>
@@ -353,12 +353,12 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("events_dau_stickiness: DAU/WAU recompute from raw activity days") {
-    val au = Tables.events(spark, sf)
+    val au = Tables.events(spark, sfStatic)
       .select(col("user_id"), date_trunc("day", col("ts")).cast("date").as("day"))
       .distinct().collect()
       .map(r => (r.getLong(0), r.getDate(1).toLocalDate))
     val days = au.map(_._2).distinct
-    val got = EventAnalytics.eventsDauStickiness.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_dau_stickiness")
       .map(r => r.getDate(0).toLocalDate ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.keySet == days.toSet)
@@ -377,7 +377,7 @@ class R12cOpsSpec extends SparkSpec {
 
   test("cohort_revenue_ltv: cumulative curve is monotone and covers all orders") {
     def dec(d: Double) = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-    val rows = EventAnalytics.cohortRevenueLtv.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "cohort_revenue_ltv")
       .map(r => (r.getDate(0).toLocalDate, r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     // per cohort: cum is the running sum of revenue in age order
@@ -392,18 +392,18 @@ class R12cOpsSpec extends SparkSpec {
       assert(sorted.head._2 == 0L, s"$cohort missing age-0 row")
     }
     // total revenue reconciles against the raw order book
-    val total = Tables.orders(spark, sf).select(col("o_totalprice")).collect()
+    val total = Tables.orders(spark, sfStatic).select(col("o_totalprice")).collect()
       .map(r => dec(r.getDouble(0))).sum
     assert(math.abs(rows.map(_._4).sum - total.toDouble) < 1e-4)
   }
 
   test("text_term_entropy: matches a JVM recompute with the same rounding") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     def round6(x: Double) = BigDecimal(x)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val got = CorpusOps.textTermEntropy.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "text_term_entropy")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap
     assert(got.keySet == docs.map(_._1).toSet)
@@ -424,7 +424,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("join_time_band_bucketed: the banding rewrite matches the quadratic pair set") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("t")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
@@ -438,7 +438,7 @@ class R12cOpsSpec extends SparkSpec {
       val total = ps.map(_._2).sum
       (ps.length.toLong, total, total / ps.length / 1000)
     }.toMap
-    val got = Joins.joinTimeBandBucketed.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "join_time_band_bucketed")
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expected)
@@ -446,11 +446,11 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("events_burst_detection: busiest minute recomputes per user") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("user_id"),
         date_trunc("minute", col("ts")).cast("long").as("m")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val got = EventAnalytics.eventsBurstDetection.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_burst_detection")
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val byUser = evs.groupBy(_._1)
@@ -466,7 +466,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("events_interarrival_stats: gaps recompute from per-user orderings") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("t")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -479,14 +479,14 @@ class R12cOpsSpec extends SparkSpec {
       val v = gs.map(_._2)
       (v.length.toLong, v.min, v.max, v.sum / v.length)
     }.toMap
-    val got = EventAnalytics.eventsInterarrivalStats.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_interarrival_stats")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expected)
   }
 
   test("events_growth_accounting: the DAU decomposition recomputes and sums") {
-    val days = Tables.events(spark, sf)
+    val days = Tables.events(spark, sfStatic)
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       .collect().map(r => (r.getLong(0), r.getDate(1).toLocalDate))
     val byUser = days.groupBy(_._1).view
@@ -507,7 +507,7 @@ class R12cOpsSpec extends SparkSpec {
       }
       ch = ch.updated(ds.last.plusDays(1), ch(ds.last.plusDays(1)) + 1)
     }
-    val got = EventAnalytics.eventsGrowthAccounting.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_growth_accounting")
       .map(r => r.getDate(0).toLocalDate ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
@@ -521,13 +521,13 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("join_null_aware_in: verdict buckets agree with Spark's own IN / NOT IN 3VL") {
-    Tables.orders(spark, sf).createOrReplaceTempView("naa_orders")
-    Tables.customer(spark, sf).createOrReplaceTempView("naa_customer")
-    val got = Joins.joinNullAwareIn.run(spark, sf).collect()
+    Tables.orders(spark, sfStatic).createOrReplaceTempView("naa_orders")
+    Tables.customer(spark, sfStatic).createOrReplaceTempView("naa_customer")
+    val got = StaticResults.collected(spark, "join_null_aware_in")
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val statuses = spark.sql("SELECT DISTINCT o_orderstatus FROM naa_orders")
       .collect().map(_.getString(0))
-    val nCust = Tables.customer(spark, sf).count()
+    val nCust = Tables.customer(spark, sfStatic).count()
     statuses.foreach { st =>
       val sub = s"""SELECT CASE WHEN o_orderstatus <> 'P' AND o_custkey % 50 = 7
         THEN NULL ELSE o_custkey END FROM naa_orders WHERE o_orderstatus = '$st'"""
@@ -547,8 +547,8 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("report_abc_class: classes recompute from exact part revenues") {
-    val pr = Tables.lineitem(spark, sf)
-      .join(Tables.part(spark, sf), col("p_partkey") === col("l_partkey"))
+    val pr = Tables.lineitem(spark, sfStatic)
+      .join(Tables.part(spark, sfStatic), col("p_partkey") === col("l_partkey"))
       .groupBy(col("p_brand"), col("l_partkey"))
       .agg(sum(expr("CAST(l_extendedprice AS DECIMAL(12,2)) " +
         "* (1 - CAST(l_discount AS DECIMAL(6,2)))")).as("rev"))
@@ -572,7 +572,7 @@ class R12cOpsSpec extends SparkSpec {
         (brand, cls) -> (ps.length.toLong, ps.map(_._2).reduce(_ add _))
       }
     }
-    val got = Aggregates.reportAbcClass.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_abc_class")
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     assert(got.keySet == expected.keySet)
@@ -583,7 +583,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("kmeans_update_round: a full JVM Lloyd step reproduces the new centroids") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1),
         r.getSeq[Float](2).map(v => math.floor(v.toDouble * 1000).toLong).toArray))
@@ -608,7 +608,7 @@ class R12cOpsSpec extends SparkSpec {
           members.size.toLong)
       }
     }
-    val got = LlmExtras.kmeansUpdateRound.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "kmeans_update_round")
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expected.keySet)
@@ -616,7 +616,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sim_hard_negatives: brute-force cross-label top-3 recomputes") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -638,14 +638,14 @@ class R12cOpsSpec extends SparkSpec {
         .sortBy { case (_, id, sim) => (-sim, id) }
         .take(3)
     }.map { case (q, n, s2) => (q, n) -> s2 }.toMap
-    val got = LlmPipeline.simHardNegatives.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "sim_hard_negatives")
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(4)).toMap
     assert(got == expected)
   }
 
   test("q17_small_qty_revenue: the integer threshold matches the rational form") {
-    val li = Tables.lineitem(spark, sf)
-      .join(Tables.part(spark, sf), col("p_partkey") === col("l_partkey"))
+    val li = Tables.lineitem(spark, sfStatic)
+      .join(Tables.part(spark, sfStatic), col("p_partkey") === col("l_partkey"))
       .select(col("p_brand"), col("l_partkey"),
         expr("CAST(CAST(l_quantity AS DECIMAL(12,4)) * 10 AS BIGINT)").as("q10"),
         expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
@@ -661,7 +661,7 @@ class R12cOpsSpec extends SparkSpec {
     val expected = small.groupBy(_._1).view.mapValues { rs =>
       (rs.length.toLong, rs.map(_._4).sum)
     }.toMap
-    val got = Joins.q17SmallQtyRevenue.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "q17_small_qty_revenue")
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3)))
       .toMap
     assert(got.keySet == expected.keySet)
@@ -681,12 +681,12 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sketch_countmin_freq: estimates recompute and never underestimate") {
-    val keys = Tables.orders(spark, sf).select(col("o_custkey")).collect()
+    val keys = Tables.orders(spark, sfStatic).select(col("o_custkey")).collect()
       .map(_.getLong(0))
     val truth = keys.groupBy(identity).view.mapValues(_.length.toLong).toMap
     val cells = keys.flatMap(k => (0 to 3).map(r => (r, md5bucket(r, k, 1024))))
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val got = SketchOps.sketchCountminFreq.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "sketch_countmin_freq")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.length == 10)
     val expTop = truth.toSeq.sortBy { case (k, c) => (-c, k) }.take(10).toMap
@@ -700,16 +700,16 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sketch_bloom_fpr: zero false negatives and an exactly-recomputed bit set") {
-    val members = Tables.orders(spark, sf)
+    val members = Tables.orders(spark, sfStatic)
       .filter(col("o_orderdate") >= lit("1995-01-01").cast("date") &&
         col("o_orderdate") < lit("1996-01-01").cast("date"))
       .select(col("o_custkey")).distinct().collect().map(_.getLong(0)).toSet
     val bits = members.flatMap(k => (0 to 2).map(r => md5bucket(r, k, 65536)))
-    val probes = Tables.customer(spark, sf).select(col("c_custkey")).collect()
+    val probes = Tables.customer(spark, sfStatic).select(col("c_custkey")).collect()
       .map(_.getLong(0))
     val fp = probes.count(k => !members(k) &&
       (0 to 2).forall(r => bits(md5bucket(r, k, 65536))))
-    val r = SketchOps.sketchBloomFpr.run(spark, sf).collect().head
+    val r = StaticResults.collected(spark, "sketch_bloom_fpr").head
     assert(r.getLong(0) == members.size.toLong)
     assert(r.getLong(1) == bits.size.toLong)
     assert(r.getLong(2) == probes.length - members.size.toLong)
@@ -718,12 +718,12 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("ts_cusum_alarm: the windowed closed form equals the max(0, .) recursion") {
-    val daily = Tables.events(spark, sf)
+    val daily = Tables.events(spark, sfStatic)
       .select(col("event_type"), to_date(col("ts")).as("day"),
         expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
       .groupBy(col("event_type"), col("day")).agg(sum(col("c")).as("cents"))
       .collect().map(r => (r.getString(0), r.getDate(1).toLocalDate, r.getLong(2)))
-    val got = DriftOps.tsCusumAlarm.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "ts_cusum_alarm")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     daily.groupBy(_._1).foreach { case (t, rows) =>
@@ -744,11 +744,11 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sketch_hll_linear: occupancy recomputes and the estimate tracks truth") {
-    val keys = Tables.orders(spark, sf).select(col("o_custkey")).collect()
+    val keys = Tables.orders(spark, sfStatic).select(col("o_custkey")).collect()
       .map(_.getLong(0))
     val nTrue = keys.distinct.length.toLong
     val occ = keys.map(k => md5bucket(0, k, 4096)).distinct.length.toLong
-    val r = SketchOps.sketchHllLinear.run(spark, sf).collect().head
+    val r = StaticResults.collected(spark, "sketch_hll_linear").head
     assert(r.getLong(0) == 4096L)
     assert(r.getLong(1) == nTrue)
     assert(r.getLong(2) == occ)
@@ -761,7 +761,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("funnel_time_to_convert: the gap histogram recomputes from raw events") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_type"),
         unix_micros(expr("date_trunc('second', ts)")).as("t")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -774,14 +774,14 @@ class R12cOpsSpec extends SparkSpec {
         if (purch.isEmpty) None else Some((purch.min - t1) / 3600000000L)
       }
     }.toSeq.groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val got = EventAnalytics.funnelTimeToConvert.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "funnel_time_to_convert")
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
     assert(got.nonEmpty)
   }
 
   test("stream_late_drop_audit: lateness recomputes under the md5 arrival jitter") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("t")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -800,14 +800,14 @@ class R12cOpsSpec extends SparkSpec {
       }
       (rs.length.toLong, late)
     }.toMap
-    val got = Streaming.streamLateDropAudit.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "stream_late_drop_audit")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expected)
     assert(got.values.exists(_._2 > 0), "the jitter must actually produce lateness")
   }
 
   test("drift_unigram_jsd: a JVM recompute with the same rounding agrees, and 0 <= JSD <= ln 2") {
-    val toks = Tables.documents(spark, sf)
+    val toks = Tables.documents(spark, sfStatic)
       .select((col("doc_id") % 2).as("coh"), col("text")).collect()
       .flatMap(r => r.getString(1).split(" ", -1).map(t => (r.getLong(0), t)))
     val tf = toks.groupBy(identity).view.mapValues(_.length.toLong).toMap
@@ -824,7 +824,7 @@ class R12cOpsSpec extends SparkSpec {
       if (cq > 0) sq += BigDecimal(cq) * r6(math.log(2.0 * b / (a + b)))
     }
     val expected = 0.5 * (sp.toDouble / np + sq.toDouble / nq)
-    val r = DriftOps.driftUnigramJsd.run(spark, sf).collect().head
+    val r = StaticResults.collected(spark, "drift_unigram_jsd").head
     assert(r.getLong(3) == np && r.getLong(4) == nq)
     assert(r.getLong(2) == terms.size.toLong)
     assert(r.getDouble(5) == expected, "JSD value (same rounding)")
@@ -833,14 +833,14 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("dedup_url_canonical: groups collapse exactly to doc_id div 8") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id")).collect().map(_.getLong(0))
     val expected = docs.groupBy(_ / 8)
       .map { case (g, ds) =>
         s"www.example.com/docs/$g?id=$g" ->
           (ds.distinct.length.toLong, ds.length.toLong, ds.min)
       }
-    val got = PipelineOps.dedupUrlCanonical.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dedup_url_canonical")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expected.keySet)
@@ -856,10 +856,10 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("report_ytd_running: YTD restarts each January and ends at the year total") {
-    val rows = Aggregates.reportYtdRunning.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "report_ytd_running")
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     val byYear = rows.groupBy(_._1)
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(year(col("o_orderdate")).as("y"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
           .as("cents"))
@@ -878,11 +878,11 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("multimodal_image_tiles: tiles exactly partition every synthesized image") {
-    val got = LlmPipeline.multimodalImageTiles.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "multimodal_image_tiles")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
     val byDoc = got.groupBy(_._1)
-    Tables.documents(spark, sf).select(col("doc_id")).collect()
+    Tables.documents(spark, sfStatic).select(col("doc_id")).collect()
       .map(_.getLong(0)).foreach { id =>
         val w = 640 + (id % 5) * 160; val h = 480 + (id % 7) * 120
         val tiles = byDoc(id)
@@ -897,9 +897,9 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sketch_cms_join_forecast: estimate recomputes and never underestimates") {
-    val a = Tables.events(spark, sf).select(col("user_id")).collect()
+    val a = Tables.events(spark, sfStatic).select(col("user_id")).collect()
       .map(_.getLong(0))
-    val b = Tables.orders(spark, sf).select(col("o_custkey")).collect()
+    val b = Tables.orders(spark, sfStatic).select(col("o_custkey")).collect()
       .map(_.getLong(0))
     val ca = a.groupBy(identity).view.mapValues(_.length.toLong).toMap
     val cb = b.groupBy(identity).view.mapValues(_.length.toLong).toMap
@@ -912,14 +912,14 @@ class R12cOpsSpec extends SparkSpec {
       (0 until 16384).map(bk =>
         sa.getOrElse((r, bk), 0L) * sb.getOrElse((r, bk), 0L)).sum
     }.min
-    val row = SketchOps.sketchCmsJoinForecast.run(spark, sf).collect().head
+    val row = StaticResults.collected(spark, "sketch_cms_join_forecast").head
     assert(row.getLong(2) == trueRows)
     assert(row.getLong(3) == est, "inner-product estimate")
     assert(est >= trueRows, "CMS inner product never underestimates")
   }
 
   test("report_value_migration: bands recompute against each year's floor mean") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), year(col("o_orderdate")).as("y"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
           .as("cents")).collect()
@@ -937,16 +937,16 @@ class R12cOpsSpec extends SparkSpec {
     val expected = (m95.keySet ++ m96.keySet).toSeq
       .map(k => (band(m95.get(k), a95), band(m96.get(k), a96)))
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val got = Aggregates.reportValueMigration.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_value_migration")
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == expected)
   }
 
   test("agg_gini_value: the rank formula recomputes and stays in [0, 1)") {
-    val cust = Tables.customer(spark, sf)
+    val cust = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_mktsegment")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val cents = Tables.orders(spark, sf)
+    val cents = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
           .as("c")).collect()
@@ -961,7 +961,7 @@ class R12cOpsSpec extends SparkSpec {
         seg -> (n, total,
           (2 * rx - (n + 1) * total).toDouble / (n.toDouble * total))
       }
-    val got = Aggregates.aggGiniValue.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "agg_gini_value")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap
     assert(got.keySet == expected.keySet)
@@ -972,7 +972,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("report_xyz_variability: classes recompute from weekly demand moments") {
-    val wk = Tables.lineitem(spark, sf)
+    val wk = Tables.lineitem(spark, sfStatic)
       .select(col("l_partkey"),
         expr("datediff(l_shipdate, DATE '1992-01-01') div 7").as("w"),
         expr("CAST(CAST(l_quantity AS DECIMAL(12,4)) * 10 AS BIGINT)").as("q"))
@@ -987,7 +987,7 @@ class R12cOpsSpec extends SparkSpec {
     }.toSeq.groupBy(_._1).view.mapValues { ps =>
       (ps.length.toLong, ps.map(_._2).sum, ps.map(_._3).sum)
     }.toMap
-    val got = Aggregates.reportXyzVariability.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_xyz_variability")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expected)
@@ -995,7 +995,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("attribution_time_decay: credits recompute and dust is bounded by touches") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("t"),
         expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
@@ -1015,7 +1015,7 @@ class R12cOpsSpec extends SparkSpec {
           Some(pid -> (ws.length.toLong, wsum, credited, cents - credited))
         }
     }.toMap
-    val got = EventAnalytics.attributionTimeDecay.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "attribution_time_decay")
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expected)
@@ -1025,14 +1025,14 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("events_hourly_heatmap: integer dow/hour recompute and match the calendar") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(unix_micros(col("ts")).as("us"),
         expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expected = evs.groupBy { case (us, _) =>
       ((us / 86400000000L + 4) % 7, (us / 3600000000L) % 24)
     }.view.mapValues(rs => (rs.length.toLong, rs.map(_._2).sum)).toMap
-    val got = EventAnalytics.eventsHourlyHeatmap.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_hourly_heatmap")
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expected)
@@ -1044,7 +1044,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("harmonize_fx_convert: per-order floor conversion recomputes") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(year(col("o_orderdate")).as("y"), month(col("o_orderdate")).as("m"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
           .as("c")).collect()
@@ -1053,7 +1053,7 @@ class R12cOpsSpec extends SparkSpec {
       val rate = 900L + (os.head._2 - 1) * 10
       (os.length.toLong, os.map(_._3).sum, os.map(o => o._3 * rate / 1000).sum)
     }.toMap
-    val got = HarmonizeQueries.harmonizeFxConvert.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "harmonize_fx_convert")
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expected)
@@ -1065,7 +1065,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("split_by_user_leakfree: user sets are disjoint and exhaustive") {
-    val users = Tables.events(spark, sf)
+    val users = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_type")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     def bucket(u: Long): String = {
@@ -1077,7 +1077,7 @@ class R12cOpsSpec extends SparkSpec {
       }
     }
     val bySplit = users.map(_._1).distinct.groupBy(bucket)
-    val got = Sampling.splitByUserLeakfree.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "split_by_user_leakfree")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == bySplit.keySet)
@@ -1093,7 +1093,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("sketch_hll_registers: registers and the harmonic estimate recompute exactly") {
-    val keys = Tables.orders(spark, sf).select(col("o_custkey")).collect()
+    val keys = Tables.orders(spark, sfStatic).select(col("o_custkey")).collect()
       .map(_.getLong(0))
     val regs = Array.fill(64)(0)
     keys.foreach { k =>
@@ -1110,7 +1110,7 @@ class R12cOpsSpec extends SparkSpec {
     val z = regs.map(m2 => math.pow(2.0, -m2)).sum
     val est = math.floor(0.709 * 64 * 64 / z + 0.5).toLong
     val nTrue = keys.distinct.length.toLong
-    val r = SketchOps.sketchHllRegisters.run(spark, sf).collect().head
+    val r = StaticResults.collected(spark, "sketch_hll_registers").head
     assert(r.getLong(0) == 64L)
     assert(r.getLong(1) == nTrue)
     assert(r.getLong(2) == regs.count(_ == 0).toLong)
@@ -1120,7 +1120,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("ts_order_gap_survival: the curve recomputes and is monotone decreasing") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), to_date(col("o_orderdate")).as("d"),
         col("o_orderkey"))
       .collect()
@@ -1130,7 +1130,7 @@ class R12cOpsSpec extends SparkSpec {
         case Array(a, b) => b._2 - a._2
       }
     }.toSeq
-    val got = EventAnalytics.tsOrderGapSurvival.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "ts_order_gap_survival")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == Set(30L, 60L, 90L, 120L, 180L, 360L))
@@ -1144,9 +1144,9 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("dq_order_lineitem_dates: violation counts recompute per order year") {
-    val joined = Tables.lineitem(spark, sf)
+    val joined = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_shipdate"))
-      .join(Tables.orders(spark, sf)
+      .join(Tables.orders(spark, sfStatic)
         .select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       .select(year(col("o_orderdate")).as("y"),
@@ -1156,7 +1156,7 @@ class R12cOpsSpec extends SparkSpec {
       val v = rs.count(_._2 < 0).toLong
       (rs.length.toLong, v, rs.map(_._2).min, v * 1000000L / rs.length)
     }.toMap
-    val got = Sampling.dqOrderLineitemDates.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dq_order_lineitem_dates")
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expected)
@@ -1164,7 +1164,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("agg_multi_distinct: counts recompute and the plan uses one Expand, one scan") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderpriority"), col("o_custkey"),
         to_date(col("o_orderdate")).as("d")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDate(2).toLocalDate))
@@ -1173,8 +1173,8 @@ class R12cOpsSpec extends SparkSpec {
         rs.map(_._3).distinct.length.toLong,
         rs.map(r => (r._2, r._3)).distinct.length.toLong)
     }.toMap
-    val df = Aggregates.aggMultiDistinct.run(spark, sf)
-    val got = df.collect()
+    val df = Aggregates.aggMultiDistinct.run(spark, sfStatic)
+    val got = StaticResults.collected(spark, "agg_multi_distinct")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expected)
@@ -1188,14 +1188,14 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("stream_tumbling_distinct: distinct users recompute per 6h window") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(unix_micros(col("ts")).as("us"), col("event_type"),
         col("user_id")).collect()
       .map(r => (r.getLong(0) / 21600000000L, r.getString(1), r.getLong(2)))
     val expected = evs.groupBy(e => (e._1, e._2)).view.mapValues { rs =>
       (rs.length.toLong, rs.map(_._3).distinct.length.toLong)
     }.toMap
-    val got = Streaming.streamTumblingDistinct.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "stream_tumbling_distinct")
       .map { r =>
         val start = r.getTimestamp(0).getTime / 1000 * 1000000L
         ((start / 21600000000L, r.getString(1)), (r.getLong(2), r.getLong(3)))
@@ -1205,7 +1205,7 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("corpus_length_log2: every bucket's extrema respect its power-of-two range") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("lang"), col("n_chars")).collect()
       .map(r => (r.getString(0), r.getLong(1))).filter(_._2 >= 1)
     val expected = docs.groupBy { case (l, n) =>
@@ -1213,7 +1213,7 @@ class R12cOpsSpec extends SparkSpec {
     }.view.mapValues(rs =>
       (rs.length.toLong, rs.map(_._2).sum, rs.map(_._2).min, rs.map(_._2).max))
       .toMap
-    val got = CorpusOps.corpusLengthLog2.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "corpus_length_log2")
       .map(r => (r.getString(0), r.getLong(1).toInt) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expected)
@@ -1224,12 +1224,12 @@ class R12cOpsSpec extends SparkSpec {
   }
 
   test("profile_key_skew: top-10 selection and ppm arithmetic recompute") {
-    val counts = Tables.orders(spark, sf).select(col("o_custkey")).collect()
+    val counts = Tables.orders(spark, sfStatic).select(col("o_custkey")).collect()
       .map(_.getLong(0)).groupBy(identity).view.mapValues(_.length.toLong).toMap
     val total = counts.values.sum
     val nd = counts.size.toLong
     val expectedTop = counts.toSeq.sortBy { case (k, n) => (-n, k) }.take(10)
-    val rows = Sampling.profileKeySkew.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "profile_key_skew")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.length == 10)
     assert(rows.map(t => (t._1, t._2)).toSeq == expectedTop)

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 fourth-batch additions (TPC-H
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * systematic cross-engine bug can't hide a wrong formulation.
   */
 class R12dOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq(
     "q7_volume_shipping", "q8_market_share", "sketch_kmv_distinct",
@@ -22,7 +21,7 @@ class R12dOpsSpec extends SparkSpec {
   }
 
   test("q7_volume_shipping: cells recompute from a naive 6-table join and pairs are asymmetric") {
-    val rows = Joins.q7VolumeShipping.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "q7_volume_shipping")
     assert(rows.nonEmpty)
     // every row is one direction of the NATION_18 <-> NATION_19 lane
     rows.foreach { r =>
@@ -33,13 +32,13 @@ class R12dOpsSpec extends SparkSpec {
     }
     // independent recompute of one cell with a deliberately different
     // plan (no broadcasts, filter applied last)
-    val n = Tables.nation(spark, sf)
+    val n = Tables.nation(spark, sfStatic)
       .select(col("n_nationkey"), col("n_name"))
-    val full = Tables.lineitem(spark, sf)
-      .join(Tables.supplier(spark, sf),
+    val full = Tables.lineitem(spark, sfStatic)
+      .join(Tables.supplier(spark, sfStatic),
         col("l_suppkey") === col("s_suppkey"))
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
+      .join(Tables.orders(spark, sfStatic), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(spark, sfStatic), col("o_custkey") === col("c_custkey"))
       .join(n.withColumnRenamed("n_nationkey", "sk")
         .withColumnRenamed("n_name", "supp_nation"), col("s_nationkey") === col("sk"))
       .join(n.withColumnRenamed("n_nationkey", "ck")
@@ -58,7 +57,7 @@ class R12dOpsSpec extends SparkSpec {
   }
 
   test("q8_market_share: share bounds, ppm algebra, and total recompute") {
-    val rows = Joins.q8MarketShare.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "q8_market_share")
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val nr = r.getDouble(1); val tr = r.getDouble(2); val ppm = r.getLong(3)
@@ -68,12 +67,12 @@ class R12dOpsSpec extends SparkSpec {
     }
     // total revenue for 1995 recomputes from a naive join with the
     // region/type filters applied at the end
-    val naive = Tables.lineitem(spark, sf)
-      .join(Tables.part(spark, sf), col("l_partkey") === col("p_partkey"))
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
-      .join(Tables.nation(spark, sf), col("c_nationkey") === col("n_nationkey"))
-      .join(Tables.region(spark, sf), col("n_regionkey") === col("r_regionkey"))
+    val naive = Tables.lineitem(spark, sfStatic)
+      .join(Tables.part(spark, sfStatic), col("l_partkey") === col("p_partkey"))
+      .join(Tables.orders(spark, sfStatic), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(spark, sfStatic), col("o_custkey") === col("c_custkey"))
+      .join(Tables.nation(spark, sfStatic), col("c_nationkey") === col("n_nationkey"))
+      .join(Tables.region(spark, sfStatic), col("n_regionkey") === col("r_regionkey"))
       .filter(col("r_name") === "EUROPE" && col("p_type") === "ECONOMY" &&
         year(col("o_orderdate")) === 1995)
       .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
@@ -84,15 +83,15 @@ class R12dOpsSpec extends SparkSpec {
   }
 
   test("sketch_kmv_distinct: kth-min recomputes and the estimator brackets the truth") {
-    val rows = SketchOps.sketchKmvDistinct.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sketch_kmv_distinct")
     // sf0.001 has 150 distinct customers: k=16 and k=64 rows exist,
     // k=256 cannot (bottom-256 holds fewer than 256 hashes)
     assert(rows.map(_.getLong(0)).toSeq == Seq(16L, 64L),
       s"expected k=16,64 at sf0.001, got ${rows.map(_.getLong(0)).mkString(",")}")
-    val trueDistinct = Tables.orders(spark, sf)
+    val trueDistinct = Tables.orders(spark, sfStatic)
       .select(col("o_custkey")).distinct().count()
     // independent kth-min: sort ALL hashes driver-side
-    val allH = Tables.orders(spark, sf).select(col("o_custkey")).distinct()
+    val allH = Tables.orders(spark, sfStatic).select(col("o_custkey")).distinct()
       .select(conv(substring(md5(col("o_custkey").cast("string")), 1, 8), 16, 10)
         .cast("long").as("h"))
       .distinct().collect().map(_.getLong(0)).sorted
@@ -110,7 +109,7 @@ class R12dOpsSpec extends SparkSpec {
   }
 
   test("layout_zorder_skipping: identical matches, z-layout never scans more rows") {
-    val rows = Scans.layoutZorderSkipping.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "layout_zorder_skipping")
       .map(r => r.getString(0) -> r).toMap
     assert(rows.keySet == Set("linear", "zorder"))
     val lin = rows("linear"); val zo = rows("zorder")
@@ -127,7 +126,7 @@ class R12dOpsSpec extends SparkSpec {
   }
 
   test("eval_ann_recall: hits bounded by panel top-k and candidate set") {
-    val rows = LlmExtras.evalAnnRecall.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "eval_ann_recall")
     assert(rows.map(_.getLong(0)).toSeq == (0L to 7L),
       "one row per panel query, q_id 0..7")
     rows.foreach { r =>
@@ -139,9 +138,9 @@ class R12dOpsSpec extends SparkSpec {
   }
 
   test("curation_threshold_sweep: thr=0 keeps everything, retention is monotone") {
-    val rows = PipelineOps.curationThresholdSweep.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "curation_threshold_sweep")
     assert(rows.map(_.getInt(0)).toSeq == Seq(0, 16, 32, 64, 128, 256))
-    val nDocs = Tables.documents(spark, sf).count()
+    val nDocs = Tables.documents(spark, sfStatic).count()
     assert(rows.head.getLong(1) == nDocs && rows.head.getLong(3) == 1000000L,
       "thr=0 must keep every document")
     rows.sliding(2).foreach { case Array(a, b) =>

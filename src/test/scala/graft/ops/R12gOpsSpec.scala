@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 seventh-batch additions
   * (price/volume/mix bridge, line-number contiguity audit, term
@@ -10,8 +12,6 @@ import org.apache.spark.sql.functions._
   * bug can't hide a wrong formulation.
   */
 class R12gOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq("report_price_volume_mix",
     "dq_sequence_contiguity", "corpus_term_burstiness")
@@ -22,7 +22,7 @@ class R12gOpsSpec extends SparkSpec {
   }
 
   test("report_price_volume_mix: effects bridge exactly to the revenue delta") {
-    val rows = Aggregates.reportPriceVolumeMix.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "report_price_volume_mix")
     assert(rows.length == 25, "all 25 brands ship in both years in this fixture")
     rows.foreach { r =>
       val (rev0, rev1, delta) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -35,8 +35,8 @@ class R12gOpsSpec extends SparkSpec {
     }
     // spot-recompute one brand from raw rows
     val b0 = rows.head.getString(0)
-    val raw = Tables.lineitem(spark, sf)
-      .join(Tables.part(spark, sf).filter(col("p_brand") === b0),
+    val raw = Tables.lineitem(spark, sfStatic)
+      .join(Tables.part(spark, sfStatic).filter(col("p_brand") === b0),
         col("p_partkey") === col("l_partkey"))
       .filter(year(col("l_shipdate")).isin(1995, 1996))
       .select(year(col("l_shipdate")).as("yr"),
@@ -51,11 +51,11 @@ class R12gOpsSpec extends SparkSpec {
   }
 
   test("dq_sequence_contiguity: recomputes from a driver-side per-order walk") {
-    val rows = Sampling.dqSequenceContiguity.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dq_sequence_contiguity")
     // the synthetic fixture's line numbers are deliberately dirty
     // (duplicates, gaps, shifted starts) — recompute the whole
     // per-fanout breakdown from raw rows
-    val orders = Tables.lineitem(spark, sf)
+    val orders = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_linenumber"))
       .collect().map(r => (r.getLong(0), r.getInt(1)))
       .groupBy(_._1).values.map(_.map(_._2).toSeq).toSeq
@@ -81,12 +81,12 @@ class R12gOpsSpec extends SparkSpec {
   }
 
   test("corpus_term_burstiness: top term recomputes from a driver-side count") {
-    val rows = CorpusOps.corpusTermBurstiness.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "corpus_term_burstiness")
     assert(rows.length == 25)
     assert(rows.map(_.getLong(2)).toSeq == rows.map(_.getLong(2)).toSeq
       .sortBy(-_), "rows must arrive in descending corpus-frequency order")
-    val nDocs = Tables.documents(spark, sf).count()
-    val perDoc = Tables.documents(spark, sf)
+    val nDocs = Tables.documents(spark, sfStatic).count()
+    val perDoc = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .collect()
       .map(r => r.getSeq[String](1).groupBy(identity)

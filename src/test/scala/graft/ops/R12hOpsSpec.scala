@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 eighth-batch additions (Q11
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * independent of the DuckDB oracle.
   */
 class R12hOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("q11_important_suppliers", "sketch_hll_merge", "ts_hampel_outliers")
@@ -21,8 +20,8 @@ class R12hOpsSpec extends SparkSpec {
   }
 
   test("q11_important_suppliers: the cut is exactly 'above the mean supplier'") {
-    val rows = Joins.q11ImportantSuppliers.run(spark, sf).collect()
-    val revs = Tables.lineitem(spark, sf)
+    val rows = StaticResults.collected(spark, "q11_important_suppliers")
+    val revs = Tables.lineitem(spark, sfStatic)
       .groupBy(col("l_suppkey"))
       .agg(sum((col("l_extendedprice").cast("decimal(12,2)") * 100)
         .cast("long")).as("rev"))
@@ -42,7 +41,7 @@ class R12hOpsSpec extends SparkSpec {
   }
 
   test("sketch_hll_merge: shard-merged registers equal the direct build") {
-    val r = SketchOps.sketchHllMerge.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "sketch_hll_merge")
     assert(r.length == 1)
     val row = r.head
     assert(row.getLong(0) == 8L, "custkey mod 8 yields 8 shards here")
@@ -52,7 +51,7 @@ class R12hOpsSpec extends SparkSpec {
     assert(row.getLong(3) == row.getLong(4),
       "equal registers force equal estimates")
     val nTrue = row.getLong(2)
-    assert(nTrue == Tables.orders(spark, sf)
+    assert(nTrue == Tables.orders(spark, sfStatic)
       .select(col("o_custkey")).distinct().count())
     // raw-regime HLL at m=64: generous ±40% sanity band
     assert(math.abs(row.getLong(3) - nTrue).toDouble / nTrue < 0.4,
@@ -60,8 +59,8 @@ class R12hOpsSpec extends SparkSpec {
   }
 
   test("ts_hampel_outliers: median/MAD recompute from a driver-side neighborhood walk") {
-    val rows = EventAnalytics.tsHampelOutliers.run(spark, sf).collect()
-    val daily = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "ts_hampel_outliers")
+    val daily = Tables.events(spark, sfStatic)
       .select(col("event_type"),
         datediff(date_trunc("day", col("ts")).cast("date"),
           lit("2024-01-01").cast("date")).as("d"),

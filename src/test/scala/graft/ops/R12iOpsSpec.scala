@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 ninth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * independent of the DuckDB oracle.
   */
 class R12iOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("ts_theil_sen", "sample_neyman_allocation", "fn_date_advanced")
@@ -21,8 +20,8 @@ class R12iOpsSpec extends SparkSpec {
   }
 
   test("ts_theil_sen: the reported slope is the lower median of all pairwise slopes") {
-    val rows = EventAnalytics.tsTheilSen.run(spark, sf).collect()
-    val daily = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "ts_theil_sen")
+    val daily = Tables.events(spark, sfStatic)
       .select(col("event_type"),
         datediff(date_trunc("day", col("ts")).cast("date"),
           lit("2024-01-01").cast("date")).as("d"),
@@ -49,11 +48,11 @@ class R12iOpsSpec extends SparkSpec {
   }
 
   test("sample_neyman_allocation: seats sum to the budget and follow N_h*S_h") {
-    val rows = Sampling.sampleNeymanAllocation.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sample_neyman_allocation")
     assert(rows.map(_.getLong(4)).sum == 1000L,
       "largest-remainder apportionment must hand out the whole budget")
-    val byseg = Tables.orders(spark, sf)
-      .join(Tables.customer(spark, sf),
+    val byseg = Tables.orders(spark, sfStatic)
+      .join(Tables.customer(spark, sfStatic),
         col("c_custkey") === col("o_custkey"))
       .select(col("c_mktsegment").as("seg"),
         expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint) div 100000")
@@ -85,10 +84,10 @@ class R12iOpsSpec extends SparkSpec {
   test("fn_date_advanced: every column recomputes via java.time") {
     import java.time.temporal.{IsoFields, TemporalAdjusters}
     import java.time.DayOfWeek
-    val dates = Tables.orders(spark, sf)
+    val dates = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_orderdate").cast("date"))
       .collect().map(r => (r.getLong(0), r.getDate(1).toLocalDate)).toMap
-    val rows = Functions.fnDateAdvanced.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "fn_date_advanced")
     assert(rows.length == dates.size)
     rows.foreach { r =>
       val d = dates(r.getLong(0))

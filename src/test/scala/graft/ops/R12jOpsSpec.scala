@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 tenth-batch additions (HHI
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * oracle.
   */
 class R12jOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("report_hhi_by_nation", "ts_trading_day_index", "stats_cramers_v")
@@ -21,11 +20,11 @@ class R12jOpsSpec extends SparkSpec {
   }
 
   test("report_hhi_by_nation: HHI of floor-ppm shares recomputes per nation") {
-    val rows = Aggregates.reportHhiByNation.run(spark, sf).collect()
-    val raw = Tables.lineitem(spark, sf)
-      .join(Tables.supplier(spark, sf),
+    val rows = StaticResults.collected(spark, "report_hhi_by_nation")
+    val raw = Tables.lineitem(spark, sfStatic)
+      .join(Tables.supplier(spark, sfStatic),
         col("s_suppkey") === col("l_suppkey"))
-      .join(Tables.nation(spark, sf),
+      .join(Tables.nation(spark, sfStatic),
         col("n_nationkey") === col("s_nationkey"))
       .groupBy(col("n_name"), col("s_suppkey"))
       .agg(sum((col("l_extendedprice").cast("decimal(12,2)") * 100)
@@ -50,10 +49,10 @@ class R12jOpsSpec extends SparkSpec {
   }
 
   test("ts_trading_day_index: shares partition the revenue; index = share*7") {
-    val rows = EventAnalytics.tsTradingDayIndex.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "ts_trading_day_index")
     assert(rows.map(_.getInt(0)).toSeq.sorted == (1 to 7),
       "all seven ISO weekdays must appear")
-    val nOrders = Tables.orders(spark, sf).count()
+    val nOrders = Tables.orders(spark, sfStatic).count()
     assert(rows.map(_.getLong(1)).sum == nOrders)
     val tot = rows.map(_.getLong(2)).sum
     rows.foreach { r =>
@@ -68,10 +67,10 @@ class R12jOpsSpec extends SparkSpec {
   }
 
   test("stats_cramers_v: chi2 and V recompute from a driver-side contingency walk") {
-    val r = DriftOps.statsCramersV.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "stats_cramers_v")
     assert(r.length == 1)
     val row = r.head
-    val cells = Tables.orders(spark, sf)
+    val cells = Tables.orders(spark, sfStatic)
       .groupBy(col("o_orderpriority"), col("o_orderstatus"))
       .agg(count(lit(1)).as("n"))
       .collect().map(x => ((x.getString(0), x.getString(1)), x.getLong(2)))

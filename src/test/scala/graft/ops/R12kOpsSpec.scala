@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 eleventh-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle.
   */
 class R12kOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq("graph_degree_assortativity",
     "events_bot_rate_flags", "corpus_type_token_ratio")
@@ -21,11 +20,11 @@ class R12kOpsSpec extends SparkSpec {
   }
 
   test("graph_degree_assortativity: recomputes from a driver-side edge walk") {
-    val r = ClusterOps.graphDegreeAssortativity.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "graph_degree_assortativity")
     assert(r.length == 1)
     val row = r.head
-    val pairs = Tables.orders(spark, sf)
-      .join(Tables.lineitem(spark, sf),
+    val pairs = Tables.orders(spark, sfStatic)
+      .join(Tables.lineitem(spark, sfStatic),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_suppkey")).distinct()
       .collect().map(x => (x.getLong(0) * 2, x.getLong(1) * 2 + 1))
@@ -47,8 +46,8 @@ class R12kOpsSpec extends SparkSpec {
   }
 
   test("events_bot_rate_flags: rate, burst and flags recompute per user") {
-    val rows = EventAnalytics.eventsBotRateFlags.run(spark, sf).collect()
-    val perUser = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "events_bot_rate_flags")
+    val perUser = Tables.events(spark, sfStatic)
       .select(col("user_id"), date_trunc("minute", col("ts")).as("mn"))
       .collect().map(r => (r.getLong(0), r.getTimestamp(1)))
       .groupBy(_._1).map { case (u, xs) =>
@@ -68,8 +67,8 @@ class R12kOpsSpec extends SparkSpec {
   }
 
   test("corpus_type_token_ratio: types/tokens recompute per source") {
-    val rows = CorpusOps.corpusTypeTokenRatio.run(spark, sf).collect()
-    val bySource = Tables.documents(spark, sf)
+    val rows = StaticResults.collected(spark, "corpus_type_token_ratio")
+    val bySource = Tables.documents(spark, sfStatic)
       .select(col("source"), split(col("text"), " ").as("toks"))
       .collect().map(r => (r.getString(0), r.getSeq[String](1)))
       .groupBy(_._1).map { case (src, xs) =>

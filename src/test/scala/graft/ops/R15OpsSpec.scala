@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-15 batch, checked by FULL
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -10,23 +12,6 @@ import org.apache.spark.sql.functions._
   * family exists to certify), the TPC-H shapes from scala collection
   * joins, and every audit stat from exact BigInt/floorDiv algebra. */
 class R15OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def h32(k: Long): Long =
-    java.lang.Long.parseLong(md5hex(k.toString).substring(0, 8), 16)
-
-  private def cents(d: Double): Long =
-    BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-      .*(BigDecimal(100)).toLongExact
-
-  private lazy val ordersRows: Array[(Long, Long)] =
-    Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice"))
-      .collect().map(r => (r.getLong(0), cents(r.getDouble(1))))
 
   private val keys = Seq(
     "sketch_quantile_merge", "sketch_heavy_hitters_merge",
@@ -48,10 +33,10 @@ class R15OpsSpec extends SparkSpec {
       "estimates come from it, exact side is truly exact") {
     // the property the key exists to certify: per-shard bottom-64
     // states merged by "bottom-64 of the union" == one global pass
-    val byHash = ordersRows.map { case (k, c) => (h32(k), k, c) }
+    val byHash = orderCents.map { case (k, c) => (h32(k), k, c) }
       .sortBy(t => (t._1, t._2))
     val onePass = byHash.take(64)
-    val merged = ordersRows.groupBy(_._1 % 8).values
+    val merged = orderCents.groupBy(_._1 % 8).values
       .flatMap(_.map { case (k, c) => (h32(k), k, c) }
         .sortBy(t => (t._1, t._2)).take(64))
       .toArray.sortBy(t => (t._1, t._2)).take(64)
@@ -59,10 +44,10 @@ class R15OpsSpec extends SparkSpec {
       "bottom-64 of per-shard bottom-64s must equal the one-pass bottom-64")
 
     val sample = onePass.map(t => (t._3, t._2)).sortBy(identity).map(_._1)
-    val exactSorted = ordersRows.map { case (k, c) => (c, k) }
+    val exactSorted = orderCents.map { case (k, c) => (c, k) }
       .sortBy(identity).map(_._1)
     val n = exactSorted.length
-    val got = SketchOps.sketchQuantileMerge.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "sketch_quantile_merge")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3), r.getLong(4)))
       .toMap
     assert(got.keySet == Set(25L, 50L, 75L, 90L, 99L))
@@ -77,7 +62,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("sketch_heavy_hitters_merge matches a driver-side recomputation " +
       "and the merged candidates cover the exact top-8") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val toks = docs.flatMap { case (id, t) => t.split(" ", -1).map((id % 8, _)) }
@@ -87,7 +72,7 @@ class R15OpsSpec extends SparkSpec {
       sh.groupBy(_._2).map { case (t, xs) => t -> xs.length.toLong }
         .toSeq.sortBy { case (t, c) => (-c, t) }.take(8).map(_._1)
     }.toSet
-    val got = SketchOps.sketchHeavyHittersMerge.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "sketch_heavy_hitters_merge")
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getBoolean(3),
         r.getLong(4)))
     assert(got.length == 8)
@@ -102,21 +87,21 @@ class R15OpsSpec extends SparkSpec {
   }
 
   test("q9_product_profit matches an exact BigDecimal recomputation") {
-    val nation = Tables.nation(spark, sf)
+    val nation = Tables.nation(spark, sfStatic)
       .select(col("n_nationkey"), col("n_name")).collect()
       .map(r => r.getInt(0) -> r.getString(1)).toMap
-    val supp = Tables.supplier(spark, sf)
+    val supp = Tables.supplier(spark, sfStatic)
       .select(col("s_suppkey"), col("s_nationkey")).collect()
       .map(r => r.getLong(0) -> nation(r.getInt(1))).toMap
-    val retail = Tables.part(spark, sf)
+    val retail = Tables.part(spark, sfStatic)
       .select(col("p_partkey"), col("p_retailprice")).collect()
       .map(r => r.getLong(0) ->
         BigDecimal(r.getDouble(1)).setScale(2, BigDecimal.RoundingMode.HALF_UP))
       .toMap
-    val oYear = Tables.orders(spark, sf)
+    val oYear = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), year(col("o_orderdate")).cast("int")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_extendedprice"), col("l_discount"), col("l_quantity"))
       .collect()
@@ -130,7 +115,7 @@ class R15OpsSpec extends SparkSpec {
       }.sum
       k -> (profit.toDouble, rs.length.toLong)
     }
-    val got = Joins.q9ProductProfit.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "q9_product_profit")
       .map(r => (r.getString(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3)))
       .toMap
     assert(got.keySet == expect.keySet)
@@ -138,12 +123,12 @@ class R15OpsSpec extends SparkSpec {
   }
 
   test("q21_waiting_suppliers matches a collection-join recomputation") {
-    val oMeta = Tables.orders(spark, sf)
+    val oMeta = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_orderdate").cast("date")).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getDate(2).toLocalDate))
       .toMap
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_suppkey"),
         col("l_shipdate").cast("date")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDate(2).toLocalDate))
@@ -157,23 +142,23 @@ class R15OpsSpec extends SparkSpec {
       val others = byOrder(ok).filter(_._2 != sk)
       others.nonEmpty && !others.exists(_._3)
     }
-    val sName = Tables.supplier(spark, sf)
+    val sName = Tables.supplier(spark, sfStatic)
       .select(col("s_suppkey"), col("s_name")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val expect = counted.groupBy(_._2)
       .map { case (sk, rs) => sName(sk) -> rs.length.toLong }
-    val got = Joins.q21WaitingSuppliers.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "q21_waiting_suppliers")
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(got == expect)
   }
 
   test("privacy_k_anonymity matches an exact recomputation at every k") {
-    val rows = Tables.customer(spark, sf)
+    val rows = Tables.customer(spark, sfStatic)
       .select(col("c_nationkey"), col("c_mktsegment"), col("c_acctbal"))
       .collect()
       .map(r => (r.getInt(0), r.getString(1), cents(r.getDouble(2)) / 100000))
     val sizes = rows.groupBy(identity).values.map(_.length.toLong).toSeq
-    val got = PrivacyOps.privacyKAnonymity.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "privacy_k_anonymity")
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
@@ -191,28 +176,28 @@ class R15OpsSpec extends SparkSpec {
   }
 
   test("privacy_l_diversity matches an exact recomputation") {
-    val cust = Tables.customer(spark, sf)
+    val cust = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getString(2))).toMap
-    val ords = Tables.orders(spark, sf)
+    val ords = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_orderpriority")).collect()
       .map(r => (cust(r.getLong(0)), r.getString(1)))
     val expect = ords.groupBy(_._1).values
       .map(g => (g.map(_._2).distinct.length.toLong, g.length.toLong))
       .groupBy(_._1)
       .map { case (l, gs) => l -> (gs.size.toLong, gs.map(_._2).sum) }
-    val got = PrivacyOps.privacyLDiversity.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "privacy_l_diversity")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expect)
   }
 
   test("ab_srm_check matches the exact chi-square recomputation") {
-    val users = Tables.events(spark, sf).select(col("user_id")).distinct()
+    val users = Tables.events(spark, sfStatic).select(col("user_id")).distinct()
       .collect().map(_.getLong(0))
     val a = users.count(u => md5hex(u.toString).head <= '7').toLong
     val n = users.length.toLong
     val chi2 = (2 * a - n) * (2 * a - n) * 1000000L / n
-    val got = EventAnalytics.abSrmCheck.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "ab_srm_check")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
     assert(got("A") == (a, n, chi2, chi2 > 3841459L))
@@ -220,7 +205,7 @@ class R15OpsSpec extends SparkSpec {
   }
 
   test("stats_anova_f matches an exact BigInt recomputation") {
-    val xs = Tables.events(spark, sf)
+    val xs = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("value")).collect()
       .map(r => (r.getString(0), BigInt(cents(r.getDouble(1)))))
     val groups = xs.groupBy(_._1).values.toSeq
@@ -240,7 +225,7 @@ class R15OpsSpec extends SparkSpec {
     val ssb = (sb - fdiv(t * t * 1000, BigInt(n))).max(BigInt(0))
     val fPpm = ssb * BigInt(n - k) * 1000000 / (ssw * BigInt(k - 1))
     val eta2 = ssb * 1000000 / (ssb + ssw)
-    val r = DriftOps.statsAnovaF.run(spark, sf).collect().head
+    val r = StaticResults.collected(spark, "stats_anova_f").head
     assert((r.getLong(0), r.getLong(1)) == (k.toLong, n.toLong))
     assert(r.getLong(2) == ssw.toLong && r.getLong(3) == ssb.toLong)
     assert(r.getLong(4) == fPpm.toLong && r.getLong(5) == eta2.toLong)
@@ -248,7 +233,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("eval_calibration_bins matches an exact recomputation and bins " +
       "conserve all orders") {
-    val rows = Tables.orders(spark, sf)
+    val rows = Tables.orders(spark, sfStatic)
       .select(col("o_orderdate").cast("date"), col("o_orderstatus")).collect()
       .map(r => (r.getDate(0).toLocalDate, if (r.getString(1) == "F") 1L else 0L))
     val mn = rows.map(_._1).min
@@ -265,7 +250,7 @@ class R15OpsSpec extends SparkSpec {
       bin -> (nb, sp / nb, sy * 1000000L / nb,
         sp / nb - sy * 1000000L / nb, brier / nb)
     }
-    val got = LlmExtras.evalCalibrationBins.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_calibration_bins")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
@@ -275,7 +260,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("win_cumulative_reset: segments advance exactly after purchases " +
       "and running sums telescope per (user, segment)") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")),
         col("event_type"), col("value")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
@@ -291,7 +276,7 @@ class R15OpsSpec extends SparkSpec {
         out
       }
     }.map(t => t._1 -> (t._2, t._3, t._4)).toMap
-    val got = Windows.winCumulativeReset.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "win_cumulative_reset")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expect)
@@ -299,7 +284,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("privacy_generalization_ladder matches an exact recomputation " +
       "and conserves all customers") {
-    val rows = Tables.customer(spark, sf)
+    val rows = Tables.customer(spark, sfStatic)
       .select(col("c_nationkey"), col("c_mktsegment"), col("c_acctbal"))
       .collect()
       .map(r => (r.getInt(0), r.getString(1), cents(r.getDouble(2)) / 100000))
@@ -313,7 +298,7 @@ class R15OpsSpec extends SparkSpec {
     val expect = levels.groupBy(identity).map { case (l, v) =>
       l -> (v.length.toLong, v.length.toLong * 1000000L / rows.length)
     }
-    val got = PrivacyOps.privacyGeneralizationLadder.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "privacy_generalization_ladder")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expect)
     assert(got.values.map(_._1).sum == rows.length.toLong)
@@ -321,10 +306,10 @@ class R15OpsSpec extends SparkSpec {
 
   test("multimodal_pyramid_plan matches a ceil-halving simulation for " +
       "every image") {
-    val got = LlmPipeline.multimodalPyramidPlan.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "multimodal_pyramid_plan")
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    val docs = Tables.documents(spark, sf).select(col("doc_id")).collect()
+    val docs = Tables.documents(spark, sfStatic).select(col("doc_id")).collect()
       .map(_.getLong(0))
     val expect = docs.flatMap { id =>
       val (w0, h0) = (640 + (id % 5) * 160, 480 + (id % 7) * 120)
@@ -352,10 +337,10 @@ class R15OpsSpec extends SparkSpec {
   test("report_discount_whatif matches an exact BigDecimal recomputation " +
       "and is monotone in the cap") {
     def d2(x: Double) = BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .select(col("l_extendedprice"), col("l_discount")).collect()
       .map(r => (d2(r.getDouble(0)), d2(r.getDouble(1))))
-    val got = Aggregates.reportDiscountWhatif.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_discount_whatif")
       .map(r => r.getLong(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
     val actual = li.map { case (p, dd) => p * (BigDecimal(1) - dd) }.sum
@@ -375,7 +360,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("eval_dedup_pr_curve matches a driver-side shingle/band/jaccard " +
       "replica at every threshold") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     // truth: the corpus's constructed duplication — shared 64-char
@@ -407,7 +392,7 @@ class R15OpsSpec extends SparkSpec {
       (sa.intersect(sb).size.toDouble / sa.union(sb).size,
         pfxOf(a) == pfxOf(b))
     }
-    val got = LlmExtras.evalDedupPrCurve.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_dedup_pr_curve")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toMap
     got.keys.foreach { t =>
@@ -424,11 +409,11 @@ class R15OpsSpec extends SparkSpec {
   }
 
   test("ops_capacity_backlog matches a day-by-day Lindley replay") {
-    val arr = Tables.orders(spark, sf)
+    val arr = Tables.orders(spark, sfStatic)
       .select(year(col("o_orderdate")).cast("int"),
         col("o_orderdate").cast("date")).collect()
       .map(r => (r.getInt(0), r.getDate(1).toLocalDate))
-    val got = DriftOps.opsCapacityBacklog.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "ops_capacity_backlog")
       .map(r => (r.getInt(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val byYear = arr.groupBy(_._1)
@@ -458,7 +443,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("stats_levene_bf matches an exact BigInt recomputation over " +
       "median deviations") {
-    val xs = Tables.events(spark, sf)
+    val xs = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("event_id"), col("value")).collect()
       .map(r => (r.getString(0), r.getLong(1), BigInt(cents(r.getDouble(2)))))
     val meds = xs.groupBy(_._1).map { case (g, v) =>
@@ -480,7 +465,7 @@ class R15OpsSpec extends SparkSpec {
     }.sum
     val ssb = (sb - t * t * 1000 / BigInt(n)).max(BigInt(0))
     val fPpm = ssb * BigInt(n - k) * 1000000 / (ssw * BigInt(k - 1))
-    val r = DriftOps.statsLeveneBf.run(spark, sf).collect().head
+    val r = StaticResults.collected(spark, "stats_levene_bf").head
     assert((r.getLong(0), r.getLong(1)) == (k.toLong, n.toLong))
     assert(r.getLong(2) == ssw.toLong && r.getLong(3) == ssb.toLong)
     assert(r.getLong(4) == fPpm.toLong)
@@ -489,8 +474,8 @@ class R15OpsSpec extends SparkSpec {
   test("shard_plan_from_sketch: boundaries come from the merged sample, " +
       "shards partition every row, balance recomputes exactly") {
     // same merged sample as the quantile-merge replica
-    val byHash = ordersRows.map { case (k, c) => (h32(k), k, c) }
-    val merged = ordersRows.groupBy(_._1 % 8).values
+    val byHash = orderCents.map { case (k, c) => (h32(k), k, c) }
+    val merged = orderCents.groupBy(_._1 % 8).values
       .flatMap(_.map { case (k, c) => (h32(k), k, c) }
         .sortBy(t => (t._1, t._2)).take(64))
       .toArray.sortBy(t => (t._1, t._2)).take(64)
@@ -498,12 +483,12 @@ class R15OpsSpec extends SparkSpec {
     val bounds = (1 to 15).map(i => sample(4 * i - 1)) // ranks 4,8,...,60
     def shardOf(c: Long, k: Long): Int =
       bounds.count(b => b._1 < c || (b._1 == c && b._2 <= k))
-    val expect = ordersRows.groupBy { case (k, c) => shardOf(c, k) }
+    val expect = orderCents.groupBy { case (k, c) => shardOf(c, k) }
       .map { case (sh, rs) =>
         sh.toLong -> (rs.length.toLong, rs.map(_._2).min, rs.map(_._2).max)
       }
-    val n = ordersRows.length.toLong
-    val got = Sampling.shardPlanFromSketch.run(spark, sf).collect()
+    val n = orderCents.length.toLong
+    val got = StaticResults.collected(spark, "shard_plan_from_sketch")
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
@@ -522,23 +507,23 @@ class R15OpsSpec extends SparkSpec {
     val P = BigInt("9223372036854775783")
     def h15(canon: String): Long =
       java.lang.Long.parseLong(md5hex(canon).substring(0, 15), 16)
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_orderpriority"), col("o_totalprice"),
         col("o_orderdate").cast("date")).collect()
       .map(r => h15(s"${r.getLong(0)}|${r.getLong(1)}|${r.getString(2)}|" +
         s"${r.getString(3)}|${cents(r.getDouble(4))}|${r.getDate(5)}"))
-    val cust = Tables.customer(spark, sf)
+    val cust = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_mktsegment")).collect()
       .map(r => h15(s"${r.getLong(0)}|${r.getString(1)}|${r.getInt(2)}|" +
         s"${r.getString(3)}"))
-    val supp = Tables.supplier(spark, sf)
+    val supp = Tables.supplier(spark, sfStatic)
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey")).collect()
       .map(r => h15(s"${r.getLong(0)}|${r.getString(1)}|${r.getInt(2)}"))
     def sumMod(hs: Array[Long]): Long =
       (hs.map(BigInt(_)).sum mod P).toLong
-    val got = Sampling.dqTableChecksum.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "dq_table_checksum")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got("orders") == (orders.length.toLong, sumMod(orders)))
     assert(got("customer") == (cust.length.toLong, sumMod(cust)))
@@ -550,7 +535,7 @@ class R15OpsSpec extends SparkSpec {
   }
 
   test("fn_xml_parse: the XML round trip loses nothing vs the base columns") {
-    val expect = Tables.orders(spark, sf)
+    val expect = Tables.orders(spark, sfStatic)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), cents(r.getDouble(2))))
@@ -558,7 +543,7 @@ class R15OpsSpec extends SparkSpec {
       .map { case (p, rs) =>
         p -> (rs.length.toLong, rs.map(_._2).sum, rs.map(_._3).sum)
       }
-    val got = Functions.fnXmlParse.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "fn_xml_parse")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expect)
@@ -567,7 +552,7 @@ class R15OpsSpec extends SparkSpec {
   test("fn_variant_json: variant_get extraction matches a driver-side " +
       "JSON parse") {
     val re = """\{\s*"k"\s*:\s*(-?\d+)\s*\}""".r
-    val expect = Tables.events(spark, sf)
+    val expect = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("props")).collect()
       .map { r =>
         val k = r.getString(1) match {
@@ -581,7 +566,7 @@ class R15OpsSpec extends SparkSpec {
         t -> (rs.length.toLong, rs.map(_._2).sum, rs.map(_._2).min,
           rs.map(_._2).max)
       }
-    val got = Functions.fnVariantJson.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "fn_variant_json")
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == expect)
@@ -589,7 +574,7 @@ class R15OpsSpec extends SparkSpec {
 
   test("events_session_gap_sweep matches an exact recomputation and is " +
       "monotone in the gap") {
-    val evs = Tables.events(spark, sf)
+    val evs = Tables.events(spark, sfStatic)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val byUser = evs.groupBy(_._1).values.map(_.sortBy(e => (e._3, e._2)))
@@ -606,7 +591,7 @@ class R15OpsSpec extends SparkSpec {
       }
       (sessions, singles)
     }
-    val got = EventAnalytics.eventsSessionGapSweep.run(spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_session_gap_sweep")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     val n = evs.length.toLong

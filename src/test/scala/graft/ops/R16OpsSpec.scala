@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-16 batch, checked by FULL
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -11,14 +13,6 @@ import org.apache.spark.sql.functions._
   * against the graded from-scratch `dedup_cluster_cc` operator — the
   * merge == full-recompute equality the key exists to certify. */
 class R16OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def isPrior(id: Long): Boolean = md5hex(id.toString).charAt(0) <= '7'
 
   /** Plain sequential union-find with min-id roots — the ground-truth
     * CC implementation nothing in the product shares code with. */
@@ -39,12 +33,8 @@ class R16OpsSpec extends SparkSpec {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  private lazy val pairs: Seq[(Long, Long)] =
-    LlmExtras.minhashPairs(spark, sf).select(col("doc_a"), col("doc_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
   private lazy val docIds: Seq[Long] =
-    Tables.documents(spark, sf).select(col("doc_id"))
+    Tables.documents(spark, sfStatic).select(col("doc_id"))
       .collect().map(_.getLong(0)).toSeq
 
   private val keys = Seq(
@@ -65,16 +55,15 @@ class R16OpsSpec extends SparkSpec {
 
   test("dedup_cluster_incremental: union-find replay of BOTH maps " +
       "(prior + folded) matches every output column") {
-    val rows = graft.SparkEntry.queries("dedup_cluster_incremental")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "dedup_cluster_incremental")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4)), r.getInt(5)))
     assert(rows.length == docIds.length, "one row per corpus doc")
     // ground truth: full-graph CC and prior-graph CC, both union-find
-    val full = unionFind(docIds, pairs)
+    val full = unionFind(docIds, lshPairs)
     val priorDocs = docIds.filter(isPrior)
     val prior = unionFind(priorDocs,
-      pairs.filter { case (a, b) => isPrior(a) && isPrior(b) })
+      lshPairs.filter { case (a, b) => isPrior(a) && isPrior(b) })
     val sizes = full.values.groupBy(identity).map { case (k, v) => k -> v.size }
     // the increment must actually exercise the maintenance path: at
     // least one cluster merging prior and increment docs
@@ -94,27 +83,9 @@ class R16OpsSpec extends SparkSpec {
     }
   }
 
-  private def cents(d: Double): Long =
-    BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-      .*(BigDecimal(100)).toLongExact
-
-  private lazy val eventRows: Array[(Long, Long, String, Long, java.sql.Timestamp)] =
-    Tables.events(spark, sf)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), col("ts"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        cents(r.getDouble(3)), r.getTimestamp(4)))
-
-  /** floor division on BigInt (both engines' `div`/`//` on nonneg). */
-  private def fdiv(a: BigInt, b: BigInt): BigInt = {
-    require(a >= 0 && b > 0, "fdiv replay only spells nonneg operands")
-    a / b
-  }
-
   test("stats_welch_t: exact BigInt replay of every output column") {
     def arm(t: String): (BigInt, BigInt, BigInt) = {
-      val xs = eventRows.filter(_._3 == t).map(_._4)
+      val xs = eventCents.filter(_._3 == t).map(_._4)
       (BigInt(xs.length), BigInt(xs.map(BigInt(_)).sum.toString),
         xs.map(x => BigInt(x) * x).sum)
     }
@@ -128,8 +99,8 @@ class R16OpsSpec extends SparkSpec {
     val a1 = fdiv(fdiv(v1, n1), 1000); val a2 = fdiv(fdiv(v2, n2), 1000)
     val df = fdiv(fdiv(se2, 1000) * fdiv(se2, 1000) * 1000,
       fdiv(a1 * a1, n1 - 1) + fdiv(a2 * a2, n2 - 1))
-    val r = graft.SparkEntry.queries("stats_welch_t")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "stats_welch_t")
+      .head
     assert(r.getLong(0) == n1.toLong && r.getLong(1) == n2.toLong)
     assert(r.getLong(2) == mean1.toLong && r.getLong(3) == mean2.toLong)
     assert(r.getLong(4) == v1.toLong && r.getLong(5) == v2.toLong)
@@ -140,12 +111,11 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("ab_power_sample_size: replay + the ceiling really is the minimal n") {
-    val rows = graft.SparkEntry.queries("ab_power_sample_size")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "ab_power_sample_size")
     assert(rows.length == 5)
     rows.foreach { r =>
       val t = r.getString(0)
-      val xs = eventRows.filter(_._3 == t).map(_._4)
+      val xs = eventCents.filter(_._3 == t).map(_._4)
       val n = BigInt(xs.length); val s = xs.map(BigInt(_)).sum
       val q = xs.map(x => BigInt(x) * x).sum
       val mean = fdiv(s * 1000000, n)
@@ -164,7 +134,7 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("win_rolling_corr: sliding-window BigInt replay per customer") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(col("o_custkey"), col("o_orderkey"),
         expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"
           + " AS BIGINT)"), col("o_totalprice"))
@@ -189,8 +159,7 @@ class R16OpsSpec extends SparkSpec {
         (ck, sorted(i)._2) -> (n.toLong, cxy.toLong, corr2.map(_.toLong))
       }
     }
-    val got = graft.SparkEntry.queries("win_rolling_corr")(spark, sf)
-      .collect()
+    val got = StaticResults.collected(spark, "win_rolling_corr")
     assert(got.length == expected.size)
     got.foreach { r =>
       val k = (r.getLong(0), r.getLong(1))
@@ -203,7 +172,7 @@ class R16OpsSpec extends SparkSpec {
 
   test("sketch_bloom_merge: scala bit replay; every word's merge equals " +
       "one-pass (the property the key certifies)") {
-    val keys = Tables.orders(spark, sf).select(col("o_custkey")).distinct()
+    val keys = Tables.orders(spark, sfStatic).select(col("o_custkey")).distinct()
       .collect().map(_.getLong(0))
     val hs = keys.flatMap(k => (0 to 2).map(j =>
       (k % 8, java.lang.Long.parseLong(
@@ -218,8 +187,7 @@ class R16OpsSpec extends SparkSpec {
       .map { case (w, xs) => w -> xs.map { case (_, h) =>
         1L << (h % 63).toInt }.reduce(_ | _) }
     assert(merged == onePass, "BIT_OR merge must equal the one-pass build")
-    val rows = graft.SparkEntry.queries("sketch_bloom_merge")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "sketch_bloom_merge")
     assert(rows.length == merged.size)
     rows.foreach { r =>
       val w = r.getLong(0)
@@ -231,11 +199,10 @@ class R16OpsSpec extends SparkSpec {
 
   test("privacy_contribution_capping + split_time_based: scala replays") {
     // capping: keep-first-8 per (user, type) by (ts, event_id)
-    val capRows = graft.SparkEntry
-      .queries("privacy_contribution_capping")(spark, sf).collect()
+    val capRows = StaticResults.collected(spark, "privacy_contribution_capping")
     capRows.foreach { r =>
       val t = r.getString(0)
-      val ofType = eventRows.filter(_._3 == t)
+      val ofType = eventCents.filter(_._3 == t)
       val byUser = ofType.groupBy(_._2)
       val kept = byUser.values.flatMap(
         _.sortBy(e => (e._5.getTime, e._1)).take(8)).toSeq
@@ -251,12 +218,11 @@ class R16OpsSpec extends SparkSpec {
     }
     // time split: boundary 2024-01-22, leakage = users on both sides
     val bound = java.sql.Timestamp.valueOf("2024-01-22 00:00:00")
-    val withSplit = eventRows.map(e =>
+    val withSplit = eventCents.map(e =>
       (if (e._5.before(bound)) "train" else "test", e._2, e._4))
     val leaky = withSplit.groupBy(_._2)
       .filter(_._2.map(_._1).distinct.length == 2).keySet
-    val splitRows = graft.SparkEntry.queries("split_time_based")(spark, sf)
-      .collect()
+    val splitRows = StaticResults.collected(spark, "split_time_based")
     assert(splitRows.map(_.getString(0)).toSeq == Seq("test", "train"))
     splitRows.foreach { r =>
       val sp = r.getString(0)
@@ -274,7 +240,7 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("eval_ndcg_at10: brute-force scala replay with the literal discounts") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -303,8 +269,7 @@ class R16OpsSpec extends SparkSpec {
       lab.toLong -> (xs.length.toLong, xs.map(_._2).sum,
         Math.floorDiv(xs.map(_._2).sum, xs.length.toLong))
     }
-    val got = graft.SparkEntry.queries("eval_ndcg_at10")(spark, sf)
-      .collect()
+    val got = StaticResults.collected(spark, "eval_ndcg_at10")
       .map(r => r.getInt(0).toLong -> (r.getLong(1), r.getLong(2),
         r.getLong(3))).toMap
     assert(got.keySet == expect.keySet)
@@ -314,11 +279,10 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("dq_iqr_outliers: quartile + fence replay per event type") {
-    val rows = graft.SparkEntry.queries("dq_iqr_outliers")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "dq_iqr_outliers")
     rows.foreach { r =>
       val t = r.getString(0)
-      val xs = eventRows.filter(_._3 == t)
+      val xs = eventCents.filter(_._3 == t)
         .sortBy(e => (e._4, e._1)).map(_._4)
       val n = xs.length
       val q1 = xs(((n - 1) * 25 / 100).toInt)
@@ -337,7 +301,7 @@ class R16OpsSpec extends SparkSpec {
 
   test("graph_local_clustering: adjacency-set replay; node totals tie out " +
       "to the global triangle kernel") {
-    val li = Tables.lineitem(spark, sf)
+    val li = Tables.lineitem(spark, sfStatic)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast(
           org.apache.spark.sql.types.DateType).cast(
           org.apache.spark.sql.types.TimestampType) &&
@@ -353,8 +317,7 @@ class R16OpsSpec extends SparkSpec {
     }.toSet
     val adj = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    val rows = graft.SparkEntry.queries("graph_local_clustering")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "graph_local_clustering")
     assert(rows.length == adj.size, "one row per graph node")
     var triSum = 0L
     rows.foreach { r =>
@@ -371,19 +334,18 @@ class R16OpsSpec extends SparkSpec {
       assert(gotLcc == expLcc, s"node $node lcc_ppm")
     }
     // each triangle counted once per corner — 3× the global kernel
-    val global = graft.SparkEntry.queries("graph_triangle_count")(spark, sf)
-      .collect().head.getLong(3)
+    val global = StaticResults.collected(spark, "graph_triangle_count")
+      .head.getLong(3)
     assert(triSum == 3 * global, "corner sum must be 3x the triangle count")
   }
 
   test("report_seasonality_index: replay + the 12 indices sum to ~12e6") {
-    val orders = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sfStatic)
       .select(month(col("o_orderdate")).cast(
         org.apache.spark.sql.types.LongType), col("o_totalprice"))
       .collect().map(r => (r.getLong(0), cents(r.getDouble(1))))
     val tot = orders.map(e => BigInt(e._2)).sum
-    val rows = graft.SparkEntry.queries("report_seasonality_index")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "report_seasonality_index")
     assert(rows.length == 12)
     var idxSum = BigInt(0)
     rows.foreach { r =>
@@ -400,7 +362,7 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("events_markov_stationary: BigInt power-iteration replay") {
-    val trans = eventRows.groupBy(_._2).values.flatMap { es =>
+    val trans = eventCents.groupBy(_._2).values.flatMap { es =>
       val sorted = es.sortBy(e => (e._5.getTime, e._1))
       sorted.map(_._3).toSeq.sliding(2).collect { case Seq(a, b) => (a, b) }
     }.toSeq
@@ -409,7 +371,7 @@ class R16OpsSpec extends SparkSpec {
       .map { case (f, m) => f -> m.values.sum }
     val p = counts.map { case ((f, t), n) =>
       (f, t) -> fdiv(BigInt(n) * 1000000, BigInt(tot(f))) }
-    val types = eventRows.map(_._3).distinct.sorted
+    val types = eventCents.map(_._3).distinct.sorted
     var pi: Map[String, BigInt] =
       types.map(_ -> fdiv(BigInt(1000000), BigInt(types.length))).toMap
     val path = Seq.newBuilder[Map[String, BigInt]]
@@ -422,8 +384,7 @@ class R16OpsSpec extends SparkSpec {
       path += pi
     }
     val exp = path.result()
-    val rows = graft.SparkEntry.queries("events_markov_stationary")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "events_markov_stationary")
     assert(rows.map(_.getString(0)).toSeq == types.toSeq)
     rows.foreach { r =>
       val t = r.getString(0)
@@ -437,7 +398,7 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("sim_mips_topk: scala brute-force dot replay") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
     val qEmb = vecs.find(_._1 == 0L).get._3
@@ -449,14 +410,14 @@ class R16OpsSpec extends SparkSpec {
     val exp = vecs.filter(_._1 != 0L)
       .map(v => (v._1, v._2, dot(v._3, qEmb)))
       .sortBy { case (id, _, s) => (-s, id) }.take(10)
-    val got = graft.SparkEntry.queries("sim_mips_topk")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+    val got = StaticResults.collected(spark, "sim_mips_topk")
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
     assert(got.toSeq == exp.toSeq, "MIPS top-10 must match the exact scan")
   }
 
   test("join_spatial_grid: the grid join finds EXACTLY the all-pairs " +
       "radius result (cell=radius completeness) + histogram replay") {
-    val pts = Tables.customer(spark, sf)
+    val pts = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_acctbal")).collect()
       .map { r =>
         val k = r.getLong(0)
@@ -464,24 +425,24 @@ class R16OpsSpec extends SparkSpec {
         val y = ((cents(r.getDouble(1)) % 1000) + 1000) % 1000
         (k, x, y)
       }
-    val pairs = (for {
+    val lshPairs = (for {
       a <- pts; b <- pts
       if a._1 < b._1 &&
         (a._2 - b._2) * (a._2 - b._2) + (a._3 - b._3) * (a._3 - b._3) <= 625
     } yield (a._1, b._1)).toSet
-    val nb = pairs.toSeq.flatMap { case (a, b) => Seq(a, b) }
+    val nb = lshPairs.toSeq.flatMap { case (a, b) => Seq(a, b) }
       .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     val hist = pts.map(p => nb.getOrElse(p._1, 0L))
       .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val rows = graft.SparkEntry.queries("join_spatial_grid")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val rows = StaticResults.collected(spark, "join_spatial_grid")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.map(r => r._1 -> r._2).toMap == hist,
       "grid-blocked candidates must reproduce the exact all-pairs histogram")
-    assert(rows.forall(_._3 == pairs.size.toLong), "total pair count")
+    assert(rows.forall(_._3 == lshPairs.size.toLong), "total pair count")
   }
 
   test("stats_prop_ztest: BigInt replay, arms interior (not degenerate)") {
-    val conv = eventRows.groupBy(_._2).map { case (uid, es) =>
+    val conv = eventCents.groupBy(_._2).map { case (uid, es) =>
       uid -> es.exists(e => e._3 == "purchase" && e._4 >= 18000)
     }
     val (arm0, arm1) = conv.keys.toSeq.partition(u => isPrior(u))
@@ -492,8 +453,8 @@ class R16OpsSpec extends SparkSpec {
         "certifies nothing")
     val num = (c1 * n2 - c2 * n1).pow(2) * (n1 + n2) * 1000000
     val den = n1 * n2 * (c1 + c2) * (n1 + n2 - c1 - c2)
-    val r = graft.SparkEntry.queries("stats_prop_ztest")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "stats_prop_ztest")
+      .head
     assert(r.getLong(0) == n1.toLong && r.getLong(1) == c1.toLong)
     assert(r.getLong(2) == n2.toLong && r.getLong(3) == c2.toLong)
     assert(r.getLong(4) == fdiv(c1 * 1000000, n1).toLong)
@@ -504,10 +465,10 @@ class R16OpsSpec extends SparkSpec {
 
   test("ts_acf_lags: BigInt sums + one-float-chain replay; lag 1 agrees " +
       "with the graded ts_autocorr_daily") {
-    val daily = eventRows.groupBy(e => (e._3,
+    val daily = eventCents.groupBy(e => (e._3,
         e._5.toLocalDateTime.toLocalDate))
       .map { case (k, es) => k -> es.map(e => BigInt(e._4)).sum }
-    val rows = graft.SparkEntry.queries("ts_acf_lags")(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "ts_acf_lags")
     assert(rows.length == 35, "5 types x 7 lags")
     rows.foreach { r =>
       val (t, lag) = (r.getString(0), r.getLong(1).toInt)
@@ -527,7 +488,7 @@ class R16OpsSpec extends SparkSpec {
     }
     val lag1 = rows.filter(_.getLong(1) == 1L)
       .map(r => r.getString(0) -> r.getDouble(3)).toMap
-    graft.SparkEntry.queries("ts_autocorr_daily")(spark, sf).collect()
+    StaticResults.collected(spark, "ts_autocorr_daily")
       .foreach { r =>
         assert(lag1(r.getString(0)) == r.getDouble(2),
           s"${r.getString(0)}: lag-1 must equal the graded lag-1 key")
@@ -538,7 +499,7 @@ class R16OpsSpec extends SparkSpec {
     def sha256hex(s: String): String =
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val custs = Tables.customer(spark, sf)
+    val custs = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_name")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val hs = custs.map { case (k, n) =>
@@ -547,15 +508,14 @@ class R16OpsSpec extends SparkSpec {
       b.toString -> (xs.length.toLong,
         xs.count(x => x._2.head == x._1.head).toLong,
         xs.map(_._1).min, xs.map(_._2).min) }
-    val got = graft.SparkEntry.queries("fn_hash_digests")(spark, sf)
-      .collect()
+    val got = StaticResults.collected(spark, "fn_hash_digests")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getString(3), r.getString(4))).toMap
     assert(got == exp)
   }
 
   test("layout_clustering_depth: zone replay; sorting collapses overlap") {
-    val vs = Tables.orders(spark, sf)
+    val vs = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_totalprice")).collect()
       .map(r => (r.getLong(0), cents(r.getDouble(1))))
     def zones(ordered: Seq[Long]): Seq[(Long, Long)] =
@@ -565,8 +525,8 @@ class R16OpsSpec extends SparkSpec {
         if zs(i)._2 >= zs(j)._1 && zs(j)._2 >= zs(i)._1) yield 1).size.toLong
     val natural = zones(vs.sortBy(_._1).map(_._2).toSeq)
     val sorted = zones(vs.sortBy(v => (v._2, v._1)).map(_._2).toSeq)
-    val got = graft.SparkEntry.queries("layout_clustering_depth")(spark, sf)
-      .collect().map(r => r.getString(0) ->
+    val got = StaticResults.collected(spark, "layout_clustering_depth")
+      .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val natPairs = overlaps(natural); val srtPairs = overlaps(sorted)
     assert(got("natural") == (natural.length.toLong, natPairs,
@@ -581,20 +541,19 @@ class R16OpsSpec extends SparkSpec {
 
   test("source_parquet_bloom: replay + the footer really carries a bloom " +
       "filter on user_id") {
-    val rows = graft.SparkEntry.queries("source_parquet_bloom")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "source_parquet_bloom")
     rows.foreach { r =>
       val t = r.getString(0)
-      val of = eventRows.filter(e => e._3 == t && e._2 == 7L)
+      val of = eventCents.filter(e => e._3 == t && e._2 == 7L)
       assert(r.getLong(1) == of.length.toLong, s"$t n")
       assert(r.getLong(2) == of.map(e => BigInt(e._4)).sum.toLong, s"$t sum")
       assert(r.getLong(3) == of.map(_._1).min, s"$t min_event_id")
     }
     assert(rows.map(_.getLong(1)).sum ==
-      eventRows.count(_._2 == 7L).toLong, "user 7's events all covered")
+      eventCents.count(_._2 == 7L).toLong, "user 7's events all covered")
     // footer check: write with the same options, read the metadata
     val out = graft.TempDirs.create("graft_bloomspec")
-    Tables.events(spark, sf)
+    Tables.events(spark, sfStatic)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .coalesce(1).write.mode("overwrite")
@@ -625,7 +584,7 @@ class R16OpsSpec extends SparkSpec {
 
   test("embed_matryoshka_truncation: prefix-dot replay; budget 64 is the " +
       "identity") {
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     def dotK(a: Array[Float], b: Array[Float], k: Int): Double = {
@@ -652,8 +611,7 @@ class R16OpsSpec extends SparkSpec {
         Math.floorDiv(agree * 1000000L, queries.length.toLong),
         sumGap, sumGap / np)
     }.toMap
-    val got = graft.SparkEntry
-      .queries("embed_matryoshka_truncation")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "embed_matryoshka_truncation")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
@@ -662,7 +620,7 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("eval_cohens_kappa: BigInt replay, raters non-degenerate") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("n_chars"), col("text")).collect()
       .map { r =>
         val toks = r.getString(1).split(" ", -1)
@@ -677,8 +635,8 @@ class R16OpsSpec extends SparkSpec {
     assert(a + b > 0 && c + dd > 0 && a + c > 0 && b + dd > 0,
       "both raters must split the corpus or kappa certifies nothing")
     val e = (a + b) * (a + c) + (c + dd) * (b + dd)
-    val r = graft.SparkEntry.queries("eval_cohens_kappa")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "eval_cohens_kappa")
+      .head
     assert(r.getLong(0) == n.toLong && r.getLong(1) == a.toLong &&
       r.getLong(2) == b.toLong && r.getLong(3) == c.toLong &&
       r.getLong(4) == dd.toLong)
@@ -690,13 +648,12 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("dq_embedding_coverage: replay; the audit sees the real join gap") {
-    val vecIds = Tables.embeddings(spark, sf).select(col("vec_id"))
+    val vecIds = Tables.embeddings(spark, sfStatic).select(col("vec_id"))
       .collect().map(_.getLong(0)).toSet
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("lang")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val rows = graft.SparkEntry.queries("dq_embedding_coverage")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "dq_embedding_coverage")
     rows.foreach { r =>
       val lang = r.getString(0)
       val ofL = docs.filter(_._2 == lang)
@@ -714,8 +671,8 @@ class R16OpsSpec extends SparkSpec {
 
   test("ts_seasonal_strength: BigInt replay FROM the graded decomposition " +
       "output (shared-core tie)") {
-    val dec = graft.SparkEntry.queries("ts_decompose_additive")(spark, sf)
-      .collect().filter(r => !r.isNullAt(3))
+    val dec = StaticResults.collected(spark, "ts_decompose_additive")
+      .filter(r => !r.isNullAt(3))
       .map(r => (BigInt(r.getLong(2)), BigInt(r.getLong(3)),
         BigInt(r.getLong(4))))
     val rs = dec.map { case (rev, tr, se) => rev - tr - se }
@@ -727,8 +684,8 @@ class R16OpsSpec extends SparkSpec {
     def strength(num: BigInt, den: BigInt): Option[BigInt] =
       if (den == 0) None
       else Some((BigInt(1000000) - fdiv(num * 1000000, den)).max(BigInt(0)))
-    val r = graft.SparkEntry.queries("ts_seasonal_strength")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "ts_seasonal_strength")
+      .head
     assert(r.getLong(0) == n.toLong)
     def got(i: Int): Option[BigInt] =
       if (r.isNullAt(i)) None else Some(BigInt(r.getLong(i)))
@@ -737,7 +694,7 @@ class R16OpsSpec extends SparkSpec {
   }
 
   test("profile_column_matrix: collected-orders replay of every cell") {
-    val os = Tables.orders(spark, sf).select(col("o_orderkey"),
+    val os = Tables.orders(spark, sfStatic).select(col("o_orderkey"),
         col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
         col("o_orderdate").cast(org.apache.spark.sql.types.DateType),
         col("o_orderpriority"))
@@ -759,8 +716,7 @@ class R16OpsSpec extends SparkSpec {
         os.map(_.getDate(4).toString).min, os.map(_.getDate(4).toString).max),
       "o_orderpriority" -> (os.map(_.getString(5)).distinct.length.toLong,
         os.map(_.getString(5)).min, os.map(_.getString(5)).max))
-    val rows = graft.SparkEntry.queries("profile_column_matrix")(spark, sf)
-      .collect()
+    val rows = StaticResults.collected(spark, "profile_column_matrix")
     assert(rows.length == 6)
     rows.foreach { r =>
       val (nd, mn, mx) = exp(r.getString(0))
@@ -772,12 +728,11 @@ class R16OpsSpec extends SparkSpec {
 
   test("dedup_cluster_incremental == dedup_cluster_cc on the shared columns " +
       "(merge equals from-scratch recompute)") {
-    val inc = graft.SparkEntry.queries("dedup_cluster_incremental")(spark, sf)
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      .collect().map(_.toString).sorted
-    val scratch = graft.SparkEntry.queries("dedup_cluster_cc")(spark, sf)
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      .collect().map(_.toString).sorted
+    def shared(key: String): Array[String] = StaticResults.collected(spark, key)
+      .map(r => Seq("doc_id", "cluster_id", "cluster_size").map(r.getAs[Any])
+        .mkString("[", ",", "]")).sorted
+    val inc = shared("dedup_cluster_incremental")
+    val scratch = shared("dedup_cluster_cc")
     assert(inc.sameElements(scratch),
       "incremental maintenance diverged from the from-scratch CC operator")
   }

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-17 batch, checked by FULL
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -13,20 +15,6 @@ import org.apache.spark.sql.functions._
   * BigInt / floorDiv arithmetic that shares no code with the product.
   */
 class R17OpsSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def isPrior(id: Long): Boolean = md5hex(id.toString).charAt(0) <= '7'
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(v: Double): Long =
-    (BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
 
   /** Replicates graft_cosine's exact tree (the R14OpsSpec spelling):
     * per-element float→double widening, DOUBLE accumulation in index
@@ -44,7 +32,7 @@ class R17OpsSpec extends SparkSpec {
     * 3-gram shingles, h_i = min over shingles of md5hex.substring(3i,
     * 3i+8), for docs with >= 3 tokens. */
   private lazy val sigs: Map[Long, Array[String]] =
-    Tables.documents(spark, sf).select(col("doc_id"), col("text")).collect()
+    Tables.documents(spark, sfStatic).select(col("doc_id"), col("text")).collect()
       .flatMap { r =>
         val toks = r.getString(1).split(" ", -1)
         if (toks.length < 3) None
@@ -58,7 +46,7 @@ class R17OpsSpec extends SparkSpec {
       }.toMap
 
   private lazy val shingleSets: Map[Long, Set[String]] =
-    Tables.documents(spark, sf).select(col("doc_id"), col("text")).collect()
+    Tables.documents(spark, sfStatic).select(col("doc_id"), col("text")).collect()
       .flatMap { r =>
         val toks = r.getString(1).split(" ", -1)
         if (toks.length < 3) None
@@ -89,8 +77,7 @@ class R17OpsSpec extends SparkSpec {
     val inc = sigs.filter { case (id, _) => !isPrior(id) }
     val priorBands = prior.toSeq.flatMap { case (_, s) => bandsOf(s) }.toSet
     val dup = inc.count { case (_, s) => bandsOf(s).exists(priorBands) }
-    val row = graft.SparkEntry.queries("dedup_signature_store_roundtrip")(
-      spark, sf).collect()
+    val row = StaticResults.collected(spark, "dedup_signature_store_roundtrip")
     assert(row.length == 1)
     val r = row.head
     assert(r.getLong(0) == prior.size.toLong, "n_prior")
@@ -105,12 +92,12 @@ class R17OpsSpec extends SparkSpec {
 
   test("eval_rrf_fusion: rank + fusion replayed in plain Scala over " +
       "the two legs") {
-    val lex = CorpusOps.bm25Scores(spark, sf)
+    val lex = CorpusOps.bm25Scores(spark, sfStatic)
       .select(col("doc_id"), col("score_micro")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .sortBy { case (id, sc) => (-sc, id) }.take(50)
     val lexRank = lex.zipWithIndex.map { case ((id, _), i) => id -> (i + 1L) }.toMap
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = Tables.embeddings(spark, sfStatic)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val qEmb = vecs.find(_._1 == 0L).get._2
@@ -125,7 +112,7 @@ class R17OpsSpec extends SparkSpec {
         rd.map(r => 1000000L / (60 + r)).getOrElse(0L)
       (id, rl, rd, rrf)
     }.sortBy { case (id, _, _, rrf) => (-rrf, id) }.take(20)
-    val got = graft.SparkEntry.queries("eval_rrf_fusion")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_rrf_fusion")
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getLong(1)),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
@@ -136,15 +123,10 @@ class R17OpsSpec extends SparkSpec {
       "fusion should mix legs")
   }
 
-  private lazy val vecsFull: Array[(Long, Int, Array[Float])] =
-    Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("label"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
-
   test("eval_auc_roc: mid-rank Mann-Whitney AUC replayed in plain Scala") {
-    val queries = vecsFull.filter(v => md5hex(v._1.toString).head == '0')
+    val queries = embRows.filter(v => md5hex(v._1.toString).head == '0')
     val perQ = queries.map { case (qid, qlab, qemb) =>
-      val cand = vecsFull.filter(_._1 != qid)
+      val cand = embRows.filter(_._1 != qid)
         .map(v => (cos(v._3, qemb), if (v._2 == qlab) 1L else 0L))
       // ascending by sim; tie groups share a mid-rank
       val groups = cand.groupBy(_._1).toSeq.sortBy(_._1)
@@ -171,7 +153,7 @@ class R17OpsSpec extends SparkSpec {
         if (defined.isEmpty) None else Some(defined.min),
         if (defined.isEmpty) None else Some(defined.max))
     }
-    val got = graft.SparkEntry.queries("eval_auc_roc")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_auc_roc")
       .map(r => r.getInt(0) -> (r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
         if (r.isNullAt(3)) None else Some(r.getLong(3)),
@@ -183,9 +165,9 @@ class R17OpsSpec extends SparkSpec {
 
   test("eval_map_at_k: AP@10 / P@10 / R@10 replayed in plain Scala " +
       "(floor-per-term convention)") {
-    val queries = vecsFull.filter(v => md5hex(v._1.toString).head == '0')
+    val queries = embRows.filter(v => md5hex(v._1.toString).head == '0')
     val perQ = queries.map { case (qid, qlab, qemb) =>
-      val ranked = vecsFull.filter(_._1 != qid)
+      val ranked = embRows.filter(_._1 != qid)
         .map(v => (v._1, if (v._2 == qlab) 1L else 0L, cos(v._3, qemb)))
         .sortBy { case (id, _, s) => (-s, id) }
       val nRel = ranked.map(_._2).sum
@@ -205,18 +187,11 @@ class R17OpsSpec extends SparkSpec {
       lab -> (n, Math.floorDiv(xs.map(_._2).sum, n),
         Math.floorDiv(xs.map(_._3).sum, n), Math.floorDiv(xs.map(_._4).sum, n))
     }
-    val got = graft.SparkEntry.queries("eval_map_at_k")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_map_at_k")
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got == expect)
   }
-
-  private lazy val eventRows: Array[(Long, java.sql.Timestamp, Long, String, Double)] =
-    Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value")).collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-        r.getString(3), r.getDouble(4)))
 
   test("stats_wilson_ci: the float chain replayed operand-for-operand") {
     val byType = eventRows.groupBy(_._4)
@@ -234,7 +209,7 @@ class R17OpsSpec extends SparkSpec {
         / (1.0 + z2 / nd))
       t -> (n, x, x * 1000000L / n, lo, hi)
     }
-    val got = graft.SparkEntry.queries("stats_wilson_ci")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "stats_wilson_ci")
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5))).toMap
     assert(got == expect)
@@ -263,7 +238,7 @@ class R17OpsSpec extends SparkSpec {
       t -> (ncc, ncp, ntc, ntp, mean(ncc, scc), mean(ncp, scp),
         mean(ntc, stc), mean(ntp, stp), did)
     }
-    val got = graft.SparkEntry.queries("ab_diff_in_diff")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "ab_diff_in_diff")
       .map { r =>
         def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
         r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
@@ -271,11 +246,6 @@ class R17OpsSpec extends SparkSpec {
       }.toMap
     assert(got == expect)
   }
-
-  private lazy val dailyCents: Map[(String, java.time.LocalDate), Long] =
-    eventRows.groupBy(e => (e._4,
-      e._2.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate))
-      .map { case (k, xs) => k -> xs.map(e => cents(e._5)).sum }
 
   test("win_bollinger_bands: rolling sums + the band float chain replayed") {
     val expect = dailyCents.groupBy(_._1._1).flatMap { case (t, m) =>
@@ -296,8 +266,8 @@ class R17OpsSpec extends SparkSpec {
           outside)
       }
     }
-    val got = graft.SparkEntry.queries("win_bollinger_bands")(spark, sf)
-      .collect().map { r =>
+    val got = StaticResults.collected(spark, "win_bollinger_bands")
+      .map { r =>
         (r.getString(0), r.getDate(1).toString) -> (r.getLong(2), r.getLong(3),
           r.getDouble(4),
           if (r.isNullAt(5)) None else Some(r.getDouble(5)),
@@ -324,18 +294,18 @@ class R17OpsSpec extends SparkSpec {
       t -> (best._1.toString, best._2, n, best._4,
         best._3 * 1000000L / best._2, (s - best._3) * 1000000L / (n - best._2))
     }
-    val got = graft.SparkEntry.queries("ts_changepoint_split")(spark, sf)
-      .collect().map(r => r.getString(0) -> (r.getDate(1).toString,
+    val got = StaticResults.collected(spark, "ts_changepoint_split")
+      .map(r => r.getString(0) -> (r.getDate(1).toString,
         r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
       .toMap
     assert(got == expect)
   }
 
   private lazy val ebPairs: Set[(Long, Long)] = {
-    val custByOrder = Tables.orders(spark, sf)
+    val custByOrder = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"), col("o_custkey")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_suppkey"))
+    Tables.lineitem(spark, sfStatic).select(col("l_orderkey"), col("l_suppkey"))
       .collect()
       .flatMap(r => custByOrder.get(r.getLong(0)).map(c => (c, r.getLong(1))))
       .toSet
@@ -347,8 +317,8 @@ class R17OpsSpec extends SparkSpec {
     val expect = deg.toSeq
       .map { case (sk, d) => (sk, d, d * (d - 1) / 2, total, deg.size.toLong) }
       .sortBy { case (sk, _, p, _, _) => (-p, sk) }.take(15)
-    val got = graft.SparkEntry.queries("graph_bipartite_twohop")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "graph_bipartite_twohop")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == expect)
   }
@@ -357,16 +327,16 @@ class R17OpsSpec extends SparkSpec {
     def lv(r: org.apache.spark.sql.Row, i: Int): Long =
       r.getAs[Number](i).longValue
     val natRegion = {
-      val regions = Tables.region(spark, sf)
+      val regions = Tables.region(spark, sfStatic)
         .select(col("r_regionkey"), col("r_name")).collect()
         .map(r => lv(r, 0) -> r.getString(1)).toMap
-      Tables.nation(spark, sf).select(col("n_nationkey"), col("n_regionkey"))
+      Tables.nation(spark, sfStatic).select(col("n_nationkey"), col("n_regionkey"))
         .collect().map(r => lv(r, 0) -> regions(lv(r, 1))).toMap
     }
-    val custRegion = Tables.customer(spark, sf)
+    val custRegion = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_nationkey")).collect()
       .map(r => lv(r, 0) -> natRegion(lv(r, 1))).toMap
-    val suppRegion = Tables.supplier(spark, sf)
+    val suppRegion = Tables.supplier(spark, sfStatic)
       .select(col("s_suppkey"), col("s_nationkey")).collect()
       .map(r => lv(r, 0) -> natRegion(lv(r, 1))).toMap
     val tagged = ebPairs.toSeq.map { case (ck, sk) => (custRegion(ck), suppRegion(sk)) }
@@ -379,8 +349,8 @@ class R17OpsSpec extends SparkSpec {
       val cond = if (minVol == 0) None else Some(nCross * 1000000L / minVol)
       (reg, nWithin, nCross, vol, cond)
     }
-    val got = graft.SparkEntry.queries("graph_cut_conductance")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "graph_cut_conductance")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
     assert(got == expect)
   }
@@ -401,8 +371,8 @@ class R17OpsSpec extends SparkSpec {
       val jacc = inter.toDouble / (xa.size + xb.size - inter)
       (a, b, m32, mb, m32 * 125000L, est, jacc)
     }
-    val got = graft.SparkEntry.queries("dedup_minhash_bbit")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "dedup_minhash_bbit")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSeq
     assert(got == expect)
     assert(expect.nonEmpty)
@@ -410,7 +380,7 @@ class R17OpsSpec extends SparkSpec {
 
   test("text_kneser_ney_bigram: counts, marginals, and the d=3/4 " +
       "rational replayed with BigInt") {
-    val bigrams = Tables.documents(spark, sf).select(col("text")).collect()
+    val bigrams = Tables.documents(spark, sfStatic).select(col("text")).collect()
       .flatMap { r =>
         val t = r.getString(0).split(" ", -1)
         if (t.length < 2) Nil else t.sliding(2).map(p => (p(0), p(1))).toSeq
@@ -425,8 +395,8 @@ class R17OpsSpec extends SparkSpec {
         * 1000000 / (BigInt(4) * tTypes * cw1(w1))).toLong
       (w1, w2, c, cw1(w1), n1p(w1), n1c(w2), tTypes, pkn)
     }.sortBy { case (w1, w2, c, _, _, _, _, _) => (-c, w1, w2) }.take(20)
-    val got = graft.SparkEntry.queries("text_kneser_ney_bigram")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "text_kneser_ney_bigram")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
       .toSeq
     assert(got == expect)
@@ -437,7 +407,7 @@ class R17OpsSpec extends SparkSpec {
   }
 
   test("fn_binary_codecs: java.util.Base64 + manual hex replay") {
-    val expect = Tables.documents(spark, sf)
+    val expect = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("text")).collect().map { r =>
         val p16 = r.getString(1).take(16)
         val p8 = r.getString(1).take(8)
@@ -448,8 +418,8 @@ class R17OpsSpec extends SparkSpec {
         r.getLong(0) -> (b64, hx, bytes16.length.toLong,
           if (rt == p16) 1 else 0)
       }.toMap
-    val got = graft.SparkEntry.queries("fn_binary_codecs")(spark, sf)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2),
+    val got = StaticResults.collected(spark, "fn_binary_codecs")
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2),
         r.getLong(3), r.getInt(4))).toMap
     assert(got == expect)
     assert(got.values.forall(_._4 == 1), "every roundtrip must hold")
@@ -464,7 +434,7 @@ class R17OpsSpec extends SparkSpec {
       sn -> (xs.length.toLong, xs.map(_._1).sum,
         xs.map(_._1).sum * 1000000L / totalRows, totalSplits)
     }
-    val got = graft.SparkEntry.queries("shard_salt_plan")(spark, sf).collect()
+    val got = StaticResults.collected(spark, "shard_salt_plan")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got == expect)
@@ -472,7 +442,7 @@ class R17OpsSpec extends SparkSpec {
 
   test("privacy_t_closeness: total variation incl. the absent-value " +
       "mass replayed with BigInt") {
-    val rows = Tables.customer(spark, sf)
+    val rows = Tables.customer(spark, sfStatic)
       .select(col("c_nationkey"), col("c_mktsegment"), col("c_acctbal"))
       .collect().map(r => (r.getAs[Number](0).longValue, r.getString(1),
         cents(r.getDouble(2)) / 100000L))
@@ -488,8 +458,8 @@ class R17OpsSpec extends SparkSpec {
       val ppm = (tv2 * 1000000 / (BigInt(2) * nG * nAll)).toLong
       qi -> (nG, ppm, if (ppm <= 200000L) 1 else 0)
     }
-    val got = graft.SparkEntry.queries("privacy_t_closeness")(spark, sf)
-      .collect().map(r => (r.getAs[Number](0).longValue, r.getString(1)) ->
+    val got = StaticResults.collected(spark, "privacy_t_closeness")
+      .map(r => (r.getAs[Number](0).longValue, r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getInt(4))).toMap
     assert(got == expect)
     assert(expect.values.exists(_._2 > 0), "some group must diverge")
@@ -497,9 +467,9 @@ class R17OpsSpec extends SparkSpec {
 
   test("sim_filtered_topk: pre-filter truth vs post-filter overfetch " +
       "replayed in plain Scala") {
-    val queries = vecsFull.filter(v => md5hex(v._1.toString).head == '0')
+    val queries = embRows.filter(v => md5hex(v._1.toString).head == '0')
     val perQ = queries.map { case (qid, qlab, qemb) =>
-      val ranked = vecsFull.filter(_._1 != qid)
+      val ranked = embRows.filter(_._1 != qid)
         .map(v => (v._1, v._2 == qlab, cos(v._3, qemb)))
         .sortBy { case (id, _, s) => (-s, id) }
       val pre = ranked.filter(_._2).take(5).map(_._1).toSet
@@ -511,8 +481,8 @@ class R17OpsSpec extends SparkSpec {
       lab -> (xs.length.toLong, nPre, nHit, nHit * 1000000L / nPre,
         xs.count(x => x._3 < x._2).toLong)
     }
-    val got = graft.SparkEntry.queries("sim_filtered_topk")(spark, sf)
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "sim_filtered_topk")
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
   }
@@ -540,8 +510,7 @@ class R17OpsSpec extends SparkSpec {
           fp, lp, mid, rem))
       }
     }.toMap
-    val got = graft.SparkEntry.queries("attribution_position_based")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "attribution_position_based")
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getInt(4), r.getInt(5), r.getLong(6), r.getLong(7))).toMap
     assert(got == expect)
@@ -549,7 +518,7 @@ class R17OpsSpec extends SparkSpec {
   }
 
   test("ann_hnsw_layer_assign: the geometric layer census replayed") {
-    val layers = vecsFull.map { case (id, lab, _) =>
+    val layers = embRows.map { case (id, lab, _) =>
       val lz = md5hex(id.toString).takeWhile(_ == '0').length
       (math.min(4, lz), id, lab)
     }
@@ -561,8 +530,8 @@ class R17OpsSpec extends SparkSpec {
       l -> (n, nl, mn, mx,
         census.filter(_._1 >= l).values.map(_._1).sum)
     }
-    val got = graft.SparkEntry.queries("ann_hnsw_layer_assign")(spark, sf)
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ann_hnsw_layer_assign")
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
     assert(expect.keySet.contains(0) && expect.size >= 2,
@@ -589,8 +558,8 @@ class R17OpsSpec extends SparkSpec {
         Some(t -> (n, sd, sd / n, t2, t2.map(_ > 3841459L)))
       }
     }
-    val got = graft.SparkEntry.queries("stats_paired_t")(spark, sf)
-      .collect().map { r =>
+    val got = StaticResults.collected(spark, "stats_paired_t")
+      .map { r =>
         r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
           if (r.isNullAt(4)) None else Some(r.getLong(4)),
           if (r.isNullAt(5)) None else Some(r.getBoolean(5)))
@@ -600,7 +569,7 @@ class R17OpsSpec extends SparkSpec {
 
   test("sample_halton_vdc: the bit-reversal selector and both samples " +
       "replayed in plain Scala") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(spark, sfStatic)
       .select(col("doc_id"), col("source")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     def vdc(k: Long): Long =
@@ -615,8 +584,8 @@ class R17OpsSpec extends SparkSpec {
         math.abs(v * 1000000L / n - 250000L),
         math.abs(m * 1000000L / n - 250000L))
     }
-    val got = graft.SparkEntry.queries("sample_halton_vdc")(spark, sf)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "sample_halton_vdc")
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
     assert(got == expect)
     // the QMC property the key exists to show, at the granularity it
@@ -641,15 +610,15 @@ class R17OpsSpec extends SparkSpec {
       math.sqrt(((q1.toDouble - s1.toDouble * s1.toDouble / n1.toDouble)
         + (q2.toDouble - s2.toDouble * s2.toDouble / n2.toDouble))
         / (n1 + n2 - 2).toDouble)
-    val row = graft.SparkEntry.queries("stats_cohens_d")(spark, sf)
-      .collect().head
+    val row = StaticResults.collected(spark, "stats_cohens_d")
+      .head
     assert(row.getLong(0) == n1 && row.getLong(1) == n2)
     assert(row.getLong(2) == s1 * 1000000L / n1 - s2 * 1000000L / n2)
     assert(row.getDouble(3) == round6(d))
   }
 
   test("mix_chinchilla_plan: the allocation arithmetic replayed") {
-    val corpusTokens = Tables.documents(spark, sf).select(col("text"))
+    val corpusTokens = Tables.documents(spark, sfStatic).select(col("text"))
       .collect().map(_.getString(0).split(" ", -1).length.toLong).sum
     val expect = Seq(1000L, 1000000L, 1000000000L).map { pf =>
       val nOpt = math.floor(math.sqrt(pf.toDouble * 1e15 / 120.0)).toLong
@@ -659,8 +628,8 @@ class R17OpsSpec extends SparkSpec {
         if (corpusTokens >= dOpt) 1000000L
         else corpusTokens * 1000000L / dOpt)
     }.toMap
-    val got = graft.SparkEntry.queries("mix_chinchilla_plan")(spark, sf)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "mix_chinchilla_plan")
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
     assert(expect(1000000000L)._5 < 1000000L,
@@ -669,7 +638,7 @@ class R17OpsSpec extends SparkSpec {
 
   test("sim_centroid_distance_matrix: milli centroids + exact L2 " +
       "replayed in plain Scala") {
-    val centroids = vecsFull.flatMap { case (_, lab, emb) =>
+    val centroids = embRows.flatMap { case (_, lab, emb) =>
       emb.indices.map(i =>
         (lab, i) -> math.floor(emb(i).toDouble * 1000 + 0.5).toLong)
     }.groupBy(_._1).map { case (k, xs) =>
@@ -687,8 +656,7 @@ class R17OpsSpec extends SparkSpec {
       }.sum
       (a, b) -> (d2, math.floor(math.sqrt(d2.toDouble)).toLong)
     }).toMap
-    val got = graft.SparkEntry.queries("sim_centroid_distance_matrix")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "sim_centroid_distance_matrix")
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     assert(got == expect)
@@ -714,8 +682,8 @@ class R17OpsSpec extends SparkSpec {
       val full = xs.map(e => cents(e._5)).sum * 1000000L / n
       t -> (n, full, reps(1)._2, reps(30)._2, 32L)
     }
-    val got = graft.SparkEntry.queries("stats_bootstrap_ci")(spark, sf)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "stats_bootstrap_ci")
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(got == expect)
     got.values.foreach { case (_, full, lo, hi, _) =>

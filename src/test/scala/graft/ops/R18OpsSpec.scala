@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the round-18 batch, checked by FULL
   * driver-side recomputation at sf0.001 — independent of the DuckDB
@@ -14,41 +16,12 @@ import org.apache.spark.sql.functions._
   * the product. */
 class R18OpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT) — the
-    * ts_acf_lags cents spelling the r18 ts/SPC keys reuse. */
-  private def cents4(v: Double): Long =
-    (BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .setScale(0, BigDecimal.RoundingMode.DOWN).toLongExact
-
-  /** floor(price * 100 + 0.5) — the half-up cents spelling of the
-    * r18 orders keys (dq_schema_drift / PSI / Theil / Atkinson). */
-  private def centsHalfUp(v: Double): Long =
-    math.floor(v * 100 + 0.5).toLong
-
-  private lazy val embRows: Array[(Long, Int, Array[Float])] =
-    Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("label"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getInt(1),
-        r.getSeq[Float](2).toArray))
-
   /** Milli quantization floor(x·1000) per component — the kmeansEx
     * spelling. */
   private lazy val milli: Map[Long, Array[Long]] =
     embRows.map { case (id, _, e) =>
       id -> e.map(x => math.floor(x.toDouble * 1000).toLong)
     }.toMap
-
-  private lazy val labelOf: Map[Long, Int] =
-    embRows.map(e => e._1 -> e._2).toMap
 
   /** Label-seeded milli centroids: per (label, dim) floor(sum/n). */
   private lazy val centroids: Map[Int, Array[Long]] =
@@ -65,34 +38,6 @@ class R18OpsSpec extends SparkSpec {
 
   private def d2(a: Array[Long], b: Array[Long]): Long =
     a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
-
-  private lazy val docRows: Array[(Long, String, String, String, Long)] =
-    Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"), col("lang"), col("source"),
-        col("n_chars")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4)))
-
-  private lazy val orderRows: Array[(Long, Long, String, Double,
-      java.time.LocalDate, String)] =
-    Tables.orders(spark, sf)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3),
-        // o_orderdate is timestamp_ntz -> the Row cell is LocalDateTime
-        r.getAs[java.time.LocalDateTime](4).toLocalDate, r.getString(5)))
-
-  private lazy val eventRows: Array[(java.sql.Timestamp, Long, String,
-      Double)] =
-    Tables.events(spark, sf)
-      .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getDouble(3)))
-
-  private def eventDay(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
 
   private val keys = Seq(
     "dedup_semantic_prune", "ann_ivf_probe_sweep", "ann_hnsw_greedy_route",
@@ -129,8 +74,8 @@ class R18OpsSpec extends SparkSpec {
       (l, xs.length.toLong, rep, pruned, xs.length - pruned,
         pruned * 1000000L / xs.length)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("dedup_semantic_prune")(spark, sf)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "dedup_semantic_prune")
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
     assert(expect.map(_._4).sum > 0, "threshold must prune a real tail")
@@ -155,8 +100,8 @@ class R18OpsSpec extends SparkSpec {
         (q, np.toLong, scanned, hits, hits * 10)
       }
     }.toSeq
-    val got = graft.SparkEntry.queries("ann_ivf_probe_sweep")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ann_ivf_probe_sweep")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == expect)
     // the sweep must be monotone per query: more probes, same-or-more recall
@@ -184,8 +129,8 @@ class R18OpsSpec extends SparkSpec {
         }
       }
     }.sortBy(t => (t._1, t._2))
-    val got = graft.SparkEntry.queries("ann_hnsw_greedy_route")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ann_hnsw_greedy_route")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
     // descent targets improve (d2 non-increasing) as layers descend
@@ -214,14 +159,14 @@ class R18OpsSpec extends SparkSpec {
       val top1 = if (exact10.head == rerank10.head) 1L else 0L
       (q, 20L, hits, hits * 10, top1)
     }
-    val got = graft.SparkEntry.queries("sim_rerank_two_stage")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "sim_rerank_two_stage")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == expect)
   }
 
   private lazy val lineRows: Array[(Long, Long, Long)] =
-    Tables.lineitem(spark, sf)
+    Tables.lineitem(spark, sfStatic)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
@@ -234,8 +179,8 @@ class R18OpsSpec extends SparkSpec {
       "census replayed") {
     val degC = tradeEdges.groupBy(_._1).map { case (_, xs) => xs.size }
     val degS = tradeEdges.groupBy(_._2).map { case (_, xs) => xs.size }
-    val r = graft.SparkEntry.queries("graph_edge_store_roundtrip")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "graph_edge_store_roundtrip")
+      .head
     assert(r.getLong(0) == tradeEdges.size.toLong, "n_edges")
     assert(r.getLong(1) == tradeEdges.size.toLong, "n_stored")
     assert(r.getLong(2) == 0L, "parquet roundtrip must be lossless")
@@ -256,8 +201,8 @@ class R18OpsSpec extends SparkSpec {
     val ebp = edges(priorKeys)
     val ebi = edges(k => custOf.contains(k) && !priorKeys(k))
     val nNew = (ebi -- ebp).size.toLong
-    val r = graft.SparkEntry.queries("graph_edge_store_incremental")(
-      spark, sf).collect().head
+    val r = StaticResults.collected(spark, "graph_edge_store_incremental")
+      .head
     assert(r.getLong(0) == ebp.size.toLong, "n_stored")
     assert(r.getLong(1) == ebi.size.toLong, "n_increment")
     assert(r.getLong(2) == nNew, "n_new")
@@ -284,8 +229,8 @@ class R18OpsSpec extends SparkSpec {
     val expect = acc.toSeq
       .map { case ((a, b), (c, aa)) => (a, b, c, aa) }
       .sortBy { case (a, b, _, aa) => (-aa, a, b) }.take(50)
-    val got = graft.SparkEntry.queries("graph_adamic_adar")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "graph_adamic_adar")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
     assert(expect.nonEmpty)
@@ -310,8 +255,8 @@ class R18OpsSpec extends SparkSpec {
     val (p, i) = (prof(prior), prof(incr))
     val expect = p.keys.toSeq.sorted.map(m =>
       (m, p(m), i(m), math.abs(p(m) - i(m))))
-    val got = graft.SparkEntry.queries("dq_schema_drift")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "dq_schema_drift")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
   }
@@ -346,8 +291,8 @@ class R18OpsSpec extends SparkSpec {
       ("quality_first", 3L, "len", nql, nall, nql, n0 * 10 + nq * 2 + nql),
       ("quality_first", 4L, "dedup", nall, nsurv, nall * 5,
         n0 * 10 + nq * 2 + nql + nall * 5))
-    val got = graft.SparkEntry.queries("curation_cascade_cost")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2),
+    val got = StaticResults.collected(spark, "curation_cascade_cost")
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
     assert(got == expect)
     // ordering must matter: cheap-first strictly cheaper here
@@ -356,7 +301,7 @@ class R18OpsSpec extends SparkSpec {
 
   test("stats_mcnemar_paired: discordant-pair chi-square replayed") {
     val cut = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-    val expect = eventRows.groupBy(_._3).toSeq.map { case (t, xs) =>
+    val expect = eventUserRows.groupBy(_._3).toSeq.map { case (t, xs) =>
       val byUser = xs.groupBy(_._2)
       val pc = byUser.values.map { es =>
         (es.exists(_._1.before(cut)), es.exists(e => !e._1.before(cut)))
@@ -367,8 +312,8 @@ class R18OpsSpec extends SparkSpec {
         else Some((b - c) * (b - c) * 1000000L / (b + c))
       (t, byUser.size.toLong, b, c, chi, chi.map(_ > 3841459L))
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("stats_mcnemar_paired")(spark, sf)
-      .collect().map { r =>
+    val got = StaticResults.collected(spark, "stats_mcnemar_paired")
+      .map { r =>
         (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
           if (r.isNullAt(4)) None else Some(r.getLong(4)),
           if (r.isNullAt(5)) None else Some(r.getBoolean(5)))
@@ -391,8 +336,8 @@ class R18OpsSpec extends SparkSpec {
     val t = cj.map(c => c * c).sum
     val num = 3 * n * (s - 3 * n) - 2 * t
     val den = 18 * n * n - 2 * t
-    val r = graft.SparkEntry.queries("stats_fleiss_kappa")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "stats_fleiss_kappa")
+      .head
     assert(r.getLong(0) == n.toLong)
     assert(r.getLong(1) == s.toLong)
     assert((r.getLong(2), r.getLong(3), r.getLong(4)) ==
@@ -417,8 +362,8 @@ class R18OpsSpec extends SparkSpec {
       (ph, xs.map(_._3).sum, xs.map(_._2).min, xs.map(_._2).max,
         xs.map(_._4).sum, xs.map(_._4).sum * 1000000L / tokAll)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("mix_curriculum_schedule")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "mix_curriculum_schedule")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
     // phases are ordered by length: min of phase k+1 > max of phase k
@@ -443,16 +388,12 @@ class R18OpsSpec extends SparkSpec {
     val sww = rows.map(r => BigInt(r._2) * r._5 * r._5).sum
     val ess = (sw * sw * 1000000 / (BigInt(n) * sww)).toLong
     val expect = rows.map(r => (r._1, r._2, r._3, r._4, r._5, ess))
-    val got = graft.SparkEntry.queries("sample_ess_importance")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "sample_ess_importance")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
     assert(ess > 0L && ess <= 1000000L)
   }
-
-  private lazy val dailyCents4: Map[(String, java.time.LocalDate), Long] =
-    eventRows.groupBy(e => (e._3, eventDay(e._1)))
-      .map { case (k, xs) => k -> xs.map(e => cents4(e._4)).sum }
 
   test("ts_pacf_lag2: lag Pearsons + the Durbin-Levinson fold replayed") {
     def acf(t: String, lag: Int): (Long, Double) = {
@@ -472,15 +413,15 @@ class R18OpsSpec extends SparkSpec {
           math.sqrt(n.toDouble * syy.toDouble - sy.toDouble * sy.toDouble))
       (n, a)
     }
-    val types = eventRows.map(_._3).distinct.sorted.toSeq
+    val types = eventUserRows.map(_._3).distinct.sorted.toSeq
     val expect = types.map { t =>
       val (n1, a1) = acf(t, 1); val (n2, a2) = acf(t, 2)
       val p = if (1.0 - a1 * a1 == 0.0) None
         else Some((a2 - a1 * a1) / (1.0 - a1 * a1))
       (t, n1, n2, a1, a2, p)
     }
-    val got = graft.SparkEntry.queries("ts_pacf_lag2")(spark, sf)
-      .collect().map { r =>
+    val got = StaticResults.collected(spark, "ts_pacf_lag2")
+      .map { r =>
         (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3),
           r.getDouble(4),
           if (r.isNullAt(5)) None else Some(r.getDouble(5)))
@@ -489,10 +430,10 @@ class R18OpsSpec extends SparkSpec {
   }
 
   private lazy val custRevNation: Seq[(String, Long)] = {
-    val natName = Tables.nation(spark, sf)
+    val natName = Tables.nation(spark, sfStatic)
       .select(col("n_nationkey"), col("n_name")).collect()
       .map(r => r.getInt(0) -> r.getString(1)).toMap
-    val custNat = Tables.customer(spark, sf)
+    val custNat = Tables.customer(spark, sfStatic)
       .select(col("c_custkey"), col("c_nationkey")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     orderRows.groupBy(_._2).toSeq.map { case (ck, os) =>
@@ -510,8 +451,8 @@ class R18OpsSpec extends SparkSpec {
       }.sum
       (nat, n, s / n, st / n)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("agg_theil_index")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "agg_theil_index")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
   }
@@ -526,8 +467,8 @@ class R18OpsSpec extends SparkSpec {
         math.exp((sl / n).toDouble / 1000000.0) * n / s * 1000000).toLong
       (nat, n, s / n, a)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("agg_atkinson_index")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "agg_atkinson_index")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
     // inequality indices must be in (0, 1) ppm and internally consistent
@@ -559,8 +500,8 @@ class R18OpsSpec extends SparkSpec {
         (q, (i + 1).toLong, v, r, ms, 7 * r - 3 * ms)
       }
     }.sortBy(t => (t._1, t._2))
-    val got = graft.SparkEntry.queries("sim_mmr_diversify")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "sim_mmr_diversify")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
     // diversification must actually reorder: some pick differs from
@@ -603,8 +544,8 @@ class R18OpsSpec extends SparkSpec {
     val res = bins.map(b => BigInt(b._1) * (BigInt(b._3) - ybarAll).pow(2))
       .sum / nn
     val unc = ybarAll * (1000000 - ybarAll)
-    val r = graft.SparkEntry.queries("eval_ece_brier_decomp")(spark, sf)
-      .collect().head
+    val r = StaticResults.collected(spark, "eval_ece_brier_decomp")
+      .head
     assert(r.getLong(0) == nn.toLong)
     assert(r.getLong(1) == ece.toLong, "ece")
     assert(r.getLong(2) == brier.toLong, "brier")
@@ -615,14 +556,13 @@ class R18OpsSpec extends SparkSpec {
 
   test("privacy_epsilon_composition: both bounds replayed " +
       "operand-for-operand") {
-    val expect = eventRows.groupBy(_._3).toSeq.map { case (t, xs) =>
+    val expect = eventUserRows.groupBy(_._3).toSeq.map { case (t, xs) =>
       val k = xs.map(e => eventDay(e._1)).distinct.length.toLong
       val adv = math.floor((0.1 * math.sqrt(2.0 * k * math.log(1000000.0))
         + k * 0.1 * (math.exp(0.1) - 1.0)) * 1000000).toLong
       (t, k, k * 100000L, adv, adv < k * 100000L)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("privacy_epsilon_composition")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "privacy_epsilon_composition")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getBoolean(4))).toSeq
     assert(got == expect)
@@ -652,8 +592,8 @@ class R18OpsSpec extends SparkSpec {
     }
     val psi = rows.map(_._6).sum
     val expect = rows.map(r => (r._1, r._2, r._3, r._4, r._5, r._6, psi))
-    val got = graft.SparkEntry.queries("dq_psi_price_drift")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "dq_psi_price_drift")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
     assert(got == expect)
     // every term of a PSI is non-negative up to the floor quantization
@@ -668,8 +608,8 @@ class R18OpsSpec extends SparkSpec {
       val sd = xs.map(x => (BigInt(x._2) * n - s).abs).sum
       (nat, n, s / n, (sd * 1000000 / (2 * BigInt(n) * s)).toLong)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("agg_hoover_index")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "agg_hoover_index")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
     expect.foreach(e => assert(e._4 > 0 && e._4 < 500000L,
@@ -693,8 +633,7 @@ class R18OpsSpec extends SparkSpec {
       val est = (20 * noisy - n) * 1000 / 15
       (l, trueN, noisy, est, math.abs(est - trueN * 1000))
     }.toSeq
-    val got = graft.SparkEntry.queries("privacy_randomized_response")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "privacy_randomized_response")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == expect)
@@ -722,7 +661,7 @@ class R18OpsSpec extends SparkSpec {
         (math.sqrt(np.toDouble * sxx.toDouble - sx.toDouble * sx.toDouble) *
           math.sqrt(np.toDouble * syy.toDouble - sy.toDouble * sy.toDouble))
     }
-    val expect = eventRows.map(_._3).distinct.sorted.toSeq.map { t =>
+    val expect = eventUserRows.map(_._3).distinct.sorted.toSeq.map { t =>
       val n = dailyCents4.count(_._1._1 == t).toLong
       val (a1, a2, a3) = (acf(t, 1), acf(t, 2), acf(t, 3))
       val q = math.floor(n * (n + 2) *
@@ -730,8 +669,8 @@ class R18OpsSpec extends SparkSpec {
         1000000).toLong
       (t, n, q, q > 7814728L)
     }
-    val got = graft.SparkEntry.queries("ts_ljung_box")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ts_ljung_box")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3))).toSeq
     assert(got == expect)
   }
@@ -758,8 +697,7 @@ class R18OpsSpec extends SparkSpec {
         (t, days(i)._1.toString, days(i)._2, zs(i), r1, r2, r3, r4)
       }
     }.sortBy(e => (e._1, e._2))
-    val got = graft.SparkEntry.queries("events_spc_western_electric")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_spc_western_electric")
       .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2),
         r.getLong(3), r.getBoolean(4), r.getBoolean(5), r.getBoolean(6),
         r.getBoolean(7))).toSeq

@@ -1,7 +1,9 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
+import Replay._
 
 /** Semantic invariants of the r18b batch, checked by FULL driver-side
   * recomputation at sf0.001 — independent of the DuckDB oracle: the
@@ -13,27 +15,9 @@ import org.apache.spark.sql.functions._
   * sort-and-slice (NOT the histogram-overlap spelling). */
 class R18bOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents2(v: Double): Long =
-    (BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def cents4(v: Double): Long =
-    (BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .setScale(0, BigDecimal.RoundingMode.DOWN).toLongExact
-
-  private lazy val docRows: Seq[(Long, String, String)] =
-    Tables.documents(spark, sf).select(col("doc_id"), col("text"),
-        col("source")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-
   test("text_gopher_rules: all four rules replayed from raw strings") {
     val stop = Set("a", "row", "join", "filter", "stream")
-    val flags = docRows.map { case (_, text, source) =>
+    val flags = docSources.map { case (_, text, source) =>
       val ts = text.split(" ", -1)
       val ntok = ts.length.toLong
       val sumchars = text.count(_ != ' ').toLong
@@ -56,8 +40,8 @@ class R18bOpsSpec extends SparkSpec {
       (src, xs.length.toLong, c(_._2), c(_._3), c(_._4), c(_._5), all,
         all * 1000000L / xs.length)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("text_gopher_rules")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "text_gopher_rules")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7))).toSeq
     assert(got == expect)
@@ -69,15 +53,14 @@ class R18bOpsSpec extends SparkSpec {
   }
 
   test("pack_padding_waste_sweep: chunk arithmetic replayed") {
-    val ntoks = docRows.map(_._2.split(" ", -1).length.toLong)
+    val ntoks = docSources.map(_._2.split(" ", -1).length.toLong)
     val expect = Seq(64L, 128L, 256L).map { l =>
       val chunks = ntoks.map(n => (n + l - 1) / l)
       val padded = chunks.map(_ * l).sum
       (l, ntoks.length.toLong, ntoks.sum, chunks.sum, padded,
         (padded - ntoks.sum) * 1000000L / padded)
     }
-    val got = graft.SparkEntry.queries("pack_padding_waste_sweep")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "pack_padding_waste_sweep")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
@@ -87,7 +70,7 @@ class R18bOpsSpec extends SparkSpec {
 
   test("stats_jarque_bera: BigInt power sums through the one float " +
       "tree") {
-    val ev = Tables.events(spark, sf)
+    val ev = Tables.events(spark, sfStatic)
       .select(col("event_type"), col("value")).collect()
       .map(r => (r.getString(0), cents4(r.getDouble(1)))).toSeq
     val expect = ev.groupBy(_._1).toSeq.map { case (t, xs) =>
@@ -111,8 +94,8 @@ class R18bOpsSpec extends SparkSpec {
         math.floor(jb * 1000000).toLong,
         math.floor(jb * 1000000).toLong > 5991465L)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("stats_jarque_bera")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "stats_jarque_bera")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getBoolean(5))).toSeq
     assert(got == expect)
     // kurtosis of any real distribution is positive
@@ -123,9 +106,9 @@ class R18bOpsSpec extends SparkSpec {
       "prefix-pass spelling") {
     val pri = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
       "5-LOW")
-    val rows = Tables.orders(spark, sf)
+    val rows = Tables.orders(spark, sfStatic)
       .select(col("o_orderpriority"), col("o_totalprice")).collect()
-      .map(r => (r.getString(0), cents2(r.getDouble(1)))).toSeq
+      .map(r => (r.getString(0), cents(r.getDouble(1)))).toSeq
     // doubled midranks by value: positions pre+1..pre+cnt share
     // doubled midrank 2*pre + cnt + 1
     val byV = rows.groupBy(_._2).toSeq.sortBy(_._1)
@@ -148,8 +131,8 @@ class R18bOpsSpec extends SparkSpec {
       BigInt(3000000) * (n + 1)).toLong
     val den = n * n * n - n - tie
     val hc = (BigInt(hMicro) * (n * n * n - n) / den).toLong
-    val got = graft.SparkEntry.queries("stats_kruskal_wallis")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "stats_kruskal_wallis")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7), r.getLong(8), r.getBoolean(9))).toSeq
     val expect = Seq((n.toLong, ns(0).toLong, ns(1).toLong, ns(2).toLong,
@@ -159,24 +142,6 @@ class R18bOpsSpec extends SparkSpec {
     // H is nonnegative up to the 5 per-group floor steps
     assert(hMicro >= -5L * 3000000 / (n * (n + 1)).toLong - 1)
   }
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def hexLong(h: String): Long = java.lang.Long.parseLong(h, 16)
-
-  private lazy val eventRows: Array[(java.sql.Timestamp, String, Double)] =
-    Tables.events(spark, sf).select(col("ts"), col("event_type"),
-        col("value")).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2)))
-
-  private def eventDay(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
-  private lazy val dailyCents4: Map[(String, java.time.LocalDate), Long] =
-    eventRows.groupBy(e => (e._2, eventDay(e._1)))
-      .map { case (k, xs) => k -> xs.map(e => cents4(e._3)).sum }
 
   test("shard_consistent_hash_moves: successor-rule rings replayed; " +
       "keys only ever move TO the new node") {
@@ -191,7 +156,7 @@ class R18bOpsSpec extends SparkSpec {
       r.filter(_._1 == pick._1).map(_._2).min
     }
     val r8 = ring(8); val r9 = ring(9)
-    val keys = docRows.map(d =>
+    val keys = docSources.map(d =>
       (d._1, hexLong(md5hex(s"key:${d._1}").substring(0, 8))))
     val pairs = keys.map { case (_, kh) => (assign(r8, kh), assign(r9, kh)) }
     val moved = pairs.count(p => p._1 != p._2).toLong
@@ -200,8 +165,7 @@ class R18bOpsSpec extends SparkSpec {
         pairs.count(p => p._1 != p._2 && p._2 == n).toLong, moved,
         moved * 1000000L / keys.length)
     }
-    val got = graft.SparkEntry.queries("shard_consistent_hash_moves")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "shard_consistent_hash_moves")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
@@ -215,7 +179,7 @@ class R18bOpsSpec extends SparkSpec {
 
   test("sample_cluster_twostage: both md5 draws + the HT debias " +
       "replayed") {
-    val rows = docRows.map { case (id, text, src) =>
+    val rows = docSources.map { case (id, text, src) =>
       val sel1 = hexLong(md5hex(s"s1:$src").substring(0, 4)) % 5 < 2
       val sel2 = hexLong(md5hex(s"s2:$id").substring(0, 4)) % 4 == 0
       (src, text.split(" ", -1).length.toLong, sel1, sel2)
@@ -229,8 +193,7 @@ class R18bOpsSpec extends SparkSpec {
         trueTotal, estTotal,
         (estTotal - trueTotal) * 1000000L / trueTotal)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("sample_cluster_twostage")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "sample_cluster_twostage")
       .map(r => (r.getString(0), r.getBoolean(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7), r.getLong(8))).toSeq
@@ -257,8 +220,8 @@ class R18bOpsSpec extends SparkSpec {
           (t, days(i)._1.toString, gs, ls, rsi)
         }
       }
-    val got = graft.SparkEntry.queries("win_rsi_sma")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getDate(1).toString,
+    val got = StaticResults.collected(spark, "win_rsi_sma")
+      .map(r => (r.getString(0), r.getDate(1).toString,
         r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
     assert(got == expect)
@@ -282,8 +245,8 @@ class R18bOpsSpec extends SparkSpec {
           (t, days(i)._1.toString, ks(i), d3)
         }
       }
-    val got = graft.SparkEntry.queries("win_stochastic_osc")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getDate(1).toString,
+    val got = StaticResults.collected(spark, "win_stochastic_osc")
+      .map(r => (r.getString(0), r.getDate(1).toString,
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
         if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSeq
     assert(got == expect)
@@ -291,7 +254,7 @@ class R18bOpsSpec extends SparkSpec {
 
   test("ops_queueing_mm1: exact span/service fold + the rho/Lq/Wq " +
       "rationals replayed") {
-    val expect = eventRows.groupBy(_._2).toSeq.map { case (t, xs) =>
+    val expect = eventTypeRows.groupBy(_._2).toSeq.map { case (t, xs) =>
       val us = xs.map { e =>
         val i = e._1.toInstant
         i.getEpochSecond * 1000000L + i.getNano / 1000L
@@ -306,8 +269,8 @@ class R18bOpsSpec extends SparkSpec {
       val wq = lq.map(l => l * span / (1000L * n))
       (t, n, span, mean, rho, lq, wq)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("ops_queueing_mm1")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ops_queueing_mm1")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4)),
         if (r.isNullAt(5)) None else Some(r.getLong(5)),
@@ -319,9 +282,9 @@ class R18bOpsSpec extends SparkSpec {
 
   test("stats_friedman_test: within-day midranks replayed from the " +
       "complete matrix") {
-    val types = eventRows.map(_._2).distinct.sorted
-    val days = eventRows.map(e => eventDay(e._1)).distinct
-    val counts = eventRows.groupBy(e => (eventDay(e._1), e._2))
+    val types = eventTypeRows.map(_._2).distinct.sorted
+    val days = eventTypeRows.map(e => eventDay(e._1)).distinct
+    val counts = eventTypeRows.groupBy(e => (eventDay(e._1), e._2))
       .map { case (k, xs) => k -> xs.length.toLong }
     val k = types.length.toLong
     val n = days.length.toLong
@@ -337,8 +300,8 @@ class R18bOpsSpec extends SparkSpec {
       BigInt(3000000) * n * (k + 1)).toLong
     val expect = r2.map { case (t, r) =>
       (t, r, n, chi2, chi2 > 9487729L) }.sortBy(_._1).toSeq
-    val got = graft.SparkEntry.queries("stats_friedman_test")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "stats_friedman_test")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getBoolean(4))).toSeq
     assert(got == expect)
     // doubled midrank sums over a complete k-treatment block design
@@ -349,7 +312,7 @@ class R18bOpsSpec extends SparkSpec {
   test("eval_krippendorff_alpha: coincidence algebra replayed with " +
       "missing ratings") {
     val boundaries = Seq((0, 40L, 70L), (1, 45L, 65L), (2, 35L, 75L))
-    val cats = docRows.map { case (id, text, _) =>
+    val cats = docSources.map { case (id, text, _) =>
       val ntok = text.split(" ", -1).length.toLong
       boundaries.map { case (i, lo, hi) =>
         if (md5hex(s"$id:kr$i").charAt(0) < 'd')
@@ -370,8 +333,7 @@ class R18bOpsSpec extends SparkSpec {
     val expect = Seq((nd, ntot, cs(0), cs(1), cs(2),
       tt * 1000000L / (2 * ntot), de2 * 1000000L / (ntot * (ntot - 1)),
       1000000L - tt * (ntot - 1) * 1000000L / (2 * de2)))
-    val got = graft.SparkEntry.queries("eval_krippendorff_alpha")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "eval_krippendorff_alpha")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSeq
     assert(got == expect)
@@ -384,7 +346,7 @@ class R18bOpsSpec extends SparkSpec {
   test("multimodal_aspect_buckets: exact nearest-ratio argmin replayed") {
     val buckets = Seq((0L, "1:1", 1L, 1L), (1L, "4:3", 4L, 3L),
       (2L, "3:4", 3L, 4L), (3L, "16:9", 16L, 9L), (4L, "9:16", 9L, 16L))
-    val picks = docRows.map { case (id, _, _) =>
+    val picks = docSources.map { case (id, _, _) =>
       val w = 128L * (1 + hexLong(md5hex(s"w:$id").substring(0, 2)) % 12)
       val h = 128L * (1 + hexLong(md5hex(s"h:$id").substring(0, 2)) % 12)
       val best = buckets.minBy { case (idx, _, bn, bd) =>
@@ -397,8 +359,7 @@ class R18bOpsSpec extends SparkSpec {
         (idx, nm, xs.length.toLong, xs.map(p => p._3 * p._4).sum,
           xs.map(_._5).sum / xs.length) }
       .sortBy(_._1)
-    val got = graft.SparkEntry.queries("multimodal_aspect_buckets")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "multimodal_aspect_buckets")
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == expect)
@@ -409,7 +370,7 @@ class R18bOpsSpec extends SparkSpec {
 
   test("stats_bh_fdr: step-up replayed; rejections land only on " +
       "planted sources") {
-    val rows = docRows.map { case (id, _, src) =>
+    val rows = docSources.map { case (id, _, src) =>
       val planted = hexLong(md5hex(s"plant:$src").substring(0, 4)) % 5 == 0
       val base = hexLong(md5hex(s"bh:$id").substring(0, 4)) % 10 < 2
       val boost = hexLong(md5hex(s"bh2:$id").substring(0, 4)) % 10 < 5
@@ -435,8 +396,8 @@ class R18bOpsSpec extends SparkSpec {
       .map(_._6).reduceOption(_ max _).getOrElse(0L)
     val expect = ranked.map(r =>
       (r._1, r._2, r._3, r._4, r._5, r._6, r._6 <= kmax)).sortBy(_._1)
-    val got = graft.SparkEntry.queries("stats_bh_fdr")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "stats_bh_fdr")
+      .map(r => (r.getString(0), r.getBoolean(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6))).toSeq
     assert(got == expect)
     // ground truth: something is rejected, and ONLY planted sources
@@ -468,15 +429,15 @@ class R18bOpsSpec extends SparkSpec {
           crosses.count(_._2 == "down").toLong,
           crosses.headOption.map(_._1.toString))
       }
-    val got = graft.SparkEntry.queries("ts_ewma_crossover")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ts_ewma_crossover")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3),
         if (r.isNullAt(4)) None else Some(r.getDate(4).toString))).toSeq
     assert(got == expect)
   }
 
   private lazy val milliVecs: Map[Long, Array[Long]] =
-    Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    Tables.embeddings(spark, sfStatic).select(col("vec_id"), col("embedding"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray
         .map(x => math.floor(x.toDouble * 1000).toLong)).toMap
@@ -509,21 +470,14 @@ class R18bOpsSpec extends SparkSpec {
       val overlap = exact.intersect(adcTop).size.toLong
       (q, overlap, overlap * 1000000L / 10)
     }.toSeq
-    val got = graft.SparkEntry.queries("ann_pq_adc_recall")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val got = StaticResults.collected(spark, "ann_pq_adc_recall")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSeq
     assert(got == expect)
     // the compressed scan must beat random: mean recall over the
     // panel above 10% (random top-10 of 500 would give ~2%)
     assert(expect.map(_._2).sum * 10 >= expect.length)
   }
-
-  private lazy val liRows: Array[(String, Double, Long, Long, Long)] =
-    Tables.lineitem(spark, sf).select(col("l_returnflag"),
-        col("l_quantity"), col("l_orderkey"), col("l_partkey"),
-        col("l_suppkey")).collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
 
   test("sketch_ams_f2: signs, Z folds, and median-of-means replayed") {
     val freq = liRows.groupBy(_._4).map { case (k, xs) =>
@@ -545,8 +499,8 @@ class R18bOpsSpec extends SparkSpec {
     val expect = Seq((f2.toLong, mean16, mom,
       (BigInt(mom) - f2) * 1000000 / f2)).map(t =>
       (t._1, t._2, t._3, t._4.toLong))
-    val got = graft.SparkEntry.queries("sketch_ams_f2")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "sketch_ams_f2")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
     // an unbiased F2 sketch at 16 functions lands within 100%
@@ -568,8 +522,7 @@ class R18bOpsSpec extends SparkSpec {
           math.floor(math.exp((sl / n).toDouble / 1000000)).toLong,
           (BigInt(n) * 1000000000000L / sr).toLong)
       }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("agg_geometric_harmonic")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "agg_geometric_harmonic")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == expect)
@@ -580,7 +533,7 @@ class R18bOpsSpec extends SparkSpec {
 
   test("mix_entropy_effective_domains: quantized Shannon fold " +
       "replayed") {
-    val counts = docRows.groupBy(_._3).map { case (_, xs) =>
+    val counts = docSources.groupBy(_._3).map { case (_, xs) =>
       xs.length.toLong }.toSeq
     val m = counts.length.toLong
     val nd = counts.sum
@@ -592,8 +545,7 @@ class R18bOpsSpec extends SparkSpec {
       else Some(h * 1000000L /
         math.floor(math.log(m.toDouble) * 1000000).toLong)
     val expect = Seq((nd, m, h, eff, hn))
-    val got = graft.SparkEntry.queries("mix_entropy_effective_domains")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "mix_entropy_effective_domains")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
     assert(got == expect)
@@ -602,7 +554,7 @@ class R18bOpsSpec extends SparkSpec {
   }
 
   test("graph_rich_club: top-degree double-semijoin density replayed") {
-    val orders = Tables.orders(spark, sf).select(col("o_orderkey"),
+    val orders = Tables.orders(spark, sfStatic).select(col("o_orderkey"),
         col("o_custkey")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val eb = liRows.flatMap(l => orders.get(l._3).map(ck => (ck, l._5)))
@@ -621,18 +573,13 @@ class R18bOpsSpec extends SparkSpec {
     val od = nEdges * 1000000L / (nCust * nSupp)
     val expect = Seq((nCust, nSupp, nEdges, rich, 400L, rd, od,
       rd * 1000 / od))
-    val got = graft.SparkEntry.queries("graph_rich_club")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "graph_rich_club")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7))).toSeq
     assert(got == expect)
     assert(rich > 0 && rich <= 400)
   }
-
-  private lazy val docLangs: Array[(Long, String, String)] =
-    Tables.documents(spark, sf).select(col("doc_id"), col("lang"),
-        col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
 
   test("privacy_laplace_histogram: inverse-CDF noise replayed; " +
       "noise is bounded and sign-balanced with u") {
@@ -646,8 +593,7 @@ class R18bOpsSpec extends SparkSpec {
       (lang, n, u, noise, n * 1000000L + noise, math.abs(noise),
         1000000L)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("privacy_laplace_histogram")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "privacy_laplace_histogram")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
     assert(got == expect)
@@ -669,8 +615,7 @@ class R18bOpsSpec extends SparkSpec {
         (BigInt(1000000) - s2 * 1000000 / (BigInt(n) * (n - 1))).toLong,
         (BigInt(n) * (n - 1) * 1000 / s2).toLong)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("corpus_simpson_diversity")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "corpus_simpson_diversity")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
     assert(got == expect)
@@ -679,7 +624,7 @@ class R18bOpsSpec extends SparkSpec {
   }
 
   test("stats_bartlett: fixed-order variance/log fold replayed") {
-    val ev = eventRows.map(e => (e._2, cents4(e._3)))
+    val ev = eventTypeRows.map(e => (e._2, cents4(e._3)))
     val types = Seq("click", "error", "purchase", "signup", "view")
     val stats = types.map { t =>
       val xs = ev.filter(_._1 == t).map(x => BigInt(x._2))
@@ -698,8 +643,8 @@ class R18bOpsSpec extends SparkSpec {
     val chi2 = math.floor(
       ((nn - 5) * round6(math.log(sp2.toDouble)) - sl) /
         (1 + (sr - 1.0 / (nn - 5)) / 12) * 1000000).toLong
-    val got = graft.SparkEntry.queries("stats_bartlett")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "stats_bartlett")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3))).toSeq
     assert(got == Seq((nn, 5L, chi2, chi2 > 9487729L)))
     // the x1000 ln offsets must cancel: chi2 of the milli spelling
@@ -732,8 +677,8 @@ class R18bOpsSpec extends SparkSpec {
       (b, xs.length.toLong, xs.map(_._1).sum,
         xs.map(_._2).sum / xs.length)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("dedup_cluster_purity")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "dedup_cluster_purity")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
     // the fixture's near-duplicates must actually cluster: some
@@ -744,9 +689,9 @@ class R18bOpsSpec extends SparkSpec {
 
   test("ts_poisson_dispersion: complete-matrix dispersion rational " +
       "replayed") {
-    val types = eventRows.map(_._2).distinct.sorted
-    val days = eventRows.map(e => eventDay(e._1)).distinct
-    val counts = eventRows.groupBy(e => (eventDay(e._1), e._2))
+    val types = eventTypeRows.map(_._2).distinct.sorted
+    val days = eventTypeRows.map(e => eventDay(e._1)).distinct
+    val counts = eventTypeRows.groupBy(e => (eventDay(e._1), e._2))
       .map { case (k, xs) => k -> xs.length.toLong }
     val expect = types.map { t =>
       val cs = days.map(day => counts.getOrElse((day, t), 0L))
@@ -758,8 +703,8 @@ class R18bOpsSpec extends SparkSpec {
       (t, n, sc * 1000 / n, disp, (num * 1000000 / BigInt(sc)).toLong,
         disp > 1500L, disp < 500L)
     }.toSeq
-    val got = graft.SparkEntry.queries("ts_poisson_dispersion")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "ts_poisson_dispersion")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getBoolean(5), r.getBoolean(6)))
       .toSeq
     assert(got == expect)
@@ -769,17 +714,17 @@ class R18bOpsSpec extends SparkSpec {
 
   test("report_theil_between_within: the decomposition replayed and " +
       "additivity pinned") {
-    val orders = Tables.orders(spark, sf).select(col("o_custkey"),
+    val orders = Tables.orders(spark, sfStatic).select(col("o_custkey"),
         col("o_totalprice")).collect()
       .map(r => (r.getLong(0), math.floor(r.getDouble(1) * 100 + 0.5)
         .toLong))
-    val custNation = Tables.customer(spark, sf).select(col("c_custkey"),
+    val custNation = Tables.customer(spark, sfStatic).select(col("c_custkey"),
         col("c_nationkey")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val nationRegion = Tables.nation(spark, sf).select(col("n_nationkey"),
+    val nationRegion = Tables.nation(spark, sfStatic).select(col("n_nationkey"),
         col("n_regionkey")).collect()
       .map(r => (r.getInt(0), r.getInt(1))).toMap
-    val regionName = Tables.region(spark, sf).select(col("r_regionkey"),
+    val regionName = Tables.region(spark, sfStatic).select(col("r_regionkey"),
         col("r_name")).collect()
       .map(r => (r.getInt(0), r.getString(1))).toMap
     val custRev = orders.groupBy(_._1).toSeq.flatMap { case (ck, xs) =>
@@ -808,8 +753,7 @@ class R18bOpsSpec extends SparkSpec {
     val tB = per.map(_._5).sum; val tW = per.map(_._6).sum
     val expect = per.map(p =>
       (p._1, p._2, p._3, p._4, p._5, p._6, tTotal, tB, tW))
-    val got = graft.SparkEntry.queries("report_theil_between_within")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "report_theil_between_within")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
         r.getLong(8))).toSeq
@@ -821,7 +765,7 @@ class R18bOpsSpec extends SparkSpec {
   }
 
   test("ts_parkinson_volatility: daily log-range fold replayed") {
-    val expect = eventRows.groupBy(e => (e._2, eventDay(e._1))).toSeq
+    val expect = eventTypeRows.groupBy(e => (e._2, eventDay(e._1))).toSeq
       .map { case ((t, _), xs) =>
         (t, xs.map(e => cents4(e._3)).max, xs.map(e => cents4(e._3)).min)
       }.filter(x => x._3 > 0 && x._2 > x._3)
@@ -834,8 +778,7 @@ class R18bOpsSpec extends SparkSpec {
         val st = terms.sum
         (t, n, st / n, st * 1000000L / n / 2772588L)
       }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("ts_parkinson_volatility")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "ts_parkinson_volatility")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
@@ -844,7 +787,7 @@ class R18bOpsSpec extends SparkSpec {
 
   test("corpus_source_kl: per-source divergence replayed; KL " +
       "nonnegative up to floors") {
-    val st = docRows.flatMap(d => d._2.split(" ", -1).filter(_.nonEmpty)
+    val st = docSources.flatMap(d => d._2.split(" ", -1).filter(_.nonEmpty)
       .map(t => (d._3, t)))
     val freq = st.groupBy(identity).map { case (k, xs) =>
       k -> xs.length.toLong }
@@ -860,15 +803,15 @@ class R18bOpsSpec extends SparkSpec {
       }.sum
       (src, ns, mine.size.toLong, kl)
     }
-    val got = graft.SparkEntry.queries("corpus_source_kl")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "corpus_source_kl")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == expect)
     expect.foreach(e => assert(e._4 >= -e._3, s"KL < -types: $e"))
   }
 
   test("events_hill_tail_index: top-50 order statistics replayed") {
-    val byUser = Tables.events(spark, sf).select(col("user_id"))
+    val byUser = Tables.events(spark, sfStatic).select(col("user_id"))
       .collect().map(_.getLong(0)).groupBy(identity)
       .map { case (u, xs) => (u, xs.length.toLong) }.toSeq
     val top = byUser.sortBy { case (u, c) => (-c, u) }.take(50)
@@ -885,8 +828,7 @@ class R18bOpsSpec extends SparkSpec {
       math.floor(math.log(xk.toDouble) * 1000000).toLong
     val alpha = if (inv <= 0) None else Some(1000000000L / inv)
     val expect = Seq((byUser.length.toLong, k, xk, inv, alpha))
-    val got = graft.SparkEntry.queries("events_hill_tail_index")(
-      spark, sf).collect()
+    val got = StaticResults.collected(spark, "events_hill_tail_index")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
     assert(got == expect)
@@ -908,8 +850,8 @@ class R18bOpsSpec extends SparkSpec {
           types * 1000000L / (wins.length * 50L)))
       }
     }
-    val got = graft.SparkEntry.queries("corpus_mattr_windowed")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val got = StaticResults.collected(spark, "corpus_mattr_windowed")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq
     assert(got == expect)
     // MATTR is a share of the window size
@@ -918,9 +860,9 @@ class R18bOpsSpec extends SparkSpec {
 
   test("agg_trimmed_mean: full sort-and-slice, independent of the " +
       "histogram-overlap spelling") {
-    val rows = Tables.lineitem(spark, sf)
+    val rows = Tables.lineitem(spark, sfStatic)
       .select(col("l_returnflag"), col("l_extendedprice")).collect()
-      .map(r => (r.getString(0), cents2(r.getDouble(1)))).toSeq
+      .map(r => (r.getString(0), cents(r.getDouble(1)))).toSeq
     val expect = rows.groupBy(_._1).toSeq.map { case (f, xs) =>
       val vs = xs.map(_._2).sorted
       val n = vs.length.toLong
@@ -930,8 +872,8 @@ class R18bOpsSpec extends SparkSpec {
       val skept = kept.map(BigInt(_)).sum
       (f, n, k, (sall / n).toLong, (skept / (n - 2 * k)).toLong)
     }.sortBy(_._1)
-    val got = graft.SparkEntry.queries("agg_trimmed_mean")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    val got = StaticResults.collected(spark, "agg_trimmed_mean")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == expect)
     // trimming a right-skewed money column must not RAISE the mean

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, StaticResults, Tables}
+import graft.StaticPlans.sfStatic
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the round-5 additions, checked by
@@ -9,13 +10,11 @@ import org.apache.spark.sql.functions._
   * formulation. */
 class R5OpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   test("sessionize_events: sessions partition the events, gaps honored") {
-    val rows = EventAnalytics.sessionizeEvents.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sessionize_events")
     assert(rows.nonEmpty)
     val totalEvents = rows.map(_.getLong(2)).sum
-    assert(totalEvents == Tables.events(spark, sf).count(),
+    assert(totalEvents == Tables.events(spark, sfStatic).count(),
       "per-session event counts must sum to the event count")
     // session ids dense from 1 per user; durations non-negative
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
@@ -26,8 +25,8 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("anomaly_mad: one row per type, outliers bounded, med/mad are data values") {
-    val rows = EventAnalytics.anomalyMad.run(spark, sf).collect()
-    val types = Tables.events(spark, sf).select("event_type").distinct().count()
+    val rows = StaticResults.collected(spark, "anomaly_mad")
+    val types = Tables.events(spark, sfStatic).select("event_type").distinct().count()
     assert(rows.length == types)
     rows.foreach { r =>
       assert(r.getLong(4) <= r.getLong(1), "outliers cannot exceed n")
@@ -36,7 +35,7 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("sample_token_budget: cutoff honored, utilization in [0,1]") {
-    val rows = Sampling.sampleTokenBudget.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "sample_token_budget")
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), "kept docs cannot exceed total")
@@ -46,7 +45,7 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("bm25_topdocs: scores non-increasing, matched terms in 1..3") {
-    val rows = CorpusOps.bm25TopDocs.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "bm25_topdocs")
     assert(rows.nonEmpty && rows.length <= 20)
     val scores = rows.map(_.getLong(2))
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b },
@@ -55,8 +54,8 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("kmeans_assign: counts partition the vectors, diagonal dominates") {
-    val rows = LlmExtras.kmeansAssign.run(spark, sf).collect()
-    val nVec = Tables.embeddings(spark, sf).count()
+    val rows = StaticResults.collected(spark, "kmeans_assign")
+    val nVec = Tables.embeddings(spark, sfStatic).count()
     assert(rows.map(_.getLong(2)).sum == nVec,
       "every vector is assigned exactly once")
     // the fixture's embeddings are NOT label-clustered (measured:
@@ -64,30 +63,30 @@ class R5OpsSpec extends SparkSpec {
     // the assignment is a function (deterministic across runs) and
     // lands in the centroid id range.
     assert(rows.forall(r => r.getInt(1) >= 0 && r.getInt(1) <= 9))
-    val again = LlmExtras.kmeansAssign.run(spark, sf).collect()
+    val again = LlmExtras.kmeansAssign.run(spark, sfStatic).collect()
     assert(rows.map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet ==
       again.map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet)
   }
 
   test("agg_histogram_bucketed: buckets cover all orders, edges ordered") {
-    val rows = Aggregates.aggHistogramBucketed.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "agg_histogram_bucketed")
     assert(rows.nonEmpty && rows.length <= 10)
-    assert(rows.map(_.getLong(2)).sum == Tables.orders(spark, sf).count())
+    assert(rows.map(_.getLong(2)).sum == Tables.orders(spark, sfStatic).count())
     assert(rows.forall(r => r.getInt(0) >= 0 && r.getInt(0) <= 9))
     val edges = rows.map(_.getDouble(1))
     assert(edges.zip(edges.tail).forall { case (a, b) => a < b })
   }
 
   test("graph_degree_stats: node counts cover the corpus, degrees positive") {
-    val rows = ClusterOps.graphDegreeStats.run(spark, sf).collect()
-    val nDocs = Tables.documents(spark, sf).count()
+    val rows = StaticResults.collected(spark, "graph_degree_stats")
+    val nDocs = Tables.documents(spark, sfStatic).count()
     assert(rows.map(_.getLong(1)).sum == nDocs,
       "degree histogram must partition the corpus (incl. degree 0)")
     assert(rows.map(_.getLong(0)).distinct.length == rows.length)
   }
 
   test("rolling_7d_value: v7 bounded by total, matches single-day where isolated") {
-    val rows = EventAnalytics.rolling7dValue.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "rolling_7d_value")
     assert(rows.nonEmpty)
     // (type, day) is a key
     assert(rows.map(r => (r.getString(0), r.getInt(1))).distinct.length == rows.length)
@@ -100,30 +99,30 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("source_partitioned_prune: pruned read equals direct filter") {
-    val rows = Scans.sourcePartitionedPrune.run(spark, sf).collect()
-    val direct = Tables.events(spark, sf)
+    val rows = StaticResults.collected(spark, "source_partitioned_prune")
+    val direct = Tables.events(spark, sfStatic)
       .filter(col("event_type") === "click").count()
     assert(rows.map(_.getLong(1)).sum == direct)
   }
 
   test("source_sorted_ranges: pruned-layout read equals direct filter+agg") {
-    val rows = Scans.sourceSortedRanges.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "source_sorted_ranges")
     assert(rows.nonEmpty && rows.length <= 12)
-    val direct = Tables.orders(spark, sf)
+    val direct = Tables.orders(spark, sfStatic)
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1997-01-01").cast("timestamp")).count()
     assert(rows.map(_.getLong(1)).sum == direct)
   }
 
   test("reconcile_orders_items: counts match direct recomputation") {
-    val r = Sampling.reconcileOrdersItems.run(spark, sf).collect().head
-    assert(r.getLong(0) == Tables.orders(spark, sf).count())
-    assert(r.getLong(1) == Tables.lineitem(spark, sf).count())
+    val r = StaticResults.collected(spark, "reconcile_orders_items").head
+    assert(r.getLong(0) == Tables.orders(spark, sfStatic).count())
+    assert(r.getLong(1) == Tables.lineitem(spark, sfStatic).count())
     assert(r.getLong(2) >= 0 && r.getLong(3) >= 0)
   }
 
   test("entity_match_fuzzy: pairs respect the block and the distance bound") {
-    val rows = HarmonizeQueries.entityMatchFuzzy.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "entity_match_fuzzy")
     assert(rows.nonEmpty)
     assert(rows.map(_.getInt(0)).distinct.length == rows.length)
     rows.foreach { r =>
@@ -133,8 +132,8 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("cdc_apply_orders: final cardinality = base - deletes + inserts") {
-    val rows = EvolutionQueries.cdcApplyOrders.run(spark, sf).collect()
-    val base = Tables.orders(spark, sf)
+    val rows = StaticResults.collected(spark, "cdc_apply_orders")
+    val base = Tables.orders(spark, sfStatic)
       .select(col("o_orderkey"),
         (conv(substring(md5(col("o_orderkey").cast("string")), 1, 4), 16, 10)
           .cast("int") % 100).as("b"))
@@ -145,14 +144,14 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("source_schema_merge: generations partition the table, old rows null-filled") {
-    val rows = Scans.sourceSchemaMerge.run(spark, sf).collect()
-    assert(rows.map(_.getLong(1)).sum == Tables.orders(spark, sf).count())
+    val rows = StaticResults.collected(spark, "source_schema_merge")
+    assert(rows.map(_.getLong(1)).sum == Tables.orders(spark, sfStatic).count())
     assert(rows.exists(_.getString(0) == "(pre-evolution)"),
       "the pre-evolution generation must surface as null-filled rows")
   }
 
   test("curation_funnel: stages only ever shrink, budget bound holds") {
-    val rows = PipelineOps.curationFunnel.run(spark, sf).collect()
+    val rows = StaticResults.collected(spark, "curation_funnel")
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (raw, q, dd, fin, tok) =
@@ -160,12 +159,12 @@ class R5OpsSpec extends SparkSpec {
       assert(raw >= q && q >= dd && dd >= fin, s"funnel must be monotone: $r")
       assert(tok <= 5000, "token budget exceeded")
     }
-    assert(rows.map(_.getLong(1)).sum == Tables.documents(spark, sf).count())
+    assert(rows.map(_.getLong(1)).sum == Tables.documents(spark, sfStatic).count())
   }
 
   test("win_session_running: running value resets at session boundaries") {
-    val rows = EventAnalytics.winSessionRunning.run(spark, sf).collect()
-    assert(rows.length == Tables.events(spark, sf).count().toInt)
+    val rows = StaticResults.collected(spark, "win_session_running")
+    assert(rows.length == Tables.events(spark, sfStatic).count().toInt)
     // within each (user, session), the running value is what a fold of
     // the per-event deltas produces; across a session boundary it
     // restarts from the first event's value — check the first row of
@@ -182,7 +181,7 @@ class R5OpsSpec extends SparkSpec {
   }
 
   test("join_bucketed_colo: exchange-free join, totals conserved") {
-    val df = Scans.joinBucketedColo.run(spark, sf)
+    val df = Scans.joinBucketedColo.run(spark, sfStatic)
     // the join itself must consume the bucketed layout without a
     // shuffle on either side: no Exchange may appear BELOW the join
     // node (the post-join groupBy legitimately shuffles).
@@ -197,9 +196,9 @@ class R5OpsSpec extends SparkSpec {
       }
       assert(bad.isEmpty, s"bucketed join must not shuffle its inputs:\n$j")
     }
-    val rows = df.collect()
-    assert(rows.map(_.getLong(1)).sum == Tables.lineitem(spark, sf)
-      .join(Tables.orders(spark, sf),
+    val rows = StaticResults.collected(spark, "join_bucketed_colo")
+    assert(rows.map(_.getLong(1)).sum == Tables.lineitem(spark, sfStatic)
+      .join(Tables.orders(spark, sfStatic),
         col("l_orderkey") === col("o_orderkey")).count())
   }
 }
