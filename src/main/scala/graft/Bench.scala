@@ -1,116 +1,14 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
 object Bench {
   /** No args (the driver's call): run every query. With args: run only
     * those keys — local iteration aid. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(HarnessConf.cpus, GraftSession.AqeOff)
-    // Warm-up: JVM/codegen/vectorized-reader/broadcast/window/Generate
-    // classloading costs otherwise land on whichever query happens to
-    // run first. Exercises each machinery once on the 25-row dims.
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
-      n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy("r_name")
-        .agg(sum(col("n_nationkey").cast("decimal(12,2)")).as("s"),
-          collect_list(col("n_name")).as("l"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("r_name").orderBy("s")))
-        .orderBy("r_name").count()
-      // Generate (index-explode), ObjectHashAggregate (collect_list of
-      // longs), BroadcastNestedLoopJoin (1-row crossJoin), persist +
-      // unpersist, and the custom codegen expressions — the first-use
-      // costs the dedup/similarity queries otherwise pay in-timing.
-      val toks = n.repartition(4)
-        .select(col("n_nationkey"), split(col("n_name"), "").as("t"))
-        .filter(size(col("t")) >= 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sorted = toks.select(col("n_nationkey"), sort_array(array_distinct(expr(
-        "transform(sequence(3, size(t)), i -> xxhash64(concat_ws(' ', t[i-3], t[i-2], t[i-1])))")))
-        .as("sh"))
-      val one = toks
-        .select(col("t"), explode(expr("sequence(3, size(t))")).as("i"))
-        .select(xxhash64(concat_ws(" ",
-          expr("t[i-3]"), expr("t[i-2]"), expr("t[i-1]"))).as("h"))
-        .distinct()
-        .agg(sort_array(collect_list(col("h"))).as("arr"))
-      sorted.crossJoin(broadcast(one))
-        .select(graft.functions.VectorFunctions
-          .sortedIntersectLong(col("sh"), col("arr")).as("x"))
-        .agg(sum(col("x"))).count()
-      // Minhash machinery (md5-transform signatures, band posexplode,
-      // string-array merge-walk) and the RDD re-rooting bridge used by
-      // the iterative CC loop — first-use codegen/classloading for
-      // these otherwise lands inside whichever dedup query runs first.
-      val sigs = toks
-        .select(col("n_nationkey"), sort_array(array_distinct(expr(
-          "transform(sequence(3, size(t)), i -> concat_ws(' ', t[i-3], t[i-2], t[i-1]))")))
-          .as("s"))
-        .select(col("n_nationkey"), col("s"),
-          expr("transform(s, x -> md5(x))").as("hs"))
-        .select(col("n_nationkey"), col("s"),
-          expr("array_min(transform(hs, h -> substring(h, 1, 8)))").as("h0"),
-          expr("array_min(transform(hs, h -> substring(h, 4, 8)))").as("h1"))
-      val bands = sigs.select(col("n_nationkey"), col("s"),
-        posexplode(array(concat_ws("|", col("h0"), col("h1"))))
-          .as(Seq("band", "sig")))
-      val pairs = bands.as("x").join(bands.as("y"),
-          col("x.sig") === col("y.sig") &&
-            col("x.n_nationkey") < col("y.n_nationkey"))
-        .select(graft.functions.VectorFunctions
-          .sortedIntersect(col("x.s"), col("y.s")).as("n"))
-      val flat = spark.createDataFrame(pairs.rdd, pairs.schema)
-      flat.groupBy(col("n")).agg(min(col("n"))).count()
-      toks.unpersist()
-      // Sink machinery (r5 graded layouts): catalog + bucketed
-      // saveAsTable, partitionBy and repartitionByRange parquet
-      // writes, CSV write/read — first-use committer/catalog
-      // classloading otherwise lands inside the graded sink queries.
-      val wdir = graft.TempDirs.create("graft-warm")
-      n.select(col("n_nationkey"), col("n_name"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(2, "n_nationkey").sortBy("n_nationkey")
-        .saveAsTable("graft_warm_bucketed")
-      spark.table("graft_warm_bucketed").count()
-      spark.sql("DROP TABLE IF EXISTS graft_warm_bucketed")
-      n.write.mode("overwrite").partitionBy("n_regionkey").parquet(s"$wdir/p")
-      spark.read.parquet(s"$wdir/p").filter(col("n_regionkey") === 0).count()
-      n.repartitionByRange(2, col("n_nationkey"))
-        .sortWithinPartitions(col("n_nationkey"))
-        .write.mode("overwrite").parquet(s"$wdir/r")
-      n.write.mode("overwrite").option("header", "true").csv(s"$wdir/c")
-      spark.read.option("header", "true")
-        .schema("n_nationkey LONG, n_name STRING, n_regionkey INT")
-        .csv(s"$wdir/c").count()
-      // r6 additions, each measured as a 1.4-1.8 s first-use cost that
-      // previously landed inside whichever graded query ran it first:
-      // - LocalRelation (Seq.toDF) -> broadcast join: 1.8 s, was paid
-      //   by harmonize_cube (first sorted query joining a local dim);
-      // - the custom GroupedTopKExec: 1.4 s, was paid by
-      //   text_tfidf_topterms (sorts before topk_per_group);
-      // - full-outer SMJ + max(struct) aggregate: first-use machinery
-      //   for the evolution family (merge_upsert/cdc_apply).
-      import spark.implicits._
-      val dim = Seq((0L, "a", "x"), (1L, "b", "y"))
-        .toDF("k", "v", "w")
-      n.join(broadcast(dim), n("n_nationkey") === dim("k"), "left").count()
-      graft.plans.GroupedTopK.topkPerGroup(
-        n.select(col("n_regionkey"), col("n_nationkey"),
-          col("n_nationkey").cast("double").as("s")),
-        groupCols = Seq("n_regionkey"),
-        orderBy = Seq(("s", false), ("n_nationkey", true)), k = 1).count()
-      n.as("a").hint("merge").join(n.as("b"),
-          col("a.n_nationkey") === col("b.n_nationkey"), "full")
-        .select(coalesce(col("a.n_nationkey"), col("b.n_nationkey")).as("k"))
-        .count()
-      n.groupBy(col("n_regionkey"))
-        .agg(max(struct(col("n_nationkey"), col("n_name"))).as("v"))
-        .count()
-      spark.catalog.clearCache()
-    }
     // Sorted execution order: a HashMap's iteration order reshuffles
     // whenever a key is added, which made round-over-round per-query
     // numbers incomparable (a query's timing depends on which heavy
@@ -118,111 +16,7 @@ object Bench {
     val selected = (if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap)
       .toSeq.sortBy(_._1)
-    // Per-query shape warm-up (r6): each query's first run pays
-    // 0.3-1.6 s of Janino compilation for its generated classes —
-    // measured per plan SHAPE, not per data size (a 25-row run of the
-    // same shape absorbs the whole cost; see PLANS.md r6). The codegen
-    // cache is keyed on generated source, which is independent of the
-    // parquet path — so one pass over the 1k-row sf0.001 tables
-    // compiles every class outside the timed region. This is machine
-    // warm-up (JIT state), not result caching: clearCache() drops any
-    // data the pass may have pinned.
-    // Every key runs through GraftSession.runKey (per-key
-    // PartitionPolicy width, clearCache after) in BOTH the warm-up and
-    // the timed loop, so the warmed plan is the timed plan.
-    // Warm SCHEDULE, not a single pass (r11): one sf0.001 pass
-    // compiles the Janino classes but leaves C2 JIT to fire
-    // mid-timing — back-edge counters only cross the compile
-    // thresholds (~40k loop iterations) at real row counts, so every
-    // query's hot generated loops were being C2-compiled INSIDE its
-    // timed region (measured suite-wide: 70-80 s of compiler-thread
-    // time vs ~1.5 s of GC; the two r10 "variance magnets" carried
-    // the most, cdc_apply_orders at 2.8-3.0 s). Because the codegen
-    // cache keys on generated source (data-path independent), warm
-    // passes accumulate back edges on the SAME classes the timed run
-    // executes — but 3 sf0.001 passes only reach ~18k back edges for
-    // lineitem-volume loops, so the schedule ends with one sf0.01
-    // pass (60k rows) to push the heavy loops over the C2 threshold
-    // before timing starts. Measured: 3x sf0.001 alone cut cdc's
-    // in-timed JIT 2782 -> 639 ms and suite-wide in-timed JIT
-    // 79.5 -> 50-60 s; the sf0.01 stage targets the remainder. All
-    // warm cost is outside the timed region.
-    // Env override: SPARK_GRAFT_WARM="dir[:passes],dir[:passes],…".
-    val warmSchedule: Seq[(String, Int)] = sys.env.get("SPARK_GRAFT_WARM")
-      .map(HarnessConf.parseWarmSchedule)
-      .getOrElse(HarnessConf.parseWarmSchedule(
-        // Default trimmed 3→2 sf0.001 passes (r18-opt): at 483 keys
-        // the three passes alone took 624 s — past the whole warm
-        // budget — so the sf0.01 stage (the one that pushes heavy
-        // generated loops over the C2 threshold) was silently
-        // skipped and 1-3 s of compiler time landed back inside each
-        // heavy key's timed region (measured: graph_label_propagation
-        // jit_ms=2886 in-region). Two sf0.001 passes + the sf0.01
-        // pass fit the budget and drain C2 where it matters.
-        "/root/testdata/sf0.001:2,/root/testdata/sf0.01:1"))
-    // Wall budget over the WHOLE warm phase (env override, seconds):
-    // on a badly contended host the multi-pass warm could balloon,
-    // and a harness that kills a still-warming Bench leaves NO
-    // artifact for the round — strictly worse than a noisier timed
-    // run. Checked between passes (never mid-pass, never the timed
-    // loop); skipped stages and passes are logged, so a truncated
-    // warm is attributable from stderr next to the gc/jit columns.
-    // Default raised 300 → 540 (r14): at 355 keys the three sf0.001
-    // passes alone take ~320-430 s, so a 300 s budget silently
-    // skipped the sf0.01 stage — the exact stage that pushes heavy
-    // loops over the C2 threshold — and driver-side artifacts were
-    // timing cold compiles again (the r11 regression this budget's
-    // schedule exists to prevent). 540 s keeps the worst observed
-    // warm inside budget while still bounding a pathological host.
-    // Budget re-raised 540 → 900 (r18-opt) alongside trimming the
-    // schedule: the 540 s value was sized for the 355-key registry
-    // (r14); at 483 keys it was exhausted mid-schedule. 900 s bounds
-    // a pathological host while never truncating the C2 stage on a
-    // nominal one (measured warm at 483 keys ≈ 2×208 + ~90 ≈ 510 s).
-    val warmBudgetS = sys.env.getOrElse("SPARK_GRAFT_WARM_BUDGET_S", "900").toInt
-    val warmAllT0 = System.nanoTime()
-    def warmElapsedS: Double = (System.nanoTime() - warmAllT0) / 1e9
-    for ((warmDir, warmPasses) <- warmSchedule) {
-      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir))) {
-        // A vanished warm dir must be LOUD (the driver regenerates
-        // /root/testdata between rounds): a silently skipped stage
-        // moves C2 JIT back inside the timed regions, which would
-        // read as a plan regression with nothing to attribute it.
-        System.err.println(s"[bench] warm dir $warmDir missing - stage skipped")
-      } else {
-        val warmT0 = System.nanoTime()
-        // failures are non-fatal (the timed run decides correctness)
-        // but never silent: an unwarmed query's first-use codegen
-        // lands back in its timed region, which would read as a
-        // regression. NonFatal only: an OutOfMemoryError here means
-        // the JVM is already degraded, and recording "genuine"
-        // timings from a GC-thrashing heap is the baseline
-        // misrepresentation the artifact guard below exists to
-        // prevent — let it crash.
-        var ranPasses = 0
-        val failed = (1 to warmPasses).flatMap { _ =>
-          if (warmElapsedS > warmBudgetS) Seq.empty
-          else {
-            ranPasses += 1
-            selected.flatMap { case (name, fn) =>
-              GraftSession.runKey(spark, name) {
-                try { fn(spark, warmDir).count(); None }
-                catch { case scala.util.control.NonFatal(e) =>
-                  Some(s"$name (${e.getClass.getSimpleName})") }
-              }
-            }
-          }
-        }.distinct
-        if (failed.nonEmpty)
-          System.err.println(s"[bench] warm-up failed for ${failed.size}: ${failed.mkString(", ")}")
-        if (ranPasses < warmPasses)
-          System.err.println(f"[bench] warm budget ${warmBudgetS}s exhausted at " +
-            f"$warmElapsedS%.1fs - $warmDir ran $ranPasses of $warmPasses passes")
-        System.err.println(s"[bench] warm_phase $warmDir x$ranPasses/$warmPasses " +
-          f"${(System.nanoTime() - warmT0) / 1e9}%.1fs")
-      }
-    }
-    System.gc()
+    warm(spark, selected)
     // Host load (1-min avg, HarnessConf.load1 — shared with Verify's
     // stderr bracket) at start and end of the timed loop, recorded as
     // additive JSON fields (the driver reads metric/value/queries and
@@ -230,63 +24,30 @@ object Bench {
     // adjudication of driver-vs-builder deltas has hinged on
     // INFERRING external contention; this measures it instead
     // (VERDICT r7 item 3, r8 item 3).
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val loadStart = HarnessConf.load1
     val ticksStart = HarnessConf.cpuTicks
-    // Per-query JVM-debt brackets (GC + JIT time landing INSIDE the
-    // timed region) — the r10 adjudication of the two "variance
-    // magnet" queries had to infer GC debt from suite order; this
-    // measures it. stderr only (one line per query): the artifact
-    // keeps its compact schema, a human diagnosing a slow run reads
-    // the diag column next to the timing.
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    def jitMs: Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else 0L
-    }
     // failures must be LOUD: a query that throws after 0.1 s would
     // otherwise be recorded as a fast success and make the shipped
     // total look better — the same misrepresentation the full-run
     // artifact guard below exists to prevent.
     val crashed = scala.collection.mutable.ListBuffer[String]()
     val results = selected.flatMap { case (name, fn) =>
-      val (ok, dt) = GraftSession.runKey(spark, name) {
-        val (gc0, jit0) = (gcMs, jitMs)
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case scala.util.control.NonFatal(e) =>
-            crashed += s"$name (${e.getClass.getSimpleName})"; false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          s"[bench] $name ${r3(dt)}s gc_ms=${gcMs - gc0} jit_ms=${jitMs - jit0}")
-        (ok, dt)
-      }
-      // runKey's cache clear and this GC run outside the timed region:
-      // inside it they would charge cleanup to the query. The
-      // md5/shingle-heavy queries leave multi-GB garbage behind, and
-      // without the explicit GC the collection pause lands inside
-      // whichever unlucky query runs next (measured: a 1.7 s query
-      // spiking to 25 s mid-session).
-      System.gc()
+      val t = time(spark, name, fn, sfDir)
+      // Per-query JVM-debt brackets (GC + JIT time landing INSIDE the
+      // timed region) — the r10 adjudication of the two "variance
+      // magnet" queries had to infer GC debt from suite order; this
+      // measures it. stderr only (one line per query): the artifact
+      // keeps its compact schema, a human diagnosing a slow run reads
+      // the diag column next to the timing.
+      System.err.println(
+        s"[bench] $name ${r3(t.secs)}s gc_ms=${t.gcMs} jit_ms=${t.jitMs}")
+      t.error.foreach(e => crashed += s"$name ($e)")
       // A crashed query contributes NOTHING to total/n_queries/the
       // per-query map: its truncated wall time would understate the
       // suite (ADVICE r6) — it exists only in the failed field+stderr,
       // so a crash can never make the headline number look better.
-      if (ok) Some(name -> dt) else None
+      if (t.error.isEmpty) Some(name -> t.secs) else None
     }
-    // The driver captures only the LAST ~2000 chars of stdout; round 1's
-    // full per-query map (~3.9k chars) overflowed that window and the
-    // driver recorded parsed=null. Keep the line comfortably under the
-    // window: 3-decimal seconds, and per-query entries only for the
-    // slowest 25 (total still covers every query run).
-    def qjson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val loadEnd = HarnessConf.load1
     val stealFrac = HarnessConf.stealFrac(ticksStart, HarnessConf.cpuTicks)
     // Self-attribution (VERDICT r10 item 3): median per-query ratio of
@@ -308,7 +69,7 @@ object Bench {
       // sf field (absent in very old artifacts → guard fails → -1).
       if (p.waitFor() != 0 || !txt.contains(s""""sf":"$sfDir"""")) Map.empty
       else HarnessConf.parseBenchQueriesLoose(txt)
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
     val ratioMedian: Double =
       if (committedMap.isEmpty) -1.0
       else HarnessConf.ratioMedian(results, committedMap)
@@ -324,35 +85,19 @@ object Bench {
     // pass's total/n_queries/queries fields are never touched (the
     // trough discipline stands — a retime can only ANNOTATE, never
     // improve, the shipped number).
-    val retimed: Seq[(String, Double, Double)] =
-      if (ratioMedian <= 0.0) Seq.empty
-      else {
-        val byKey = selected.toMap
-        val firstPass = results.toMap
-        val suspects = HarnessConf
-          .retimeSuspects(results, committedMap, ratioMedian)
-          .map(k => (k, firstPass(k)))
-        suspects.flatMap { case (k, first) =>
-          byKey.get(k).flatMap { fn =>
-            val (ok, second) = GraftSession.runKey(spark, k) {
-              val t0 = System.nanoTime()
-              val ok = try { fn(spark, sfDir).count(); true }
-                catch { case scala.util.control.NonFatal(_) => false }
-              (ok, (System.nanoTime() - t0) / 1e9)
-            }
-            System.gc()
-            if (ok) {
-              System.err.println(s"[bench] retimed $k first=${r3(first)}s " +
-                s"second=${r3(second)}s committed=${r3(committedMap(k))}s")
-              Some((k, first, second))
-            } else None
-          }
+    val retimed: Seq[(String, Double, Double)] = {
+      val byKey = selected.toMap
+      val firstPass = results.toMap
+      HarnessConf.retimeSuspects(results, committedMap, ratioMedian).flatMap { k =>
+        val t = time(spark, k, byKey(k), sfDir)
+        if (t.error.nonEmpty) None
+        else {
+          System.err.println(s"[bench] retimed $k first=${r3(firstPass(k))}s " +
+            s"second=${r3(t.secs)}s committed=${r3(committedMap(k))}s")
+          Some((k, firstPass(k), t.secs))
         }
       }
-    val retimedJson = if (retimed.isEmpty) ""
-      else retimed.map { case (k, f, s2) =>
-        "\"" + k + "\":[" + r3(f) + "," + r3(s2) + "]"
-      }.mkString(""","retimed":{""", ",", "}")
+    }
     // Publish min(first, retime) in the per-query map and the total
     // (r19, VERDICT r18 item 7): both passes are full cold-cache
     // executions of the same plan, so the min is the better estimate
@@ -388,28 +133,27 @@ object Bench {
         if (!txt.contains(sfDir)) -1.0
         else HarnessConf.ratioMedian(results, HarnessConf.parseBenchQueriesLoose(txt))
       }.getOrElse(-1.0)
-    } catch { case scala.util.control.NonFatal(_) => -1.0 }
-    val loadJson = s""","load_start":${r3(loadStart)},"load_end":${r3(loadEnd)}""" +
-      s""","steal_frac":${r3(stealFrac)},"ratio_median":${r3(ratioMedian)}""" +
-      s""","ratio_median_prev":${r3(ratioMedianPrev)}"""
-    val slowest = published.sortBy(-_._2).take(25)
+    } catch { case NonFatal(_) => -1.0 }
     val total = if (published.nonEmpty) published.map(_._2).sum else 0.0
     // failed queries surface in the JSON itself (additive field — the
     // driver reads metric/value/queries and ignores extras) AND on
     // stderr, so a crash can never masquerade as a fast success.
-    val failedJson = if (crashed.isEmpty) ""
-      else s""","failed":${crashed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     if (crashed.nonEmpty)
       System.err.println(s"[bench] ${crashed.size} queries FAILED: ${crashed.mkString(", ")}")
-    // The compact line lives inside the driver's ~2000-char stdout
-    // window: ship at most the 6 worst retimes there (plus an honest
-    // retimed_n count); BENCH_full.json carries all of them.
-    val retimedCompact = if (retimed.isEmpty) ""
-      else retimed.sortBy { case (_, f, _) => -f }.take(6).map {
-        case (k, f, s2) => "\"" + k + "\":[" + r3(f) + "," + r3(s2) + "]"
-      }.mkString(""","retimed_n":""" + retimed.size + ""","retimed":{""", ",", "}")
-    val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":${qjson(slowest)}$failedJson$loadJson$retimedCompact,"sf":"$sfDir"}"""
+    def render(queries: Seq[(String, Double)], retimedN: Option[Int],
+        shownRetimes: Seq[(String, Double, Double)]): String =
+      artifactLine(total, results.size, queries, crashed.toSeq, loadStart, loadEnd,
+        stealFrac, ratioMedian, ratioMedianPrev, retimedN, shownRetimes, sfDir)
+    // The driver captures only the LAST ~2000 chars of stdout; round 1's
+    // full per-query map (~3.9k chars) overflowed that window and the
+    // driver recorded parsed=null. Keep the line comfortably under the
+    // window: 3-decimal seconds, per-query entries only for the
+    // slowest 25 (total still covers every query run), and at most the
+    // 6 worst retimes (plus an honest retimed_n count); BENCH_full.json
+    // carries every query and every retime.
+    val line = render(published.sortBy(-_._2).take(25),
+      Option.when(retimed.nonEmpty)(retimed.size),
+      retimed.sortBy { case (_, f, _) => -f }.take(6))
     // Against sbt's [info]/[success] wrapping defeating the driver's
     // stdout parser (parsed=null in rounds 1+2): emit the bare line
     // ONCE on stdout AFTER spark.stop() (so it is the true last
@@ -428,11 +172,151 @@ object Bench {
     // misrepresentation the round-4 advice flagged).
     if (args.isEmpty) {
       writeFile("BENCH.json", line)
-      writeFile("BENCH_full.json",
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":${qjson(published.sortBy(_._1))}$failedJson$loadJson$retimedJson,"sf":"$sfDir"}""")
+      writeFile("BENCH_full.json", render(published.sortBy(_._1), None, retimed))
     }
     System.err.println(line)
     spark.stop()
     println(line)
+  }
+
+  /** Warm schedule: (data dir, passes over every selected key), run
+    * before anything is timed. Each query's first run pays 0.3-1.6 s
+    * of Janino compilation per plan SHAPE, not per data size, and the
+    * codegen cache keys on generated source, which is independent of
+    * the parquet path — so passes on the small tiers compile the very
+    * classes the timed run executes, and accumulate back edges on
+    * them. Two sf0.001 passes reach only ~18k back edges on
+    * lineitem-volume loops, short of C2's threshold (~40k), so the
+    * schedule ends with one sf0.01 pass (60k rows) that drains C2
+    * before timing (measured r11: in-region JIT across the suite
+    * 79.5 s → 50-60 s, cdc_apply_orders 2782 → 639 ms). Two sf0.001
+    * passes, not three (r18): at 483 keys three passes alone outran
+    * the budget and the sf0.01 stage was skipped. This is JIT state,
+    * not result caching: runKey's clearCache drops any data a pass
+    * pinned. */
+  private[graft] val warmSchedule: Seq[(String, Int)] =
+    Seq("/root/testdata/sf0.001" -> 2, "/root/testdata/sf0.01" -> 1)
+
+  /** Wall budget over the whole warm phase, in seconds, checked between
+    * passes (never mid-pass, never in the timed loop). A harness that
+    * kills a still-warming Bench leaves NO artifact, which is worse
+    * than a noisier timed run. 900 s does not truncate the sf0.01
+    * stage on a nominal host (measured warm at 483 keys: ≈ 510 s in
+    * round 18, ≈ 735 s on 4 cores) while bounding a pathological one;
+    * skipped passes are logged next to the gc/jit columns. */
+  private[graft] val warmBudgetS = 900
+
+  /** Runs [[warmSchedule]] over `selected` through
+    * [[GraftSession.runKey]], so the warmed plan is the timed plan. */
+  private[graft] def warm(spark: SparkSession,
+      selected: Seq[(String, (SparkSession, String) => DataFrame)]): Unit = {
+    val warmAllT0 = System.nanoTime()
+    def warmElapsedS: Double = (System.nanoTime() - warmAllT0) / 1e9
+    for ((warmDir, warmPasses) <- warmSchedule) {
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir))) {
+        // A vanished warm dir must be LOUD (the driver regenerates
+        // /root/testdata between rounds): a silently skipped stage
+        // moves C2 JIT back inside the timed regions, which would
+        // read as a plan regression with nothing to attribute it.
+        System.err.println(s"[bench] warm dir $warmDir missing - stage skipped")
+      } else {
+        val warmT0 = System.nanoTime()
+        // failures are non-fatal (the timed run decides correctness)
+        // but never silent: an unwarmed query's first-use codegen
+        // lands back in its timed region, which would read as a
+        // regression. NonFatal only: an OutOfMemoryError here means
+        // the JVM is already degraded, and recording "genuine"
+        // timings from a GC-thrashing heap is the baseline
+        // misrepresentation the artifact guard exists to prevent —
+        // let it crash.
+        var ranPasses = 0
+        val failed = (1 to warmPasses).flatMap { _ =>
+          if (warmElapsedS > warmBudgetS) Seq.empty
+          else {
+            ranPasses += 1
+            selected.flatMap { case (name, fn) =>
+              GraftSession.runKey(spark, name) {
+                try { fn(spark, warmDir).count(); None }
+                catch { case NonFatal(e) =>
+                  Some(s"$name (${e.getClass.getSimpleName})") }
+              }
+            }
+          }
+        }.distinct
+        if (failed.nonEmpty)
+          System.err.println(s"[bench] warm-up failed for ${failed.size}: ${failed.mkString(", ")}")
+        if (ranPasses < warmPasses)
+          System.err.println(f"[bench] warm budget ${warmBudgetS}s exhausted at " +
+            f"$warmElapsedS%.1fs - $warmDir ran $ranPasses of $warmPasses passes")
+        System.err.println(s"[bench] warm_phase $warmDir x$ranPasses/$warmPasses " +
+          f"${(System.nanoTime() - warmT0) / 1e9}%.1fs")
+      }
+    }
+    System.gc()
+  }
+
+  /** One timed run: `error` is the exception's simple class name when
+    * the run threw, `gcMs`/`jitMs` the GC and JIT compiler time that
+    * landed inside the timed region. */
+  private[graft] final case class Timed(error: Option[String], secs: Double,
+      gcMs: Long, jitMs: Long)
+
+  /** The per-key timer behind Bench's timed and retime passes and
+    * `tools.KeyTime`: only `fn(spark, dir).count()` is inside the
+    * clock. runKey's cache clear and the GC after it run outside the
+    * timed region, where they would otherwise charge cleanup to the
+    * query: the md5/shingle-heavy queries leave multi-GB garbage
+    * behind, and without the explicit GC the collection pause lands
+    * inside whichever query runs next (measured: a 1.7 s query spiking
+    * to 25 s mid-session). */
+  private[graft] def time(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String): Timed = {
+    val t = GraftSession.runKey(spark, name) {
+      val (gc0, jit0) = (gcMs, jitMs)
+      val t0 = System.nanoTime()
+      val error = try { fn(spark, dir).count(); None }
+        catch { case NonFatal(e) => Some(e.getClass.getSimpleName) }
+      val secs = (System.nanoTime() - t0) / 1e9
+      Timed(error, secs, gcMs - gc0, jitMs - jit0)
+    }
+    System.gc()
+    t
+  }
+
+  private def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  }
+
+  private def jitMs: Long = {
+    val c = java.lang.management.ManagementFactory.getCompilationMXBean
+    if (c != null && c.isCompilationTimeMonitoringSupported)
+      c.getTotalCompilationTime else 0L
+  }
+
+  private def r3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The artifact line. The driver reads `metric`, `value` and
+    * `queries`; every other field is additive. BENCH.json and
+    * BENCH_full.json differ only in the entries passed in: `queries`
+    * and `retimed` are rendered as given, `failed` and `retimed` only
+    * when non-empty, `retimed_n` only when defined. */
+  private[graft] def artifactLine(total: Double, nQueries: Int,
+      queries: Seq[(String, Double)], failed: Seq[String],
+      loadStart: Double, loadEnd: Double, stealFrac: Double,
+      ratioMedian: Double, ratioMedianPrev: Double, retimedN: Option[Int],
+      retimed: Seq[(String, Double, Double)], sf: String): String = {
+    val q = queries.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val f = if (failed.isEmpty) ""
+      else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
+    val n = retimedN.fold("")(n => s""","retimed_n":$n""")
+    val rt = if (retimed.isEmpty) ""
+      else retimed.map { case (k, a, b) => "\"" + k + "\":[" + r3(a) + "," + r3(b) + "]" }
+        .mkString(""","retimed":{""", ",", "}")
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":$nQueries,"queries":$q$f""" +
+      s""","load_start":${r3(loadStart)},"load_end":${r3(loadEnd)},"steal_frac":${r3(stealFrac)}""" +
+      s""","ratio_median":${r3(ratioMedian)},"ratio_median_prev":${r3(ratioMedianPrev)}$n$rt,"sf":"$sf"}"""
   }
 }

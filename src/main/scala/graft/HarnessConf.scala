@@ -121,22 +121,6 @@ object HarnessConf {
     }
   }
 
-  /** Bench's warm schedule parsed from "dir[:passes],dir[:passes],…"
-    * (r11). A malformed stage fails loudly — a silently dropped warm
-    * stage would move JIT compilation back inside the timed regions,
-    * which reads as a regression. */
-  private[graft] def parseWarmSchedule(spec: String): Seq[(String, Int)] =
-    spec.split(',').toSeq.filter(_.nonEmpty).map { stage =>
-      // split with -1 keeps trailing empties: "dir:" must be a loud
-      // error (a typo'd pass count), not a silent 1-pass stage.
-      stage.split(":", -1) match {
-        case Array(dir) if dir.nonEmpty => (dir, 1)
-        case Array(dir, n) if dir.nonEmpty && n.nonEmpty &&
-            n.length <= 3 && n.forall(_.isDigit) => (dir, n.toInt)
-        case _ => sys.error(s"SPARK_GRAFT_WARM stage '$stage' is not dir[:passes]")
-      }
-    }
-
   /** Median of per-query time ratios current/committed over the keys
     * both runs measured; -1.0 when no keys are shared. The host-shift
     * attribution statistic: uniform ratios ≈ the median mean "window",

@@ -9,23 +9,15 @@ package graft
   * change an answer — this spec is that claim, mechanically, over the
   * whole registry.
   *
-  * Isolation trick: every profile entry is a session-level
-  * `spark.sql.*` conf, so a `newSession()` off the shared context
-  * carries the profile without a second JVM; the determinism protocol
-  * (exact integers, shared float trees) makes result equality
-  * BIT-equality, compared as row multisets (presentation ORDER BY
-  * ties may legally permute across partition widths).
+  * Every profile entry is a session-level `spark.sql.*` conf, so a
+  * `newSession()` off the shared context carries the profile without a
+  * second JVM; [[SameRows]] runs and compares the keys.
   */
 class ClusterProfileSpec extends SparkSpec {
 
-  private def profiled = {
+  test("profile integrity: session-settable entries, alias expansion, policy handoff") {
     val s2 = spark.newSession()
     ClusterProfile.entries.foreach { case (k, v) => s2.conf.set(k, v) }
-    s2
-  }
-
-  test("profile integrity: session-settable entries, alias expansion, policy handoff") {
-    val s2 = profiled
     ClusterProfile.entries.foreach { case (k, v) =>
       assert(s2.conf.get(k) == v, s"$k did not take as a session conf")
     }
@@ -42,18 +34,8 @@ class ClusterProfileSpec extends SparkSpec {
   }
 
   test("every graded query returns identical results under the cluster profile") {
-    val s2 = profiled
-    val diffs = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      // base side from the shared StaticResults execution pass (r15):
-      // QueryRegistrySpec's smoke needs the same 360 executions
-      val base = StaticResults.rows(spark, name)
-      val prof = fn(s2, StaticPlans.sfStatic).collect().map(_.toString).sorted
-      if (base.sameElements(prof)) None
-      else Some(s"$name (${base.length} vs ${prof.length} rows, first diff: " +
-        base.zip(prof).find { case (a, b) => a != b }
-          .map { case (a, b) => s"$a != $b" }
-          .getOrElse("row count") + ")")
-    }
+    val diffs = SameRows.failures(spark, ClusterProfile.entries,
+      "under the cluster profile", SparkEntry.defs.map(_.key).sorted)
     assert(diffs.isEmpty,
       s"results changed under the cluster profile:\n${diffs.mkString("\n")}")
   }

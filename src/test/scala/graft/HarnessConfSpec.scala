@@ -87,21 +87,6 @@ class HarnessConfSpec extends AnyFunSuite {
     assert(HarnessConf.ratioMedian(Nil, committed) == -1.0)
   }
 
-  test("parseWarmSchedule: dir[:passes] list, default pass count, loud failure") {
-    assert(HarnessConf.parseWarmSchedule("/a:3,/b:1") == Seq(("/a", 3), ("/b", 1)))
-    assert(HarnessConf.parseWarmSchedule("/a") == Seq(("/a", 1)))
-    assert(HarnessConf.parseWarmSchedule("") == Seq.empty)
-    val e = intercept[RuntimeException] { HarnessConf.parseWarmSchedule("/a:x") }
-    assert(e.getMessage.contains("/a:x"))
-    intercept[RuntimeException] { HarnessConf.parseWarmSchedule("/a:1:2") }
-    // every malformed-stage shape fails loudly rather than silently
-    // dropping or mis-counting a warm stage (r11 review): trailing
-    // colon (typo'd pass count), empty dir, oversized pass count
-    intercept[RuntimeException] { HarnessConf.parseWarmSchedule("/a:") }
-    intercept[RuntimeException] { HarnessConf.parseWarmSchedule(":3,/a:1") }
-    intercept[RuntimeException] { HarnessConf.parseWarmSchedule("/a:9999") }
-  }
-
   test("retimeSuspects: ratio + absolute-excess gates, worst-first cap, no-artifact empty") {
     val committed = Map("a" -> 1.0, "b" -> 1.0, "c" -> 0.05, "d" -> 2.0)
     // median 1.0: 'a' at 3.2x with 2.2s excess is the r13 burst shape

@@ -112,7 +112,7 @@ object StaticResults {
     * query key only. A caller handing a different session (e.g. a
     * conf-profiled newSession) would silently read base-session rows,
     * so that is a loud failure instead (ADVICE r15): profiled runs
-    * must execute their own side directly, as ClusterProfileSpec
+    * must execute their own side directly, as [[SameRows]]
     * does. Rows come in the order `collect()` returned them, so
     * order-sensitive assertions (a key's presentation sort) still
     * hold; each caller gets its own copy of the array. */
