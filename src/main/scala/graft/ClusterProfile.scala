@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The at-scale session profile (r13, VERDICT r12 item 5) — the
   * 100-TB playbook's prose (PLANS.md "Config posture") as one
   * machine-readable conf set, selectable by `SPARK_GRAFT_CONF=cluster`
@@ -67,10 +65,4 @@ object ClusterProfile {
 
   /** The profile as a SPARK_GRAFT_CONF-syntax string. */
   def conf: String = entries.map { case (k, v) => s"$k=$v" }.mkString(",")
-
-  /** Apply to a builder (driver mains) — same entries, one source. */
-  def apply(builder: SparkSession.Builder): SparkSession.Builder = {
-    entries.foreach { case (k, v) => builder.config(k, v) }
-    builder
-  }
 }

@@ -1453,10 +1453,15 @@ object Aggregates {
     * with the 25-row brand dim broadcast, ONE conditional-sum agg
     * keyed by brand (no self-join, no pivot exchange), 25-row
     * output. */
-  val reportPriceVolumeMix: QDef = q(
-    "report_price_volume_mix",
-    """WITH b AS (
-      |  SELECT p_brand AS brand,
+  /** 1995 vs 1996 lineitem revenue and volume per `keys`: rev0/rev1 in
+    * cents and q0/q1 in tenths of a unit, as BIGINT conditional sums in
+    * one pass over the year-filtered fact with the part dim broadcast.
+    * Prices carry two decimals and quantities are whole, so
+    * DECIMAL(12,2) × 100 and DECIMAL(12,4) × 10 are integers and the
+    * BIGINT casts drop nothing in either engine. */
+  private[ops] def priceYearPivotCte(keys: String, groupBy: String): String =
+    s"""b AS (
+      |  SELECT $keys,
       |    CAST(SUM(CASE WHEN year(l_shipdate) = 1995 THEN
       |      CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
       |      ELSE 0 END) AS BIGINT) AS rev0,
@@ -1471,7 +1476,29 @@ object Aggregates {
       |      ELSE 0 END) AS BIGINT) AS q1
       |  FROM lineitem JOIN part ON p_partkey = l_partkey
       |  WHERE year(l_shipdate) IN (1995, 1996)
-      |  GROUP BY 1)
+      |  GROUP BY $groupBy)""".stripMargin
+
+  /** Spark twin of `priceYearPivotCte`. */
+  private[ops] def priceYearPivot(s: SparkSession, d: String,
+      keys: org.apache.spark.sql.Column*): DataFrame = {
+    val yr = year(col("l_shipdate"))
+    val cents = (money(col("l_extendedprice")) * 100).cast(LongType)
+    val tenths = (qty(col("l_quantity")) * 10).cast(LongType)
+    Tables.lineitem(s, d)
+      .filter(yr.isin(1995, 1996))
+      .join(broadcast(Tables.part(s, d)
+        .select(col("p_partkey"), col("p_brand"))),
+        col("p_partkey") === col("l_partkey"))
+      .groupBy(keys: _*)
+      .agg(sum(when(yr === 1995, cents).otherwise(0L)).as("rev0"),
+        sum(when(yr === 1995, tenths).otherwise(0L)).as("q0"),
+        sum(when(yr === 1996, cents).otherwise(0L)).as("rev1"),
+        sum(when(yr === 1996, tenths).otherwise(0L)).as("q1"))
+  }
+
+  val reportPriceVolumeMix: QDef = q(
+    "report_price_volume_mix",
+    s"""WITH ${priceYearPivotCte("p_brand AS brand", "1")}
       |SELECT brand, rev0 AS rev0_cents, rev1 AS rev1_cents,
       |  rev1 - rev0 AS delta_cents,
       |  (CAST(q1 AS DOUBLE) - CAST(q0 AS DOUBLE))
@@ -1484,19 +1511,7 @@ object Aggregates {
       |      - CAST(rev0 AS DOUBLE) / CAST(q0 AS DOUBLE)) AS mix_effect
       |FROM b WHERE q0 > 0 AND q1 > 0
       |ORDER BY brand""") { (s, d) =>
-    val yr = year(col("l_shipdate"))
-    val cents = (money(col("l_extendedprice")) * 100).cast(LongType)
-    val tenths = (qty(col("l_quantity")) * 10).cast(LongType)
-    val b = Tables.lineitem(s, d)
-      .filter(yr.isin(1995, 1996))
-      .join(broadcast(Tables.part(s, d)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("p_partkey") === col("l_partkey"))
-      .groupBy(col("p_brand").as("brand"))
-      .agg(sum(when(yr === 1995, cents).otherwise(0L)).as("rev0"),
-        sum(when(yr === 1995, tenths).otherwise(0L)).as("q0"),
-        sum(when(yr === 1996, cents).otherwise(0L)).as("rev1"),
-        sum(when(yr === 1996, tenths).otherwise(0L)).as("q1"))
+    val b = priceYearPivot(s, d, col("p_brand").as("brand"))
     val (dq0, dq1) = (col("q0").cast(DoubleType), col("q1").cast(DoubleType))
     val (dr0, dr1) =
       (col("rev0").cast(DoubleType), col("rev1").cast(DoubleType))
@@ -1796,23 +1811,7 @@ object Aggregates {
     * 25-row dim broadcast, then a 25-group fold. */
   val reportPriceIndex: QDef = q(
     "report_price_index",
-    """WITH b AS (
-      |  SELECT p_brand AS brand, l_partkey,
-      |    CAST(SUM(CASE WHEN year(l_shipdate) = 1995 THEN
-      |      CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |      ELSE 0 END) AS BIGINT) AS rev0,
-      |    CAST(SUM(CASE WHEN year(l_shipdate) = 1995 THEN
-      |      CAST(CAST(l_quantity AS DECIMAL(12,4)) * 10 AS BIGINT)
-      |      ELSE 0 END) AS BIGINT) AS q0,
-      |    CAST(SUM(CASE WHEN year(l_shipdate) = 1996 THEN
-      |      CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |      ELSE 0 END) AS BIGINT) AS rev1,
-      |    CAST(SUM(CASE WHEN year(l_shipdate) = 1996 THEN
-      |      CAST(CAST(l_quantity AS DECIMAL(12,4)) * 10 AS BIGINT)
-      |      ELSE 0 END) AS BIGINT) AS q1
-      |  FROM lineitem JOIN part ON p_partkey = l_partkey
-      |  WHERE year(l_shipdate) IN (1995, 1996)
-      |  GROUP BY 1, 2),
+    s"""WITH ${priceYearPivotCte("p_brand AS brand, l_partkey", "1, 2")},
       |m AS (
       |  SELECT brand,
       |    CAST(COUNT(*) AS BIGINT) AS n_parts,
@@ -1830,19 +1829,8 @@ object Aggregates {
       |  CAST(floor(sqrt(CAST(laspeyres_ppm AS DOUBLE)
       |    * CAST(paasche_ppm AS DOUBLE)) + 0.5) AS BIGINT) AS fisher_ppm
       |FROM i ORDER BY brand""") { (s, d) =>
-    val yr = year(col("l_shipdate"))
-    val cents = (money(col("l_extendedprice")) * 100).cast(LongType)
-    val tenths = (qty(col("l_quantity")) * 10).cast(LongType)
-    val b = Tables.lineitem(s, d)
-      .filter(yr.isin(1995, 1996))
-      .join(broadcast(Tables.part(s, d)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("p_partkey") === col("l_partkey"))
-      .groupBy(col("p_brand").as("brand"), col("l_partkey"))
-      .agg(sum(when(yr === 1995, cents).otherwise(0L)).as("rev0"),
-        sum(when(yr === 1995, tenths).otherwise(0L)).as("q0"),
-        sum(when(yr === 1996, cents).otherwise(0L)).as("rev1"),
-        sum(when(yr === 1996, tenths).otherwise(0L)).as("q1"))
+    val b = priceYearPivot(s, d, col("p_brand").as("brand"),
+      col("l_partkey"))
     val m = b.filter(col("q0") > 0 && col("q1") > 0)
       .groupBy(col("brand"))
       .agg(count(lit(1)).as("n_parts"),

@@ -324,6 +324,36 @@ object ClusterOps {
       .orderBy(col("node_kind"), col("node_key"))
   }
 
+  /** The part co-purchase graph: `e` holds the distinct oriented
+    * (a < b) pairs of parts on the same order among 1996 shipments (the
+    * date filter pushes to the scan and bounds the graph). */
+  private[ops] val coPartCtes: String =
+    """li AS (
+      |  SELECT l_orderkey, l_partkey FROM lineitem
+      |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'),
+      |e AS (
+      |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
+      |  FROM li x JOIN li y
+      |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey)""".stripMargin
+
+  /** Spark twin of `coPartCtes`'s `e`, persisted: it feeds the degree
+    * aggregate and every join leg (exchange reuse covers the
+    * self-joins). */
+  private[ops] def coPartEdges(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val li = Tables.lineitem(s, d)
+      .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast(TimestampType) &&
+        col("l_shipdate") < lit("1997-01-01 00:00:00").cast(TimestampType))
+      .select(col("l_orderkey"), col("l_partkey"))
+    li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
   /** Triangle count + global clustering coefficient (r12) — the
     * third classic graph kernel next to CC and PageRank, over the
     * part co-purchase graph (parts appearing on the same order,
@@ -339,14 +369,7 @@ object ClusterOps {
     * covers the self-joins). */
   val graphTriangleCount: QDef = q(
     "graph_triangle_count",
-    """WITH li AS (
-      |  SELECT l_orderkey, l_partkey FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'),
-      |e AS (
-      |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-      |  FROM li x JOIN li y
-      |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+    s"""WITH ${coPartCtes},
       |deg AS (
       |  SELECT node, CAST(count(*) AS BIGINT) AS dg
       |  FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
@@ -363,16 +386,7 @@ object ClusterOps {
       |    // CAST((SELECT SUM(dg * (dg - 1) // 2) FROM deg) AS BIGINT)
       |    AS clustering_ppm
       |FROM tri""") { (s, d) =>
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast(TimestampType) &&
-        col("l_shipdate") < lit("1997-01-01 00:00:00").cast(TimestampType))
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = coPartEdges(s, d)
     val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("dg"))
     val wedgeRow = deg.agg(count(lit(1)).as("n_nodes"),
@@ -1155,14 +1169,7 @@ object ClusterOps {
     * as the global kernel, one extra corner explode + node agg. */
   val graphLocalClustering: QDef = q(
     "graph_local_clustering",
-    """WITH li AS (
-      |  SELECT l_orderkey, l_partkey FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'),
-      |e AS (
-      |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-      |  FROM li x JOIN li y
-      |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+    s"""WITH ${coPartCtes},
       |deg AS (
       |  SELECT node, CAST(count(*) AS BIGINT) AS degree
       |  FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
@@ -1183,17 +1190,7 @@ object ClusterOps {
       |      // (degree * (degree - 1)) AS BIGINT) END AS lcc_ppm
       |FROM deg LEFT JOIN nt ON nt.node = deg.node
       |ORDER BY part_key""") { (s, d) =>
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >=
-          lit("1996-01-01 00:00:00").cast(TimestampType) &&
-        col("l_shipdate") < lit("1997-01-01 00:00:00").cast(TimestampType))
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = coPartEdges(s, d)
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))

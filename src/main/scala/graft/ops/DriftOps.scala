@@ -525,9 +525,12 @@ object DriftOps {
     * carry distinct-value partial counts only. */
   import org.apache.spark.sql.expressions.Window
 
-  val statsKsTest: QDef = q(
-    "stats_ks_test",
-    """WITH c AS (
+  /** 1995 vs 1996 order-price cohorts: per distinct price `v` (exact
+    * cents — o_totalprice has two decimals, so DECIMAL(12,2) × 100 is
+    * an integer) the cohort counts `ca`/`cb`, and in `tot` the cohort
+    * sizes `na`/`nb`. All BIGINT, so both engines agree exactly. */
+  private[ops] val cohortPriceCtes: String =
+    """c AS (
       |  SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
       |    CAST(SUM(CASE WHEN year(o_orderdate) = 1995 THEN 1 ELSE 0 END)
       |      AS BIGINT) AS ca,
@@ -537,7 +540,22 @@ object DriftOps {
       |  WHERE year(o_orderdate) IN (1995, 1996)
       |  GROUP BY 1),
       |tot AS (SELECT CAST(SUM(ca) AS BIGINT) AS na,
-      |  CAST(SUM(cb) AS BIGINT) AS nb FROM c),
+      |  CAST(SUM(cb) AS BIGINT) AS nb FROM c)""".stripMargin
+
+  /** Spark twin of `cohortPriceCtes`'s `c`; callers derive `tot`. */
+  private[ops] def cohortPriceCounts(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.orders(s, d)
+      .filter(year(col("o_orderdate")).isin(1995, 1996))
+      .select((money(col("o_totalprice")) * 100).cast(LongType).as("v"),
+        when(year(col("o_orderdate")) === 1995, 1L).otherwise(0L).as("a"),
+        when(year(col("o_orderdate")) === 1996, 1L).otherwise(0L).as("b"))
+      .groupBy(col("v"))
+      .agg(sum(col("a")).as("ca"), sum(col("b")).as("cb"))
+
+  val statsKsTest: QDef = q(
+    "stats_ks_test",
+    s"""WITH ${cohortPriceCtes},
       |cum AS (
       |  SELECT v,
       |    CAST(SUM(ca) OVER (ORDER BY v) AS BIGINT) AS cum_a,
@@ -551,13 +569,7 @@ object DriftOps {
       |  CAST((SELECT MIN(v) FROM g WHERE gap = d_num) AS BIGINT) AS at_cents,
       |  CAST(d_num * 1000000 // (na * nb) AS BIGINT) AS ks_d_ppm
       |FROM tot CROSS JOIN mx""") { (s, d) =>
-    val c = Tables.orders(s, d)
-      .filter(year(col("o_orderdate")).isin(1995, 1996))
-      .select((money(col("o_totalprice")) * 100).cast(LongType).as("v"),
-        when(year(col("o_orderdate")) === 1995, 1L).otherwise(0L).as("a"),
-        when(year(col("o_orderdate")) === 1996, 1L).otherwise(0L).as("b"))
-      .groupBy(col("v"))
-      .agg(sum(col("a")).as("ca"), sum(col("b")).as("cb"))
+    val c = cohortPriceCounts(s, d)
       .withColumn("bkt", expr("v div 1000000"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = c.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
@@ -633,17 +645,7 @@ object DriftOps {
     * (na,nb ≤ ~2·10⁶ cohorts); beyond that, divide na·nb first. */
   val statsMannWhitneyU: QDef = q(
     "stats_mannwhitney_u",
-    """WITH c AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-      |    CAST(SUM(CASE WHEN year(o_orderdate) = 1995 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS ca,
-      |    CAST(SUM(CASE WHEN year(o_orderdate) = 1996 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS cb
-      |  FROM orders
-      |  WHERE year(o_orderdate) IN (1995, 1996)
-      |  GROUP BY 1),
-      |tot AS (SELECT CAST(SUM(ca) AS BIGINT) AS na,
-      |  CAST(SUM(cb) AS BIGINT) AS nb FROM c),
+    s"""WITH ${cohortPriceCtes},
       |cum AS (
       |  SELECT v, ca, ca + cb AS cnt,
       |    CAST(COALESCE(SUM(ca + cb) OVER (ORDER BY v
@@ -657,13 +659,7 @@ object DriftOps {
       |  CAST((r2a - na * (na + 1)) * 1000000 // (2 * na * nb) AS BIGINT)
       |    AS auc_ppm
       |FROM tot CROSS JOIN r""") { (s, d) =>
-    val c = Tables.orders(s, d)
-      .filter(year(col("o_orderdate")).isin(1995, 1996))
-      .select((money(col("o_totalprice")) * 100).cast(LongType).as("v"),
-        when(year(col("o_orderdate")) === 1995, 1L).otherwise(0L).as("a"),
-        when(year(col("o_orderdate")) === 1996, 1L).otherwise(0L).as("b"))
-      .groupBy(col("v"))
-      .agg(sum(col("a")).as("ca"), sum(col("b")).as("cb"))
+    val c = cohortPriceCounts(s, d)
       .withColumn("cnt", col("ca") + col("cb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = c.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
@@ -1140,30 +1136,16 @@ object DriftOps {
       .orderBy(col("doc"))
   }
 
-  /** One-way ANOVA (r15) — the omnibus "do the group means differ"
-    * test the stats family lacked (chi²/KS/U cover categorical and
-    * two-sample shapes; ANOVA covers k-group means): value cents by
-    * event type. Everything up to the final two ratios is exact:
-    * per-group (n, Σx, Σx²) in BIGINT, SSW = Σ_g (n_g·Q_g − S_g²)/n_g
-    * and SSB = Σ_g S_g²/n_g − T²/n graded in per-term FLOOR-milli
-    * (every term nonnegative — Cauchy-Schwarz — so `div` ≡ `//`; the
-    * one subtraction is clamped at 0 with greatest() in BOTH engines
-    * since flooring can push an SSB≈0 a few milli negative). The big
-    * products — INCLUDING the per-row square x·x (ADVICE r15) — ride
-    * DECIMAL(38)/HUGEINT (the stats-family fold) and F/η² come
-    * out in floor-ppm. One group agg + one k-row fold. */
-  val statsAnovaF: QDef = q(
-    "stats_anova_f",
-    """WITH g AS (
-      |  SELECT event_type,
-      |    CAST(COUNT(*) AS BIGINT) AS ng,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-      |      AS BIGINT) AS sg,
-      |    SUM(CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |          AS HUGEINT)
-      |        * CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS qg
-      |  FROM events GROUP BY event_type),
-      |f AS (
+  /** The one-way ANOVA fold over per-group sums `g` (ng, sg = Σz,
+    * qg = Σz²): k, n, SSW and SSB in per-term floor-milli, and F in
+    * floor-ppm. Every summed term is nonnegative (Cauchy–Schwarz), so
+    * `div` ≡ `//`; the one subtraction is clamped at 0 with greatest()
+    * in both engines, since flooring can push an SSB≈0 a few milli
+    * negative. The products ride DECIMAL(38)/HUGEINT, so nothing
+    * overflows. Ends inside the final SELECT: callers append columns
+    * and `FROM f`. */
+  private[ops] val anovaFSql: String =
+    """f AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS k,
       |    CAST(SUM(ng) AS BIGINT) AS n,
       |    CAST(SUM(sg) AS BIGINT) AS t,
@@ -1178,7 +1160,45 @@ object DriftOps {
       |  CAST(CAST(greatest(sb_milli - CAST(CAST(t AS HUGEINT) * t * 1000
       |        // n AS BIGINT), 0) AS HUGEINT)
       |      * (n - k) * 1000000 // (CAST(ssw_milli AS HUGEINT) * (k - 1))
-      |    AS BIGINT) AS f_ppm,
+      |    AS BIGINT) AS f_ppm""".stripMargin
+
+  /** Spark twin of `anovaFSql`; `extra` columns follow f_ppm. */
+  private[ops] def anovaF(g: org.apache.spark.sql.DataFrame,
+      extra: Column*): org.apache.spark.sql.DataFrame =
+    g.agg(
+      count(lit(1)).as("k"),
+      sum(col("ng")).as("n"),
+      sum(col("sg")).as("t"),
+      sum(expr("(CAST(ng AS DECIMAL(38,0)) * qg - CAST(sg AS DECIMAL(38,0))" +
+        " * sg) * 1000 div ng")).cast(LongType).as("ssw_milli"),
+      sum(expr("CAST(sg AS DECIMAL(38,0)) * sg * 1000 div ng"))
+        .cast(LongType).as("sb_milli"))
+      .select(col("k"), col("n"), col("ssw_milli"),
+        expr("greatest(sb_milli - CAST(CAST(t AS DECIMAL(38,0)) * t * 1000" +
+          " div n AS BIGINT), 0)").as("ssb_milli"))
+      .select(Seq(col("k"), col("n"), col("ssw_milli"), col("ssb_milli"),
+        expr("CAST(CAST(ssb_milli AS DECIMAL(38,0)) * (n - k) * 1000000" +
+          " div (CAST(ssw_milli AS DECIMAL(38,0)) * (k - 1)) AS BIGINT)")
+          .as("f_ppm")) ++ extra: _*)
+
+  /** One-way ANOVA (r15) — the omnibus "do the group means differ"
+    * test the stats family lacked (chi²/KS/U cover categorical and
+    * two-sample shapes; ANOVA covers k-group means): value cents by
+    * event type. Per-group (n, Σx, Σx²) with the per-row square x·x
+    * in DECIMAL(38)/HUGEINT (ADVICE r15), then the `anovaF` fold, with
+    * η² also in floor-ppm. One group agg + one k-row fold. */
+  val statsAnovaF: QDef = q(
+    "stats_anova_f",
+    s"""WITH g AS (
+      |  SELECT event_type,
+      |    CAST(COUNT(*) AS BIGINT) AS ng,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
+      |      AS BIGINT) AS sg,
+      |    SUM(CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
+      |          AS HUGEINT)
+      |        * CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS qg
+      |  FROM events GROUP BY event_type),
+      |${anovaFSql},
       |  CAST(CAST(greatest(sb_milli - CAST(CAST(t AS HUGEINT) * t * 1000
       |        // n AS BIGINT), 0) AS HUGEINT) * 1000000
       |      // (greatest(sb_milli - CAST(CAST(t AS HUGEINT) * t * 1000
@@ -1194,23 +1214,9 @@ object DriftOps {
         // group-level products (ADVICE r15): bare BIGINT·BIGINT
         // overflows above ~3.0e9 cents per value
         sum(expr(s"CAST($cents AS DECIMAL(38,0)) * $cents")).as("qg"))
-    val f = g.agg(
-      count(lit(1)).as("k"),
-      sum(col("ng")).as("n"),
-      sum(col("sg")).as("t"),
-      sum(expr("(CAST(ng AS DECIMAL(38,0)) * qg - CAST(sg AS DECIMAL(38,0))" +
-        " * sg) * 1000 div ng")).cast(LongType).as("ssw_milli"),
-      sum(expr("CAST(sg AS DECIMAL(38,0)) * sg * 1000 div ng"))
-        .cast(LongType).as("sb_milli"))
-    f.select(col("k"), col("n"), col("ssw_milli"),
-        expr("greatest(sb_milli - CAST(CAST(t AS DECIMAL(38,0)) * t * 1000" +
-          " div n AS BIGINT), 0)").as("ssb_milli"))
-      .select(col("k"), col("n"), col("ssw_milli"), col("ssb_milli"),
-        expr("CAST(CAST(ssb_milli AS DECIMAL(38,0)) * (n - k) * 1000000" +
-          " div (CAST(ssw_milli AS DECIMAL(38,0)) * (k - 1)) AS BIGINT)")
-          .as("f_ppm"),
-        expr("CAST(CAST(ssb_milli AS DECIMAL(38,0)) * 1000000" +
-          " div (ssb_milli + ssw_milli) AS BIGINT)").as("eta2_ppm"))
+    anovaF(g,
+      expr("CAST(CAST(ssb_milli AS DECIMAL(38,0)) * 1000000" +
+        " div (ssb_milli + ssw_milli) AS BIGINT)").as("eta2_ppm"))
   }
 
   /** Capacity-backlog ledger (r15d) — the queueing simulation an ops
@@ -1312,12 +1318,11 @@ object DriftOps {
     * assumption even holds): the same F statistic computed over
     * z = |x − median_g|, with the group median rank-selected exactly
     * (lower median, the `agg_quantiles_exact` convention) so z stays
-    * pure BIGINT. Identical DECIMAL(38)/HUGEINT fold as the ANOVA
-    * key; one extra group-partitioned rank window to select
-    * medians. */
+    * pure BIGINT, then the `anovaF` fold; one extra
+    * group-partitioned rank window to select medians. */
   val statsLeveneBf: QDef = q(
     "stats_levene_bf",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT event_type, event_id,
       |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
       |  FROM events),
@@ -1339,22 +1344,7 @@ object DriftOps {
       |    CAST(SUM(z) AS BIGINT) AS sg,
       |    SUM(CAST(z AS HUGEINT) * z) AS qg
       |  FROM z GROUP BY event_type),
-      |f AS (
-      |  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-      |    CAST(SUM(ng) AS BIGINT) AS n,
-      |    CAST(SUM(sg) AS BIGINT) AS t,
-      |    CAST(SUM((CAST(ng AS HUGEINT) * qg - CAST(sg AS HUGEINT) * sg)
-      |      * 1000 // ng) AS BIGINT) AS ssw_milli,
-      |    CAST(SUM(CAST(sg AS HUGEINT) * sg * 1000 // ng) AS BIGINT)
-      |      AS sb_milli
-      |  FROM g)
-      |SELECT k, n, ssw_milli,
-      |  greatest(sb_milli - CAST(CAST(t AS HUGEINT) * t * 1000 // n
-      |    AS BIGINT), 0) AS ssb_milli,
-      |  CAST(CAST(greatest(sb_milli - CAST(CAST(t AS HUGEINT) * t * 1000
-      |        // n AS BIGINT), 0) AS HUGEINT)
-      |      * (n - k) * 1000000 // (CAST(ssw_milli AS HUGEINT) * (k - 1))
-      |    AS BIGINT) AS f_ppm
+      |${anovaFSql}
       |FROM f""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val e = Tables.events(s, d)
@@ -1376,41 +1366,15 @@ object DriftOps {
         // per-row square in DECIMAL(38) — same any-scale posture as
         // the ANOVA key's qg (ADVICE r15)
         sum(expr("CAST(z AS DECIMAL(38,0)) * z")).as("qg"))
-    val f = g.agg(
-      count(lit(1)).as("k"),
-      sum(col("ng")).as("n"),
-      sum(col("sg")).as("t"),
-      sum(expr("(CAST(ng AS DECIMAL(38,0)) * qg - CAST(sg AS DECIMAL(38,0))" +
-        " * sg) * 1000 div ng")).cast(LongType).as("ssw_milli"),
-      sum(expr("CAST(sg AS DECIMAL(38,0)) * sg * 1000 div ng"))
-        .cast(LongType).as("sb_milli"))
-    f.select(col("k"), col("n"), col("ssw_milli"),
-        expr("greatest(sb_milli - CAST(CAST(t AS DECIMAL(38,0)) * t * 1000" +
-          " div n AS BIGINT), 0)").as("ssb_milli"))
-      .select(col("k"), col("n"), col("ssw_milli"), col("ssb_milli"),
-        expr("CAST(CAST(ssb_milli AS DECIMAL(38,0)) * (n - k) * 1000000" +
-          " div (CAST(ssw_milli AS DECIMAL(38,0)) * (k - 1)) AS BIGINT)")
-          .as("f_ppm"))
+    anovaF(g)
   }
 
-  /** Welch's two-sample t test (r16) — the unequal-variance mean
-    * comparison the stats family lacked (`stats_anova_f` is k-group
-    * pooled-variance; `stats_mannwhitney_u` is rank-based): purchase
-    * vs click value cents. Per-arm (n, Σx, Σx²) exact with the
-    * per-row square in DECIMAL(38)/HUGEINT, means and variances in
-    * floor-micro, t² = Δmean²/se² in floor-micro via the DECIMAL(38)
-    * fold (Δ can be negative; its square is not), Welch–Satterthwaite
-    * df in floor-milli with its per-arm quotients floored to milli
-    * BEFORE squaring (Spark's IntegralDivide returns BIGINT, so an
-    * intermediate quotient must stay sub-int64 — DuckDB's HUGEINT //
-    * is matched by flooring the same nonneg operands). `significant` uses the
-    * df→∞ 95% bound z² = 3.841459 (the `ab_srm_check` constant) —
-    * exact at event-table arm sizes. Operand bound: the 1e6 scaling
-    * caps |value| at ~$3·10²³ before the DECIMAL(38) products clip —
-    * any-scale for money. One 2-group agg + one 1-row fold. */
-  val statsWelchT: QDef = q(
-    "stats_welch_t",
-    """WITH e AS (
+  /** Purchase vs click value moments `w`: one row with per-arm n,
+    * s = Σx and q = Σx² over x = value in exact cents (two decimals,
+    * so DECIMAL(12,2) × 100 is an integer). The per-row square rides
+    * DECIMAL(38)/HUGEINT, so q is exact at any scale. */
+  private[ops] val armMomentCtes: String =
+    """e AS (
       |  SELECT event_type,
       |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
       |  FROM events WHERE event_type IN ('purchase', 'click')),
@@ -1427,7 +1391,44 @@ object DriftOps {
       |    MAX(CASE WHEN event_type = 'click' THEN n END) AS n2,
       |    MAX(CASE WHEN event_type = 'click' THEN s END) AS s2,
       |    MAX(CASE WHEN event_type = 'click' THEN q END) AS q2
-      |  FROM g),
+      |  FROM g)""".stripMargin
+
+  /** Spark twin of `armMomentCtes`'s `w`. */
+  private[ops] def armMoments(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val g = Tables.events(s, d)
+      .filter(col("event_type").isin("purchase", "click"))
+      .select(col("event_type"),
+        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("x"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
+        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("q"))
+    g.agg(
+      max(when(col("event_type") === "purchase", col("n"))).as("n1"),
+      max(when(col("event_type") === "purchase", col("s"))).as("s1"),
+      max(when(col("event_type") === "purchase", col("q"))).as("q1"),
+      max(when(col("event_type") === "click", col("n"))).as("n2"),
+      max(when(col("event_type") === "click", col("s"))).as("s2"),
+      max(when(col("event_type") === "click", col("q"))).as("q2"))
+  }
+
+  /** Welch's two-sample t test (r16) — the unequal-variance mean
+    * comparison the stats family lacked (`stats_anova_f` is k-group
+    * pooled-variance; `stats_mannwhitney_u` is rank-based): purchase
+    * vs click value cents over `armMoments`, means and variances in
+    * floor-micro, t² = Δmean²/se² in floor-micro via the DECIMAL(38)
+    * fold (Δ can be negative; its square is not), Welch–Satterthwaite
+    * df in floor-milli with its per-arm quotients floored to milli
+    * BEFORE squaring (Spark's IntegralDivide returns BIGINT, so an
+    * intermediate quotient must stay sub-int64 — DuckDB's HUGEINT //
+    * is matched by flooring the same nonneg operands). `significant` uses the
+    * df→∞ 95% bound z² = 3.841459 (the `ab_srm_check` constant) —
+    * exact at event-table arm sizes. Operand bound: the 1e6 scaling
+    * caps |value| at ~$3·10²³ before the DECIMAL(38) products clip —
+    * any-scale for money. One 2-group agg + one 1-row fold. */
+  val statsWelchT: QDef = q(
+    "stats_welch_t",
+    s"""WITH ${armMomentCtes},
       |m AS (
       |  SELECT n1, n2,
       |    CAST(s1 * 1000000 // n1 AS BIGINT) AS mean1_micro,
@@ -1463,20 +1464,7 @@ object DriftOps {
       |      AS BIGINT) END AS df_milli
       |  FROM t)
       |SELECT *, t2_micro > 3841459 AS significant FROM f""") { (s, d) =>
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("purchase", "click"))
-      .select(col("event_type"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("x"))
-    val g = e.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("q"))
-    val w = g.agg(
-      max(when(col("event_type") === "purchase", col("n"))).as("n1"),
-      max(when(col("event_type") === "purchase", col("s"))).as("s1"),
-      max(when(col("event_type") === "purchase", col("q"))).as("q1"),
-      max(when(col("event_type") === "click", col("n"))).as("n2"),
-      max(when(col("event_type") === "click", col("s"))).as("s2"),
-      max(when(col("event_type") === "click", col("q"))).as("q2"))
+    val w = armMoments(s, d)
     val m = w.select(col("n1"), col("n2"),
       expr("CAST(s1 * 1000000 div n1 AS BIGINT)").as("mean1_micro"),
       expr("CAST(s2 * 1000000 div n2 AS BIGINT)").as("mean2_micro"),
@@ -1919,31 +1907,14 @@ object DriftOps {
   /** Cohen's d effect size (r17) — the magnitude companion to
     * `stats_welch_t`'s significance (a 100 TB A/B readout needs both:
     * at scale everything is significant, only effect size decides):
-    * purchase vs click cents, pooled SD from the same exact
-    * (n, Σx, Σx²) sums, d = Δmean/s_pooled as the one float chain
+    * purchase vs click cents, pooled SD from the same `armMoments`
+    * sums, d = Δmean/s_pooled as the one float chain
     * (divisions + one sqrt, correctly rounded ⇒ cross-engine
     * bit-identical), ROUND(…,6), n ≤ 1 legs guarded NULL. One
     * 2-group agg + a 1-row fold. */
   val statsCohensD: QDef = q(
     "stats_cohens_d",
-    """WITH e AS (
-      |  SELECT event_type,
-      |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
-      |  FROM events WHERE event_type IN ('purchase', 'click')),
-      |g AS (
-      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-      |    CAST(SUM(x) AS BIGINT) AS s,
-      |    SUM(CAST(x AS HUGEINT) * x) AS q
-      |  FROM e GROUP BY event_type),
-      |w AS (
-      |  SELECT
-      |    MAX(CASE WHEN event_type = 'purchase' THEN n END) AS n1,
-      |    MAX(CASE WHEN event_type = 'purchase' THEN s END) AS s1,
-      |    MAX(CASE WHEN event_type = 'purchase' THEN q END) AS q1,
-      |    MAX(CASE WHEN event_type = 'click' THEN n END) AS n2,
-      |    MAX(CASE WHEN event_type = 'click' THEN s END) AS s2,
-      |    MAX(CASE WHEN event_type = 'click' THEN q END) AS q2
-      |  FROM g)
+    s"""WITH ${armMomentCtes}
       |SELECT n1, n2,
       |  CAST(s1 * 1000000 // n1 - s2 * 1000000 // n2 AS BIGINT)
       |    AS mean_diff_micro,
@@ -1956,20 +1927,7 @@ object DriftOps {
       |          - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
       |        / CAST(n1 + n2 - 2 AS DOUBLE)), 6) END AS cohens_d
       |FROM w""") { (s, d) =>
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("purchase", "click"))
-      .select(col("event_type"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("x"))
-    val g = e.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("q"))
-    val w = g.agg(
-      max(when(col("event_type") === "purchase", col("n"))).as("n1"),
-      max(when(col("event_type") === "purchase", col("s"))).as("s1"),
-      max(when(col("event_type") === "purchase", col("q"))).as("q1"),
-      max(when(col("event_type") === "click", col("n"))).as("n2"),
-      max(when(col("event_type") === "click", col("s"))).as("s2"),
-      max(when(col("event_type") === "click", col("q"))).as("q2"))
+    val w = armMoments(s, d)
     w.select(col("n1"), col("n2"),
       expr("CAST(s1 * 1000000 div n1 - s2 * 1000000 div n2 AS BIGINT)")
         .as("mean_diff_micro"),
@@ -2058,18 +2016,11 @@ object DriftOps {
     * (complete-agreement den=0 guarded NULL). Per-doc category
     * counts are row-local; the grade is one corpus fold — the
     * agreement audit a labeling pipeline publishes per batch. */
-  val statsFleissKappa: QDef = q(
-    "stats_fleiss_kappa",
-    """WITH t AS (
-      |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-      |  FROM documents),
-      |r AS (
-      |  SELECT
-      |    CASE WHEN ntok < 50 THEN 0 WHEN ntok < 150 THEN 1 ELSE 2 END AS r0,
-      |    CASE WHEN ntok < 60 THEN 0 WHEN ntok < 140 THEN 1 ELSE 2 END AS r1,
-      |    CASE WHEN ntok < 40 THEN 0 WHEN ntok < 160 THEN 1 ELSE 2 END AS r2
-      |  FROM t),
-      |n AS (
+  /** Per-document category counts `n` (n0, n1, n2) over three
+    * raters' categories r0..r2 in {0, 1, 2}; a NULL (missing) rating
+    * counts in no category. Small integers, exact in both engines. */
+  private[ops] val raterCountsCte: String =
+    """n AS (
       |  SELECT
       |    (CASE WHEN r0 = 0 THEN 1 ELSE 0 END)
       |      + (CASE WHEN r1 = 0 THEN 1 ELSE 0 END)
@@ -2080,7 +2031,29 @@ object DriftOps {
       |    (CASE WHEN r0 = 2 THEN 1 ELSE 0 END)
       |      + (CASE WHEN r1 = 2 THEN 1 ELSE 0 END)
       |      + (CASE WHEN r2 = 2 THEN 1 ELSE 0 END) AS n2
-      |  FROM r),
+      |  FROM r)""".stripMargin
+
+  /** Spark twin of `raterCountsCte` over the ratings `r`. */
+  private[ops] def raterCounts(r: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    def nj(j: Long): Column =
+      Seq("r0", "r1", "r2")
+        .map(c => when(col(c) === j, 1L).otherwise(0L)).reduce(_ + _)
+    r.select(nj(0).as("n0"), nj(1).as("n1"), nj(2).as("n2"))
+  }
+
+  val statsFleissKappa: QDef = q(
+    "stats_fleiss_kappa",
+    s"""WITH t AS (
+      |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
+      |  FROM documents),
+      |r AS (
+      |  SELECT
+      |    CASE WHEN ntok < 50 THEN 0 WHEN ntok < 150 THEN 1 ELSE 2 END AS r0,
+      |    CASE WHEN ntok < 60 THEN 0 WHEN ntok < 140 THEN 1 ELSE 2 END AS r1,
+      |    CASE WHEN ntok < 40 THEN 0 WHEN ntok < 160 THEN 1 ELSE 2 END AS r2
+      |  FROM t),
+      |${raterCountsCte},
       |f AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS nd,
       |    CAST(SUM(n0 * n0 + n1 * n1 + n2 * n2) AS BIGINT) AS s_sq,
@@ -2104,10 +2077,7 @@ object DriftOps {
     val r = Tables.documents(s, d).select(ntok.as("ntok"))
       .select(cat(50, 150).as("r0"), cat(60, 140).as("r1"),
         cat(40, 160).as("r2"))
-    def nj(j: Long): Column =
-      Seq("r0", "r1", "r2")
-        .map(c => when(col(c) === j, 1L).otherwise(0L)).reduce(_ + _)
-    val f = r.select(nj(0).as("n0"), nj(1).as("n1"), nj(2).as("n2"))
+    val f = raterCounts(r)
       .agg(count(lit(1)).as("nd"),
         sum(col("n0") * col("n0") + col("n1") * col("n1")
           + col("n2") * col("n2")).as("s_sq"),
@@ -2438,17 +2408,7 @@ object DriftOps {
     * All frames are day×type-sized. */
   val statsFriedmanTest: QDef = q(
     "stats_friedman_test",
-    """WITH dt AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(COUNT(*) AS BIGINT) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |days AS (SELECT DISTINCT day FROM dt),
-      |types AS (SELECT DISTINCT event_type FROM dt),
-      |cm AS (
-      |  SELECT d.day, t.event_type, COALESCE(dt.cnt, 0) AS cnt
-      |  FROM days d CROSS JOIN types t
-      |  LEFT JOIN dt ON dt.day = d.day AND dt.event_type = t.event_type),
+    s"""WITH ${EventAnalytics.dayTypeGridCtes("d.day, t.event_type")},
       |mid AS (
       |  SELECT a.day, a.event_type,
       |    CAST(2 * SUM(CASE WHEN b.cnt < a.cnt THEN 1 ELSE 0 END)
@@ -2469,19 +2429,7 @@ object DriftOps {
       |    - 3000000 * nb.n * (f.k + 1) > 9487729 AS significant
       |FROM rs CROSS JOIN nb CROSS JOIN f
       |ORDER BY rs.event_type""") { (s, d) =>
-    val dt = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val days = dt.select(col("day")).distinct()
-    val types = dt.select(col("event_type")).distinct()
-    val cm = days.crossJoin(broadcast(types))
-      .join(dt.select(col("day").as("j_day"),
-          col("event_type").as("j_type"), col("cnt")),
-        col("j_day") === col("day") && col("j_type") === col("event_type"),
-        "left")
-      .select(col("day"), col("event_type"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val (days, cm) = EventAnalytics.dayTypeGrid(s, d)
     val mid = cm.as("a")
       .join(cm.select(col("day").as("b_day"), col("cnt").as("b_cnt")),
         col("b_day") === col("a.day"))

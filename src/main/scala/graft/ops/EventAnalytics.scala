@@ -141,17 +141,13 @@ object EventAnalytics {
       .orderBy(col("user_id"), col("day"))
   }
 
-  /** Batch sessionization (gaps-and-islands): a new session starts
-    * when a user's inter-event gap exceeds 30 minutes. One window per
-    * user (lag → flag → running sum), then a per-session aggregate —
-    * the canonical two-pass shape; every stage shuffles on user_id
-    * only, so per-user work is bounded by that user's event count at
-    * any corpus size. Timestamps are second-truncated up front (D4)
-    * and carried as epoch seconds, so gap arithmetic is exact integer
-    * math in both engines. */
-  val sessionizeEvents: QDef = q(
-    "sessionize_events",
-    """WITH e AS (
+  /** Per event: epoch second `sec`, exact `v`, and `new_s` = 1 when
+    * the gap to the user's previous event (by sec, event_id) exceeds
+    * 1800 s or there is none. Timestamps are second-truncated up front
+    * (D4) and carried as epoch seconds, so the gap arithmetic is exact
+    * integer math in both engines. */
+  private[ops] val sessionGapCtes: String =
+    """e AS (
       |  SELECT user_id, event_id,
       |    date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
       |              date_trunc('second', CAST(ts AS TIMESTAMP))) AS sec,
@@ -161,7 +157,29 @@ object EventAnalytics {
       |  SELECT user_id, event_id, sec, v,
       |    CASE WHEN lag(sec) OVER w IS NULL
       |           OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)),
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id))""".stripMargin
+
+  /** Spark twin of `sessionGapCtes`'s `m`. */
+  private[ops] def sessionGaps(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
+    val e = Tables.events(s, d)
+      .select(col("user_id"), col("event_id"),
+        tsSec(col("ts")).cast(LongType).as("sec"),
+        money(col("value")).as("v"))
+    e.select(col("user_id"), col("event_id"), col("sec"), col("v"),
+      when(lag(col("sec"), 1).over(w).isNull ||
+        col("sec") - lag(col("sec"), 1).over(w) > 1800, 1).otherwise(0).as("new_s"))
+  }
+
+  /** Batch sessionization (gaps-and-islands): a new session starts
+    * when a user's inter-event gap exceeds 30 minutes. One window per
+    * user (lag → flag → running sum), then a per-session aggregate —
+    * the canonical two-pass shape; every stage shuffles on user_id
+    * only, so per-user work is bounded by that user's event count at
+    * any corpus size. */
+  val sessionizeEvents: QDef = q(
+    "sessionize_events",
+    s"""WITH ${sessionGapCtes},
       |s AS (
       |  SELECT user_id, sec, v,
       |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id
@@ -174,14 +192,7 @@ object EventAnalytics {
       |  CAST(SUM(v) AS DOUBLE) AS sum_value
       |FROM s GROUP BY user_id, sess_id
       |ORDER BY user_id, sess_id""") { (s, d) =>
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val e = Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        tsSec(col("ts")).cast(LongType).as("sec"),
-        money(col("value")).as("v"))
-    val flagged = e.select(col("user_id"), col("event_id"), col("sec"), col("v"),
-      when(lag(col("sec"), 1).over(w).isNull ||
-        col("sec") - lag(col("sec"), 1).over(w) > 1800, 1).otherwise(0).as("new_s"))
+    val flagged = sessionGaps(s, d)
     val sess = flagged.select(col("user_id"), col("sec"), col("v"),
       sum(col("new_s")).over(
         Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
@@ -305,17 +316,7 @@ object EventAnalytics {
     * Graded per event at sf0.01 (exact decimal running sums). */
   val winSessionRunning: QDef = q(
     "win_session_running",
-    """WITH e AS (
-      |  SELECT user_id, event_id,
-      |    date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
-      |              date_trunc('second', CAST(ts AS TIMESTAMP))) AS sec,
-      |    CAST(value AS DECIMAL(12,2)) AS v
-      |  FROM events),
-      |m AS (
-      |  SELECT user_id, event_id, sec, v,
-      |    CASE WHEN lag(sec) OVER w IS NULL
-      |           OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)),
+    s"""WITH ${sessionGapCtes},
       |s AS (
       |  SELECT user_id, event_id, sec, v,
       |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id
@@ -327,13 +328,7 @@ object EventAnalytics {
       |FROM s
       |ORDER BY user_id, sess_id, event_id""") { (s, d) =>
     val wTime = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val e = Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        tsSec(col("ts")).cast(LongType).as("sec"),
-        money(col("value")).as("v"))
-    val flagged = e.select(col("user_id"), col("event_id"), col("sec"), col("v"),
-      when(lag(col("sec"), 1).over(wTime).isNull ||
-        col("sec") - lag(col("sec"), 1).over(wTime) > 1800, 1).otherwise(0).as("new_s"))
+    val flagged = sessionGaps(s, d)
     val sess = flagged.select(col("user_id"), col("event_id"), col("sec"), col("v"),
       sum(col("new_s")).over(wTime
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("sess_id"))
@@ -518,6 +513,31 @@ object EventAnalytics {
       .limit(20)
   }
 
+  /** First-order transition counts over every user stream: `n` per
+    * (from_type, to_type) from one LEAD over the user window ordered by
+    * (ts, event_id), a total order, so both engines pair alike. The
+    * count shuffle is at most |types|² rows. */
+  private[ops] val transitionCountCtes: String =
+    """s AS (
+      |  SELECT event_type AS from_type,
+      |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+      |      AS to_type
+      |  FROM events),
+      |c AS (
+      |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
+      |  FROM s WHERE to_type IS NOT NULL GROUP BY from_type, to_type)""".stripMargin
+
+  /** Spark twin of `transitionCountCtes`'s `c`. */
+  private[ops] def transitionCounts(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    Tables.events(s, d)
+      .select(col("event_type").as("from_type"),
+        lead(col("event_type"), 1).over(w).as("to_type"))
+      .filter(col("to_type").isNotNull)
+      .groupBy(col("from_type"), col("to_type"))
+      .agg(count(lit(1)).as("n"))
+  }
+
   /** First-order Markov transition matrix (r12) — P(next event type |
     * current) across all user streams, probabilities as exact floor-
     * ppm of the per-from row total. `path_trigram_top` ranks raw
@@ -528,26 +548,13 @@ object EventAnalytics {
     * (25 here); the per-from marginal joins back as a broadcast. */
   val eventTransitionMatrix: QDef = q(
     "event_transition_matrix",
-    """WITH s AS (
-      |  SELECT event_type AS from_type,
-      |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      |      AS to_type
-      |  FROM events),
-      |c AS (
-      |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-      |  FROM s WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+    s"""WITH ${transitionCountCtes},
       |m AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS tot FROM c GROUP BY from_type)
       |SELECT c.from_type, c.to_type, c.n, m.tot,
       |  (c.n * 1000000) // m.tot AS p_ppm
       |FROM c JOIN m ON c.from_type = m.from_type
       |ORDER BY c.from_type, c.to_type""") { (s, d) =>
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val c = Tables.events(s, d)
-      .select(col("event_type").as("from_type"),
-        lead(col("event_type"), 1).over(w).as("to_type"))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
+    val c = transitionCounts(s, d)
     val m = c.groupBy(col("from_type")).agg(sum(col("n")).as("tot"))
       .withColumnRenamed("from_type", "m_from")
     c.join(broadcast(m), col("from_type") === col("m_from"))
@@ -669,17 +676,124 @@ object EventAnalytics {
       .orderBy(col("user_id"), col("sess_id"))
   }
 
+  /** Daily per-type totals `dtot` (event_type, day, cents): the base
+    * of the daily time-series keys here and in `Windows`. Exact in both
+    * engines: the fixtures' `value` carries at most two decimals, so
+    * CAST(value AS DECIMAL(12,4)) is exact, × 100 is an integer, the
+    * BIGINT cast drops no digit, and the per-day sum is a BIGINT sum.
+    * Its size is types × days, never the event count. */
+  private[ops] val dailyCentsCte: String =
+    """dtot AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
+      |      AS BIGINT) AS cents
+      |  FROM events GROUP BY event_type, day)""".stripMargin
+
+  /** Spark twin of `dailyCentsCte`. */
+  private[ops] def dailyCents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"),
+        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(sum(col("c")).cast(LongType).as("cents"))
+
+  /** `dailyCents` spelled with the day as a grouping expression: the
+    * same rows, but a different executed plan (the aggregate projects
+    * its own grouping key), kept for the keys whose plans it built. */
+  private[ops] def dailyCentsGrouped(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"))
+      .agg(sum(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
+        .cast(LongType).as("cents"))
+
+  /** Daily per-type event counts on the full (day × type) grid: `dt`
+    * holds the observed (event_type, day, cnt), `cm` adds a 0 for every
+    * type absent on a day, so per-type statistics see every day.
+    * `cmCols` is the grid's key list, from `d.day` and `t.event_type`. */
+  private[ops] def dayTypeGridCtes(cmCols: String): String =
+    s"""dt AS (
+      |  SELECT event_type,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    CAST(COUNT(*) AS BIGINT) AS cnt
+      |  FROM events GROUP BY 1, 2),
+      |days AS (SELECT DISTINCT day FROM dt),
+      |types AS (SELECT DISTINCT event_type FROM dt),
+      |cm AS (
+      |  SELECT $cmCols, COALESCE(dt.cnt, 0) AS cnt
+      |  FROM days d CROSS JOIN types t
+      |  LEFT JOIN dt ON dt.day = d.day AND dt.event_type = t.event_type)""".stripMargin
+
+  /** Spark twin of `dayTypeGridCtes`: (days, cm) with cm = (day,
+    * event_type, cnt). */
+  private[ops] def dayTypeGrid(s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val dt = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast(DateType).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val days = dt.select(col("day")).distinct()
+    val types = dt.select(col("event_type")).distinct()
+    (days, days.crossJoin(broadcast(types))
+      .join(dt.select(col("day").as("j_day"),
+          col("event_type").as("j_type"), col("cnt")),
+        col("j_day") === col("day") && col("j_type") === col("event_type"),
+        "left")
+      .select(col("day"), col("event_type"),
+        coalesce(col("cnt"), lit(0L)).as("cnt")))
+  }
+
+  /** Lag-pair co-moments over `dtot`: for each (event_type, lag) in
+    * the `lg` table, the pairs (x_d, y_{d+lag}) on the calendar-day grid
+    * (a date join, so gap days never shift a pair) and their count `n`
+    * plus sx, sy, sxx, syy, sxy. The sums are DECIMAL(38,0) sums of
+    * integer cents, exact in both engines, so the Pearson ratio built
+    * on them is one float tree over identical operands. */
+  private[ops] def lagMomentCtes(n: String): String =
+    s"""p AS (
+      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
+      |  FROM dtot a CROSS JOIN lg
+      |  JOIN dtot b ON b.event_type = a.event_type
+      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
+      |s AS (
+      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS $n,
+      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
+      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
+      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
+      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
+      |  FROM p GROUP BY event_type, lag)""".stripMargin
+
+  /** Spark twin of `lagMomentCtes` over `dailyCents` and the lags. */
+  private[ops] def lagMoments(dtot: DataFrame, lags: Seq[Int],
+      n: String): DataFrame = {
+    import dtot.sparkSession.implicits._
+    val dec = DecimalType(38, 0)
+    dtot.as("a").crossJoin(broadcast(lags.toDF("lag")))
+      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
+          col("cents").as("y")),
+        col("bt") === col("a.event_type") &&
+          col("bd") === date_add(col("a.day"), col("lag")))
+      .select(col("a.event_type").as("event_type"), col("lag"),
+        col("a.cents").as("x"), col("y"))
+      .groupBy(col("event_type"), col("lag"))
+      .agg(count(lit(1)).as(n),
+        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
+        sum(col("x").cast(dec) * col("x")).as("sxx"),
+        sum(col("y").cast(dec) * col("y")).as("syy"),
+        sum(col("x").cast(dec) * col("y")).as("sxy"))
+  }
+
   /** Lag-1 autocorrelation of the daily value series (r12) — the
     * seasonality/persistence probe a metrics pipeline computes per
-    * series ("is today's volume predicted by yesterday's?"). Two-
-    * stage shape: the fact collapses to (series, day) totals first —
-    * one hash agg, output cardinality = series × days, NEVER the
-    * event count — then lag-pairing is a per-series window over that
-    * tiny table and the Pearson machinery is `agg_corr_explicit`'s
+    * series ("is today's volume predicted by yesterday's?"), over
+    * `dailyCents`: lag-pairing is a per-series window over that tiny
+    * table and the Pearson machinery is `agg_corr_explicit`'s
     * exact-partial discipline (DECIMAL(38,0) sums of integer cents,
     * doubles only in the final one-shot formula — both engines divide
-    * identical operands). At 100 TB the window runs over series-count
-    * × ~days rows regardless of input size. */
+    * identical operands). */
   val tsAutocorrDaily: QDef = q(
     "ts_autocorr_daily",
     """WITH dtot AS (
@@ -708,12 +822,7 @@ object EventAnalytics {
       |  (n * dxy - dx * dy)
       |    / (sqrt(n * dxx - dx * dx) * sqrt(n * dyy - dy * dy)) AS autocorr_lag1
       |FROM t ORDER BY event_type""") { (s, d) =>
-    val dtot = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"),
-        (qty(col("value")) * 100).cast(LongType).as("c"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val dtot = dailyCents(s, d)
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val p = dtot
       .select(col("event_type"), col("cents").as("x"),
@@ -798,10 +907,8 @@ object EventAnalytics {
     * value 7 days earlier and report the error profile per series.
     * The lag is a DATE-equi self-join (day = day − 7), NOT a 7-row
     * window lag — gap days would silently shift a row-lag, the date
-    * join stays correct on sparse series. Daily totals collapse the
-    * fact table first (`ts_autocorr_daily`'s discipline), so the
-    * self-join is day-cardinality-sized; at 100 TB both sides reuse
-    * the same (type, day) layout the agg produced. All-integer cents
+    * join stays correct on sparse series. Over `dailyCents`, so the
+    * self-join is day-cardinality-sized. All-integer cents
     * outputs; the signed bias total is NOT divided (sign-safe rule —
     * only the non-negative MAE numerator meets floor division). */
   val tsSeasonalNaiveError: QDef = q(
@@ -822,12 +929,7 @@ object EventAnalytics {
       |  CAST(SUM(ABS(actual - forecast)) // COUNT(*) AS BIGINT) AS mae_cents,
       |  CAST(SUM(actual - forecast) AS BIGINT) AS bias_cents
       |FROM p GROUP BY event_type ORDER BY event_type""") { (s, d) =>
-    val dtot = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"),
-        (qty(col("value")) * 100).cast(LongType).as("c"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val dtot = dailyCents(s, d)
     val a = dtot.select(col("event_type"), col("day"),
       col("cents").as("actual"))
     val b = dtot.select(col("event_type").as("et_b"),
@@ -1293,6 +1395,29 @@ object EventAnalytics {
       .orderBy(col("threshold_days"))
   }
 
+  /** Daily per-type value totals on a day-number axis: `day_no` =
+    * days since 2024-01-01 (small integers, so window frames over it
+    * are RANGE frames on the calendar) and `y` = the day's exact cents
+    * (two-decimal values, so the DECIMAL(12,2) sum × 100 is an integer).
+    * Its size is types × days. */
+  private[ops] val dayNoCentsCte: String =
+    """daily AS (
+      |  SELECT event_type,
+      |    date_diff('day', DATE '2024-01-01',
+      |              CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)) AS day_no,
+      |    CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT) AS y
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Spark twin of `dayNoCentsCte`. */
+  private[ops] def dayNoCents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("event_type"),
+        datediff(date_trunc("day", col("ts")).cast(DateType),
+          lit("2024-01-01").cast(DateType)).as("day_no"),
+        money(col("value")).as("v0"))
+      .groupBy(col("event_type"), col("day_no"))
+      .agg((sum(col("v0")) * 100).cast(LongType).as("y"))
+
   /** Hampel outlier filter (r12h) — the ROBUST spike detector a
     * metrics pipeline runs where `anomaly_mad` (global MAD) would
     * drown local spikes in a trending series: per event type and
@@ -1309,12 +1434,7 @@ object EventAnalytics {
     * row-local on ≤7 longs — nothing scales with the fact table. */
   val tsHampelOutliers: QDef = q(
     "ts_hampel_outliers",
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    date_diff('day', DATE '2024-01-01',
-      |              CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)) AS day_no,
-      |    CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
+    s"""WITH ${dayNoCentsCte},
       |w AS (
       |  SELECT event_type, day_no, y,
       |    list(y) OVER (PARTITION BY event_type ORDER BY day_no
@@ -1333,13 +1453,7 @@ object EventAnalytics {
       |  med AS med_cents, mad AS mad_cents,
       |  abs(y - med) > 3 * mad AS is_outlier
       |FROM md ORDER BY event_type, day_no""") { (s, d) =>
-    val daily = Tables.events(s, d)
-      .select(col("event_type"),
-        datediff(date_trunc("day", col("ts")).cast(DateType),
-          lit("2024-01-01").cast(DateType)).as("day_no"),
-        money(col("value")).as("v0"))
-      .groupBy(col("event_type"), col("day_no"))
-      .agg((sum(col("v0")) * 100).cast(LongType).as("y"))
+    val daily = dayNoCents(s, d)
     val win = Window.partitionBy(col("event_type")).orderBy(col("day_no"))
       .rangeBetween(-3, 3)
     daily.withColumn("arr", collect_list(col("y")).over(win))
@@ -2376,14 +2490,7 @@ object EventAnalytics {
     * k-sized. */
   val eventsMarkovStationary: QDef = q(
     "events_markov_stationary",
-    """WITH s AS (
-      |  SELECT event_type AS from_type,
-      |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      |      AS to_type
-      |  FROM events),
-      |c AS (
-      |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-      |  FROM s WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+    s"""WITH ${transitionCountCtes},
       |m AS (
       |  SELECT from_type, CAST(SUM(n) AS BIGINT) AS tot
       |  FROM c GROUP BY from_type),
@@ -2414,15 +2521,7 @@ object EventAnalytics {
       |LEFT JOIN pi2 ON pi2.ty = t0.ty
       |LEFT JOIN pi3 ON pi3.ty = t0.ty
       |ORDER BY event_type""") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val c = Tables.events(s, d)
-      .select(col("event_type").as("from_type"),
-        lead(col("event_type"), 1).over(w).as("to_type"))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
+    val c = transitionCounts(s, d)
     val m = c.groupBy(col("from_type").as("m_from"))
       .agg(sum(col("n")).as("tot"))
     val p = c.join(broadcast(m), col("from_type") === col("m_from"))
@@ -2458,35 +2557,15 @@ object EventAnalytics {
   /** Multi-lag autocorrelation table (r16) — `ts_autocorr_daily`
     * generalized from lag 1 to the full weekly ACF (lags 1..7), the
     * table a seasonality analyst actually reads (a lag-7 spike = the
-    * weekly cycle `ts_seasonal_naive_error` exploits). Daily totals
-    * are aggregated ONCE (day-cardinality table), then one broadcast
-    * self-join per the 7-row lag table pairs (x_d, x_{d+lag});
-    * integer sums per (type, lag), the final Pearson ratio spelled as
-    * the one-float-op-per-operand chain the lag-1 key already grades
-    * (exact integer inputs → identical doubles in both engines). */
+    * weekly cycle `ts_seasonal_naive_error` exploits): `lagMoments`
+    * over the 7-row lag table, then the Pearson ratio spelled as the
+    * one-float-op-per-operand chain the lag-1 key already grades. */
   val tsAcfLags: QDef = q(
     "ts_acf_lags",
-    """WITH dtot AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM events GROUP BY event_type, day),
+    s"""WITH ${dailyCentsCte},
       |lg AS (SELECT * FROM (VALUES (1), (2), (3), (4), (5), (6), (7))
       |  t(lag)),
-      |p AS (
-      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
-      |  FROM dtot a CROSS JOIN lg
-      |  JOIN dtot b ON b.event_type = a.event_type
-      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
-      |s AS (
-      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS n,
-      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
-      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
-      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
-      |  FROM p GROUP BY event_type, lag),
+      |${lagMomentCtes("n")},
       |t AS (
       |  SELECT event_type, lag, n, CAST(sx AS DOUBLE) AS dx,
       |    CAST(sy AS DOUBLE) AS dy, CAST(sxx AS DOUBLE) AS dxx,
@@ -2496,28 +2575,7 @@ object EventAnalytics {
       |  (n * dxy - dx * dy)
       |    / (sqrt(n * dxx - dx * dx) * sqrt(n * dyy - dy * dy)) AS acf
       |FROM t ORDER BY event_type, lag""") { (s, d) =>
-    import s.implicits._
-    val dtot = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"),
-        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("c")).cast(LongType).as("cents"))
-    val lg = (1 to 7).toDF("lag")
-    val p = dtot.as("a").crossJoin(broadcast(lg))
-      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
-          col("cents").as("y")),
-        col("bt") === col("a.event_type") &&
-          col("bd") === expr("date_add(a.day, lag)"))
-      .select(col("a.event_type").as("event_type"), col("lag"),
-        col("a.cents").as("x"), col("y"))
-    val st = p.groupBy(col("event_type"), col("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(expr("CAST(x AS DECIMAL(38,0))")).as("sx"),
-        sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
-        sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"))
+    val st = lagMoments(dailyCents(s, d), 1 to 7, "n")
     st.select(col("event_type"), col("lag").cast(LongType).as("lag"),
         col("n"),
         expr("(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)"
@@ -2833,33 +2891,14 @@ object EventAnalytics {
     * φ₂₂ = (ρ₂ − ρ₁²)/(1 − ρ₁²) — the lag-2 correlation AFTER
     * removing what lag 1 already explains, THE number that separates
     * an AR(1) daily series (φ₂₂ ≈ 0) from one needing a second-order
-    * model. ρ₁/ρ₂ are the ts_acf_lags lag-Pearson spellings verbatim
-    * (exact DECIMAL(38) sums into one identical float tree);
+    * model. ρ₁/ρ₂ are `ts_acf_lags`' Pearson over `lagMoments`;
     * φ₂₂ is one more float op on those identical doubles, degenerate
-    * 1−ρ₁² = 0 guarded NULL. Day-pair joins on the calendar-day
-    * grid, everything after day-sized. */
+    * 1−ρ₁² = 0 guarded NULL. */
   val tsPacfLag2: QDef = q(
     "ts_pacf_lag2",
-    """WITH dtot AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM events GROUP BY event_type, day),
+    s"""WITH ${dailyCentsCte},
       |lg AS (SELECT * FROM (VALUES (1), (2)) t(lag)),
-      |p AS (
-      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
-      |  FROM dtot a CROSS JOIN lg
-      |  JOIN dtot b ON b.event_type = a.event_type
-      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
-      |s AS (
-      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS n,
-      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
-      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
-      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
-      |  FROM p GROUP BY event_type, lag),
+      |${lagMomentCtes("n")},
       |r AS (
       |  SELECT event_type, lag, n,
       |    (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
@@ -2876,28 +2915,7 @@ object EventAnalytics {
       |FROM r a1 JOIN r a2
       |  ON a2.event_type = a1.event_type AND a1.lag = 1 AND a2.lag = 2
       |ORDER BY a1.event_type""") { (s, d) =>
-    import s.implicits._
-    val dtot = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"),
-        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("c")).cast(LongType).as("cents"))
-    val lg = Seq(1, 2).toDF("lag")
-    val p = dtot.as("a").crossJoin(broadcast(lg))
-      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
-          col("cents").as("y")),
-        col("bt") === col("a.event_type") &&
-          col("bd") === date_add(col("a.day"), col("lag")))
-      .select(col("a.event_type").as("event_type"), col("lag"),
-        col("a.cents").as("x"), col("y"))
-    val dec = DecimalType(38, 0)
-    val st = p.groupBy(col("event_type"), col("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-        sum(col("x").cast(dec) * col("x")).as("sxx"),
-        sum(col("y").cast(dec) * col("y")).as("syy"),
-        sum(col("x").cast(dec) * col("y")).as("sxy"))
+    val st = lagMoments(dailyCents(s, d), Seq(1, 2), "n")
     val r = st.select(col("event_type"), col("lag"), col("n"),
       ((col("n") * col("sxy").cast(DoubleType)
         - col("sx").cast(DoubleType) * col("sy").cast(DoubleType))
@@ -2935,12 +2953,7 @@ object EventAnalytics {
     * cross-engine agreement is exact. */
   val eventsSpcWesternElectric: QDef = q(
     "events_spc_western_electric",
-    """WITH dtot AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM events GROUP BY event_type, day),
+    s"""WITH ${dailyCentsCte},
       |st AS (
       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
       |    SUM(CAST(cents AS DECIMAL(38,0))) AS sx,
@@ -2984,12 +2997,7 @@ object EventAnalytics {
       |  CASE WHEN n_in_w8 = 8 THEN rule4 ELSE false END AS rule4
       |FROM r ORDER BY event_type, day""") { (s, d) =>
     val dec = DecimalType(38, 0)
-    val dtot = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"),
-        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val dtot = dailyCents(s, d)
     val st = dtot.groupBy(col("event_type").as("s_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents").cast(dec)).as("sx"),
         sum(col("cents").cast(dec) * col("cents")).as("sxx"))
@@ -3025,34 +3033,15 @@ object EventAnalytics {
     * left?", the whiteness check run after a model fit and the
     * summary statistic over the `ts_acf_lags` family: Q = n(n+2)
     * Σ_{k≤3} ρ̂ₖ²/(n−k) over the per-type daily cents series, with
-    * ρ̂ₖ the lag-k Pearson (the acf-lags spelling verbatim — exact
-    * DECIMAL(38) sums into one identical float tree), Q floored to
-    * micro and tested at the χ²₃ 95% bound 7.814728. Day-sized
-    * frames only. */
+    * ρ̂ₖ `ts_acf_lags`' lag-k Pearson over `lagMoments`, Q floored to
+    * micro and tested at the χ²₃ 95% bound 7.814728. */
   val tsLjungBox: QDef = q(
     "ts_ljung_box",
-    """WITH dtot AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM events GROUP BY event_type, day),
+    s"""WITH ${dailyCentsCte},
       |nd AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM dtot
       |  GROUP BY event_type),
       |lg AS (SELECT * FROM (VALUES (1), (2), (3)) t(lag)),
-      |p AS (
-      |  SELECT a.event_type, lg.lag, a.cents AS x, b.cents AS y
-      |  FROM dtot a CROSS JOIN lg
-      |  JOIN dtot b ON b.event_type = a.event_type
-      |    AND b.day = a.day + CAST(lg.lag AS INTEGER)),
-      |s AS (
-      |  SELECT event_type, lag, CAST(count(*) AS BIGINT) AS np,
-      |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-      |    SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-      |    SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
-      |    SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy,
-      |    SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy
-      |  FROM p GROUP BY event_type, lag),
+      |${lagMomentCtes("np")},
       |r AS (
       |  SELECT event_type, lag,
       |    (np * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
@@ -3076,30 +3065,10 @@ object EventAnalytics {
       |SELECT event_type, n AS n_days, q_micro,
       |  q_micro > 7814728 AS significant
       |FROM qf ORDER BY event_type""") { (s, d) =>
-    import s.implicits._
-    val dec = DecimalType(38, 0)
-    val dtot = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"),
-        expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)").as("c"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("c")).cast(LongType).as("cents"))
+    val dtot = dailyCents(s, d)
     val nd = dtot.groupBy(col("event_type").as("n_type"))
       .agg(count(lit(1)).as("n"))
-    val lg = Seq(1, 2, 3).toDF("lag")
-    val p = dtot.as("a").crossJoin(broadcast(lg))
-      .join(dtot.select(col("event_type").as("bt"), col("day").as("bd"),
-          col("cents").as("y")),
-        col("bt") === col("a.event_type") &&
-          col("bd") === date_add(col("a.day"), col("lag")))
-      .select(col("a.event_type").as("event_type"), col("lag"),
-        col("a.cents").as("x"), col("y"))
-    val st = p.groupBy(col("event_type"), col("lag"))
-      .agg(count(lit(1)).as("np"),
-        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-        sum(col("x").cast(dec) * col("x")).as("sxx"),
-        sum(col("y").cast(dec) * col("y")).as("syy"),
-        sum(col("x").cast(dec) * col("y")).as("sxy"))
+    val st = lagMoments(dtot, Seq(1, 2, 3), "np")
     val r = st.select(col("event_type"), col("lag"),
       ((col("np") * col("sxy").cast(DoubleType)
         - col("sx").cast(DoubleType) * col("sy").cast(DoubleType))
@@ -3175,11 +3144,7 @@ object EventAnalytics {
       |  MIN(CASE WHEN (s = 1 AND ps = -1) OR (s = -1 AND ps = 1)
       |    THEN day END) AS first_cross_day
       |FROM x GROUP BY event_type ORDER BY event_type""") { (s, d) =>
-    val dtot = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"))
-      .agg(sum(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
-        .cast(LongType).as("cents"))
+    val dtot = dailyCentsGrouped(s, d)
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val l = dtot.select(Seq(col("event_type"), col("day"), col("cents")) ++
       (1 to 7).map(k => lag(col("cents"), k).over(w).as(s"c$k")): _*)
@@ -3215,17 +3180,7 @@ object EventAnalytics {
     * One day agg + complete-matrix join + type fold. */
   val tsPoissonDispersion: QDef = q(
     "ts_poisson_dispersion",
-    """WITH dt AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(COUNT(*) AS BIGINT) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |days AS (SELECT DISTINCT day FROM dt),
-      |types AS (SELECT DISTINCT event_type FROM dt),
-      |cm AS (
-      |  SELECT t.event_type, COALESCE(dt.cnt, 0) AS cnt
-      |  FROM days d CROSS JOIN types t
-      |  LEFT JOIN dt ON dt.day = d.day AND dt.event_type = t.event_type),
+    s"""WITH ${dayTypeGridCtes("t.event_type")},
       |f AS (
       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
       |    CAST(SUM(cnt) AS BIGINT) AS sc,
@@ -3249,18 +3204,7 @@ object EventAnalytics {
       |      // ((n - 1) * CAST(sc AS HUGEINT)) < 500 END
       |    AS underdispersed
       |FROM f ORDER BY event_type""") { (s, d) =>
-    val dt = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val days = dt.select(col("day")).distinct()
-    val types = dt.select(col("event_type")).distinct()
-    val cm = days.crossJoin(broadcast(types))
-      .join(dt.select(col("day").as("j_day"),
-          col("event_type").as("j_type"), col("cnt")),
-        col("j_day") === col("day") && col("j_type") === col("event_type"),
-        "left")
-      .select(col("event_type"), coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val cm = dayTypeGrid(s, d)._2.select(col("event_type"), col("cnt"))
     val f = cm.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cnt")).as("sc"),
         sum(col("cnt").cast(DriftOps.dec) * col("cnt")).as("scc"))

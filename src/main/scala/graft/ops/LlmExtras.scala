@@ -559,15 +559,13 @@ object LlmExtras {
       .limit(5)
   }
 
-  /** Random-hyperplane LSH similarity search — the other scale path
-    * next to IVF (`ann_ivf_label`): 8 pseudo-hyperplanes with md5-
-    * derived ±1 signs per (plane, dim); a vector's bucket is the
-    * 8-bit sign pattern of its plane projections (computed on exact
-    * scaled integers — no float accumulation), and the query scans
-    * ONLY its own bucket for cosine top-5. */
-  val simLshBucketed: QDef = q(
-    "sim_lsh_bucketed",
-    s"""WITH signs AS (
+  /** The hyperplane-LSH signature: 8 pseudo-hyperplanes with
+    * md5-derived ±1 signs per (plane, dim), and a vector's `bucket` is
+    * the 8-bit sign pattern of its plane projections. The projections
+    * are sums of sign × floor(component × 1000), exact integers, so
+    * both engines pick the same bucket. */
+  private[ops] val lshSigCtes: String =
+    """signs AS (
       |  SELECT p, i,
       |    CASE WHEN ('0x' || substr(md5(p || ':' || i), 1, 2))::INT % 2 = 0
       |         THEN 1 ELSE -1 END AS sgn
@@ -581,7 +579,32 @@ object LlmExtras {
       |  SELECT vec_id,
       |    CAST(SUM(CASE WHEN sp > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT)
       |      AS bucket
-      |  FROM proj GROUP BY vec_id),
+      |  FROM proj GROUP BY vec_id)""".stripMargin
+
+  /** Spark twin of `lshSigCtes`: (vec_id, embedding, bucket). The
+    * 8×64 sign matrix is built once as a single 512-element array row
+    * (md5 evaluated 512 times in total, not per vector) and broadcast
+    * onto every vector; the bucket fold is one compiled pass per
+    * vector (`graft_lsh_bucket`, pinned by SignatureExpressionsSpec).
+    * Requires 64-dim embeddings: a short or long vector's missing
+    * products count as 0, as DuckDB's SUM skips the NULL terms. */
+  private[ops] def lshBuckets(s: SparkSession, d: String): DataFrame = {
+    val signsRow = s.range(1).select(expr(
+      """transform(sequence(0, 511), k ->
+        |  IF(CAST(conv(substring(md5(concat_ws(':', k div 64, k % 64 + 1)), 1, 2), 16, 10) AS INT) % 2 = 0,
+        |     CAST(1 AS BIGINT), CAST(-1 AS BIGINT)))""".stripMargin).as("signs"))
+    Tables.embeddings(s, d).crossJoin(broadcast(signsRow))
+      .select(col("vec_id"), col("embedding"),
+        graft.functions.VectorFunctions
+          .lshBucket(col("embedding"), col("signs"), 8, 64).as("bucket"))
+  }
+
+  /** Random-hyperplane LSH similarity search — the other scale path
+    * next to IVF (`ann_ivf_label`): over the `lshSigCtes` buckets, the
+    * query scans ONLY its own bucket for cosine top-5. */
+  val simLshBucketed: QDef = q(
+    "sim_lsh_bucketed",
+    s"""WITH ${lshSigCtes},
       |qb AS (SELECT bucket FROM sig WHERE vec_id = 0),
       |probes AS (
       |  SELECT unnest(list_transform(range(0, 9),
@@ -597,32 +620,7 @@ object LlmExtras {
       |WHERE s.vec_id <> 0
       |ORDER BY sim DESC, s.vec_id
       |LIMIT 5""") { (s, d) =>
-    val e = Tables.embeddings(s, d)
-    // The oracle spells the plane projections as an unnest + two
-    // GROUP BYs; here the 8×64 md5-derived ±1 sign matrix is built
-    // ONCE as a single 512-element array row (md5 evaluated 512
-    // times total, not per vector), broadcast onto every vector, and
-    // the whole 8-bit bucket is one nested higher-order expression —
-    // identical integer math (sign × exact milli-scaled components,
-    // sign threshold, bit-OR), zero shuffles to compute signatures.
-    // REQUIRES 64-dim embeddings: zip_with NULL-pads a short/long
-    // vector, so the per-dim product is coalesced to 0 (matching the
-    // oracle, where DuckDB SUM skips the NULL terms).
-    val signsRow = s.range(1).select(expr(
-      """transform(sequence(0, 511), k ->
-        |  IF(CAST(conv(substring(md5(concat_ws(':', k div 64, k % 64 + 1)), 1, 2), 16, 10) AS INT) % 2 = 0,
-        |     CAST(1 AS BIGINT), CAST(-1 AS BIGINT)))""".stripMargin).as("signs"))
-    // r8: the bucket fold is one compiled pass per vector
-    // (graft_lsh_bucket, SignatureExpressions) — the r7 form was a
-    // nested interpreted `aggregate(sequence(0,7),
-    // aggregate(zip_with(…)))` paying 8 planes × 64 dims lambda evals
-    // per vector (~10M over the sf0.1 embeddings). Identical integer
-    // math (sign × exact milli-scaled components, sign threshold,
-    // bit-OR), pinned by SignatureExpressionsSpec.
-    val bucketExpr = graft.functions.VectorFunctions
-      .lshBucket(col("embedding"), col("signs"), 8, 64)
-    val withB = e.crossJoin(broadcast(signsRow))
-      .select(col("vec_id"), col("embedding"), bucketExpr.as("bucket"))
+    val withB = lshBuckets(s, d)
     // MULTI-PROBE: the query's own bucket plus every Hamming-distance-1
     // bucket — 9 probe values expanded from the 1-row query side, then
     // an EQUALITY join on bucket (the shape that stays a bucket-pruned
@@ -645,6 +643,20 @@ object LlmExtras {
       .limit(5)
   }
 
+  /** The kmeans-family milli-centroid CTEs: per-(label, i) floor-mean
+    * centroid over the milli-quantized component explode. The Spark
+    * side of the component explode is `kmeansEx`. */
+  private val centCtes: String =
+    """dims AS (SELECT unnest(range(1, 65)) AS i),
+      |qv AS (
+      |  SELECT vec_id, label, i,
+      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc
+      |  FROM embeddings CROSS JOIN dims),
+      |cent AS (
+      |  SELECT label AS cl, i,
+      |    CAST(floor(CAST(SUM(qc) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
+      |  FROM qv GROUP BY label, i)""".stripMargin
+
   /** One k-means iteration over the embeddings (centroids seeded from
     * the true labels, then every vector re-assigned to its nearest
     * centroid): the convergence-step shape of distributed k-means,
@@ -659,15 +671,7 @@ object LlmExtras {
     * single codegen'd map stage, no 10× row blowup, no window. */
   val kmeansAssign: QDef = q(
     "kmeans_assign",
-    """WITH dims AS (SELECT unnest(range(1, 65)) AS i),
-      |qv AS (
-      |  SELECT vec_id, label, i,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc
-      |  FROM embeddings CROSS JOIN dims),
-      |cent AS (
-      |  SELECT label AS cl, i,
-      |    CAST(floor(CAST(SUM(qc) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-      |  FROM qv GROUP BY label, i),
+    s"""WITH $centCtes,
       |dist AS (
       |  SELECT qv.vec_id, qv.label, cent.cl,
       |    SUM((qv.qc - cent.c) * (qv.qc - cent.c)) AS d2
@@ -745,15 +749,7 @@ object LlmExtras {
     * shuffle rows bounded by k×dims partials per map task. */
   val kmeansUpdateRound: QDef = q(
     "kmeans_update_round",
-    """WITH dims AS (SELECT unnest(range(1, 65)) AS i),
-      |qv AS (
-      |  SELECT vec_id, label, i,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc
-      |  FROM embeddings CROSS JOIN dims),
-      |cent AS (
-      |  SELECT label AS cl, i,
-      |    CAST(floor(CAST(SUM(qc) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-      |  FROM qv GROUP BY label, i),
+    s"""WITH $centCtes,
       |dist AS (
       |  SELECT qv.vec_id, cent.cl,
       |    SUM((qv.qc - cent.c) * (qv.qc - cent.c)) AS d2
@@ -976,21 +972,7 @@ object LlmExtras {
     * end to end; cosine ties broken by vec_id in both engines). */
   val evalAnnRecall: QDef = q(
     "eval_ann_recall",
-    s"""WITH signs AS (
-      |  SELECT p, i,
-      |    CASE WHEN ('0x' || substr(md5(p || ':' || i), 1, 2))::INT % 2 = 0
-      |         THEN 1 ELSE -1 END AS sgn
-      |  FROM (SELECT unnest(range(0, 8)) AS p), (SELECT unnest(range(1, 65)) AS i)),
-      |proj AS (
-      |  SELECT vec_id, p,
-      |    SUM(sgn * CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)) AS sp
-      |  FROM embeddings CROSS JOIN signs
-      |  GROUP BY vec_id, p),
-      |sig AS (
-      |  SELECT vec_id,
-      |    CAST(SUM(CASE WHEN sp > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT)
-      |      AS bucket
-      |  FROM proj GROUP BY vec_id),
+    s"""WITH ${lshSigCtes},
       |qs AS (SELECT vec_id AS q_id, bucket AS q_bucket FROM sig WHERE vec_id < 8),
       |probes AS (
       |  SELECT q_id, unnest(list_transform(range(0, 9),
@@ -1021,17 +1003,7 @@ object LlmExtras {
       |FROM hits h LEFT JOIN nc ON nc.q_id = h.q_id
       |ORDER BY h.q_id""") { (s, d) =>
     val e = Tables.embeddings(s, d)
-    // Signature construction is sim_lsh_bucketed's, verbatim: one
-    // 512-element md5-derived ±1 sign row broadcast onto every vector,
-    // bucket folded by the compiled graft_lsh_bucket pass.
-    val signsRow = s.range(1).select(expr(
-      """transform(sequence(0, 511), k ->
-        |  IF(CAST(conv(substring(md5(concat_ws(':', k div 64, k % 64 + 1)), 1, 2), 16, 10) AS INT) % 2 = 0,
-        |     CAST(1 AS BIGINT), CAST(-1 AS BIGINT)))""".stripMargin).as("signs"))
-    val withB = e.crossJoin(broadcast(signsRow))
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.VectorFunctions
-          .lshBucket(col("embedding"), col("signs"), 8, 64).as("bucket"))
+    val withB = lshBuckets(s, d)
     val qs = withB.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("bucket").as("q_bucket"))
@@ -1063,6 +1035,39 @@ object LlmExtras {
       .orderBy(col("q_id"))
   }
 
+  /** Product-quantization distances: each vector's 4×16-dim
+    * sub-vectors against the seed codebook (the sub-vectors of vec_id
+    * 0..7), as exact BIGINT squared distances over milli-quantized
+    * components, per (vec_id, subspace s, code). */
+  private[ops] val pqDistCtes: String =
+    """dims AS (SELECT unnest(range(1, 65)) AS i),
+      |qv AS (
+      |  SELECT vec_id, i,
+      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc,
+      |    CAST((i - 1) // 16 AS INTEGER) AS s
+      |  FROM embeddings CROSS JOIN dims),
+      |cb AS (SELECT i, CAST(vec_id AS INTEGER) AS code, qc AS sc
+      |  FROM qv WHERE vec_id < 8),
+      |dist AS (
+      |  SELECT q.vec_id, q.s, cb.code,
+      |    CAST(SUM((q.qc - cb.sc) * (q.qc - cb.sc)) AS BIGINT) AS d2
+      |  FROM qv q JOIN cb ON cb.i = q.i
+      |  GROUP BY 1, 2, 3)""".stripMargin
+
+  /** Spark twin of `pqDistCtes`'s `qv`: `kmeansEx` plus the subspace. */
+  private[ops] def pqComponents(s: SparkSession, d: String): DataFrame =
+    kmeansEx(s, d).withColumn("s", expr("CAST(i div 16 AS INT)"))
+
+  /** Spark twin of `pqDistCtes`'s `dist` over `pqComponents`. */
+  private[ops] def pqDist(ex: DataFrame): DataFrame = {
+    val cb = ex.filter(col("vec_id") < 8)
+      .select(col("i").as("ci"), col("vec_id").cast(IntegerType).as("code"),
+        col("qc").as("sc"))
+    ex.join(broadcast(cb), col("ci") === col("i"))
+      .groupBy(col("vec_id"), col("s"), col("code"))
+      .agg(sum((col("qc") - col("sc")) * (col("qc") - col("sc"))).as("d2"))
+  }
+
   /** Product-quantization codes (r12m) — the memory-compression leg
     * of the ANN family (Jégou et al. 2011): the 64-dim embedding
     * splits into 4×16-dim subspaces, each sub-vector snaps to the
@@ -1081,19 +1086,7 @@ object LlmExtras {
     * argmin agg, one ≤32-group fold. */
   val simPqCodes: QDef = q(
     "sim_pq_codes",
-    """WITH dims AS (SELECT unnest(range(1, 65)) AS i),
-      |qv AS (
-      |  SELECT vec_id, i,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc,
-      |    CAST((i - 1) // 16 AS INTEGER) AS s
-      |  FROM embeddings CROSS JOIN dims),
-      |cb AS (SELECT i, CAST(vec_id AS INTEGER) AS code, qc AS sc
-      |  FROM qv WHERE vec_id < 8),
-      |dist AS (
-      |  SELECT q.vec_id, q.s, cb.code,
-      |    CAST(SUM((q.qc - cb.sc) * (q.qc - cb.sc)) AS BIGINT) AS d2
-      |  FROM qv q JOIN cb ON cb.i = q.i
-      |  GROUP BY 1, 2, 3),
+    s"""WITH ${pqDistCtes},
       |asg AS (
       |  SELECT vec_id, s, code, d2,
       |    row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, code) AS rn
@@ -1102,17 +1095,7 @@ object LlmExtras {
       |  CAST(SUM(d2) AS BIGINT) AS sum_d2
       |FROM asg WHERE rn = 1
       |GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
-    val ex = Tables.embeddings(s, d)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
-      .select(col("vec_id"), col("i"),
-        floor(col("v").cast(DoubleType) * 1000).cast(LongType).as("qc"),
-        expr("CAST(i div 16 AS INT)").as("s"))
-    val cb = ex.filter(col("vec_id") < 8)
-      .select(col("i").as("ci"), col("vec_id").cast(IntegerType).as("code"),
-        col("qc").as("sc"))
-    val dist = ex.join(broadcast(cb), col("ci") === col("i"))
-      .groupBy(col("vec_id"), col("s"), col("code"))
-      .agg(sum((col("qc") - col("sc")) * (col("qc") - col("sc"))).as("d2"))
+    val dist = pqDist(pqComponents(s, d))
     val asg = dist.groupBy(col("vec_id"), col("s"))
       .agg(min(struct(col("d2"), col("code"))).as("m"))
     asg.groupBy(col("s").as("subspace"), col("m.code").as("code"))
@@ -1397,11 +1380,57 @@ object LlmExtras {
       .orderBy(col("source"))
   }
 
+  /** The md5-sampled query set (first hex digit '0', about 1/16 of the
+    * corpus, hash-deterministic with no RNG) as CTE `name`. */
+  private[ops] def querySampleCte(name: String): String =
+    s"""$name AS (
+      |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
+      |  FROM embeddings
+      |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0')""".stripMargin
+
+  /** Spark twin of `querySampleCte` crossed with the embeddings, minus
+    * self-pairs: (vec_id, label, embedding, q_id, q_label, q_emb). The
+    * query side is a broadcast. */
+  private[ops] def queryPairs(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+    val qs = e.filter(
+        substring(md5(col("vec_id").cast(StringType)), 1, 1) === "0")
+      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
+        col("embedding").as("q_emb"))
+    e.crossJoin(broadcast(qs))
+      .filter(col("vec_id") =!= col("q_id"))
+  }
+
+  /** Brute-force cosine ranks of every candidate for each sampled
+    * query: (q_id, q_label, label, rnk) with rnk by (sim DESC, vec_id),
+    * a total order. The cosine is the shared quantized float tree
+    * (`fcosine` ≡ `sqlCosine`, spec-pinned bit-identical), so both
+    * engines rank alike. */
+  private[ops] val labelRankCtes: String =
+    s"""${querySampleCte("q")},
+      |cand AS (
+      |  SELECT q.q_id, q.q_label, e.vec_id, e.label,
+      |    ${VecMath.sqlCosine("e.embedding", "q.q_emb")} AS sim
+      |  FROM embeddings e JOIN q ON e.vec_id <> q.q_id),
+      |r AS (
+      |  SELECT q_id, q_label, label,
+      |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
+      |      ORDER BY sim DESC, vec_id) AS BIGINT) AS rnk
+      |  FROM cand)""".stripMargin
+
+  /** Spark twin of `labelRankCtes`'s `r`. */
+  private[ops] def labelRanks(s: SparkSession, d: String): DataFrame =
+    queryPairs(s, d)
+      .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
+        VecMath.fcosine(col("embedding"), col("q_emb")).as("sim"))
+      .select(col("q_id"), col("q_label"), col("label"),
+        row_number().over(Window.partitionBy(col("q_id"))
+          .orderBy(col("sim").desc, col("vec_id"))).cast(LongType).as("rnk"))
+
   /** Retrieval MRR eval (r14d) — Mean Reciprocal Rank of brute-force
     * cosine retrieval against label ground truth, per label: for each
-    * md5-sampled query vector (first hex digit '0' ≈ 1/16 of the
-    * corpus — hash-deterministic, no RNG), the rank of the FIRST
-    * same-label neighbor under (sim DESC, vec_id) ordering;
+    * sampled query, the rank (`labelRanks`) of the FIRST same-label
+    * neighbor;
     * reciprocal ranks in floor-micro units, label-level mean by floor
     * division. Queries with no same-label candidate contribute 0 (the
     * standard MRR convention). Completes the retrieval-eval leg next
@@ -1411,24 +1440,10 @@ object LlmExtras {
     * trusting ANN routing; the query side stays a broadcast (sampled,
     * 1/16), the per-query window is partitioned by q_id, and the
     * production-scale retrieval itself routes through `ann_ivf_label`
-    * / `sim_lsh_bucketed`. Cosine is the shared quantized float tree
-    * (`fcosine` ≡ `sqlCosine`, spec-pinned bit-identical), so ranks
-    * agree across engines. */
+    * / `sim_lsh_bucketed`. */
   val evalRetrievalMrr: QDef = q(
     "eval_retrieval_mrr",
-    s"""WITH q AS (
-      |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
-      |  FROM embeddings
-      |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'),
-      |cand AS (
-      |  SELECT q.q_id, q.q_label, e.vec_id, e.label,
-      |    ${VecMath.sqlCosine("e.embedding", "q.q_emb")} AS sim
-      |  FROM embeddings e JOIN q ON e.vec_id <> q.q_id),
-      |r AS (
-      |  SELECT q_id, q_label, label,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-      |      ORDER BY sim DESC, vec_id) AS BIGINT) AS rnk
-      |  FROM cand),
+    s"""WITH ${labelRankCtes},
       |hits AS (
       |  SELECT q_id, q_label,
       |    MIN(CASE WHEN label = q_label THEN rnk END) AS first_rank
@@ -1440,20 +1455,7 @@ object LlmExtras {
       |  CAST(SUM(CASE WHEN first_rank IS NULL THEN 0
       |    ELSE 1000000 // first_rank END) AS BIGINT) // COUNT(*) AS mrr_micro
       |FROM hits GROUP BY q_label ORDER BY q_label""") { (s, d) =>
-    val e = Tables.embeddings(s, d)
-    val qs = e.filter(
-        substring(md5(col("vec_id").cast(StringType)), 1, 1) === "0")
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"))
-    val cand = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        VecMath.fcosine(col("embedding"), col("q_emb")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val hits = cand
-      .select(col("q_id"), col("q_label"), col("label"),
-        row_number().over(w).cast(LongType).as("rnk"))
+    val hits = labelRanks(s, d)
       .groupBy(col("q_id"), col("q_label"))
       .agg(min(when(col("label") === col("q_label"), col("rnk"))).as("first_rank"))
     hits.groupBy(col("q_label").as("label"))
@@ -1463,6 +1465,37 @@ object LlmExtras {
       .select(col("label"), col("n_queries"), col("sum_rr_micro"),
         expr("sum_rr_micro div n_queries").as("mrr_micro"))
       .orderBy(col("label"))
+  }
+
+  /** The calibration pseudo-score: per order, `p_ppm` = its date
+    * position inside the observed date span in floor-ppm (integer day
+    * counts, so exact in both engines), and outcome `y` = status F. */
+  private[ops] val calibrationCtes: String =
+    """b AS (
+      |  SELECT CAST(MIN(o_orderdate) AS DATE) AS mn,
+      |    date_diff('day', CAST(MIN(o_orderdate) AS DATE),
+      |      CAST(MAX(o_orderdate) AS DATE)) AS span
+      |  FROM orders),
+      |sc AS (
+      |  SELECT
+      |    date_diff('day', mn, CAST(o_orderdate AS DATE)) * 1000000 // span
+      |      AS p_ppm,
+      |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
+      |  FROM orders CROSS JOIN b)""".stripMargin
+
+  /** Spark twin of `calibrationCtes`'s `sc`; the span bounds are a
+    * 1-row broadcast agg. */
+  private[ops] def calibrationScores(s: SparkSession, d: String): DataFrame = {
+    val b = Tables.orders(s, d)
+      .agg(min(col("o_orderdate").cast(DateType)).as("mn"),
+        datediff(max(col("o_orderdate").cast(DateType)),
+          min(col("o_orderdate").cast(DateType))).as("span"))
+    Tables.orders(s, d)
+      .crossJoin(broadcast(b))
+      .select(
+        expr("CAST(datediff(CAST(o_orderdate AS DATE), mn) AS BIGINT)" +
+          " * 1000000 div span").as("p_ppm"),
+        when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("y"))
   }
 
   /** Score-calibration bins (r15) — the model-monitoring reliability
@@ -1479,17 +1512,7 @@ object LlmExtras {
     * independent. */
   val evalCalibrationBins: QDef = q(
     "eval_calibration_bins",
-    """WITH b AS (
-      |  SELECT CAST(MIN(o_orderdate) AS DATE) AS mn,
-      |    date_diff('day', CAST(MIN(o_orderdate) AS DATE),
-      |      CAST(MAX(o_orderdate) AS DATE)) AS span
-      |  FROM orders),
-      |sc AS (
-      |  SELECT
-      |    date_diff('day', mn, CAST(o_orderdate AS DATE)) * 1000000 // span
-      |      AS p_ppm,
-      |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-      |  FROM orders CROSS JOIN b)
+    s"""WITH ${calibrationCtes}
       |SELECT least(p_ppm // 100000, 9) AS bin,
       |  CAST(COUNT(*) AS BIGINT) AS n,
       |  CAST(SUM(p_ppm) // COUNT(*) AS BIGINT) AS mean_p_ppm,
@@ -1499,16 +1522,7 @@ object LlmExtras {
       |  CAST(SUM((p_ppm - y * 1000000) * (p_ppm - y * 1000000))
       |    // COUNT(*) AS BIGINT) AS brier_ppm2
       |FROM sc GROUP BY bin ORDER BY bin""") { (s, d) =>
-    val b = Tables.orders(s, d)
-      .agg(min(col("o_orderdate").cast(DateType)).as("mn"),
-        datediff(max(col("o_orderdate").cast(DateType)),
-          min(col("o_orderdate").cast(DateType))).as("span"))
-    val sc = Tables.orders(s, d)
-      .crossJoin(broadcast(b))
-      .select(
-        expr("CAST(datediff(CAST(o_orderdate AS DATE), mn) AS BIGINT)" +
-          " * 1000000 div span").as("p_ppm"),
-        when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("y"))
+    val sc = calibrationScores(s, d)
     sc.groupBy(expr("least(p_ppm div 100000, 9)").as("bin"))
       .agg(count(lit(1)).as("n"),
         sum(col("p_ppm")).as("sp"), sum(col("y")).as("sy"),
@@ -1767,10 +1781,8 @@ object LlmExtras {
 
   /** NDCG@10 retrieval eval (r16) — position-weighted retrieval
     * quality next to `eval_retrieval_mrr` (first-hit only) and
-    * `eval_ann_recall` (set overlap, position-blind): same md5-sampled
-    * query set, same brute-force cosine ranks (the shared quantized
-    * float tree, spec-pinned bit-identical across engines), relevance
-    * = same label. The log2 discounts are a 10-row LITERAL table
+    * `eval_ann_recall` (set overlap, position-blind): the same
+    * `labelRanks`, relevance = same label. The log2 discounts are a 10-row LITERAL table
     * (floor(1e6/log2(i+1)), documented constants — the transcendental
     * never runs at query time, the D6 discipline), ideal DCG from the
     * same table capped at min(n_rel, 10), per-query NDCG in
@@ -1779,19 +1791,7 @@ object LlmExtras {
     * production retrieval routes through `ann_ivf_label`. */
   val evalNdcgAt10: QDef = q(
     "eval_ndcg_at10",
-    s"""WITH q AS (
-      |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
-      |  FROM embeddings
-      |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'),
-      |cand AS (
-      |  SELECT q.q_id, q.q_label, e.vec_id, e.label,
-      |    ${VecMath.sqlCosine("e.embedding", "q.q_emb")} AS sim
-      |  FROM embeddings e JOIN q ON e.vec_id <> q.q_id),
-      |r AS (
-      |  SELECT q_id, q_label, label,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-      |      ORDER BY sim DESC, vec_id) AS BIGINT) AS rnk
-      |  FROM cand),
+    s"""WITH ${labelRankCtes},
       |disc AS (SELECT * FROM (VALUES (1, 1000000), (2, 630929),
       |  (3, 500000), (4, 430676), (5, 386852), (6, 356207), (7, 333333),
       |  (8, 315464), (9, 301029), (10, 289064)) t(i, dmicro)),
@@ -1826,20 +1826,7 @@ object LlmExtras {
       (4, 430676L), (5, 386852L), (6, 356207L), (7, 333333L),
       (8, 315464L), (9, 301029L), (10, 289064L))
     val disc = discRows.toDF("i", "dmicro")
-    val e = Tables.embeddings(s, d)
-    val qs = e.filter(
-        substring(md5(col("vec_id").cast(StringType)), 1, 1) === "0")
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"))
-    val cand = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        VecMath.fcosine(col("embedding"), col("q_emb")).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val qd = cand
-      .select(col("q_id"), col("q_label"), col("label"),
-        row_number().over(w).cast(LongType).as("rnk"))
+    val qd = labelRanks(s, d)
       .join(broadcast(disc), col("i") === col("rnk"), "left")
       .groupBy(col("q_id"), col("q_label"))
       .agg(sum(when(col("label") === col("q_label") && col("rnk") <= 10,
@@ -2190,10 +2177,7 @@ object LlmExtras {
     * candidates through `ann_ivf_label`. */
   val evalAucRoc: QDef = q(
     "eval_auc_roc",
-    s"""WITH qs AS (
-      |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
-      |  FROM embeddings
-      |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'),
+    s"""WITH ${querySampleCte("qs")},
       |cand AS (
       |  SELECT qs.q_id, qs.q_label,
       |    ${VecMath.sqlCosine("e.embedding", "qs.q_emb")} AS sim,
@@ -2228,13 +2212,7 @@ object LlmExtras {
       |  MIN(auc_ppm) AS min_auc_ppm, MAX(auc_ppm) AS max_auc_ppm
       |FROM a GROUP BY q_label ORDER BY label""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, d)
-    val qs = e.filter(
-        substring(md5(col("vec_id").cast(StringType)), 1, 1) === "0")
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"))
-    val cand = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    val cand = queryPairs(s, d)
       .select(col("q_id"), col("q_label"),
         VecMath.fcosine(col("embedding"), col("q_emb")).as("sim"),
         when(col("label") === col("q_label"), 1L).otherwise(0L).as("rel"))
@@ -2278,10 +2256,7 @@ object LlmExtras {
     * windows q_id-partitioned. */
   val evalMapAtK: QDef = q(
     "eval_map_at_k",
-    s"""WITH qs AS (
-      |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
-      |  FROM embeddings
-      |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'),
+    s"""WITH ${querySampleCte("qs")},
       |cand AS (
       |  SELECT qs.q_id, qs.q_label, e.vec_id,
       |    ${VecMath.sqlCosine("e.embedding", "qs.q_emb")} AS sim,
@@ -2322,13 +2297,7 @@ object LlmExtras {
       |  CAST(SUM(r10_ppm) AS BIGINT) // COUNT(*) AS mean_r10_ppm
       |FROM m GROUP BY q_label ORDER BY label""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, d)
-    val qs = e.filter(
-        substring(md5(col("vec_id").cast(StringType)), 1, 1) === "0")
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"))
-    val cand = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    val cand = queryPairs(s, d)
       .select(col("q_id"), col("q_label"), col("vec_id"),
         VecMath.fcosine(col("embedding"), col("q_emb")).as("sim"),
         when(col("label") === col("q_label"), 1L).otherwise(0L).as("rel"))
@@ -2471,10 +2440,7 @@ object LlmExtras {
     * quantized cosine, q_id-partitioned windows only. */
   val simFilteredTopk: QDef = q(
     "sim_filtered_topk",
-    s"""WITH qs AS (
-      |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
-      |  FROM embeddings
-      |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'),
+    s"""WITH ${querySampleCte("qs")},
       |cand AS (
       |  SELECT qs.q_id, qs.q_label, e.vec_id,
       |    ${VecMath.sqlCosine("e.embedding", "qs.q_emb")} AS sim,
@@ -2510,13 +2476,7 @@ object LlmExtras {
       |    AS n_queries_short
       |FROM pq GROUP BY q_label ORDER BY label""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, d)
-    val qs = e.filter(
-        substring(md5(col("vec_id").cast(StringType)), 1, 1) === "0")
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"))
-    val cand = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    val cand = queryPairs(s, d)
       .select(col("q_id"), col("q_label"), col("vec_id"),
         VecMath.fcosine(col("embedding"), col("q_emb")).as("sim"),
         when(col("label") === col("q_label"), 1).otherwise(0).as("pass"))
@@ -2642,20 +2602,6 @@ object LlmExtras {
           .as("dist_milli"))
       .orderBy(col("label_a"), col("label_b"))
   }
-
-  /** The kmeans-family milli-centroid CTEs (ONE spelling with
-    * `kmeans_assign`): per-(label, i) floor-mean centroid over the
-    * milli-quantized component explode. */
-  private val centCtes: String =
-    """dims AS (SELECT unnest(range(1, 65)) AS i),
-      |qv AS (
-      |  SELECT vec_id, label, i,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc
-      |  FROM embeddings CROSS JOIN dims),
-      |cent AS (
-      |  SELECT label AS cl, i,
-      |    CAST(floor(CAST(SUM(qc) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-      |  FROM qv GROUP BY label, i)""".stripMargin
 
   /** Spark twin of `centCtes`'s cent: (cl, i, c). Built over
     * `kmeansEx` so the quantization cannot drift. */
@@ -3176,8 +3122,7 @@ object LlmExtras {
 
   /** ECE + Murphy Brier decomposition (r18) — the single-number
     * calibration verdicts over the graded `eval_calibration_bins`
-    * construction (date-position pseudo-score vs order-status
-    * outcome, ONE spelling): expected calibration error
+    * construction (`calibrationScores`): expected calibration error
     * ECE = Σ_b (n_b/N)·|p̄_b − ȳ_b| and the Brier decomposition
     * reliability − resolution + uncertainty, all computed over the
     * SAME floored bin means the bins key ships (stated convention:
@@ -3186,17 +3131,7 @@ object LlmExtras {
     * One scan, one 10-bin agg, one fold. */
   val evalEceBrierDecomp: QDef = q(
     "eval_ece_brier_decomp",
-    """WITH b AS (
-      |  SELECT CAST(MIN(o_orderdate) AS DATE) AS mn,
-      |    date_diff('day', CAST(MIN(o_orderdate) AS DATE),
-      |      CAST(MAX(o_orderdate) AS DATE)) AS span
-      |  FROM orders),
-      |sc AS (
-      |  SELECT
-      |    date_diff('day', mn, CAST(o_orderdate AS DATE)) * 1000000 // span
-      |      AS p_ppm,
-      |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-      |  FROM orders CROSS JOIN b),
+    s"""WITH ${calibrationCtes},
       |bins AS (
       |  SELECT least(p_ppm // 100000, 9) AS bin,
       |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -3225,16 +3160,7 @@ object LlmExtras {
       |  CAST(ybar_all * (1000000 - ybar_all) AS BIGINT) AS uncertainty_ppm2
       |FROM g""") { (s, d) =>
     val dec = DecimalType(38, 0)
-    val b = Tables.orders(s, d)
-      .agg(min(col("o_orderdate").cast(DateType)).as("mn"),
-        datediff(max(col("o_orderdate").cast(DateType)),
-          min(col("o_orderdate").cast(DateType))).as("span"))
-    val sc = Tables.orders(s, d)
-      .crossJoin(broadcast(b))
-      .select(
-        expr("CAST(datediff(CAST(o_orderdate AS DATE), mn) AS BIGINT)" +
-          " * 1000000 div span").as("p_ppm"),
-        when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("y"))
+    val sc = calibrationScores(s, d)
     val bins = sc.groupBy(expr("least(p_ppm div 100000, 9)").as("bin"))
       .agg(count(lit(1)).as("n"), sum(col("p_ppm")).as("sp"),
         sum(col("y")).as("sy"),
@@ -3282,7 +3208,7 @@ object LlmExtras {
     * categories are populated. Row-local per doc + ONE corpus fold. */
   val evalKrippendorffAlpha: QDef = q(
     "eval_krippendorff_alpha",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
       |  FROM documents),
       |r AS (
@@ -3297,18 +3223,7 @@ object LlmExtras {
       |      < 'd' THEN CASE WHEN ntok < 35 THEN 0 WHEN ntok < 75 THEN 1
       |        ELSE 2 END END AS r2
       |  FROM t),
-      |n AS (
-      |  SELECT
-      |    (CASE WHEN r0 = 0 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN r1 = 0 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN r2 = 0 THEN 1 ELSE 0 END) AS n0,
-      |    (CASE WHEN r0 = 1 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN r1 = 1 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN r2 = 1 THEN 1 ELSE 0 END) AS n1,
-      |    (CASE WHEN r0 = 2 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN r1 = 2 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN r2 = 2 THEN 1 ELSE 0 END) AS n2
-      |  FROM r),
+      |${DriftOps.raterCountsCte},
       |inc AS (SELECT n0, n1, n2, n0 + n1 + n2 AS m FROM n
       |  WHERE n0 + n1 + n2 >= 2),
       |f AS (
@@ -3340,10 +3255,7 @@ object LlmExtras {
           .otherwise(2L))
     val r = t.select(rater(0, 40, 70).as("r0"), rater(1, 45, 65).as("r1"),
       rater(2, 35, 75).as("r2"))
-    def nj(j: Long): Column =
-      Seq("r0", "r1", "r2")
-        .map(c => when(col(c) === j, 1L).otherwise(0L)).reduce(_ + _)
-    val inc = r.select(nj(0).as("n0"), nj(1).as("n1"), nj(2).as("n2"))
+    val inc = DriftOps.raterCounts(r)
       .withColumn("m", col("n0") + col("n1") + col("n2"))
       .filter(col("m") >= 2)
     val di = col("n0") * (col("m") - col("n0")) +
@@ -3381,19 +3293,7 @@ object LlmExtras {
     * the exact leg stays eval-tier. */
   val annPqAdcRecall: QDef = q(
     "ann_pq_adc_recall",
-    """WITH dims AS (SELECT unnest(range(1, 65)) AS i),
-      |qv AS (
-      |  SELECT vec_id, i,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS qc,
-      |    CAST((i - 1) // 16 AS INTEGER) AS s
-      |  FROM embeddings CROSS JOIN dims),
-      |cb AS (SELECT i, CAST(vec_id AS INTEGER) AS code, qc AS sc
-      |  FROM qv WHERE vec_id < 8),
-      |dist AS (
-      |  SELECT q.vec_id, q.s, cb.code,
-      |    CAST(SUM((q.qc - cb.sc) * (q.qc - cb.sc)) AS BIGINT) AS d2
-      |  FROM qv q JOIN cb ON cb.i = q.i
-      |  GROUP BY 1, 2, 3),
+    s"""WITH ${pqDistCtes},
       |codes AS (
       |  SELECT vec_id, s, code FROM (
       |    SELECT vec_id, s, code,
@@ -3424,15 +3324,8 @@ object LlmExtras {
       |FROM topex LEFT JOIN topadc ON topadc.q_id = topex.q_id
       |  AND topadc.vec_id = topex.vec_id
       |GROUP BY topex.q_id ORDER BY topex.q_id""") { (s, d) =>
-    val ex0 = kmeansEx(s, d)
-      .withColumn("s", expr("CAST(i div 16 AS INT)"))
-    val cb = ex0.filter(col("vec_id") < 8)
-      .select(col("i").as("ci"), col("vec_id").cast(IntegerType).as("code"),
-        col("qc").as("sc"))
-    val dist = ex0.join(broadcast(cb), col("ci") === col("i"))
-      .groupBy(col("vec_id"), col("s"), col("code"))
-      .agg(sum((col("qc") - col("sc")) * (col("qc") - col("sc"))).as("d2"))
-      .persist()
+    val ex0 = pqComponents(s, d)
+    val dist = pqDist(ex0).persist()
     val codes = dist.groupBy(col("vec_id"), col("s"))
       .agg(min(struct(col("d2"), col("code"))).as("m"))
       .select(col("vec_id"), col("s"), col("m.code").as("code"))

@@ -172,6 +172,27 @@ object Streaming {
       .orderBy(col("event_id"))
   }
 
+  /** Per-type event counts `n` in 6-hour tumbling windows starting at
+    * `win_start` (hours 0, 6, 12, 18 UTC), the batch form of a
+    * streaming tumbling-window count. */
+  private[ops] val sixHourCountCtes: String =
+    """b AS (
+      |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP))
+      |    - INTERVAL (CAST(date_part('hour', CAST(ts AS TIMESTAMP)) AS INT) % 6) HOUR
+      |    AS win_start,
+      |    event_type
+      |  FROM events),
+      |c AS (SELECT win_start, event_type, CAST(count(*) AS BIGINT) AS n
+      |      FROM b GROUP BY win_start, event_type)""".stripMargin
+
+  /** Spark twin of `sixHourCountCtes`'s `c`. */
+  private[ops] def sixHourCounts(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.events(s, d)
+      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
+
   /** Windowed top-k (r11c) — the trending-now query: top-3 event
     * types per 6-hour tumbling window, ranked by count with the
     * alphabetic tie-break. Batch twin uses the REAL streaming
@@ -183,14 +204,7 @@ object Streaming {
     * windows×types rows, never events. */
   val streamTopkWindowed: QDef = q(
     "stream_topk_windowed",
-    """WITH b AS (
-      |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP))
-      |    - INTERVAL (CAST(date_part('hour', CAST(ts AS TIMESTAMP)) AS INT) % 6) HOUR
-      |    AS win_start,
-      |    event_type
-      |  FROM events),
-      |c AS (SELECT win_start, event_type, CAST(count(*) AS BIGINT) AS n
-      |      FROM b GROUP BY win_start, event_type),
+    s"""WITH ${sixHourCountCtes},
       |r AS (
       |  SELECT win_start, event_type, n,
       |    row_number() OVER (PARTITION BY win_start ORDER BY n DESC, event_type) AS rk
@@ -198,10 +212,7 @@ object Streaming {
       |SELECT win_start, CAST(rk AS INTEGER) AS rk, event_type, n
       |FROM r WHERE rk <= 3
       |ORDER BY win_start, rk""") { (s, d) =>
-    val c = Tables.events(s, d)
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
+    val c = sixHourCounts(s, d)
     val w = Window.partitionBy(col("win_start"))
       .orderBy(col("n").desc, col("event_type"))
     c.select(col("win_start"), col("event_type"), col("n"),
@@ -222,14 +233,7 @@ object Streaming {
     * events. */
   val streamRateAlert: QDef = q(
     "stream_rate_alert",
-    """WITH b AS (
-      |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP))
-      |    - INTERVAL (CAST(date_part('hour', CAST(ts AS TIMESTAMP)) AS INT) % 6) HOUR
-      |    AS win_start,
-      |    event_type
-      |  FROM events),
-      |c AS (SELECT win_start, event_type, CAST(count(*) AS BIGINT) AS n
-      |      FROM b GROUP BY win_start, event_type),
+    s"""WITH ${sixHourCountCtes},
       |l AS (
       |  SELECT win_start, event_type, n,
       |    lag(n) OVER (PARTITION BY event_type ORDER BY win_start) AS prev
@@ -240,10 +244,7 @@ object Streaming {
       |    WHEN n >= prev THEN ((n - prev) * 1000000) // prev
       |    ELSE -(((prev - n) * 1000000) // prev) END AS chg_ppm
       |FROM l ORDER BY event_type, win_start""") { (s, d) =>
-    val counts = Tables.events(s, d)
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
+    val counts = sixHourCounts(s, d)
     graft.streaming.StreamOps.rateAlerts(counts)
       .orderBy(col("event_type"), col("win_start"))
   }

@@ -237,6 +237,24 @@ object Windows {
       .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
+  /** SQL twin of `purchaseCalendar` as the CTE chain e, daily, spans,
+    * cal, g; `g` carries the day's purchase total in cents as `cents`. */
+  private def purchaseCalendarCtes(cents: String): String =
+    s"""e AS (
+      |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    CAST(value AS DECIMAL(12,2)) AS v, event_type
+      |  FROM events),
+      |daily AS (
+      |  SELECT user_id, day,
+      |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN v END) * 100 AS BIGINT) AS $cents
+      |  FROM e GROUP BY 1, 2),
+      |spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
+      |cal AS (
+      |  SELECT user_id,
+      |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
+      |  FROM spans),
+      |g AS (SELECT c.user_id, c.day, d.$cents FROM cal c LEFT JOIN daily d USING (user_id, day))""".stripMargin
+
   /** Shared scaffold of the gap-fill family (`win_fill_locf`,
     * `win_interpolate_linear`): per-user daily purchase totals (NULL
     * on active days without purchases, D2 decimals) left-joined onto
@@ -272,20 +290,7 @@ object Windows {
     * on), same convention as `win_interpolate_linear`. */
   val winFillLocf: QDef = q(
     "win_fill_locf",
-    """WITH e AS (
-      |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-      |    CAST(value AS DECIMAL(12,2)) AS v, event_type
-      |  FROM events),
-      |daily AS (
-      |  SELECT user_id, day,
-      |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN v END) * 100 AS BIGINT) AS pv
-      |  FROM e GROUP BY 1, 2),
-      |spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
-      |cal AS (
-      |  SELECT user_id,
-      |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-      |  FROM spans),
-      |g AS (SELECT c.user_id, c.day, d.pv FROM cal c LEFT JOIN daily d USING (user_id, day))
+    s"""WITH ${purchaseCalendarCtes("pv")}
       |SELECT user_id, day, pv AS raw_cents,
       |  last_value(pv IGNORE NULLS) OVER w AS filled_cents,
       |  CAST(day - last_value(CASE WHEN pv IS NOT NULL THEN day END IGNORE NULLS)
@@ -323,20 +328,7 @@ object Windows {
     * observation (nothing to anchor to). */
   val winInterpolateLinear: QDef = q(
     "win_interpolate_linear",
-    """WITH e AS (
-      |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-      |    CAST(value AS DECIMAL(12,2)) AS v, event_type
-      |  FROM events),
-      |daily AS (
-      |  SELECT user_id, day,
-      |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN v END) * 100 AS BIGINT) AS c
-      |  FROM e GROUP BY 1, 2),
-      |spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
-      |cal AS (
-      |  SELECT user_id,
-      |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-      |  FROM spans),
-      |g AS (SELECT c.user_id, c.day, d.c FROM cal c LEFT JOIN daily d USING (user_id, day)),
+    s"""WITH ${purchaseCalendarCtes("c")},
       |w AS (
       |  SELECT user_id, day, c,
       |    last_value(c IGNORE NULLS) OVER wp AS pc,
@@ -734,12 +726,7 @@ object Windows {
     * agg scales with the fact table. */
   val winRollingSlope: QDef = q(
     "win_rolling_slope",
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    date_diff('day', DATE '2024-01-01',
-      |              CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)) AS day_no,
-      |    CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
+    s"""WITH ${EventAnalytics.dayNoCentsCte},
       |w AS (
       |  SELECT event_type, day_no, y,
       |    CAST(COUNT(*) OVER win AS BIGINT) AS n,
@@ -759,13 +746,7 @@ object Windows {
       |       WHEN num >= 0 THEN (num * 1000000) // den
       |       ELSE -(((-num) * 1000000) // den) END AS BIGINT) AS slope_micro
       |FROM g ORDER BY event_type, day_no""") { (s, d) =>
-    val daily = Tables.events(s, d)
-      .select(col("event_type"),
-        datediff(date_trunc("day", col("ts")).cast(DateType),
-          lit("2024-01-01").cast(DateType)).as("day_no"),
-        money(col("value")).as("v0"))
-      .groupBy(col("event_type"), col("day_no"))
-      .agg((sum(col("v0")) * 100).cast(LongType).as("y"))
+    val daily = EventAnalytics.dayNoCents(s, d)
     val win = Window.partitionBy(col("event_type")).orderBy(col("day_no"))
       .rangeBetween(-6, Window.currentRow)
     val w = daily.select(col("event_type"), col("day_no"), col("y"),
@@ -1096,12 +1077,7 @@ object Windows {
     * frames. */
   val winRsiSma: QDef = q(
     "win_rsi_sma",
-    """WITH dtot AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM events GROUP BY event_type, day),
+    s"""WITH ${EventAnalytics.dailyCentsCte},
       |dl AS (
       |  SELECT event_type, day, cents,
       |    cents - lag(cents) OVER (PARTITION BY event_type ORDER BY day)
@@ -1124,11 +1100,7 @@ object Windows {
       |    ELSE CAST(gs * 1000000 // (gs + ls) AS BIGINT) END AS rsi_ppm
       |FROM w WHERE rn >= 15
       |ORDER BY event_type, day""") { (s, d) =>
-    val dtot = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"))
-      .agg(sum(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
-        .cast(LongType).as("cents"))
+    val dtot = EventAnalytics.dailyCentsGrouped(s, d)
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w14 = wOrd.rowsBetween(-13, Window.currentRow)
     val dl = dtot
@@ -1158,12 +1130,7 @@ object Windows {
     * the RSI twin. */
   val winStochasticOsc: QDef = q(
     "win_stochastic_osc",
-    """WITH dtot AS (
-      |  SELECT event_type,
-      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM events GROUP BY event_type, day),
+    s"""WITH ${EventAnalytics.dailyCentsCte},
       |w AS (
       |  SELECT event_type, day, cents,
       |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
@@ -1187,11 +1154,7 @@ object Windows {
       |  CAST((k_ppm + k1 + k2) // 3 AS BIGINT) AS d_ppm
       |FROM kd WHERE rn >= 16
       |ORDER BY event_type, day""") { (s, d) =>
-    val dtot = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast(DateType).as("day"))
-      .agg(sum(expr("CAST(CAST(value AS DECIMAL(12,4)) * 100 AS BIGINT)"))
-        .cast(LongType).as("cents"))
+    val dtot = EventAnalytics.dailyCentsGrouped(s, d)
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w14 = wOrd.rowsBetween(-13, Window.currentRow)
     val k = dtot

@@ -16,7 +16,9 @@ package graft.tools
   * code that relocates operators between modules. `bytes` is the
   * normalized text's length, stable across runs for the same reason.
   *
-  * Usage: sbt "Test / runMain graft.tools.PlanSizeSurvey"
+  * Usage: sbt "Test / runMain graft.tools.PlanSizeSurvey [key…]"
+  * (every key when none are given; the keys restrict the dump, so one
+  * family's move guard diffs in seconds)
   */
 object PlanSizeSurvey {
   private val tmp = java.util.regex.Pattern.quote(
@@ -38,9 +40,14 @@ object PlanSizeSurvey {
 
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local(8, graft.GraftSession.AqeOff,
-      "spark.sql.shuffle.partitions" -> "4")
+      "spark.sql.shuffle.partitions" -> "4",
+      // scan nodes cut their metadata (e.g. DataFilters) at 100 chars
+      // before the ids are normalized, so the cut point would move with
+      // the number of ids that earlier keys used
+      "spark.sql.maxMetadataStringLength" -> Int.MaxValue.toString)
     val sf = graft.StaticPlans.sfStatic
-    graft.SparkEntry.defs.sortBy(_.key).foreach { d =>
+    val keys = if (args.nonEmpty) args.toSet else graft.SparkEntry.queries.keySet
+    graft.SparkEntry.defs.filter(d => keys.contains(d.key)).sortBy(_.key).foreach { d =>
       val k = d.key
       val oracle = sha256(d.oracle.getOrElse(""))
       try {
